@@ -7,9 +7,10 @@ Three metadata layers narrow the scan, each free at lookup time:
 
 1. **Bucket pruning** — keys hash to buckets (``pmod(xxhash64(keys),
    N)``), so only the touched buckets' file lists are considered.  The
-   bucket ids are computed by a one-row-per-key Spark job over the SAME
-   ``bucket_of`` expression the writer uses — no Python reimplementation
-   of xxhash64 to drift out of sync.
+   bucket ids come from the SAME ``bucket_of`` expression the writer
+   uses — no Python reimplementation of xxhash64 to drift out of sync —
+   evaluated over the probe keys' Arrow-backed local relation
+   (``table.local_frame``), which Spark folds at plan time: no job runs.
 2. **Zone maps** — per-file key MIN/MAX from parquet footer statistics
    (``kr`` entries, lake/merge.py): a file whose range excludes every
    probe key is skipped.
@@ -37,19 +38,29 @@ metadata lives in the snapshot JSON, bounded at ~1 KB per small file.
 
 from __future__ import annotations
 
-import os
+import datetime
 import re
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from rocket_etl_spark.lake.merge import _bloom_safe_keys, _prune_decide_files
-from rocket_etl_spark.lake.table import LakeTable, bucket_of
+from rocket_etl_spark.lake.merge import (
+    _bloom_safe_keys,
+    _prune_decide_files,
+    _range_canon,
+    _range_safe_cols,
+)
+from rocket_etl_spark.lake.table import (
+    LakeTable,
+    bucket_of,
+    legacy_layouts,
+    local_frame,
+)
 from rocket_etl_spark.schema.registry import TableSchema
 
 # a "point" lookup is bounded by contract: beyond this, use a join
-LOOKUP_MAX_KEYS = int(os.environ.get("SPARK_GRAFT_LOOKUP_MAX_KEYS", 100_000))
+LOOKUP_MAX_KEYS = 100_000
 
 
 def lookup(
@@ -88,11 +99,12 @@ def lookup(
     full = schema.to_struct()
     by_name = {f.name: f for f in full.fields}
     key_struct = type(full)([by_name[k] for k in keys])  # field order == key order
-    keys_df = table.spark.createDataFrame(rows, key_struct)
+    keys_df = local_frame(table.spark, rows, key_struct)
 
-    # bucket ids via the writer's own expression — one tiny job, ≤ rows;
-    # each RETIRED bucket layout (spec evolution) is probed with the
-    # keys' buckets under THAT spec, so pruning survives evolution
+    # bucket ids via the writer's own expression, folded over the local
+    # relation at plan time (the collect runs no job); each RETIRED
+    # bucket layout (spec evolution) is probed with the keys' buckets
+    # under THAT spec, so pruning survives evolution
     legacy = [
         l for l in (snap.get("legacy") or []) if any(l["buckets"].values())
     ]
@@ -172,6 +184,70 @@ _BETWEEN_RE = re.compile(
 )
 
 
+_DATE_LIT_RE = re.compile(r"(\d{4})-(\d{1,2})-(\d{1,2})")
+
+
+def _bound_canon(v, dt: str):
+    """Zone-map canonical form of a bound value (``_range_canon``).  A
+    string bound on a date column is read the way Spark's string→date
+    cast reads it (``YYYY-M-D``, 1–2 digit month and day) and becomes
+    its ISO form; any other string gives None, no bound — compared as a
+    raw string, ``'2024-1-5'`` would sort after ``'2024-01-07'`` and
+    prune matching files."""
+    if dt != "date" or not isinstance(v, str):
+        return _range_canon(v, dt)
+    m = _DATE_LIT_RE.fullmatch(v)
+    if m is None:
+        return None
+    try:
+        return datetime.date(*map(int, m.groups())).isoformat()
+    except ValueError:
+        return None
+
+
+def _zone_prune(
+    snap: dict, bounds: dict[str, tuple]
+) -> tuple[set[str] | None, int, int]:
+    """Files whose zone maps may satisfy every ``{col: (lo, hi)}`` bound
+    (canonical values, either side None): ``(subset, scanned, total)``,
+    with ``subset`` None when no file is skipped.
+
+    Merge-on-read guard: a VALUE-column bound (the order column
+    included) must not drop a file that takes part in a key's
+    reconciliation — the LWW winner may fail the predicate while a stale
+    row of the same key in another file passes it.  So value bounds
+    never drop a file in a bucket holding delta entries, nor a
+    legacy-layout file while any delta exists (a delta routes by the
+    current spec and can shadow a legacy row — ``LakeTable.read``'s
+    rule).  Key-column bounds hold for every version of a key and stay
+    legal everywhere."""
+    keys = set(snap["key_cols"])
+    current = [
+        (fl, any(fe.get("kind") == "delta" for fe in fl))
+        for fl in snap["buckets"].values()
+    ]
+    legacy = [fl for l in legacy_layouts(snap) for fl in l["buckets"].values()]
+    any_delta = any(d for _, d in current) or any(
+        fe.get("kind") == "delta" for fl in legacy for fe in fl
+    )
+    entries = [(fe, d) for fl, d in current for fe in fl] + [
+        (fe, any_delta) for fl in legacy for fe in fl
+    ]
+    subset: set[str] = set()
+    for fe, pinned in entries:
+        kr = fe.get("kr") or {}
+        # skip iff a usable bound's zone map PROVES disjointness
+        if not any(
+            (r := kr.get(c)) is not None
+            and (c in keys or not pinned)
+            and ((hi is not None and r[0] > hi) or (lo is not None and r[1] < lo))
+            for c, (lo, hi) in bounds.items()
+        ):
+            subset.add(fe["path"])
+    total = len(entries)
+    return (subset if len(subset) < total else None), len(subset), total
+
+
 def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:
     """Best-effort extraction of zone-map-prunable bounds from a SQL
     predicate: top-level conjunctions of ``col <op> literal`` /
@@ -183,8 +259,6 @@ def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:
     (the file is read; the residual predicate still applies exactly), so
     a parse miss can only cost speed, never rows.  Returns
     ``{col: (lo, hi)}`` with either bound possibly None."""
-    from rocket_etl_spark.lake.merge import _range_canon, _range_safe_cols
-
     if re.search(r"\(|\bOR\b|\bNOT\b|\bIN\b", predicate, re.IGNORECASE):
         return {}
     safe = set(_range_safe_cols(schema))
@@ -214,10 +288,9 @@ def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:
         if col not in safe:
             continue
         dt = schema.field_by_name(col).dtype.lower().split("(")[0].strip()
-        v = lit_val(raw, dt)
-        if v is None:
+        cv = _bound_canon(lit_val(raw, dt), dt)
+        if cv is None:
             continue
-        cv = _range_canon(v, dt)
         lo, hi = out.get(col, (None, None))
         if op in (">", ">="):  # strict > keeps the inclusive bound: superset, safe
             lo = cv if lo is None else max(lo, cv)
@@ -263,42 +336,14 @@ def filtered_read(
     bounds = _parse_prunable_conjuncts(predicate, schema)
     for c in set(bounds) & set(skip_cols):
         del bounds[c]
-    subset: set[str] | None = None
-    total = scanned = 0
-    all_file_lists = list(snap["buckets"].values()) + [
-        fl
-        for l in (snap.get("legacy") or [])
-        for fl in l["buckets"].values()
-    ]
-    if bounds:
-        subset = set()
-        for files in all_file_lists:
-            for fe in files:
-                total += 1
-                skip = False
-                for c, (clo, chi) in bounds.items():
-                    kr = (fe.get("kr") or {}).get(c)
-                    if kr is not None and (
-                        (chi is not None and kr[0] > chi)
-                        or (clo is not None and kr[1] < clo)
-                    ):
-                        skip = True
-                        break
-                if not skip:
-                    subset.add(fe["path"])
-                    scanned += 1
-        if scanned == total:
-            subset = None  # nothing pruned — skip subset bookkeeping
-    else:
-        total = sum(len(fl) for fl in all_file_lists)
-        scanned = total
+    subset, scanned, total = _zone_prune(snap, bounds)
     df = table.read(file_subset=subset, snap=snap)
     if residual:
         df = df.filter(predicate)
     if not return_stats:
         return df
     return df, {
-        "files_scanned": scanned if subset is not None else total,
+        "files_scanned": scanned,
         "files_total": total,
         "pruned_on": sorted(bounds),
     }
@@ -353,8 +398,6 @@ def range_scan(
     schema = TableSchema.from_json(
         snap["schemas"][str(snap["current_schema_version"])]
     )
-    from rocket_etl_spark.lake.merge import _range_canon, _range_safe_cols
-
     preds = {col: (lo, hi), **(also or {})}
     canon: dict[str, tuple] = {}
     for c, (plo, phi) in preds.items():
@@ -364,42 +407,10 @@ def range_scan(
                 f"{_range_safe_cols(schema)}"
             )
         dt = schema.field_by_name(c).dtype.lower().split("(")[0].strip()
-        canon[c] = (
-            _range_canon(plo, dt) if plo is not None else None,
-            _range_canon(phi, dt) if phi is not None else None,
-        )
+        canon[c] = (_bound_canon(plo, dt), _bound_canon(phi, dt))
 
-    subset: set[str] = set()
-    total = scanned = 0
-    prunable = True
-    all_file_lists = list(snap["buckets"].values()) + [
-        fl
-        for l in (snap.get("legacy") or [])
-        for fl in l["buckets"].values()
-    ]
-    for files in all_file_lists:
-        for fe in files:
-            total += 1
-            skip = False
-            for c, (clo, chi) in canon.items():
-                kr = (fe.get("kr") or {}).get(c)
-                # skip iff ANY zone map PROVES disjointness with its range
-                if kr is not None and (
-                    (chi is not None and kr[0] > chi)
-                    or (clo is not None and kr[1] < clo)
-                ):
-                    skip = True
-                    break
-            if skip:
-                continue
-            subset.add(fe["path"])
-            scanned += 1
-    if scanned == total:
-        subset_arg = None  # nothing pruned — skip the subset bookkeeping
-        prunable = False
-    else:
-        subset_arg = subset
-    df = table.read(file_subset=subset_arg, snap=snap)
+    subset, scanned, total = _zone_prune(snap, canon)
+    df = table.read(file_subset=subset, snap=snap)
     pred = F.lit(True)
     for c, (plo, phi) in preds.items():
         if plo is not None:
@@ -412,5 +423,5 @@ def range_scan(
     return out, {
         "files_scanned": scanned,
         "files_total": total,
-        "pruned": prunable,
+        "pruned": subset is not None,
     }

@@ -45,6 +45,7 @@ from pathlib import Path
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import DateType, StructType, TimestampNTZType, TimestampType
 
 from rocket_etl_spark.schema.registry import TableSchema, project_to
 
@@ -121,6 +122,34 @@ def fence_add(fences: dict, app_id: str, epoch_id: int) -> dict:
 def bucket_of(key_cols: Sequence[str], num_buckets: int) -> Column:
     """Deterministic bucket id for a row: pmod(xxhash64(keys), N)."""
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
+
+
+def local_frame(spark: SparkSession, rows: Sequence, struct: StructType) -> DataFrame:
+    """A relation over rows held in Python, handed to the JVM as Arrow.
+
+    ``createDataFrame(<list>)`` parallelizes a pickled Python RDD, so
+    every job over the relation runs ``defaultParallelism`` Python
+    worker tasks.  An Arrow table becomes a ``LocalRelation`` decoded
+    inside the JVM instead: no Python worker ever runs, a projection
+    over it is folded at plan time (collecting it runs no job), and
+    broadcasting it costs no executor time.  Dates and timestamps go
+    through the Spark type's own ``toInternal``, so a value means what
+    it means to ``createDataFrame(<list>)`` (a naive datetime is local
+    time)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(struct)
+    cols = []
+    for i, (f, af) in enumerate(zip(struct.fields, schema)):
+        vals = [r[i] for r in rows]
+        if isinstance(f.dataType, (DateType, TimestampType, TimestampNTZType)):
+            storage = pa.int32() if isinstance(f.dataType, DateType) else pa.int64()
+            internal = [None if v is None else f.dataType.toInternal(v) for v in vals]
+            cols.append(pa.array(internal, storage).cast(af.type))
+        else:
+            cols.append(pa.array(vals, af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=schema), struct)
 
 
 def legacy_layouts(snap: dict) -> list[dict]:
@@ -540,7 +569,7 @@ class LakeTable:
             rec = _mor_reconcile(rec, snap["key_cols"], snap["order_col"])
         if plain is None and rec is None:
             phys = current.to_struct().add("_deleted", "boolean", True)
-            out = self.spark.createDataFrame([], phys)
+            out = local_frame(self.spark, [], phys)
         elif plain is None:
             out = rec
         elif rec is None:
@@ -596,8 +625,9 @@ class LakeTable:
                 project_to(df, fschema, current_schema, passthrough=("_action",))
             )
         if not parts:
-            return self.spark.createDataFrame(
-                [], current_schema.to_struct().add("change_type", "string", True)
+            return local_frame(
+                self.spark, [],
+                current_schema.to_struct().add("change_type", "string", True),
             )
         out = parts[0]
         for p in parts[1:]:

@@ -104,3 +104,61 @@ def test_jobspec_lake_source_prunes(spark, tmp_path):
     run_job(spark, spec2)
     out2 = spark.read.parquet(str(tmp_path / "out2"))
     assert out2.count() == want.count()
+
+
+def _event(spark, repo, path, seq, lang):
+    return (
+        change_events(spark, 1, seed=9, delete_frac=0.0)
+        .withColumn("repo", F.lit(repo))
+        .withColumn("path", F.lit(path))
+        .withColumn("lang", F.lit(lang))
+        .withColumn("event_seq", F.lit(seq).cast("long"))
+    )
+
+
+def test_value_bounds_never_hide_the_mor_winner(spark, tmp_path):
+    """A late merge-on-read epoch delivers a STALE row whose values match
+    the predicate while the reconciliation winner's do not.  Value-column
+    zone maps (the order column included) must not drop the winner's
+    base file from a delta-bearing bucket; key-column bounds still prune
+    there."""
+    from rocket_etl_spark.lake.lookup import range_scan
+
+    t = create_repo_files_table(spark, tmp_path / "t", num_buckets=1)
+    replay_batch(t, _event(spark, "r", "a.py", 10, "python"), epoch_id=0)
+    replay_batch(t, _event(spark, "z", "b.py", 11, "python"), epoch_id=1)
+    replay_batch(t, _event(spark, "r", "a.py", 5, "go"), epoch_id=2, mode="mor")
+    assert t.read().filter("lang = 'go'").count() == 0
+    assert filtered_read(t, "lang = 'go'").count() == 0
+    assert range_scan(t, "lang", "go", "go").count() == 0
+    assert filtered_read(t, "last_event_seq <= 5").count() == 0
+    got, stats = filtered_read(t, "repo = 'z'", return_stats=True)
+    assert [(r.repo, r.path) for r in got.collect()] == [("z", "b.py")]
+    assert stats["files_scanned"] < stats["files_total"], stats
+
+
+def test_date_literals_bound_like_spark_reads_them(spark, tmp_path):
+    """``'2024-1-5'`` is the date 2024-01-05 to Spark; compared as a raw
+    string it sorts after ``'2024-01-07'`` and would prune that file."""
+    from rocket_etl_spark.lake.lookup import range_scan
+    from rocket_etl_spark.lake.merge import merge_batch
+    from rocket_etl_spark.lake.table import LakeTable
+    from rocket_etl_spark.schema.registry import TableSchema
+
+    schema = TableSchema.from_ddl([("k", "bigint"), ("d", "date"), ("seq", "bigint")])
+    assert _parse_prunable_conjuncts("d >= '2024-1-5'", schema) == {
+        "d": ("2024-01-05", None)
+    }
+    for pred in ("d >= '2024-01'", "d = '2024-2-30'", "d < '2024-01-07 00:00'"):
+        assert _parse_prunable_conjuncts(pred, schema) == {}, pred
+    t = LakeTable.create(
+        spark, tmp_path / "t", schema, key_cols=("k",), order_col="seq", num_buckets=1
+    )
+    merge_batch(
+        t,
+        spark.sql("SELECT 1L AS k, DATE'2024-01-07' AS d, 1L AS seq, 'upsert' AS op"),
+        epoch_id=0,
+    )
+    assert filtered_read(t, "d >= '2024-1-5'").count() == 1
+    assert range_scan(t, "d", lo="2024-1-5").count() == 1
+    assert filtered_read(t, "d >= '2024-1-8'", return_stats=True)[1]["files_scanned"] == 0

@@ -4,11 +4,18 @@ on the trickle layout without ever changing the answer."""
 
 from __future__ import annotations
 
+import datetime as dt
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql.types import StructType
 
 from rocket_etl_spark.generate import change_events
 from rocket_etl_spark.lake.lookup import lookup
+from rocket_etl_spark.lake.merge import merge_batch
+from rocket_etl_spark.lake.table import LakeTable, bucket_of
+from rocket_etl_spark.schema.registry import TableSchema
 from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
 
 
@@ -135,3 +142,106 @@ def test_range_scan_equals_filter_and_prunes_after_clustering(spark, tmp_path):
         range_scan(t, "no_such_col", "a", "b")
     with pytest.raises(ValueError, match="bound"):
         range_scan(t, "repo")
+
+
+def _jobs_run(spark, fn):
+    """``(fn(), Spark jobs fn ran)``: counted under a job group of its
+    own once the listener bus has drained — a host-independent cost."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_lookup_runs_no_python_fed_jobs(spark, tmp_path):
+    """Probe keys reach the JVM as an Arrow local relation: computing
+    their bucket ids runs no job, a COW lookup is the probe broadcast
+    plus the file scan, and an empty selection is a single job."""
+    t = create_repo_files_table(spark, tmp_path / "t", num_buckets=8)
+    replay_batch(t, change_events(spark, 2_000, seed=3), epoch_id=0)
+    keys = _some_keys(t, 4)
+    df, built = _jobs_run(spark, lambda: lookup(t, keys))
+    assert built == 0
+    rows, collected = _jobs_run(spark, df.collect)
+    assert len(rows) == 4 and collected <= 2
+    n, counted = _jobs_run(spark, lambda: t.read(buckets=[]).count())
+    assert n == 0 and counted == 1
+
+
+def _null_safe_in(keys, probe):
+    cond = F.lit(False)
+    for p in probe:
+        hit = F.lit(True)
+        for k, v in zip(keys, p):
+            hit = hit & F.col(k).eqNullSafe(F.lit(v))
+        cond = cond | hit
+    return cond
+
+
+def _check_lookup_like_filter(spark, t, probe):
+    """lookup == read().filter(null-safe key match); every bucket the
+    probe keys hash to (computed by Spark from a pickled-row frame, a
+    path independent of the Arrow relation) is touched, and the files
+    scanned cover every file holding a probed row."""
+    snap = t.current_snapshot()
+    keys, nb = snap["key_cols"], int(snap["num_buckets"])
+    got, stats = lookup(t, probe, return_stats=True)
+    want = t.read().filter(_null_safe_in(keys, probe))
+    got_rows = got.select(sorted(got.columns)).collect()
+    want_rows = want.select(sorted(want.columns)).collect()
+    assert len(got_rows) == len(set(got_rows)) and set(got_rows) == set(want_rows)
+    assert want_rows
+    full = t.current_schema().to_struct()
+    ref = spark.createDataFrame(probe, StructType([full[k] for k in keys])).select(
+        bucket_of(keys, nb).alias("b")
+    )
+    assert stats["buckets_touched"] == len({r.b for r in ref.collect()})
+    holding = want.select(F.input_file_name()).distinct().count()
+    assert holding <= stats["files_scanned"] <= stats["files_total"], stats
+    return stats
+
+
+def test_lookup_keeps_date_and_null_key_parts(spark, tmp_path):
+    """A (bigint, date) key with NULL date parts, written over several
+    small COW epochs (blooms + zone maps on): the Arrow probe hashes to
+    the writer's buckets and pruning loses no probed row."""
+    schema = TableSchema.from_ddl(
+        [("k", "bigint"), ("d", "date"), ("val", "string"), ("seq", "bigint")]
+    )
+    t = LakeTable.create(
+        spark, tmp_path / "t", schema, key_cols=("k", "d"), order_col="seq",
+        num_buckets=4,
+    )
+    for e in range(4):
+        merge_batch(t, spark.sql(
+            f"SELECT id % 5 AS k, IF(id % 7 = 0, NULL, date_add(DATE'2024-01-01', "
+            f"CAST(id AS INT))) AS d, concat('v', id) AS val, id + {e * 1000} AS seq, "
+            f"'upsert' AS op FROM range({e * 40}, {e * 40 + 40})"
+        ), epoch_id=e)
+    probe = [(0, None), (3, dt.date(2024, 1, 4)), (1, dt.date(2024, 3, 1)),
+             (2, dt.date(2024, 1, 12)), (None, dt.date(2024, 1, 2)), (4, None)]
+    stats = _check_lookup_like_filter(spark, t, probe)
+    assert stats["files_scanned"] < stats["files_total"], stats
+
+
+def test_lookup_keeps_timestamp_and_null_keys(spark, tmp_path):
+    """A timestamp key (no bloom or zone-map pruning: bucket pruning
+    only) with a NULL key row: the Arrow probe's timestamps hash like
+    the written ones."""
+    schema = TableSchema.from_ddl([("ts", "timestamp"), ("val", "string"), ("seq", "bigint")])
+    t = LakeTable.create(
+        spark, tmp_path / "t", schema, key_cols=("ts",), order_col="seq", num_buckets=4
+    )
+    merge_batch(t, spark.sql(
+        "SELECT IF(id = 0, NULL, timestamp_micros(1700000000000000 + id * 1000001)) AS ts, "
+        "concat('v', id) AS val, id AS seq, 'upsert' AS op FROM range(50)"
+    ), epoch_id=0)
+    some = [r.ts for r in t.read().filter("ts IS NOT NULL").orderBy("ts").limit(3).collect()]
+    probe = [(None,), *[(v,) for v in some], (dt.datetime(1999, 1, 1),)]
+    stats = _check_lookup_like_filter(spark, t, probe)
+    assert stats["files_scanned"] == stats["files_total"]
