@@ -26,10 +26,29 @@ files between compactions) a point lookup reads O(files holding the
 key) instead of O(files in bucket) — the measured 2x+ decide-scan
 pruning (BENCH/BASELINE.md round 4) applied to reads.
 
+The surviving files are read on the driver with ``pyarrow.dataset``,
+each key column's ``isin`` pushed into the scan, and the answer reaches
+Spark as one Arrow table: a ``LocalRelation``, so building and
+collecting a lookup runs no Spark job.  The driver-side read repeats ``LakeTable.read``'s rules
+through their Arrow twins, each kept beside its Spark original:
+``plan_read`` splits the files into plain and reconcile sets for both,
+``schema.registry.project_arrow`` maps file columns to the current
+schema by field id, and ``table._mor_reconcile_arrow`` picks the LWW
+winner.  So a lookup returns exactly ``read()`` filtered by a null-safe
+key match, duplicate rows of an ``append_batch`` bucket included.
+Driver memory holds the row groups being decoded (pyarrow decodes a
+row group before it filters) plus the rows the per-column ``isin`` lets
+through: for a one-column key the matched rows, for a composite key
+every row whose parts each occur somewhere in the probe — up to whole
+candidate files when the probe spans most of a column's values (a large
+probe over few repos and shared paths).  ``LOOKUP_MAX_KEYS`` bounds the
+probe.
+
 Merge-on-read safety: pruning never drops a file that may hold a probe
-key, so the per-key reconciliation input (``LakeTable.read``'s
-base+delta collapse) stays complete for every requested key — files the
-pruner skips provably contain no row of any probed key.
+key, and every row of a probed key is kept up to the reconcile, so the
+per-key base+delta reconciliation input stays complete — files the
+pruner skips provably contain no row of any probed key, and rows of
+other keys cannot change a probed key's winner.
 
 At cluster scale this is the pattern Iceberg serves point reads with
 (manifest-entry column bounds + optional bloom filters); here the
@@ -42,8 +61,13 @@ import datetime
 import re
 from collections.abc import Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from rocket_etl_spark.lake.merge import (
     _bloom_safe_keys,
@@ -53,11 +77,13 @@ from rocket_etl_spark.lake.merge import (
 )
 from rocket_etl_spark.lake.table import (
     LakeTable,
+    _mor_reconcile_arrow,
+    arrow_table,
     bucket_of,
     legacy_layouts,
-    local_frame,
+    plan_read,
 )
-from rocket_etl_spark.schema.registry import TableSchema
+from rocket_etl_spark.schema.registry import TableSchema, project_arrow
 
 # a "point" lookup is bounded by contract: beyond this, use a join
 LOOKUP_MAX_KEYS = 100_000
@@ -99,7 +125,8 @@ def lookup(
     full = schema.to_struct()
     by_name = {f.name: f for f in full.fields}
     key_struct = type(full)([by_name[k] for k in keys])  # field order == key order
-    keys_df = local_frame(table.spark, rows, key_struct)
+    probe_tbl = arrow_table(rows, key_struct)
+    keys_df = table.spark.createDataFrame(probe_tbl, key_struct)
 
     # bucket ids via the writer's own expression, folded over the local
     # relation at plan time (the collect runs no job); each RETIRED
@@ -155,23 +182,104 @@ def lookup(
         total = len(entries)
         stats |= {"files_scanned": total, "files_total": total}
 
-    df = table.read(
-        buckets=touched, file_subset=file_subset, snap=snap,
-        legacy_buckets=leg_touched,
-    )
-    # null-SAFE key equality, matching the merge engine (which treats a
-    # null key part as a real key group via eqNullSafe throughout): a
-    # probe tuple containing NULL finds its row instead of silently
-    # returning nothing (advisor finding, r5)
-    probe_df = keys_df
-    for k in keys:
-        probe_df = probe_df.withColumnRenamed(k, f"_p_{k}")
-    cond = None
-    for k in keys:
-        c = F.col(k).eqNullSafe(F.col(f"_p_{k}"))
-        cond = c if cond is None else cond & c
-    out = df.join(F.broadcast(probe_df), cond, "left_semi")
+    plain, rec = plan_read(snap, touched, file_subset, leg_touched)
+    types = to_arrow_schema(full)
+    found = _read_probed(table, snap, schema, types, plain, probe_tbl, with_seq=False)
+    if rec:
+        found = pa.concat_tables([found, _mor_reconcile_arrow(
+            _read_probed(table, snap, schema, types, rec, probe_tbl, with_seq=True),
+            keys, snap["order_col"],
+        )])
+    live = found.filter(pc.invert(pc.fill_null(found["_deleted"], False)))
+    out = table.spark.createDataFrame(live.drop_columns(["_deleted"]), full)
     return (out, stats) if return_stats else out
+
+
+# Spark writes timestamps as INT96 (``spark.sql.parquet.outputTimestampType``);
+# read at pyarrow's default nanosecond unit, one outside 1677..2262 (a
+# 9999-12-31 ``valid_to`` sentinel) overflows int64.  Spark's own unit is
+# the microsecond.
+_PARQUET = ds.ParquetFileFormat(
+    read_options=ds.ParquetReadOptions(coerce_int96_timestamp_unit="us")
+)
+_LOCAL_FS = pafs.LocalFileSystem()
+
+
+def _read_probed(
+    table: LakeTable,
+    snap: dict,
+    current: TableSchema,
+    types: pa.Schema,
+    entries: list[dict],
+    probe: pa.Table,
+    with_seq: bool,
+) -> pa.Table:
+    """Every row of ``entries``' files whose key matches a ``probe`` row
+    null-safely (``eqNullSafe``, as the MERGE matches keys), projected
+    to ``current`` (in its Arrow ``types``) plus ``_deleted`` and, with
+    ``with_seq``, ``_seq`` (null where the file has none, as in base
+    files).  The files of one schema version form one dataset, so
+    pyarrow reads them in parallel.  Each key column's ``isin`` is
+    pushed into the scan; for a composite key that is a superset of the
+    probe tuples, so the exact tuple match follows."""
+    keys = snap["key_cols"]
+    extra = {"_deleted": pa.bool_(), **({"_seq": pa.int64()} if with_seq else {})}
+
+    def shape(got: pa.Table, fschema: TableSchema) -> pa.Table:
+        part = project_arrow(got, fschema, current, types)
+        for c, typ in extra.items():
+            part = part.append_column(
+                c, got[c].cast(typ) if c in got.column_names
+                else pa.nulls(got.num_rows, typ)
+            )
+        return part
+
+    by_sv: dict[str, list[str]] = {}
+    for fe in entries:
+        by_sv.setdefault(str(fe["sv"]), []).append(str(table.path / fe["path"]))
+    parts = [shape(pa.table({}), TableSchema(version=0))]  # no file: no row
+    for sv, paths in by_sv.items():
+        fschema = TableSchema.from_json(snap["schemas"][sv])
+        src = {f.id: f.name for f in fschema.fields}
+        # files of one version differ only in the _deleted/_seq they carry
+        dset = ds.dataset(paths, format=_PARQUET, schema=pa.unify_schemas(
+            [_PARQUET.inspect(p, filesystem=_LOCAL_FS) for p in paths]
+        ))
+        cond = None
+        for k in keys:
+            want = probe[k].combine_chunks()
+            name = src[current.field_by_name(k).id]
+            col = ds.field(name)
+            if dset.schema.field(name).type != want.type:
+                col = col.cast(want.type)
+            cond = col.isin(want) if cond is None else cond & col.isin(want)
+        have = [c for c in extra if c in dset.schema.names]
+        got = dset.to_table(columns=fschema.names() + have, filter=cond)
+        parts.append(shape(got, fschema))
+    found = pa.concat_tables(parts)
+    return found.filter(_probe_hits(found, probe, keys))
+
+
+def _probe_hits(found: pa.Table, probe: pa.Table, keys: Sequence[str]) -> pa.ChunkedArray:
+    """Whether each ``found`` row's key tuple is a ``probe`` tuple, nulls
+    equal to nulls.  Each key column becomes its index among the probe's
+    distinct values (null where absent); the indices fold column by
+    column into one int64 code, renumbered against the probe's own codes
+    after each step so the code stays below the probe size."""
+    code_f = code_p = None
+    for k in keys:
+        vals = pc.unique(probe[k])
+        f = pc.index_in(found[k], value_set=vals, skip_nulls=False).cast(pa.int64())
+        p = pc.index_in(probe[k], value_set=vals, skip_nulls=False).cast(pa.int64())
+        if code_f is None:
+            code_f, code_p = f, p
+            continue
+        code_f = pc.add(pc.multiply(code_f, len(vals)), f)
+        code_p = pc.add(pc.multiply(code_p, len(vals)), p)
+        seen = pc.unique(code_p)
+        code_f = pc.index_in(code_f, value_set=seen).cast(pa.int64())
+        code_p = pc.index_in(code_p, value_set=seen).cast(pa.int64())
+    return pc.is_valid(code_f)
 
 
 _IDENT = r"[A-Za-z_][A-Za-z_0-9]*"

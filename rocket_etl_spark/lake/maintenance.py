@@ -773,7 +773,7 @@ def expire_snapshots(
             ):
                 manifests_removed += 1
                 if not dry_run:
-                    man_file.unlink(missing_ok=True)
+                    table._unlink_manifest(man_file.name)
     if dry_run:
         return {
             "snapshots_removed": len(drop),

@@ -675,10 +675,7 @@ def _merge_broadcast(
     # an exchange + sort of O(table slice) rows per epoch.  With it the
     # table side streams through a map-side hash probe (never shuffled),
     # and the remaining outer join is winner-set vs ≤ winner-set sized.
-    if _os.environ.get("SPARK_GRAFT_DECIDE_SEMI", "1") != "0":
-        t_hit = t_slim.join(F.broadcast(winners.select(*keys)), cond, "left_semi")
-    else:
-        t_hit = t_slim
+    t_hit = t_slim.join(F.broadcast(winners.select(*keys)), cond, "left_semi")
     act = winners.join(t_hit, cond, "left_outer")
     if read_matched is not None and cache_registry is not None:
         # the matched-file collect materializes act anyway; caching the
@@ -1392,15 +1389,10 @@ def _merge_once(
             part.repartition(max(len(touched), 1), "_bucket") if tight else part
             for part, tight in outputs
         ]
-        if _os.environ.get("SPARK_GRAFT_SINGLE_WRITE", "1") != "0":
-            combined = sides[0]
-            for p in sides[1:]:
-                combined = combined.unionByName(p)
-            combined.write.partitionBy("_bucket").parquet(str(out_dir))
-        else:
-            for i, part in enumerate(sides):
-                writer = part.write.partitionBy("_bucket")
-                (writer if i == 0 else writer.mode("append")).parquet(str(out_dir))
+        combined = sides[0]
+        for p in sides[1:]:
+            combined = combined.unionByName(p)
+        combined.write.partitionBy("_bucket").parquet(str(out_dir))
         for bdir in sorted(out_dir.glob("_bucket=*")):
             b = int(bdir.name.split("=")[1])
             files = [

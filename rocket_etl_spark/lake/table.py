@@ -43,6 +43,8 @@ import uuid
 from collections.abc import Sequence
 from pathlib import Path
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import DateType, StructType, TimestampNTZType, TimestampType
@@ -124,19 +126,11 @@ def bucket_of(key_cols: Sequence[str], num_buckets: int) -> Column:
     return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
 
 
-def local_frame(spark: SparkSession, rows: Sequence, struct: StructType) -> DataFrame:
-    """A relation over rows held in Python, handed to the JVM as Arrow.
-
-    ``createDataFrame(<list>)`` parallelizes a pickled Python RDD, so
-    every job over the relation runs ``defaultParallelism`` Python
-    worker tasks.  An Arrow table becomes a ``LocalRelation`` decoded
-    inside the JVM instead: no Python worker ever runs, a projection
-    over it is folded at plan time (collecting it runs no job), and
-    broadcasting it costs no executor time.  Dates and timestamps go
-    through the Spark type's own ``toInternal``, so a value means what
-    it means to ``createDataFrame(<list>)`` (a naive datetime is local
-    time)."""
-    import pyarrow as pa
+def arrow_table(rows: Sequence, struct: StructType) -> pa.Table:
+    """Rows held in Python as an Arrow table typed the way Spark hands
+    ``struct`` to Arrow.  Dates and timestamps go through the Spark
+    type's own ``toInternal``, so a value means what it means to
+    ``createDataFrame(<list>)`` (a naive datetime is local time)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     schema = to_arrow_schema(struct)
@@ -149,7 +143,19 @@ def local_frame(spark: SparkSession, rows: Sequence, struct: StructType) -> Data
             cols.append(pa.array(internal, storage).cast(af.type))
         else:
             cols.append(pa.array(vals, af.type))
-    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=schema), struct)
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def local_frame(spark: SparkSession, rows: Sequence, struct: StructType) -> DataFrame:
+    """A relation over rows held in Python, handed to the JVM as Arrow.
+
+    ``createDataFrame(<list>)`` parallelizes a pickled Python RDD, so
+    every job over the relation runs ``defaultParallelism`` Python
+    worker tasks.  An Arrow table becomes a ``LocalRelation`` decoded
+    inside the JVM instead: no Python worker ever runs, a projection
+    over it is folded at plan time (collecting it runs no job), and
+    broadcasting it costs no executor time."""
+    return spark.createDataFrame(arrow_table(rows, struct), struct)
 
 
 def legacy_layouts(snap: dict) -> list[dict]:
@@ -189,7 +195,85 @@ def _mor_reconcile(df: DataFrame, keys: Sequence[str], order_col: str) -> DataFr
             ),
         ).alias("_w")
     )
-    return packed.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])
+    # input column order, so a reconciled selection reads like a plain one
+    return packed.select(*[
+        F.col(c) if c in keys else F.col(f"_w.{c}").alias(c)
+        for c in df.columns if c != "_seq"
+    ])
+
+
+def _mor_reconcile_arrow(tbl: pa.Table, keys: Sequence[str], order_col: str) -> pa.Table:
+    """``_mor_reconcile`` over an Arrow table on the driver (point
+    lookups): the same winner, max ``(order_col, -_seq)`` with a null
+    ``_seq`` read as 0 and a null order ranked lowest, as Spark's struct
+    ordering ranks it.  Sorting puts each key's winner first, and an
+    ordered (single-threaded) ``first`` aggregation picks it; Arrow
+    groups null key parts together, like ``groupBy``."""
+    rows = tbl.drop_columns(["_seq"])
+    ranked = rows.select([*keys, order_col]).append_column(
+        "_ns", pc.coalesce(tbl["_seq"], pa.scalar(0, pa.int64()))
+    ).append_column("_i", pa.array(range(tbl.num_rows), pa.int64()))
+    ranked = ranked.sort_by(
+        [(order_col, "descending"), ("_ns", "ascending")], null_placement="at_end"
+    )
+    first = ranked.group_by(list(keys), use_threads=False).aggregate([("_i", "first")])
+    return rows.take(first["_i_first"])
+
+
+def plan_read(
+    snap: dict,
+    buckets: Sequence[int] | None = None,
+    file_subset: set[str] | None = None,
+    legacy_buckets: dict[int, Sequence[int]] | None = None,
+) -> tuple[list[dict], list[dict]]:
+    """The file entries a read selects, split ``(plain, reconcile)``:
+    plain files are read as they are, reconcile files go through the
+    merge-on-read collapse as one set.  ``LakeTable.read`` (Spark) and
+    ``lake.lookup.lookup`` (pyarrow on the driver) both read by this
+    split; the arguments mean what they mean to ``read``."""
+    selections: list[tuple[bool, list[dict]]] = []  # (is_legacy, files)
+    bset = set(int(b) for b in buckets) if buckets is not None else None
+    for b, files in snap["buckets"].items():
+        if bset is not None and int(b) not in bset:
+            continue
+        sel = [fe for fe in files if file_subset is None or fe["path"] in file_subset]
+        if sel:
+            selections.append((False, sel))
+    for layout in legacy_layouts(snap):
+        allowed = (
+            None
+            if legacy_buckets is None
+            else {int(x) for x in legacy_buckets.get(layout["spec_id"], ())}
+        )
+        for b, files in layout["buckets"].items():
+            if allowed is not None and int(b) not in allowed:
+                continue
+            sel = [
+                fe for fe in files if file_subset is None or fe["path"] in file_subset
+            ]
+            if sel:
+                selections.append((True, sel))
+    # a delta row's key may have its base row in a legacy-layout file
+    # (delta routes by the CURRENT spec) — any selected delta pulls
+    # every selected legacy file into the reconciliation set
+    any_delta = any(
+        fe.get("kind") == "delta" for _, sel in selections for fe in sel
+    )
+    has_legacy = any(is_legacy for is_legacy, _ in selections)
+    plain: list[dict] = []
+    rec: list[dict] = []
+    for is_legacy, sel in selections:
+        if is_legacy:
+            needs_rec = any_delta
+        else:
+            # reconciliation needed when a delta entry could shadow
+            # another file's row of the same key (>= 2 files, one a
+            # delta — or ONE delta file plus legacy files in play)
+            needs_rec = any(fe.get("kind") == "delta" for fe in sel) and (
+                len(sel) > 1 or has_legacy
+            )
+        (rec if needs_rec else plain).extend(sel)
+    return plain, rec
 
 
 class LakeTable:
@@ -296,6 +380,11 @@ class LakeTable:
                 layout["buckets"] = rb(layout["buckets"])
         return snap
 
+    def _unlink_manifest(self, name: str) -> None:
+        """Delete one manifest (expiry) and drop its cached parse."""
+        (self.man_dir / name).unlink(missing_ok=True)
+        _MANIFEST_CACHE.pop((str(self.man_dir), name), None)
+
     def _write_manifest(self, entries: list) -> str:
         """Persist one bucket file list as a content-addressed manifest,
         returning its name.  Identical content maps to an identical name,
@@ -305,22 +394,24 @@ class LakeTable:
 
         payload = json.dumps(list(entries), sort_keys=True, separators=(",", ":"))
         name = f"man-{hashlib.sha256(payload.encode()).hexdigest()[:24]}.json"
+        # stat even on a cache hit: the cache proves the content, not
+        # that the file survives (expiry in another process unlinks it)
+        final = self.man_dir / name
+        if not final.exists():
+            self.man_dir.mkdir(parents=True, exist_ok=True)
+            tmp = self.man_dir / f".tmp-{uuid.uuid4().hex}.json"
+            with open(tmp, "w") as f:
+                f.write(payload)
+                f.flush()
+                os.fsync(f.fileno())
+            try:
+                os.link(tmp, final)
+            except FileExistsError:
+                pass  # same content already published — converged
+            finally:
+                tmp.unlink(missing_ok=True)
         key = (str(self.man_dir), name)
         if key not in _MANIFEST_CACHE:
-            final = self.man_dir / name
-            if not final.exists():
-                self.man_dir.mkdir(parents=True, exist_ok=True)
-                tmp = self.man_dir / f".tmp-{uuid.uuid4().hex}.json"
-                with open(tmp, "w") as f:
-                    f.write(payload)
-                    f.flush()
-                    os.fsync(f.fileno())
-                try:
-                    os.link(tmp, final)
-                except FileExistsError:
-                    pass  # same content already published — converged
-                finally:
-                    tmp.unlink(missing_ok=True)
             _man_cache_put(key, json.loads(payload))
         return name
 
@@ -474,8 +565,11 @@ class LakeTable:
         ``batch_ord > table_ord``, so on equal order the already-written
         row wins); the COW/MOR final-state equivalence property test
         pins this.  Buckets with only base files skip reconciliation
-        entirely — the plain union path below — so the read-side cost is
+        entirely — the plain union path — so the read-side cost is
         confined to delta-bearing buckets until compaction folds them.
+        ``plan_read`` owns this plain-vs-reconcile split; point lookups
+        (``lake.lookup``) read by the same split with pyarrow, so a change
+        to the rule changes both.
 
         **Legacy bucket layouts** (bucket-spec evolution): files still
         laid out under a retired spec (``legacy_layouts``) are included
@@ -499,52 +593,12 @@ class LakeTable:
                 else self.current_snapshot()
             )
         current = TableSchema.from_json(snap["schemas"][str(snap["current_schema_version"])])
-        plain_by_sv: dict[int, list[str]] = {}
-        rec_by_sv: dict[int, list[str]] = {}
-        selections: list[tuple[bool, list[dict]]] = []  # (is_legacy, files)
-        bset = set(int(b) for b in buckets) if buckets is not None else None
-        for b, files in snap["buckets"].items():
-            if bset is not None and int(b) not in bset:
-                continue
-            sel = [fe for fe in files if file_subset is None or fe["path"] in file_subset]
-            if sel:
-                selections.append((False, sel))
-        for layout in legacy_layouts(snap):
-            allowed = (
-                None
-                if legacy_buckets is None
-                else {int(x) for x in legacy_buckets.get(layout["spec_id"], ())}
-            )
-            for b, files in layout["buckets"].items():
-                if allowed is not None and int(b) not in allowed:
-                    continue
-                sel = [
-                    fe for fe in files if file_subset is None or fe["path"] in file_subset
-                ]
-                if sel:
-                    selections.append((True, sel))
-        # a delta row's key may have its base row in a legacy-layout file
-        # (delta routes by the CURRENT spec) — any selected delta pulls
-        # every selected legacy file into the reconciliation set
-        any_delta = any(
-            fe.get("kind") == "delta" for _, sel in selections for fe in sel
-        )
-        has_legacy = any(is_legacy for is_legacy, _ in selections)
-        for is_legacy, sel in selections:
-            if is_legacy:
-                needs_rec = any_delta
-            else:
-                # reconciliation needed when a delta entry could shadow
-                # another file's row of the same key (>= 2 files, one a
-                # delta — or ONE delta file plus legacy files in play)
-                needs_rec = any(fe.get("kind") == "delta" for fe in sel) and (
-                    len(sel) > 1 or has_legacy
-                )
-            target = rec_by_sv if needs_rec else plain_by_sv
-            for fe in sel:
-                target.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
+        plain_files, rec_files = plan_read(snap, buckets, file_subset, legacy_buckets)
 
-        def _load(by_sv: dict[int, list[str]], with_seq: bool) -> DataFrame | None:
+        def _load(entries: list[dict], with_seq: bool) -> DataFrame | None:
+            by_sv: dict[int, list[str]] = {}
+            for fe in entries:
+                by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
             parts: list[DataFrame] = []
             for sv, paths in sorted(by_sv.items()):
                 fschema = TableSchema.from_json(snap["schemas"][str(sv)])
@@ -563,8 +617,8 @@ class LakeTable:
                 out = out.unionByName(p)
             return out
 
-        plain = _load(plain_by_sv, with_seq=False)
-        rec = _load(rec_by_sv, with_seq=True)
+        plain = _load(plain_files, with_seq=False)
+        rec = _load(rec_files, with_seq=True)
         if rec is not None:
             rec = _mor_reconcile(rec, snap["key_cols"], snap["order_col"])
         if plain is None and rec is None:

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructField, StructType, _parse_datatype_string
@@ -126,3 +127,27 @@ def project_to(
             cols.append(F.col(src.name).cast(f.dtype).alias(f.name))
     cols.extend(F.col(c) for c in passthrough if c in df.columns)
     return df.select(*cols)
+
+
+def project_arrow(
+    tbl: pa.Table, file_schema: TableSchema, current: TableSchema, types: pa.Schema
+) -> pa.Table:
+    """``project_to`` for an Arrow table read with pyarrow (driver-side
+    point lookups): the same field-id resolution, to ``types``, the
+    Arrow schema Spark uses for ``current``
+    (``to_arrow_schema(current.to_struct())``, built once by the caller:
+    each type in it is parsed in the JVM).  A change here belongs in
+    ``project_to`` too.
+
+    Spark writes timestamps as INT96 (``spark.sql.parquet.
+    outputTimestampType``) holding UTC instants, which pyarrow reads as
+    naive timestamps (the caller reads them at Spark's microsecond
+    unit); the cast to Spark's ``timestamp[us, tz=UTC]`` reads them as
+    UTC."""
+    by_id = {f.id: f for f in file_schema.fields}
+    cols = [
+        pa.nulls(tbl.num_rows, t.type) if (src := by_id.get(f.id)) is None
+        else tbl.column(src.name).cast(t.type)
+        for f, t in zip(current.fields, types)
+    ]
+    return pa.Table.from_arrays(cols, schema=types)

@@ -146,3 +146,29 @@ def test_expire_pins_live_branch_fork(spark, tmp_path):
     replay_batch(bt, ev.filter(ev.event_seq % 23 == 1).limit(20), epoch_id=100)
     assert read_branch(table, "fix").count() > 0
     ev.unpersist()
+
+
+def test_expire_evicts_unlinked_manifests_from_the_cache(spark, tmp_path):
+    """A manifest ``expire_snapshots`` unlinks leaves the in-process
+    cache too, and a later write of the same bucket list re-creates the
+    file instead of trusting a cache hit — otherwise the snapshot that
+    references it dangles for every other process."""
+    from rocket_etl_spark.lake.table import _MANIFEST_CACHE
+
+    table = create_repo_files_table(spark, tmp_path / "t", num_buckets=2)
+    ev = change_events(spark, 400, seed=14, delete_frac=0.0).cache()
+    replay_batch(table, ev.filter(ev.event_seq < 200), epoch_id=0)
+    first = table.current_snapshot()
+    b, old = next((b, fl) for b, fl in first["buckets"].items() if fl)
+    replay_batch(table, ev.filter(ev.event_seq >= 200), epoch_id=1)
+    ev.unpersist()
+    assert table.current_snapshot()["buckets"][b].man != old.man
+
+    expire_snapshots(table, keep_last=1, orphan_min_age_s=0.0)
+    assert not (table.man_dir / old.man).exists()
+    assert (str(table.man_dir), old.man) not in _MANIFEST_CACHE
+
+    # republish the expired bucket list: its manifest is written again
+    _MANIFEST_CACHE[(str(table.man_dir), old.man)] = list(old)  # stale entry
+    assert table._write_manifest(list(old)) == old.man
+    assert (table.man_dir / old.man).exists()

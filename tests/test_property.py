@@ -9,10 +9,27 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from rocket_etl_spark.lake.lookup import lookup
 from rocket_etl_spark.oracle import replay_oracle
 from rocket_etl_spark.streaming.replay import EVENTS_DDL, create_repo_files_table, replay_batch
 
 _KEYS = [("r0", "a.py"), ("r0", "b.py"), ("r1", "a.py"), ("r1", "c.go"), ("r2", "z.rs")]
+
+
+def _assert_lookups_match(table, ora):
+    """Point lookups (driver-side pyarrow reads) equal the oracle's rows:
+    every key probed at once, each key alone (live, deleted or never
+    written) and an unknown key."""
+    unknown = ("r9", "never.py")
+    for probe in [[*_KEYS, unknown], *([k] for k in _KEYS), [unknown]]:
+        got = lookup(table, probe).toPandas()
+        want = ora[[(r, p) in probe for r, p in zip(ora["repo"], ora["path"])]]
+        assert len(got) == len(want), (probe, got, want)
+        if len(want):
+            got = got.sort_values(["repo", "path"]).reset_index(drop=True)
+            pd.testing.assert_frame_equal(
+                got[ora.columns], want.reset_index(drop=True), check_dtype=False
+            )
 
 
 @st.composite
@@ -67,8 +84,9 @@ def test_any_order_any_batching_matches_oracle(spark, tmp_path_factory, batches)
     ora = replay_oracle(pdfs)
     if len(ora) == 0:
         assert len(eng) == 0
-        return
-    pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+    else:
+        pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+    _assert_lookups_match(table, ora)
 
 
 # ------------------------------------------------- round-2 property tests
@@ -163,7 +181,8 @@ def test_chaos_maintenance_interleavings_match_oracle(
     """Arbitrary interleavings of COW/MOR merges with bucket-spec
     evolution, compaction (plain + bulk-migrate), and aggressive snapshot
     expiry must still converge to the pure-SQL LWW oracle — physical
-    layout and maintenance scheduling can never change the logical state."""
+    layout and maintenance scheduling can never change the logical state,
+    and point lookups answer from the same state."""
     from rocket_etl_spark.lake.maintenance import (
         compact,
         evolve_buckets,
@@ -216,5 +235,6 @@ def test_chaos_maintenance_interleavings_match_oracle(
     ora = replay_oracle(pdfs)
     if len(ora) == 0:
         assert len(eng) == 0
-        return
-    pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+    else:
+        pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+    _assert_lookups_match(table, ora)
