@@ -3,38 +3,38 @@
 The serving-path read a CDC-maintained table owes its consumers: given
 a bounded set of keys ("this repo/path", "these 500 entities"), return
 their current rows touching only the files that can possibly hold them.
-Three metadata layers narrow the scan, each free at lookup time:
+``planner.select_files`` plans the read, the planner every reader of the
+table shares, and narrows it with metadata that is free at lookup time:
 
 1. **Bucket pruning** — keys hash to buckets (``pmod(xxhash64(keys),
-   N)``), so only the touched buckets' file lists are considered.  The
-   bucket ids come from the SAME ``bucket_of`` expression the writer
-   uses — no Python reimplementation of xxhash64 to drift out of sync —
-   evaluated over the probe keys' Arrow-backed local relation
-   (``table.local_frame``), which Spark folds at plan time: no job runs.
-2. **Zone maps** — per-file key MIN/MAX from parquet footer statistics
-   (``kr`` entries, lake/merge.py): a file whose range excludes every
-   probe key is skipped.
-3. **Key blooms** — the 1 KB per-file blooms small commits attach: no
-   false negatives, so a bloom miss is a proof of absence.
+   N)``), so only the touched buckets' file lists are considered, in
+   the current layout and in every retired one.  The bucket ids come
+   from the SAME ``bucket_of`` expression the writer uses — no Python
+   reimplementation of xxhash64 to drift out of sync — evaluated over
+   the probe keys' Arrow-backed local relation (``table.local_frame``),
+   which Spark folds at plan time: no job runs.
+2. **Key pruning** — per-file key zone maps (``kr``: footer min/max) and
+   the 1 KB key blooms small commits attach: a file whose zone map or
+   bloom excludes every probe key is skipped.
 
-These are the same pruners the MERGE's decide scan trusts for
-correctness (`_prune_decide_files` — a false negative there would be a
-wrong merge), so the lookup inherits their no-false-negative guarantee:
-every file that may contain a probe key is read; files without metadata
-are always read.  On the trickle-CDC file layout (many small bloomed
-files between compactions) a point lookup reads O(files holding the
-key) instead of O(files in bucket) — the measured 2x+ decide-scan
-pruning (BENCH/BASELINE.md round 4) applied to reads.
+These are the same key pruners the MERGE's decide scan trusts for
+correctness (a false negative there would be a wrong merge), so the
+lookup inherits their no-false-negative guarantee: every file that may
+contain a probe key is read; files without metadata are always read.
+On the trickle-CDC file layout (many small bloomed files between
+compactions) a point lookup reads O(files holding the key) instead of
+O(files in bucket) — the measured 2x+ decide-scan pruning
+(BENCH/BASELINE.md round 4) applied to reads.
 
 The surviving files are read on the driver with ``pyarrow.dataset``,
 each key column's ``isin`` pushed into the scan, and the answer reaches
 Spark as one Arrow table: a ``LocalRelation``, so building and
-collecting a lookup runs no Spark job.  The driver-side read repeats ``LakeTable.read``'s rules
-through their Arrow twins, each kept beside its Spark original:
-``plan_read`` splits the files into plain and reconcile sets for both,
-``schema.registry.project_arrow`` maps file columns to the current
-schema by field id, and ``table._mor_reconcile_arrow`` picks the LWW
-winner.  So a lookup returns exactly ``read()`` filtered by a null-safe
+collecting a lookup runs no Spark job.  The driver-side read repeats
+``LakeTable.read``'s rules through their Arrow twins, each kept beside
+its Spark original: the plan's split into plain and reconcile files is
+the one ``read`` uses, ``schema.registry.project_arrow`` maps file
+columns to the current schema by field id, and
+``table._mor_reconcile_arrow`` picks the LWW winner.  So a lookup returns exactly ``read()`` filtered by a null-safe
 key match, duplicate rows of an ``append_batch`` bucket included.
 Driver memory holds the row groups being decoded (pyarrow decodes a
 row group before it filters) plus the rows the per-column ``isin`` lets
@@ -57,7 +57,6 @@ metadata lives in the snapshot JSON, bounded at ~1 KB per small file.
 
 from __future__ import annotations
 
-import datetime
 import re
 from collections.abc import Sequence
 
@@ -69,19 +68,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from rocket_etl_spark.lake.merge import (
-    _bloom_safe_keys,
-    _prune_decide_files,
-    _range_canon,
-    _range_safe_cols,
+from rocket_etl_spark.lake.planner import (
+    bound_canon,
+    bucket_of,
+    legacy_probe_cols,
+    legacy_touched,
+    range_safe_cols,
+    select_files,
 )
 from rocket_etl_spark.lake.table import (
     LakeTable,
     _mor_reconcile_arrow,
     arrow_table,
-    bucket_of,
-    legacy_layouts,
-    plan_read,
 )
 from rocket_etl_spark.schema.registry import TableSchema, project_arrow
 
@@ -132,62 +130,25 @@ def lookup(
     # relation at plan time (the collect runs no job); each RETIRED
     # bucket layout (spec evolution) is probed with the keys' buckets
     # under THAT spec, so pruning survives evolution
-    legacy = [
-        l for l in (snap.get("legacy") or []) if any(l["buckets"].values())
-    ]
-    probe_cols = [bucket_of(keys, int(snap["num_buckets"])).alias("_b")] + [
-        bucket_of(keys, int(l["num_buckets"])).alias(f"_b{l['spec_id']}")
-        for l in legacy
-    ]
-    probe = keys_df.select("*", *probe_cols).collect()
+    probe = keys_df.select(
+        "*", bucket_of(keys, int(snap["num_buckets"])).alias("_b"), *legacy_probe_cols(snap)
+    ).collect()
     touched = sorted({r["_b"] for r in probe})
-    leg_touched = {
-        int(l["spec_id"]): sorted(
-            b
-            for b in {r[f"_b{l['spec_id']}"] for r in probe}
-            if l["buckets"].get(str(b))
-        )
-        for l in legacy
-    }
     key_rows = [tuple(r[k] for k in keys) for r in probe]
-    entries = [
-        fe for b in touched for fe in snap["buckets"].get(str(b), [])
-    ] + [
-        fe
-        for l in legacy
-        for b in leg_touched.get(int(l["spec_id"]), [])
-        for fe in l["buckets"].get(str(b), [])
-    ]
-
-    file_subset = None
-    stats = {"buckets_touched": len(touched)}
-    from rocket_etl_spark.lake.merge import (
-        BLOOM_PROBE_MAX_KEYS,
-        RANGE_PROBE_MAX_KEYS,
+    plan = select_files(
+        snap, touched, legacy_touched(snap, probe),
+        key_rows=lambda: key_rows, n_keys=len(key_rows),
     )
-
-    pr = (
-        _prune_decide_files(
-            entries, key_rows, keys, schema,
-            blooms=len(key_rows) <= BLOOM_PROBE_MAX_KEYS,
-            ranges=len(key_rows) <= RANGE_PROBE_MAX_KEYS,
-        )
-        if _bloom_safe_keys(schema, keys)
-        else None
-    )
-    if pr is not None:
-        file_subset, scanned, total = pr
-        stats |= {"files_scanned": scanned, "files_total": total}
-    else:
-        total = len(entries)
-        stats |= {"files_scanned": total, "files_total": total}
-
-    plain, rec = plan_read(snap, touched, file_subset, leg_touched)
+    stats = {
+        "buckets_touched": len(touched),
+        "files_scanned": plan.scanned,
+        "files_total": plan.total,
+    }
     types = to_arrow_schema(full)
-    found = _read_probed(table, snap, schema, types, plain, probe_tbl, with_seq=False)
-    if rec:
+    found = _read_probed(table, snap, schema, types, plan.plain, probe_tbl, with_seq=False)
+    if plan.rec:
         found = pa.concat_tables([found, _mor_reconcile_arrow(
-            _read_probed(table, snap, schema, types, rec, probe_tbl, with_seq=True),
+            _read_probed(table, snap, schema, types, plan.rec, probe_tbl, with_seq=True),
             keys, snap["order_col"],
         )])
     live = found.filter(pc.invert(pc.fill_null(found["_deleted"], False)))
@@ -292,70 +253,6 @@ _BETWEEN_RE = re.compile(
 )
 
 
-_DATE_LIT_RE = re.compile(r"(\d{4})-(\d{1,2})-(\d{1,2})")
-
-
-def _bound_canon(v, dt: str):
-    """Zone-map canonical form of a bound value (``_range_canon``).  A
-    string bound on a date column is read the way Spark's string→date
-    cast reads it (``YYYY-M-D``, 1–2 digit month and day) and becomes
-    its ISO form; any other string gives None, no bound — compared as a
-    raw string, ``'2024-1-5'`` would sort after ``'2024-01-07'`` and
-    prune matching files."""
-    if dt != "date" or not isinstance(v, str):
-        return _range_canon(v, dt)
-    m = _DATE_LIT_RE.fullmatch(v)
-    if m is None:
-        return None
-    try:
-        return datetime.date(*map(int, m.groups())).isoformat()
-    except ValueError:
-        return None
-
-
-def _zone_prune(
-    snap: dict, bounds: dict[str, tuple]
-) -> tuple[set[str] | None, int, int]:
-    """Files whose zone maps may satisfy every ``{col: (lo, hi)}`` bound
-    (canonical values, either side None): ``(subset, scanned, total)``,
-    with ``subset`` None when no file is skipped.
-
-    Merge-on-read guard: a VALUE-column bound (the order column
-    included) must not drop a file that takes part in a key's
-    reconciliation — the LWW winner may fail the predicate while a stale
-    row of the same key in another file passes it.  So value bounds
-    never drop a file in a bucket holding delta entries, nor a
-    legacy-layout file while any delta exists (a delta routes by the
-    current spec and can shadow a legacy row — ``LakeTable.read``'s
-    rule).  Key-column bounds hold for every version of a key and stay
-    legal everywhere."""
-    keys = set(snap["key_cols"])
-    current = [
-        (fl, any(fe.get("kind") == "delta" for fe in fl))
-        for fl in snap["buckets"].values()
-    ]
-    legacy = [fl for l in legacy_layouts(snap) for fl in l["buckets"].values()]
-    any_delta = any(d for _, d in current) or any(
-        fe.get("kind") == "delta" for fl in legacy for fe in fl
-    )
-    entries = [(fe, d) for fl, d in current for fe in fl] + [
-        (fe, any_delta) for fl in legacy for fe in fl
-    ]
-    subset: set[str] = set()
-    for fe, pinned in entries:
-        kr = fe.get("kr") or {}
-        # skip iff a usable bound's zone map PROVES disjointness
-        if not any(
-            (r := kr.get(c)) is not None
-            and (c in keys or not pinned)
-            and ((hi is not None and r[0] > hi) or (lo is not None and r[1] < lo))
-            for c, (lo, hi) in bounds.items()
-        ):
-            subset.add(fe["path"])
-    total = len(entries)
-    return (subset if len(subset) < total else None), len(subset), total
-
-
 def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:
     """Best-effort extraction of zone-map-prunable bounds from a SQL
     predicate: top-level conjunctions of ``col <op> literal`` /
@@ -369,7 +266,7 @@ def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:
     ``{col: (lo, hi)}`` with either bound possibly None."""
     if re.search(r"\(|\bOR\b|\bNOT\b|\bIN\b", predicate, re.IGNORECASE):
         return {}
-    safe = set(_range_safe_cols(schema))
+    safe = set(range_safe_cols(schema))
     out: dict[str, tuple] = {}
 
     def lit_val(raw: str, dt: str):
@@ -396,7 +293,7 @@ def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:
         if col not in safe:
             continue
         dt = schema.field_by_name(col).dtype.lower().split("(")[0].strip()
-        cv = _bound_canon(lit_val(raw, dt), dt)
+        cv = bound_canon(lit_val(raw, dt), dt)
         if cv is None:
             continue
         lo, hi = out.get(col, (None, None))
@@ -444,15 +341,15 @@ def filtered_read(
     bounds = _parse_prunable_conjuncts(predicate, schema)
     for c in set(bounds) & set(skip_cols):
         del bounds[c]
-    subset, scanned, total = _zone_prune(snap, bounds)
-    df = table.read(file_subset=subset, snap=snap)
+    plan = select_files(snap, bounds=bounds)
+    df = table.read_plan(plan, snap)
     if residual:
         df = df.filter(predicate)
     if not return_stats:
         return df
     return df, {
-        "files_scanned": scanned,
-        "files_total": total,
+        "files_scanned": plan.scanned,
+        "files_total": plan.total,
         "pruned_on": sorted(bounds),
     }
 
@@ -509,16 +406,16 @@ def range_scan(
     preds = {col: (lo, hi), **(also or {})}
     canon: dict[str, tuple] = {}
     for c, (plo, phi) in preds.items():
-        if c not in _range_safe_cols(schema):
+        if c not in range_safe_cols(schema):
             raise ValueError(
                 f"range_scan needs a zone-map-supported column; {c!r} not in "
-                f"{_range_safe_cols(schema)}"
+                f"{range_safe_cols(schema)}"
             )
         dt = schema.field_by_name(c).dtype.lower().split("(")[0].strip()
-        canon[c] = (_bound_canon(plo, dt), _bound_canon(phi, dt))
+        canon[c] = (bound_canon(plo, dt), bound_canon(phi, dt))
 
-    subset, scanned, total = _zone_prune(snap, canon)
-    df = table.read(file_subset=subset, snap=snap)
+    plan = select_files(snap, bounds=canon)
+    df = table.read_plan(plan, snap)
     pred = F.lit(True)
     for c, (plo, phi) in preds.items():
         if plo is not None:
@@ -529,7 +426,7 @@ def range_scan(
     if not return_stats:
         return out
     return out, {
-        "files_scanned": scanned,
-        "files_total": total,
-        "pruned": subset is not None,
+        "files_scanned": plan.scanned,
+        "files_total": plan.total,
+        "pruned": plan.scanned < plan.total,
     }

@@ -18,6 +18,15 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
+from rocket_etl_spark.lake.planner import (
+    attach_file_metadata,
+    bucket_of,
+    delta_files,
+    legacy_layouts,
+    legacy_probe_cols,
+    legacy_touched,
+    written_files,
+)
 from rocket_etl_spark.lake.table import LakeTable
 
 
@@ -155,8 +164,6 @@ def _compact_once(
     migrate_legacy: bool = False,
     zorder: bool = False,
 ) -> dict | None:
-    from rocket_etl_spark.lake.table import legacy_layouts
-
     snap = table.current_snapshot()
     legacy = [l for l in legacy_layouts(snap) if any(l["buckets"].values())]
     files_before = sum(len(v) for v in snap["buckets"].values()) + sum(
@@ -187,36 +194,20 @@ def _compact_once(
             for l in legacy
         }
     elif legacy and cand:
-        delta_rel = {
-            fe["path"]
-            for b in cand
-            for fe in snap["buckets"].get(str(b), [])
-            if fe.get("kind") == "delta"
-        }
+        deltas = delta_files(snap)
+        delta_rel = {fe["path"] for b in cand for fe in deltas.get(b, [])}
         if delta_rel:
-            from rocket_etl_spark.lake.table import bucket_of as _bof
-
-            keys = snap["key_cols"]
             dkeys = (
                 table.read(
                     buckets=cand, include_tombstones=True,
                     file_subset=delta_rel, legacy_buckets={},
                 )
-                .select(*keys)
+                .select(*snap["key_cols"])
                 .distinct()
             )
-            for l in legacy:
-                lb = {
-                    r["_b"]
-                    for r in dkeys.select(
-                        _bof(keys, int(l["num_buckets"])).alias("_b")
-                    )
-                    .distinct()
-                    .collect()
-                }
-                lb = sorted(b for b in lb if l["buckets"].get(str(b)))
-                if lb:
-                    leg_sel[int(l["spec_id"])] = lb
+            leg_sel = legacy_touched(
+                snap, dkeys.select(*legacy_probe_cols(snap)).distinct().collect()
+            )
 
     if not cand and not leg_sel:
         return {
@@ -288,41 +279,15 @@ def _compact_once(
     }
     for b in cand:
         new_buckets[str(b)] = []
-    sv = snap["current_schema_version"]
-    written: dict[int, list[dict]] = {}
-    for bdir in sorted(out_dir.glob("_bucket=*")):
-        b = bdir.name.split("=")[1]
-        written[int(b)] = [
-            {"path": f"{out_dir_rel}/{bdir.name}/{p.name}", "sv": sv}
-            for p in sorted(bdir.iterdir())
-            if p.name.endswith(".parquet")
-        ]
-        if int(b) in set(cand):
-            new_buckets[b] = written[int(b)]
-        else:
-            new_buckets[b] = new_buckets.get(b, []) + written[int(b)]
-    # decide-scan metadata for the rewritten base files: zone maps are
-    # footer-only (free at any size); blooms self-gate on the per-file
-    # row cap so a big base slice never yields a saturated filter
-    from rocket_etl_spark.lake.merge import (
-        _bloom_safe_keys,
-        _build_file_blooms,
-        _build_file_ranges,
-        _RANGES_ENABLED,
-        _BLOOMS_ENABLED,
-    )
-
+    written = written_files(table.path, out_dir_rel, snap["current_schema_version"])
+    for b, fl in written.items():
+        new_buckets[str(b)] = fl if b in set(cand) else new_buckets.get(str(b), []) + fl
+    # decide-scan metadata for the rewritten base files, under the schema
+    # of the snapshot we compacted (not the possibly moved tip)
     from rocket_etl_spark.schema.registry import TableSchema
 
-    # the schema of the snapshot we compacted, not the (possibly moved) tip
     schema = TableSchema.from_json(snap["schemas"][str(snap["current_schema_version"])])
-    keys = snap["key_cols"]
-    if written and _RANGES_ENABLED:
-        from rocket_etl_spark.lake.merge import _range_safe_cols
-
-        _build_file_ranges(out_dir, written, _range_safe_cols(schema), schema)
-    if written and _BLOOMS_ENABLED and _bloom_safe_keys(schema, keys):
-        _build_file_blooms(out_dir, written, keys)
+    attach_file_metadata(table.path, written, schema, snap["key_cols"])
 
     # retired layouts: drop the buckets this pass migrated; a layout with
     # nothing left disappears (fully-migrated tables lose the section)
@@ -447,21 +412,15 @@ def table_stats(table: LakeTable) -> dict:
     rows = 0
     max_files = 0
     fragmented = 0
-    delta_files = 0
-    max_delta_depth = 0
     for fl in snap["buckets"].values():
         files += len(fl)
         max_files = max(max_files, len(fl))
         if len(fl) >= 2:
             fragmented += 1
-        depth = sum(1 for fe in fl if fe.get("kind") == "delta")
-        delta_files += depth
-        max_delta_depth = max(max_delta_depth, depth)
         for fe in fl:
             rows += pq.read_metadata(str(table.path / fe["path"])).num_rows
+    depths = [len(fl) for fl in delta_files(snap).values()]
     legacy_files = legacy_rows = 0
-    from rocket_etl_spark.lake.table import legacy_layouts
-
     for layout in legacy_layouts(snap):
         for fl in layout["buckets"].values():
             legacy_files += len(fl)
@@ -480,8 +439,8 @@ def table_stats(table: LakeTable) -> dict:
         "fragmented_buckets": fragmented,
         # merge-on-read debt: delta files awaiting a compaction fold;
         # max_delta_depth bounds the per-key read amplification
-        "delta_files": delta_files,
-        "max_delta_depth": max_delta_depth,
+        "delta_files": sum(depths),
+        "max_delta_depth": max(depths, default=0),
         # bucket-spec-evolution debt: files still under retired layouts,
         # shrinking as MERGEs migrate matched files / compact() bulk-moves
         "spec_id": int(snap.get("spec_id", 0)),
@@ -518,8 +477,6 @@ def rebucket(table: LakeTable, new_num_buckets: int, max_retries: int = 5) -> di
 def _rebucket_once(table: LakeTable, new_num_buckets: int) -> dict | None:
     import uuid
 
-    from rocket_etl_spark.lake.table import bucket_of
-
     snap = table.current_snapshot()
     if int(snap["num_buckets"]) == new_num_buckets:
         return {"snapshot_id": snap["snapshot_id"], "rebucketed": False}
@@ -535,15 +492,12 @@ def _rebucket_once(table: LakeTable, new_num_buckets: int) -> dict | None:
         .write.partitionBy("_bucket")
         .parquet(str(out_dir))
     )
-    sv = snap["current_schema_version"]
-    new_buckets: dict[str, list] = {}
-    for bdir in sorted(out_dir.glob("_bucket=*")):
-        b = bdir.name.split("=")[1]
-        new_buckets[b] = [
-            {"path": f"{out_dir_rel}/{bdir.name}/{p.name}", "sv": sv}
-            for p in sorted(bdir.iterdir())
-            if p.name.endswith(".parquet")
-        ]
+    new_buckets = {
+        str(b): fl
+        for b, fl in written_files(
+            table.path, out_dir_rel, snap["current_schema_version"]
+        ).items()
+    }
     new_snap = dict(snap)
     new_snap["snapshot_id"] = snap["snapshot_id"] + 1
     new_snap["parent_id"] = snap["snapshot_id"]
@@ -596,11 +550,7 @@ def evolve_buckets(table: LakeTable, new_num_buckets: int) -> dict:
     while True:
         if int(snap["num_buckets"]) == int(new_num_buckets):
             return {"snapshot_id": snap["snapshot_id"], "evolved": False}
-        if any(
-            fe.get("kind") == "delta"
-            for fl in snap["buckets"].values()
-            for fe in fl
-        ):
+        if delta_files(snap):
             raise ValueError(
                 "cannot evolve the bucket spec over merge-on-read deltas: "
                 "compact() the table first so every key has exactly one "

@@ -41,6 +41,13 @@ Execution shape (scale rationale inline):
    foreachBatch);
 5. CAS-commit a snapshot = parent's untouched buckets + new files.
 
+The decide scan reads the touched buckets of every bucket layout, minus
+the files whose key bloom or zone map proves they hold no winner key
+(broadcast path only: its keep side re-links the files it did not
+read).  That pruning, the entries for the files a commit writes and the
+zone maps and blooms attached to them are ``lake/planner.py``'s rules,
+shared with every reader of the table.
+
 The MERGE is order-insensitive across and within batches: the LWW guard
 ``s.seq > t.seq`` means late/duplicate delivery converges to the same
 final state — idempotency does not depend on the watermark.
@@ -60,6 +67,7 @@ the snapshot that actually published them regardless of retries.
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 from dataclasses import dataclass
@@ -67,7 +75,16 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from rocket_etl_spark.lake.table import LakeTable, bucket_of, fence_add
+from rocket_etl_spark.lake.planner import (
+    attach_file_metadata,
+    bucket_of,
+    delta_files,
+    legacy_probe_cols,
+    legacy_touched,
+    select_files,
+    written_files,
+)
+from rocket_etl_spark.lake.table import LakeTable, fence_add
 from rocket_etl_spark.operators.lww import lww_dedupe
 from rocket_etl_spark.schema.registry import TableSchema
 
@@ -76,357 +93,18 @@ from rocket_etl_spark.schema.registry import TableSchema
 # hundred MB of hash relation).  No minimum-duplicate-ratio gate:
 # interleaved A/B showed the broadcast path 3-5x faster even at dedupe
 # ratio 1.09, because keeping KB-wide payloads out of aggregation buffers
-# and exchanges dwarfs the extra key-column pass.  Overridable for
-# clusters whose executors can hold bigger hash relations (epochs with
-# tens of millions of distinct keys).
-import os as _os
-
-SLIM_DEDUPE_MAX_KEYS = int(_os.environ.get("SPARK_GRAFT_SLIM_MAX_KEYS", 2_000_000))
+# and exchanges dwarfs the extra key-column pass.
+SLIM_DEDUPE_MAX_KEYS = 2_000_000
 
 # the count gate alone under-protects with WIDE keys (repo+path can be
 # hundreds of bytes: 2M such keys is a multi-hundred-MB hash relation on
 # the driver AND every executor).  The planning aggregate therefore also
 # measures actual key bytes, and the broadcast path additionally requires
 # distinct_keys × (avg_key_bytes + per-row overhead) under this bound.
-SLIM_DEDUPE_MAX_BYTES = int(
-    _os.environ.get("SPARK_GRAFT_SLIM_MAX_BYTES", 256 * 1024 * 1024)
-)
+SLIM_DEDUPE_MAX_BYTES = 256 * 1024 * 1024
 # JVM hash-relation per-row overhead: UnsafeRow header + ord/action/del
 # fields + map entry — ~64 bytes is deliberately conservative
 _BCAST_ROW_OVERHEAD = 64
-
-# ---- per-file key blooms: decide-phase scan pruning --------------------
-# The merge's decide phase (winners × table slim join) must consult every
-# touched bucket's key columns — measured as the per-epoch cost floor
-# (BENCH/BASELINE.md round-4 breakdown).  Small commits therefore attach
-# a tiny bloom filter of their keys to each written file entry; a later
-# small epoch collects its (bounded) winner keys and SKIPS scanning any
-# bloomed file that cannot contain one.  Blooms have no false negatives,
-# so a skipped file provably holds only keep-rows, which the broadcast
-# path re-links untouched (matched-file pruning) — pruning is therefore
-# gated on broadcast-path eligibility; the SMJ path never prunes.
-# The payoff case is the production shape: a long stream of small epochs
-# between compactions, where the table is many small files and each
-# epoch's keys live in few of them.  Compaction drops blooms (rewritten
-# files get none) — conservative, never wrong.
-BLOOM_BITS = 1 << 13  # 8192 bits = 1 KB per file entry, ~2% fp at 1k keys
-BLOOM_COMMIT_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_BLOOM_MAX_ROWS", 250_000))
-BLOOM_PROBE_MAX_KEYS = int(_os.environ.get("SPARK_GRAFT_BLOOM_PROBE_KEYS", 20_000))
-# per-FILE row cap: a broadcast merge with a small batch can still rewrite
-# a matched file holding millions of rows — blooming it would stall the
-# driver on a full pyarrow key read AND saturate the 1 KB bloom into
-# uselessness (fill^8 → ~1 past ~2k distinct keys).  Checked from parquet
-# footer metadata only; oversized files simply carry no bloom (= always
-# scanned — conservative, never wrong).
-BLOOM_FILE_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_BLOOM_FILE_ROWS", 2048))
-_BLOOMS_ENABLED = _os.environ.get("SPARK_GRAFT_FILE_BLOOMS", "1") != "0"
-
-# Blooms hash the canonical string of each key value, so only dtypes whose
-# Python value is IDENTICAL between the write side (pyarrow ``to_pylist``)
-# and the probe side (Spark ``collect``) may participate: str/int/date/bool
-# round-trip exactly, and binary is canonicalized to hex on both sides.
-# Timestamps (tz-aware parquet read-back vs session-naive collect), floats
-# and decimals (repr/scale edge cases) are gated OUT — a representation
-# mismatch there would be a bloom FALSE NEGATIVE: a silently skipped file
-# that really held a winner key, i.e. a wrong merge.
-_BLOOM_SAFE_DTYPES = {
-    "string", "varchar", "char", "tinyint", "smallint", "int", "integer",
-    "bigint", "long", "date", "boolean", "binary",
-}
-
-def _bloom_safe_keys(schema, keys) -> bool:
-    try:
-        return all(
-            schema.field_by_name(k).dtype.lower().split("(")[0].strip()
-            in _BLOOM_SAFE_DTYPES
-            for k in keys
-        )
-    except Exception:
-        return False
-
-
-# ---- per-file key zone maps: range pruning past the bloom caps ---------
-# Blooms cap out (BLOOM_FILE_MAX_ROWS per file, BLOOM_PROBE_MAX_KEYS per
-# epoch) because they cost a key-column data read to build and k hashes
-# per probe key.  Zone maps — per-file MIN/MAX of each key column — are
-# free at both ends: built from parquet FOOTER statistics only (no data
-# read, so every file of any size gets one) and probed with two bisects
-# per (file, key column) over the sorted winner values.  A file whose
-# range provably excludes every winner key column-wise cannot contain a
-# winner row (per-column exclusion ⇒ tuple exclusion), so skipping it is
-# safe; overlap is merely a false positive (file scanned anyway).  This
-# is the same trick as Iceberg's manifest-entry column bounds.
-RANGE_PROBE_MAX_KEYS = int(_os.environ.get("SPARK_GRAFT_RANGE_PROBE_KEYS", 200_000))
-_RANGES_ENABLED = _os.environ.get("SPARK_GRAFT_FILE_RANGES", "1") != "0"
-
-_INT_DTYPES = {"tinyint", "smallint", "int", "integer", "bigint", "long"}
-
-
-def _range_canon(v, dt: str):
-    """Canonical ORDER-PRESERVING, JSON-storable encoding of a key value,
-    identical for pyarrow footer statistics and Spark collect() rows:
-    ints stay ints; dates → ISO strings (sort like dates); binary → hex
-    (hex lexicographic == byte order); strings as-is (UTF-8 byte order ==
-    code-point order).  Unsafe dtypes never reach here (_bloom_safe_keys
-    gates both build and probe)."""
-    if v is None:
-        return None
-    if dt in _INT_DTYPES:
-        return int(v)
-    if dt == "boolean":
-        return int(bool(v))
-    if dt == "binary":
-        return bytes(v).hex()
-    if dt == "date":
-        return v if isinstance(v, str) else v.isoformat()
-    return str(v)
-
-
-_RANGE_TRUNC = 32  # Iceberg-style string-bound truncation length
-
-
-def _range_safe_cols(schema) -> list[str]:
-    """Every scalar column whose dtype the zone-map canon supports.
-
-    Zone maps are footer-only, so bounds are recorded for ALL such
-    columns, not just the merge keys — Iceberg records column bounds
-    for every column for the same reason: ``range_scan`` can then prune
-    files on any of them (e.g. a lang or commit predicate), while the
-    MERGE decide probe keeps consulting only the key columns."""
-    return [
-        f.name
-        for f in schema.fields
-        if f.dtype.lower().split("(")[0].strip() in _BLOOM_SAFE_DTYPES
-    ]
-
-
-def _trunc_bounds(lo, hi):
-    """Iceberg-style bound truncation for long string values: the lower
-    bound truncates to a prefix (a prefix is <= the value — safe), the
-    upper bound truncates and INCREMENTS its last code point (yielding a
-    string > every value sharing the prefix — safe).  Returns (lo, hi)
-    or (lo, None) when no valid upper truncation exists; a None bound
-    means 'cannot prune upward on this column for this file'."""
-    if isinstance(lo, str) and len(lo) > _RANGE_TRUNC:
-        lo = lo[:_RANGE_TRUNC]
-    if isinstance(hi, str) and len(hi) > _RANGE_TRUNC:
-        p = hi[:_RANGE_TRUNC]
-        hi = None
-        for i in range(len(p) - 1, -1, -1):
-            if ord(p[i]) < 0x10FFFF:
-                # skip the surrogate range (like Iceberg's truncate): an
-                # incremented U+D7FF would be a lone surrogate that
-                # json.dump emits as an unpaired \ud800 escape — valid
-                # for Python but invalid strict JSON for other readers.
-                # U+E000 > every surrogate, so the bound stays safe.
-                nxt = ord(p[i]) + 1
-                if 0xD800 <= nxt <= 0xDFFF:
-                    nxt = 0xE000
-                hi = p[:i] + chr(nxt)
-                break
-    return lo, hi
-
-
-def _build_file_ranges(out_dir, out_files: dict[int, list[dict]], keys, schema) -> None:
-    """Attach a ``kr`` zone map ({col: [min, max]}) to every just-written
-    file entry, from parquet footer metadata only — no row cap needed.
-    ``keys`` here is the COLUMN LIST to map (call sites pass
-    ``_range_safe_cols(schema)`` — every supported column, keys
-    included).  Columns with nulls or absent statistics get no entry
-    (the probe treats a missing bound as 'may contain anything'); long
-    string bounds are truncated Iceberg-style (``_trunc_bounds``) so a
-    KB-sized content column never bloats the snapshot JSON."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    dts = {k: schema.field_by_name(k).dtype.lower().split("(")[0].strip() for k in keys}
-    flat = [
-        (fe, str(out_dir.parent.parent / fe["path"]))
-        for fl in out_files.values()
-        for fe in fl
-    ]
-
-    def one(item):
-        fe, path = item
-        md = pq.ParquetFile(path).metadata
-        lo: dict[str, object] = {}
-        hi: dict[str, object] = {}
-        ok = set(keys)
-        for rg in range(md.num_row_groups):
-            row_group = md.row_group(rg)
-            seen = set()
-            for ci in range(row_group.num_columns):
-                col = row_group.column(ci)
-                name = col.path_in_schema
-                if name not in ok:
-                    continue
-                st = col.statistics
-                if (
-                    st is None
-                    or not st.has_min_max
-                    or st.null_count is None  # unknown ⇒ conservative
-                    or st.null_count > 0
-                ):
-                    ok.discard(name)  # no bound ⇒ never prune on this col
-                    continue
-                mn, mx = _range_canon(st.min, dts[name]), _range_canon(st.max, dts[name])
-                if name not in lo or mn < lo[name]:
-                    lo[name] = mn
-                if name not in hi or mx > hi[name]:
-                    hi[name] = mx
-                seen.add(name)
-            ok &= seen
-        kr = {}
-        for k in ok:
-            if k not in lo:
-                continue
-            tlo, thi = _trunc_bounds(lo[k], hi[k])
-            if thi is not None:
-                kr[k] = [tlo, thi]
-        if kr:
-            fe["kr"] = kr
-
-    with ThreadPoolExecutor(max_workers=min(16, max(len(flat), 1))) as ex:
-        list(ex.map(one, flat))
-
-
-def _range_hit(fe: dict, sorted_vals: dict[str, list]) -> bool:
-    """True iff the file MAY contain some winner key: every zone-mapped
-    key column has at least one winner value inside [min, max]."""
-    from bisect import bisect_left
-
-    kr = fe.get("kr")
-    if not kr:
-        return True
-    for k, (mn, mx) in kr.items():
-        vals = sorted_vals.get(k)
-        if vals is None:
-            continue
-        i = bisect_left(vals, mn)
-        if i >= len(vals) or vals[i] > mx:
-            return False  # no winner value of k in range ⇒ no tuple fits
-    return True
-
-
-_BLOOM_K = 8  # hash positions per key: false-hit ≈ fill^8, so a probe of
-#               thousands of keys still skips files at ~30% fill — k=2
-#               saturates at a few hundred probe keys (fill² decay)
-
-
-def _bloom_positions(key_vals) -> list[int]:
-    """``_BLOOM_K`` bit positions for a key tuple — pure python/hashlib so
-    the write side (pyarrow read-back) and probe side (collected winner
-    rows) can never disagree.  NULL key parts get a reserved token."""
-    import hashlib
-
-    def canon(v):
-        if v is None:
-            return "\x00"
-        if isinstance(v, (bytes, bytearray, memoryview)):
-            return "b:" + bytes(v).hex()  # Spark collect yields bytearray,
-            #                               pyarrow yields bytes — str() of
-            #                               those differ; hex agrees
-        return str(v)
-
-    s = "\x1f".join(canon(v) for v in key_vals)
-    d = hashlib.md5(s.encode()).digest() + hashlib.md5(s.encode() + b"#").digest()
-    return [
-        int.from_bytes(d[4 * i : 4 * i + 4], "big") % BLOOM_BITS
-        for i in range(_BLOOM_K)
-    ]
-
-
-def _build_file_blooms(out_dir, out_files: dict[int, list[dict]], keys) -> None:
-    """Attach a base64 key bloom to every just-written file entry
-    (driver-side pyarrow, threaded — same bounded pattern as
-    ``_action_counts``; only called for small commits)."""
-    import base64
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    flat = [
-        (fe, str(out_dir.parent.parent / fe["path"]))
-        for fl in out_files.values()
-        for fe in fl
-    ]
-
-    def one(item):
-        fe, path = item
-        pf = pq.ParquetFile(path)
-        if pf.metadata.num_rows > BLOOM_FILE_MAX_ROWS:
-            return  # footer-only check: no key read, no saturated bloom
-        t = pf.read(columns=list(keys))
-        bits = bytearray(BLOOM_BITS // 8)
-        cols = [t[k].to_pylist() for k in keys]
-        for vals in zip(*cols) if cols else []:
-            for p in _bloom_positions(vals):
-                bits[p >> 3] |= 1 << (p & 7)
-        fe["bloom"] = base64.b64encode(bytes(bits)).decode()
-
-    with ThreadPoolExecutor(max_workers=min(16, max(len(flat), 1))) as ex:
-        list(ex.map(one, flat))
-
-
-def _prune_decide_files(
-    entries, key_rows, keys, schema,
-    blooms: bool = True, ranges: bool = True,
-) -> tuple[set[str], int, int] | None:
-    """Decide-scan file subset: keep files (from the candidate ``entries``
-    — the touched buckets' file entries across EVERY bucket layout, legacy
-    included) that MAY contain a winner key per their bloom AND per their
-    zone map (each independently has no false negatives, so either proof
-    of absence suffices to skip).  Files carrying neither pruner are
-    always kept.  Returns (subset, scanned, total), or None when nothing
-    can be skipped."""
-    import base64
-
-    import numpy as np
-
-    byte_idx = bit_mask = None
-    if blooms:
-        # (nkeys, K) bit positions; a key POSSIBLY hits a file iff ALL its
-        # K positions are set in that file's bloom (no false negatives);
-        # the file must be scanned iff ANY key possibly hits
-        idx = np.array(
-            [_bloom_positions(tuple(r)) for r in key_rows], dtype=np.int64
-        )
-        byte_idx, bit_mask = idx >> 3, (1 << (idx & 7)).astype(np.uint8)
-    sorted_vals: dict[str, list] = {}
-    if ranges:
-        dts = {
-            k: schema.field_by_name(k).dtype.lower().split("(")[0].strip()
-            for k in keys
-        }
-        for i, k in enumerate(keys):
-            vals = [_range_canon(r[i], dts[k]) for r in key_rows]
-            sorted_vals[k] = sorted(v for v in vals if v is not None)
-            if len(sorted_vals[k]) < len(vals):
-                # a NULL winner key part matches no table row under join
-                # semantics, but don't let it perturb the bounds check
-                del sorted_vals[k]
-    keep: set[str] = set()
-    total = skipped = 0
-    for fe in entries:
-        total += 1
-        hit = True
-        if ranges and not _range_hit(fe, sorted_vals):
-            hit = False
-        blm = fe.get("bloom") if (hit and blooms) else None
-        if blm is not None:
-            bits = np.frombuffer(base64.b64decode(blm), dtype=np.uint8)
-            hit = bool(
-                ((bits[byte_idx] & bit_mask) != 0).all(axis=1).any()
-            )
-        if hit:
-            keep.add(fe["path"])
-        else:
-            skipped += 1
-    if not skipped:
-        return None
-    return keep, total - skipped, total
-
 
 class CommitConflict(Exception):
     """A concurrent commit changed the table in a way this merge cannot
@@ -887,23 +565,12 @@ def _merge_mor_commit(
             .withColumn("_bucket", bucket_of(keys, nb))
         )
         out_dir_rel = f"data/commit-{commit_tag}"
-        out_dir = table.path / out_dir_rel
         (
             delta.repartition(max(len(touched), 1), "_bucket")
             .write.partitionBy("_bucket")
-            .parquet(str(out_dir))
+            .parquet(str(table.path / out_dir_rel))
         )
-        for bdir in sorted(out_dir.glob("_bucket=*")):
-            b = int(bdir.name.split("=")[1])
-            out_files[b] = [
-                {
-                    "path": f"{out_dir_rel}/{bdir.name}/{p.name}",
-                    "sv": schema.version,
-                    "kind": "delta",
-                }
-                for p in sorted(bdir.iterdir())
-                if p.name.endswith(".parquet")
-            ]
+        out_files = written_files(table.path, out_dir_rel, schema.version, delta=True)
     _mark("write")
     for c in caches:
         c.unpersist()
@@ -967,15 +634,9 @@ def _merge_mor_commit(
             if mor_compact_threshold is not None and touched:
                 # log-structured maintenance: fold any bucket whose delta
                 # depth reached the bound, keeping read amplification O(1)
+                deltas = delta_files(new_snap)
                 deep = [
-                    b
-                    for b in touched
-                    if sum(
-                        1
-                        for fe in new_snap["buckets"].get(str(b), [])
-                        if fe.get("kind") == "delta"
-                    )
-                    >= mor_compact_threshold
+                    b for b in touched if len(deltas.get(b, ())) >= mor_compact_threshold
                 ]
                 if deep:
                     from rocket_etl_spark.lake.maintenance import compact
@@ -1070,11 +731,7 @@ def merge_batch(
             # decide reads these buckets (its keep/re-link logic assumes
             # one live row per key per bucket's file set — a retained
             # stale delta row would out-seq the rewrite and corrupt)
-            delta_buckets = [
-                int(b)
-                for b, fl in snap["buckets"].items()
-                if any(fe.get("kind") == "delta" for fe in fl)
-            ]
+            delta_buckets = list(delta_files(snap))
             if delta_buckets:
                 if compactions >= 5:
                     raise RuntimeError(
@@ -1130,7 +787,7 @@ def _merge_once(
     # (plan / decide+write / stats / commit) — the observability hook for
     # chasing per-epoch fixed costs (streaming mode pays them per micro-
     # batch).  Negligible overhead when unset (a few monotonic() calls).
-    _timing = bool(_os.environ.get("SPARK_GRAFT_TIMING"))
+    _timing = bool(os.environ.get("SPARK_GRAFT_TIMING"))
     _tm = time.monotonic()
     _ph: dict[str, float] = {}
 
@@ -1221,27 +878,14 @@ def _merge_once(
     matched_rel: set | None = None
     # bucket-spec evolution: winner keys may still live under a RETIRED
     # layout — probe each legacy spec with the keys' buckets under THAT
-    # spec (same tiny collect shape as plan_rows: ≤ spec's bucket count
-    # rows; winners_slim is cached).  Only file-bearing buckets count.
-    legacy = [
-        layout
-        for layout in (snap.get("legacy") or [])
-        if any(layout["buckets"].values())
-    ]
-    leg_touched: dict[int, list[int]] = {}
-    if touched and legacy:
-        for layout in legacy:
-            lb = {
-                r["_b"]
-                for r in winners_slim.select(
-                    bucket_of(keys, int(layout["num_buckets"])).alias("_b")
-                )
-                .distinct()
-                .collect()
-            }
-            lb = sorted(b for b in lb if layout["buckets"].get(str(b)))
-            if lb:
-                leg_touched[int(layout["spec_id"])] = lb
+    # spec (one tiny collect over the cached winners_slim: ≤ the specs'
+    # bucket-count product rows)
+    leg_cols = legacy_probe_cols(snap)
+    leg_touched = (
+        legacy_touched(snap, winners_slim.select(*leg_cols).distinct().collect())
+        if touched and leg_cols
+        else {}
+    )
     if touched:
         from rocket_etl_spark.schema.registry import project_to
 
@@ -1259,52 +903,16 @@ def _merge_once(
             and est_broadcast_bytes <= SLIM_DEDUPE_MAX_BYTES
         )
 
-        # bloom + zone-map pruning of the DECIDE scan (see the sections
-        # above).  Broadcast path only: its keep side re-links unscanned
-        # files; the SMJ path rewrites whole buckets and must see every
-        # row.  Blooms gate at BLOOM_PROBE_MAX_KEYS (k hashes per key);
-        # zone maps stretch to RANGE_PROBE_MAX_KEYS (two bisects/file).
-        decide_subset = None
-        touched_entries = [
-            fe for b in touched for fe in snap["buckets"].get(str(b), [])
-        ] + [
-            fe
-            for layout in legacy
-            for b in leg_touched.get(int(layout["spec_id"]), [])
-            for fe in layout["buckets"].get(str(b), [])
-        ]
-        probe_blooms = (
-            _BLOOMS_ENABLED
-            and distinct_keys <= BLOOM_PROBE_MAX_KEYS
-            and any("bloom" in fe for fe in touched_entries)
+        # bloom + zone-map pruning of the DECIDE scan (lake/planner.py).
+        # Broadcast path only: its keep side re-links unscanned files;
+        # the SMJ path rewrites whole buckets and must see every row.
+        decide = select_files(
+            snap, touched, leg_touched,
+            key_rows=(lambda: winners_slim.select(*keys).collect()) if use_broadcast else None,
+            n_keys=distinct_keys,
         )
-        probe_ranges = (
-            _RANGES_ENABLED
-            and distinct_keys <= RANGE_PROBE_MAX_KEYS
-            and any("kr" in fe for fe in touched_entries)
-        )
-        if (
-            use_broadcast
-            and (probe_blooms or probe_ranges)
-            and _bloom_safe_keys(cur_schema, keys)
-        ):
-            key_rows = winners_slim.select(*keys).collect()
-            pruned = _prune_decide_files(
-                touched_entries, key_rows, keys, cur_schema,
-                blooms=probe_blooms, ranges=probe_ranges,
-            )
-            if pruned is not None:
-                decide_subset, decide_scanned, decide_total = pruned
-        if decide_subset is None:
-            decide_scanned = decide_total = len(touched_entries)
-
         # tombstones included: a newer delete must outrank a stale upsert
-        current = _project(
-            table.read(
-                buckets=touched, include_tombstones=True,
-                file_subset=decide_subset, legacy_buckets=leg_touched,
-            )
-        )
+        current = _project(table.read_plan(decide, snap, include_tombstones=True))
 
         vals = [c for c in schema.names() if c not in keys]
         # _action is written into the data files (tiny, dictionary-encoded)
@@ -1393,26 +1001,8 @@ def _merge_once(
         for p in sides[1:]:
             combined = combined.unionByName(p)
         combined.write.partitionBy("_bucket").parquet(str(out_dir))
-        for bdir in sorted(out_dir.glob("_bucket=*")):
-            b = int(bdir.name.split("=")[1])
-            files = [
-                f"{out_dir_rel}/{bdir.name}/{p.name}"
-                for p in sorted(bdir.iterdir())
-                if p.name.endswith(".parquet")
-            ]
-            out_files[b] = [{"path": p, "sv": schema.version} for p in files]
-        if (
-            _BLOOMS_ENABLED
-            and 0 < rows_in <= BLOOM_COMMIT_MAX_ROWS
-            and _bloom_safe_keys(schema, keys)
-        ):
-            # small commit: attach key blooms so LATER small epochs can
-            # skip scanning these files in their decide phase
-            _build_file_blooms(out_dir, out_files, keys)
-        if _RANGES_ENABLED and out_files:
-            # every commit, every file size, EVERY supported column (not
-            # just keys — Iceberg column bounds): zone maps are footer-only
-            _build_file_ranges(out_dir, out_files, _range_safe_cols(schema), schema)
+        out_files = written_files(table.path, out_dir_rel, schema.version)
+        attach_file_metadata(table.path, out_files, schema, keys, rows_in=rows_in)
         _mark("write")
 
         if out_files:
@@ -1521,8 +1111,8 @@ def _merge_once(
                 event_seq_max=seq_hi,
                 touched_buckets=len(touched),
                 bucket_stats=bucket_stats,
-                decide_files_scanned=decide_scanned if touched else 0,
-                decide_files_total=decide_total if touched else 0,
+                decide_files_scanned=decide.scanned if touched else 0,
+                decide_files_total=decide.total if touched else 0,
             )
         # lost the CAS — someone else published base+1
         latest = table.current_snapshot()
@@ -1599,14 +1189,9 @@ def append_batch(
         .write.partitionBy("_bucket")
         .parquet(str(out_dir))
     )
-    out_files: dict[str, list[dict]] = {}
-    for bdir in sorted(out_dir.glob("_bucket=*")):
-        b = bdir.name.split("=")[1]
-        out_files[b] = [
-            {"path": f"{out_dir_rel}/{bdir.name}/{p.name}", "sv": schema.version}
-            for p in sorted(bdir.iterdir())
-            if p.name.endswith(".parquet")
-        ]
+    out_files = {
+        str(b): fl for b, fl in written_files(table.path, out_dir_rel, schema.version).items()
+    }
     # row counts come straight from the parquet footers — metadata-only
     # driver reads (Iceberg gets these from its manifests), no Spark job
     import pyarrow.parquet as pq

@@ -22,7 +22,6 @@ rows.
 
 from __future__ import annotations
 
-import base64
 import json
 import os
 import re
@@ -32,6 +31,7 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from rocket_etl_spark.lake.planner import describe_file
 from rocket_etl_spark.lake.table import LakeTable
 
 _SNAPSHOTS_SCHEMA = T.StructType(
@@ -223,20 +223,19 @@ def files(table: LakeTable, snapshot_id: int | None = None) -> DataFrame:
                     nbytes = full.stat().st_size
                 except OSError:
                     nrows, nbytes = None, None
-                kr = fe.get("kr")
-                bloom = fe.get("bloom")
+                kind, has_bloom, bloom_bytes, key_min, key_max = describe_file(fe)
                 rows.append(
                     (
                         int(b),
                         fe["path"],
-                        fe.get("kind", "base"),
+                        kind,
                         fe.get("sv"),
                         nrows,
                         nbytes,
-                        bloom is not None,
-                        len(base64.b64decode(bloom)) if bloom else None,
-                        {k: str(v[0]) for k, v in kr.items()} if kr else None,
-                        {k: str(v[1]) for k, v in kr.items()} if kr else None,
+                        has_bloom,
+                        bloom_bytes,
+                        key_min,
+                        key_max,
                         spec_id,
                         spec_nb,
                     )

@@ -49,6 +49,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.types import DateType, StructType, TimestampNTZType, TimestampType
 
+from rocket_etl_spark.lake.planner import (  # noqa: F401  legacy_layouts: importable from here
+    FilePlan,
+    bucket_of,
+    legacy_layouts,
+    select_files,
+)
 from rocket_etl_spark.schema.registry import TableSchema, project_to
 
 _SNAP_RE = re.compile(r"snapshot-(\d{8})\.json$")
@@ -121,11 +127,6 @@ def fence_add(fences: dict, app_id: str, epoch_id: int) -> dict:
     return {**fences, app_id: {"hwm": hwm, "above": sorted(above)}}
 
 
-def bucket_of(key_cols: Sequence[str], num_buckets: int) -> Column:
-    """Deterministic bucket id for a row: pmod(xxhash64(keys), N)."""
-    return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(num_buckets)).cast("int")
-
-
 def arrow_table(rows: Sequence, struct: StructType) -> pa.Table:
     """Rows held in Python as an Arrow table typed the way Spark hands
     ``struct`` to Arrow.  Dates and timestamps go through the Spark
@@ -156,21 +157,6 @@ def local_frame(spark: SparkSession, rows: Sequence, struct: StructType) -> Data
     over it is folded at plan time (collecting it runs no job), and
     broadcasting it costs no executor time."""
     return spark.createDataFrame(arrow_table(rows, struct), struct)
-
-
-def legacy_layouts(snap: dict) -> list[dict]:
-    """The snapshot's retired bucket layouts, newest first.
-
-    Bucket-spec evolution (``maintenance.evolve_buckets``) is
-    metadata-only — Iceberg partition-spec evolution: the tip's
-    ``num_buckets``/``buckets`` describe the CURRENT spec (all new
-    writes route here) while each retired spec's still-unmigrated files
-    stay listed under ``snap["legacy"]`` as
-    ``{"spec_id", "num_buckets", "buckets"}``.  A key lives under
-    exactly ONE spec at a time: the MERGE's keep side rewrites matched
-    legacy files into current-spec buckets (gradual migration), and
-    ``compact(migrate_legacy=True)`` finishes the job in bulk."""
-    return snap.get("legacy") or []
 
 
 def _mor_reconcile(df: DataFrame, keys: Sequence[str], order_col: str) -> DataFrame:
@@ -218,62 +204,6 @@ def _mor_reconcile_arrow(tbl: pa.Table, keys: Sequence[str], order_col: str) -> 
     )
     first = ranked.group_by(list(keys), use_threads=False).aggregate([("_i", "first")])
     return rows.take(first["_i_first"])
-
-
-def plan_read(
-    snap: dict,
-    buckets: Sequence[int] | None = None,
-    file_subset: set[str] | None = None,
-    legacy_buckets: dict[int, Sequence[int]] | None = None,
-) -> tuple[list[dict], list[dict]]:
-    """The file entries a read selects, split ``(plain, reconcile)``:
-    plain files are read as they are, reconcile files go through the
-    merge-on-read collapse as one set.  ``LakeTable.read`` (Spark) and
-    ``lake.lookup.lookup`` (pyarrow on the driver) both read by this
-    split; the arguments mean what they mean to ``read``."""
-    selections: list[tuple[bool, list[dict]]] = []  # (is_legacy, files)
-    bset = set(int(b) for b in buckets) if buckets is not None else None
-    for b, files in snap["buckets"].items():
-        if bset is not None and int(b) not in bset:
-            continue
-        sel = [fe for fe in files if file_subset is None or fe["path"] in file_subset]
-        if sel:
-            selections.append((False, sel))
-    for layout in legacy_layouts(snap):
-        allowed = (
-            None
-            if legacy_buckets is None
-            else {int(x) for x in legacy_buckets.get(layout["spec_id"], ())}
-        )
-        for b, files in layout["buckets"].items():
-            if allowed is not None and int(b) not in allowed:
-                continue
-            sel = [
-                fe for fe in files if file_subset is None or fe["path"] in file_subset
-            ]
-            if sel:
-                selections.append((True, sel))
-    # a delta row's key may have its base row in a legacy-layout file
-    # (delta routes by the CURRENT spec) — any selected delta pulls
-    # every selected legacy file into the reconciliation set
-    any_delta = any(
-        fe.get("kind") == "delta" for _, sel in selections for fe in sel
-    )
-    has_legacy = any(is_legacy for is_legacy, _ in selections)
-    plain: list[dict] = []
-    rec: list[dict] = []
-    for is_legacy, sel in selections:
-        if is_legacy:
-            needs_rec = any_delta
-        else:
-            # reconciliation needed when a delta entry could shadow
-            # another file's row of the same key (>= 2 files, one a
-            # delta — or ONE delta file plus legacy files in play)
-            needs_rec = any(fe.get("kind") == "delta" for fe in sel) and (
-                len(sel) > 1 or has_legacy
-            )
-        (rec if needs_rec else plain).extend(sel)
-    return plain, rec
 
 
 class LakeTable:
@@ -567,22 +497,22 @@ class LakeTable:
         pins this.  Buckets with only base files skip reconciliation
         entirely — the plain union path — so the read-side cost is
         confined to delta-bearing buckets until compaction folds them.
-        ``plan_read`` owns this plain-vs-reconcile split; point lookups
-        (``lake.lookup``) read by the same split with pyarrow, so a change
-        to the rule changes both.
 
         **Legacy bucket layouts** (bucket-spec evolution): files still
         laid out under a retired spec (``legacy_layouts``) are included
         too.  ``legacy_buckets=None`` reads ALL legacy files (the safe
         default — correct for full scans); a ``{spec_id: [bucket ids]}``
         dict prunes each retired layout to the buckets the caller's keys
-        hash to under THAT spec (the MERGE decide scan and point lookups
-        compute this; a spec_id absent from the dict contributes
-        nothing).  A legacy base row can be shadowed by a merge-on-read
-        delta that lives in a CURRENT-spec bucket, so when any selected
-        file is a delta, every selected legacy file joins the
-        reconciliation set (and a lone current-spec delta file stops
-        short-circuiting to the plain path).
+        hash to under THAT spec (``planner.legacy_touched``; a spec_id
+        absent from the dict contributes nothing).  A legacy base row
+        can be shadowed by a merge-on-read delta that lives in a
+        CURRENT-spec bucket, so a selected delta pulls every selected
+        legacy file into the reconciliation.
+
+        Which files are read, and which of them reconcile, is
+        ``planner.select_files``' plan — the one every reader shares
+        (``read_plan`` reads a plan the caller made, pruned by key or
+        zone map; point lookups read theirs with pyarrow).
         """
         if snap is None:
             # explicit ``snap`` = read an out-of-chain snapshot dict (a
@@ -592,8 +522,15 @@ class LakeTable:
                 if snapshot_id is not None
                 else self.current_snapshot()
             )
+        plan = select_files(snap, buckets, legacy_buckets, paths=file_subset)
+        return self.read_plan(plan, snap, include_tombstones)
+
+    def read_plan(
+        self, plan: FilePlan, snap: dict, include_tombstones: bool = False
+    ) -> DataFrame:
+        """``read`` of the files a ``planner.select_files`` plan over
+        ``snap`` selected."""
         current = TableSchema.from_json(snap["schemas"][str(snap["current_schema_version"])])
-        plain_files, rec_files = plan_read(snap, buckets, file_subset, legacy_buckets)
 
         def _load(entries: list[dict], with_seq: bool) -> DataFrame | None:
             by_sv: dict[int, list[str]] = {}
@@ -617,8 +554,8 @@ class LakeTable:
                 out = out.unionByName(p)
             return out
 
-        plain = _load(plain_files, with_seq=False)
-        rec = _load(rec_files, with_seq=True)
+        plain = _load(plan.plain, with_seq=False)
+        rec = _load(plan.rec, with_seq=True)
         if rec is not None:
             rec = _mor_reconcile(rec, snap["key_cols"], snap["order_col"])
         if plain is None and rec is None:

@@ -60,6 +60,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from rocket_etl_spark.lake.merge import CommitResult, merge_batch
+from rocket_etl_spark.lake.planner import delta_files
 from rocket_etl_spark.lake.table import LakeTable
 
 
@@ -145,11 +146,7 @@ def stage_merge(
             "replay into the branch + audit_branch/publish_branch instead"
         )
     snap = table.current_snapshot()
-    if mode == "cow" and any(
-        fe.get("kind") == "delta"
-        for fl in snap["buckets"].values()
-        for fe in fl
-    ):
+    if mode == "cow" and delta_files(snap):
         raise StageError(
             "cannot stage a copy-on-write merge onto merge-on-read deltas: "
             "the delta fold would publish a visible commit before the audit "

@@ -28,8 +28,6 @@ quadratic).
 
 from __future__ import annotations
 
-import os as _os
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -44,7 +42,7 @@ from rocket_etl_spark.operators.dedup import shingle_frame
 # is small AND already hold it driver-side (no recompute for the
 # build side); > cap rows, fall back to an un-hinted join and let
 # AQE pick the strategy from measured sizes.
-BROADCAST_IDS_MAX = int(_os.environ.get("SPARK_GRAFT_DECONTAM_BCAST_IDS", 500_000))
+BROADCAST_IDS_MAX = 500_000
 
 
 def _gram_frame(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
@@ -99,8 +97,8 @@ def decontaminate(
 ) -> DataFrame:
     """The corpus minus contaminated docs (all input columns kept).
 
-    ``broadcast_ids_max`` (default ``BROADCAST_IDS_MAX``, env
-    ``SPARK_GRAFT_DECONTAM_BCAST_IDS``; 0 disables the fast path) bounds
+    ``broadcast_ids_max`` (default ``BROADCAST_IDS_MAX``; 0 disables the
+    fast path) bounds
     the broadcast of the contaminated-id set: at most that many ids are
     collected eagerly — within the bound, the corpus-side anti-join is a
     pure map-side broadcast against the already-collected ids (the

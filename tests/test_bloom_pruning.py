@@ -12,6 +12,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+import rocket_etl_spark.lake.planner as LP
 import rocket_etl_spark.lake.merge as M
 from rocket_etl_spark.generate import change_events
 from rocket_etl_spark.oracle import replay_oracle
@@ -21,16 +22,16 @@ from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_ba
 def _replay(spark, path, batches, blooms: bool, ranges: bool | None = None):
     """ranges defaults to following `blooms` so the pruning-off leg is
     truly pruning-off (zone maps would otherwise still skip files)."""
-    old_b, old_r = M._BLOOMS_ENABLED, M._RANGES_ENABLED
-    M._BLOOMS_ENABLED = blooms
-    M._RANGES_ENABLED = blooms if ranges is None else ranges
+    old_b, old_r = LP._BLOOMS_ENABLED, LP._RANGES_ENABLED
+    LP._BLOOMS_ENABLED = blooms
+    LP._RANGES_ENABLED = blooms if ranges is None else ranges
     try:
         t = create_repo_files_table(spark, path, num_buckets=4)
         res = [replay_batch(t, b, epoch_id=i) for i, b in enumerate(batches)]
         state = t.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
         return t, res, state
     finally:
-        M._BLOOMS_ENABLED, M._RANGES_ENABLED = old_b, old_r
+        LP._BLOOMS_ENABLED, LP._RANGES_ENABLED = old_b, old_r
 
 
 def test_bloom_pruning_skips_files_and_preserves_state(spark, tmp_path):
@@ -96,8 +97,8 @@ def test_bloom_skip_never_loses_tombstones_or_keeps(spark, tmp_path):
 
 
 def test_big_commits_carry_no_blooms(spark, tmp_path):
-    old = M.BLOOM_COMMIT_MAX_ROWS
-    M.BLOOM_COMMIT_MAX_ROWS = 100  # force "big commit" classification
+    old = LP.BLOOM_COMMIT_MAX_ROWS
+    LP.BLOOM_COMMIT_MAX_ROWS = 100  # force "big commit" classification
     try:
         ev = change_events(spark, 2_000, seed=5, delete_frac=0.0)
         t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
@@ -107,4 +108,4 @@ def test_big_commits_carry_no_blooms(spark, tmp_path):
             "bloom" in fe for files in snap["buckets"].values() for fe in files
         )
     finally:
-        M.BLOOM_COMMIT_MAX_ROWS = old
+        LP.BLOOM_COMMIT_MAX_ROWS = old

@@ -56,7 +56,7 @@ def test_clustered_compaction_attaches_metadata_and_preserves_state(spark, tmp_p
 def test_clustered_base_prunes_decide_scan(spark, tmp_path):
     """After a clustered compaction, a small COW merge must scan strictly
     fewer decide files than the bucket totals — the zone maps on the base
-    slices do the pruning (merge.py _prune_decide_files)."""
+    slices do the pruning (lake/planner.py select_files)."""
     events = change_events(spark, 8_000, seed=6, n_repos=200, delete_frac=0.0)
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
     replay_batch(t, events, epoch_id=0)

@@ -1,4 +1,4 @@
-"""Dedup cascade + similarity search + multimodal plumbing tests.
+"""Dedup cascade + similarity search tests.
 
 The sketch ops (minhash/simhash/LSH) have no SQL oracle; their gate is
 exact recomputation: candidates must be verified near-dups and known
@@ -14,11 +14,6 @@ from rocket_etl_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
-)
-from rocket_etl_spark.operators.multimodal import (
-    decode_image_batches,
-    sample_frames,
-    with_media_metadata,
 )
 from rocket_etl_spark.operators.similarity import cosine_topk, lsh_ann_topk
 
@@ -298,128 +293,6 @@ def test_zero_norm_vector_never_crashes_or_pairs(spark):
     assert [(r.id_a, r.id_b) for r in out] == [(1, 2)]
     topk = cosine_topk(df, query_id=1, k=5).collect()
     assert {r.vec_id: r.cos_sim for r in topk}[3] is None
-
-
-def test_multimodal_metadata_decode_and_frames(spark):
-    rows = [
-        (1, bytes([0xFF, 0xD8, 0xFF, 0xE0]) + b"x" * 2000),
-        (2, bytes([0x89, 0x50, 0x4E, 0x47]) + b"y" * 5000),
-        (3, b"RIFFabcd" + b"z" * 100),
-        (4, b"????" + b"w" * 10),
-    ]
-    df = spark.createDataFrame(rows, "asset_id bigint, payload binary")
-    meta = with_media_metadata(df).toPandas().set_index("asset_id")
-    assert meta.loc[1, "media_type"] == "jpeg"
-    assert meta.loc[2, "media_type"] == "png"
-    assert meta.loc[3, "media_type"] == "wav"
-    assert meta.loc[4, "media_type"] == "unknown"
-    assert meta.loc[2, "n_bytes"] == 5004
-
-    feats = decode_image_batches(with_media_metadata(df), fake=True).toPandas()
-    assert len(feats) == 4
-    assert set(feats.columns) == {"asset_id", "media_type", "n_bytes", "width", "height", "mean_luma"}
-    assert (feats.width > 0).all() and (feats.mean_luma.between(0, 1)).all()
-
-    import pytest
-
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        decode_image_batches(df, fake=False).collect()
-
-    frames = sample_frames(df, every_n_bytes=1024, max_frames=4).toPandas()
-    per = frames.groupby("asset_id").size()
-    assert per[2] == 4  # 5004 bytes capped at max_frames
-    assert per[4] == 1  # tiny payload → one frame
-    assert (frames.byte_offset == frames.frame_no * 1024).all()
-
-
-def _encode_png(px, filters):
-    """Minimal in-test PNG encoder (forward filter transform per RFC 2083)
-    — independent of the decoder under test; one filter type per row so
-    every branch (None/Sub/Up/Average/Paeth) is exercised."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    h, w, ch = px.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-
-    def chunk(ctype, body):
-        return (struct.pack(">I", len(body)) + ctype + body
-                + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF))
-
-    flat = px.reshape(h, w * ch).astype(np.int32)
-    raw = bytearray()
-    for y in range(h):
-        f = filters[y % len(filters)]
-        raw.append(f)
-        prev = flat[y - 1] if y > 0 else np.zeros(w * ch, dtype=np.int32)
-        for x in range(w * ch):
-            a = int(flat[y, x - ch]) if x >= ch else 0
-            b = int(prev[x])
-            c = int(prev[x - ch]) if (x >= ch and y > 0) else 0
-            if f == 0:
-                pred = 0
-            elif f == 1:
-                pred = a
-            elif f == 2:
-                pred = b
-            elif f == 3:
-                pred = (a + b) // 2
-            else:  # Paeth
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            raw.append((int(flat[y, x]) - pred) & 0xFF)
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw))) + chunk(b"IEND", b""))
-
-
-def test_png_decode_roundtrip_all_filters():
-    """decode_png must invert the full scanline pipeline for every filter
-    type and for gray/RGB/RGBA — pinned against an independent forward
-    encoder over adversarial (high-frequency + gradient) pixel data."""
-    import numpy as np
-
-    from rocket_etl_spark.operators.multimodal import decode_png
-
-    rng = np.random.RandomState(7)
-    for ch in (1, 2, 3, 4):
-        px = rng.randint(0, 256, size=(7, 5, ch), dtype=np.uint8)
-        # rows cycle through filters 0,1,2,3,4
-        data = _encode_png(px, filters=[0, 1, 2, 3, 4])
-        got = decode_png(data)
-        assert got.shape == px.shape
-        assert (got == px).all(), f"roundtrip mismatch for {ch}-channel"
-    # gradient image (Average/Paeth-friendly) as a second shape
-    g = np.tile(np.arange(16, dtype=np.uint8) * 16, (4, 1))[:, :, None]
-    assert (decode_png(_encode_png(g, filters=[3, 4])) == g).all()
-    import pytest
-
-    with pytest.raises(ValueError, match="signature"):
-        decode_png(b"\xff\xd8not-a-png")
-
-
-def test_png_decode_executor_side_real_path(spark):
-    """fake=False is genuinely executable for PNG: features come from the
-    real stdlib decode through the same mapInPandas/Arrow plumbing."""
-    import numpy as np
-
-    from rocket_etl_spark.operators.multimodal import decode_image_batches
-
-    solid = np.full((3, 4, 3), 255, dtype=np.uint8)   # white RGB → luma 1.0
-    dark = np.zeros((2, 6, 1), dtype=np.uint8)        # black gray → luma 0.0
-    rows = [(1, bytearray(_encode_png(solid, [0, 1, 4]))),
-            (2, bytearray(_encode_png(dark, [2, 3]))),
-            (3, None)]  # NULL payload: zero feature row, never a dead executor
-    df = spark.createDataFrame(rows, "asset_id bigint, payload binary")
-    feats = decode_image_batches(df, fake=False).toPandas().set_index("asset_id")
-    assert (feats.loc[1, "width"], feats.loc[1, "height"]) == (4, 3)
-    assert feats.loc[1, "mean_luma"] == 1.0
-    assert (feats.loc[2, "width"], feats.loc[2, "height"]) == (6, 2)
-    assert feats.loc[2, "mean_luma"] == 0.0
-    assert (feats.loc[3, "width"], feats.loc[3, "height"], feats.loc[3, "mean_luma"]) == (0, 0, 0.0)
 
 
 def test_exact_dedup_at_scale_shape(spark):

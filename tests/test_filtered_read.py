@@ -137,6 +137,25 @@ def test_value_bounds_never_hide_the_mor_winner(spark, tmp_path):
     assert stats["files_scanned"] < stats["files_total"], stats
 
 
+def test_legacy_winner_survives_a_late_mor_delta(spark, tmp_path):
+    """After bucket-spec evolution the winner's base file sits under the
+    retired layout while a late merge-on-read epoch writes a STALE row
+    of the same key as a delta under the current one.  The delta must
+    reconcile against the legacy file, and value bounds must not drop
+    the legacy file while a delta exists."""
+    from rocket_etl_spark.lake.lookup import range_scan
+    from rocket_etl_spark.lake.maintenance import evolve_buckets
+
+    t = create_repo_files_table(spark, tmp_path / "t", num_buckets=1)
+    replay_batch(t, _event(spark, "r", "a.py", 10, "python"), epoch_id=0)
+    evolve_buckets(t, 2)
+    replay_batch(t, _event(spark, "r", "a.py", 5, "go"), epoch_id=1, mode="mor")
+    assert [(r.lang, r.last_event_seq) for r in t.read().collect()] == [("python", 10)]
+    assert filtered_read(t, "lang = 'go'").count() == 0
+    assert range_scan(t, "lang", "go", "go").count() == 0
+    assert filtered_read(t, "lang = 'python'").count() == 1
+
+
 def test_date_literals_bound_like_spark_reads_them(spark, tmp_path):
     """``'2024-1-5'`` is the date 2024-01-05 to Spark; compared as a raw
     string it sorts after ``'2024-01-07'`` and would prune that file."""

@@ -112,7 +112,7 @@ def test_small_epoch_relinks_unmatched_files(spark, tmp_path):
 
 
 def test_byte_gate_falls_back_to_smj_with_identical_results(spark, tmp_path):
-    """SPARK_GRAFT_SLIM_MAX_BYTES: forcing the byte estimate over the
+    """SLIM_DEDUPE_MAX_BYTES: forcing the byte estimate over the
     bound must route to the SMJ path (no broadcast of a huge key relation)
     with byte-identical results."""
     ev = change_events(spark, 3_000, seed=41, delete_frac=0.1)

@@ -9,7 +9,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from rocket_etl_spark.lake.lookup import lookup
+from rocket_etl_spark.lake.lookup import filtered_read, lookup, range_scan
 from rocket_etl_spark.oracle import replay_oracle
 from rocket_etl_spark.streaming.replay import EVENTS_DDL, create_repo_files_table, replay_batch
 
@@ -30,6 +30,60 @@ def _assert_lookups_match(table, ora):
             pd.testing.assert_frame_equal(
                 got[ora.columns], want.reset_index(drop=True), check_dtype=False
             )
+
+
+def _sql_lit(v):
+    return f"'{v}'" if isinstance(v, str) else str(v)
+
+
+def _assert_filters_match(table, ora, probes):
+    """Zone-map-pruned reads equal the oracle filtered the same way: each
+    ``(col, lo, hi)`` probe (either bound may be None) goes through
+    ``filtered_read`` as a SQL predicate and through ``range_scan``."""
+    for col, lo, hi in probes:
+        conj = []
+        if lo is not None and lo == hi:
+            conj.append(f"{col} = {_sql_lit(lo)}")
+        else:
+            conj += [f"{col} >= {_sql_lit(lo)}"] * (lo is not None)
+            conj += [f"{col} <= {_sql_lit(hi)}"] * (hi is not None)
+        keep = pd.Series(True, index=ora.index)
+        if lo is not None:
+            keep &= ora[col] >= lo
+        if hi is not None:
+            keep &= ora[col] <= hi
+        want = ora[keep].reset_index(drop=True)
+        for reader, df in [
+            ("filtered_read", filtered_read(table, " AND ".join(conj))),
+            ("range_scan", range_scan(table, col, lo, hi)),
+        ]:
+            got = df.toPandas()
+            assert len(got) == len(want), (reader, col, lo, hi, got, want)
+            if len(want):
+                got = got.sort_values(["repo", "path"]).reset_index(drop=True)
+                pd.testing.assert_frame_equal(got[ora.columns], want, check_dtype=False)
+
+
+@st.composite
+def read_probes(draw):
+    """Value predicates (``lang = v``, ``last_event_seq >= n``) and
+    key-range predicates for ``_assert_filters_match``."""
+    probes = []
+    for _ in range(draw(st.integers(1, 3))):
+        col = draw(st.sampled_from(["lang", "last_event_seq", "repo", "path"]))
+        if col == "lang":
+            v = draw(st.sampled_from(["python", "cpp", "go", "rust"]))
+            probes.append((col, v, v))
+        elif col == "last_event_seq":
+            probes.append((col, draw(st.integers(0, 40)), None))
+        else:
+            vals = sorted({k[col == "path"] for k in _KEYS})
+            lo = draw(st.none() | st.sampled_from(vals))
+            hi = draw(st.sampled_from(vals)) if lo is None else draw(
+                st.none() | st.sampled_from([v for v in vals if v >= lo])
+            )
+            probes.append((col, lo, hi))
+    return probes
 
 
 @st.composite
@@ -70,8 +124,8 @@ def event_log(draw):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@given(batches=event_log())
-def test_any_order_any_batching_matches_oracle(spark, tmp_path_factory, batches):
+@given(batches=event_log(), probes=read_probes())
+def test_any_order_any_batching_matches_oracle(spark, tmp_path_factory, batches, probes):
     tmp = tmp_path_factory.mktemp("prop")
     table = create_repo_files_table(spark, tmp / "t", num_buckets=4)
     pdfs = []
@@ -87,6 +141,7 @@ def test_any_order_any_batching_matches_oracle(spark, tmp_path_factory, batches)
     else:
         pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
     _assert_lookups_match(table, ora)
+    _assert_filters_match(table, ora, probes)
 
 
 # ------------------------------------------------- round-2 property tests
@@ -174,15 +229,16 @@ def maintenance_plan(draw):
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@given(batches=event_log(), plan=maintenance_plan())
+@given(batches=event_log(), plan=maintenance_plan(), probes=read_probes())
 def test_chaos_maintenance_interleavings_match_oracle(
-    spark, tmp_path_factory, batches, plan
+    spark, tmp_path_factory, batches, plan, probes
 ):
     """Arbitrary interleavings of COW/MOR merges with bucket-spec
     evolution, compaction (plain + bulk-migrate), and aggressive snapshot
     expiry must still converge to the pure-SQL LWW oracle — physical
     layout and maintenance scheduling can never change the logical state,
-    and point lookups answer from the same state."""
+    and point lookups and zone-map-pruned reads answer from the same
+    state."""
     from rocket_etl_spark.lake.maintenance import (
         compact,
         evolve_buckets,
@@ -238,3 +294,4 @@ def test_chaos_maintenance_interleavings_match_oracle(
     else:
         pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
     _assert_lookups_match(table, ora)
+    _assert_filters_match(table, ora, probes)

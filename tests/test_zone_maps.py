@@ -17,6 +17,7 @@ import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+import rocket_etl_spark.lake.planner as LP
 import rocket_etl_spark.lake.merge as M
 from rocket_etl_spark.generate import change_events
 from rocket_etl_spark.oracle import replay_oracle
@@ -26,15 +27,15 @@ from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_ba
 
 
 def _replay(spark, path, batches, *, blooms, ranges):
-    old_b, old_r = M._BLOOMS_ENABLED, M._RANGES_ENABLED
-    M._BLOOMS_ENABLED, M._RANGES_ENABLED = blooms, ranges
+    old_b, old_r = LP._BLOOMS_ENABLED, LP._RANGES_ENABLED
+    LP._BLOOMS_ENABLED, LP._RANGES_ENABLED = blooms, ranges
     try:
         t = create_repo_files_table(spark, path, num_buckets=4)
         res = [replay_batch(t, b, epoch_id=i) for i, b in enumerate(batches)]
         state = t.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
         return t, res, state
     finally:
-        M._BLOOMS_ENABLED, M._RANGES_ENABLED = old_b, old_r
+        LP._BLOOMS_ENABLED, LP._RANGES_ENABLED = old_b, old_r
 
 
 def test_zone_maps_prune_where_blooms_cannot(spark, tmp_path):
@@ -42,8 +43,8 @@ def test_zone_maps_prune_where_blooms_cannot(spark, tmp_path):
     than BLOOM_COMMIT_MAX_ROWS carry no blooms, but their zone maps
     still prune a disjoint-key trickle epoch — and the state matches a
     pruning-free run and the sequential oracle."""
-    old = M.BLOOM_COMMIT_MAX_ROWS
-    M.BLOOM_COMMIT_MAX_ROWS = 10  # force bloom-free commits
+    old = LP.BLOOM_COMMIT_MAX_ROWS
+    LP.BLOOM_COMMIT_MAX_ROWS = 10  # force bloom-free commits
     try:
         ev = change_events(spark, 8_000, seed=77, delete_frac=0.1)
         # RANGE-disjoint slices (zone maps prune on value bounds, not
@@ -72,7 +73,7 @@ def test_zone_maps_prune_where_blooms_cannot(spark, tmp_path):
         assert r_r[2].decide_files_scanned < r_r[2].decide_files_total
         assert r_n[2].decide_files_scanned == r_n[2].decide_files_total
     finally:
-        M.BLOOM_COMMIT_MAX_ROWS = old
+        LP.BLOOM_COMMIT_MAX_ROWS = old
 
 
 def test_unsafe_key_dtype_disables_pruning_metadata(spark, tmp_path):
@@ -117,14 +118,14 @@ def test_range_canon_orders_like_values():
 
     rnd = random.Random(7)
     bs = [bytes(rnd.randrange(256) for _ in range(rnd.randrange(1, 9))) for _ in range(50)]
-    canon = [M._range_canon(b, "binary") for b in bs]
+    canon = [LP._range_canon(b, "binary") for b in bs]
     assert [c for _, c in sorted(zip(bs, canon))] == sorted(canon)
     ds = [dt.date(2000 + rnd.randrange(30), 1 + rnd.randrange(12), 1 + rnd.randrange(28))
           for _ in range(50)]
-    canon_d = [M._range_canon(d, "date") for d in ds]
+    canon_d = [LP._range_canon(d, "date") for d in ds]
     assert [c for _, c in sorted(zip(ds, canon_d))] == sorted(canon_d)
     # bytearray (Spark collect) and bytes (pyarrow) canonicalize identically
-    assert M._range_canon(bytearray(b"\x00\xff"), "binary") == M._range_canon(
+    assert LP._range_canon(bytearray(b"\x00\xff"), "binary") == LP._range_canon(
         b"\x00\xff", "binary"
     )
 
@@ -132,13 +133,13 @@ def test_range_canon_orders_like_values():
 def test_range_hit_semantics():
     fe = {"kr": {"a": [10, 20], "b": ["m", "p"]}}
     # a winner inside both column ranges -> may hit
-    assert M._range_hit(fe, {"a": [15], "b": ["n"]})
+    assert LP._range_hit(fe, {"a": [15], "b": ["n"]})
     # no winner value of 'a' in [10, 20] -> provably absent
-    assert not M._range_hit(fe, {"a": [5, 30], "b": ["n"]})
+    assert not LP._range_hit(fe, {"a": [5, 30], "b": ["n"]})
     # column without collected bounds is ignored
-    assert M._range_hit(fe, {"b": ["n"]})
+    assert LP._range_hit(fe, {"b": ["n"]})
     # file without a zone map is always scanned
-    assert M._range_hit({}, {"a": [999]})
+    assert LP._range_hit({}, {"a": [999]})
 
 
 def test_zone_maps_cover_non_key_columns_with_truncated_bounds(spark, tmp_path):
@@ -149,7 +150,7 @@ def test_zone_maps_cover_non_key_columns_with_truncated_bounds(spark, tmp_path):
     from rocket_etl_spark.generate import change_events
     from rocket_etl_spark.lake.lookup import range_scan
     from rocket_etl_spark.lake.maintenance import compact
-    from rocket_etl_spark.lake.merge import _RANGE_TRUNC
+    from rocket_etl_spark.lake.planner import _RANGE_TRUNC
     from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
 
     events = change_events(spark, 6_000, seed=21, delete_frac=0.0)
