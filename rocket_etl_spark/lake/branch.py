@@ -44,15 +44,12 @@ main tip's successor.
 from __future__ import annotations
 
 import json
-import os
 import re
-import uuid
-from dataclasses import dataclass
 from pathlib import Path
 
 from pyspark.sql import DataFrame
 
-from rocket_etl_spark.lake.table import LakeTable
+from rocket_etl_spark.lake.table import LakeTable, _cas_write
 
 _NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]{0,127}$")
 _CHAIN_RE_T = r"^branch-{name}-(\d{{8}})\.json$"
@@ -77,21 +74,6 @@ def _chain_files(table: LakeTable, name: str) -> list[Path]:
     return sorted(out)
 
 
-def _cas_write(path: Path, obj: dict) -> bool:
-    tmp = path.parent / f".tmp-{uuid.uuid4().hex}.json"
-    with open(tmp, "w") as f:
-        json.dump(obj, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, path)
-        return True
-    except FileExistsError:
-        return False
-    finally:
-        tmp.unlink(missing_ok=True)
-
-
 class _BranchTable(LakeTable):
     """The branch as a ``LakeTable``: reads resolve to the branch head,
     commits CAS into the branch chain.  Every engine surface —
@@ -112,22 +94,15 @@ class _BranchTable(LakeTable):
         return self.snapshot(self._fork_id)
 
     def _try_write_snapshot(self, snap: dict) -> bool:
-        import time as _time
+        # the main chain's commit, into the branch chain: bucket lists
+        # are externalized exactly like main-chain commits (untouched
+        # buckets re-reference their manifests), so a long backfill
+        # branch pays O(touched) per epoch too and publish re-uses the
+        # same manifest names
+        return super()._try_write_snapshot({**snap, "branch": self._name})
 
-        snap = {
-            **snap,
-            "branch": self._name,
-            "committed_at_ms": int(_time.time() * 1000),
-        }
-        # branch commits externalize bucket lists exactly like main-chain
-        # commits (untouched buckets re-reference their manifests), so a
-        # long backfill branch pays O(touched) per epoch too and publish
-        # re-uses the same manifest names
-        snap = self._externalize_snapshot(snap)
-        return _cas_write(
-            self.snap_dir / f"branch-{self._name}-{snap['snapshot_id']:08d}.json",
-            snap,
-        )
+    def _commit_path(self, snapshot_id: int) -> Path:
+        return self.snap_dir / f"branch-{self._name}-{snapshot_id:08d}.json"
 
 
 def create_branch(table: LakeTable, name: str) -> dict:

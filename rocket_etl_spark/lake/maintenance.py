@@ -22,12 +22,39 @@ from rocket_etl_spark.lake.planner import (
     attach_file_metadata,
     bucket_of,
     delta_files,
+    evolved_layouts,
+    file_count,
+    layouts,
     legacy_layouts,
     legacy_probe_cols,
     legacy_touched,
+    update_buckets,
     written_files,
 )
-from rocket_etl_spark.lake.table import LakeTable
+from rocket_etl_spark.lake.table import LakeTable, child_snapshot
+
+# How often a maintenance writer (compact, rebucket, evolve_buckets,
+# rollback) retries a lost snapshot CAS from the new tip before it gives
+# up.  Each retry recomputes its input from the snapshot it reads, so no
+# work is ever stale-committed; raising on the FIRST loss would abort a
+# live ``replay_stream(compact_every=N)`` whenever an epoch commit raced a
+# mid-stream compaction, and retrying forever would livelock — with an
+# orphaned rewrite per attempt — against a stream that commits faster
+# than one rewrite completes.
+CAS_RETRIES = 5
+
+
+def _retry_cas(what: str, attempt) -> dict:
+    """Run ``attempt()`` until it returns a result (None: CAS lost)."""
+    for _ in range(CAS_RETRIES + 1):
+        res = attempt()
+        if res is not None:
+            return res
+    raise RuntimeError(
+        f"{what} lost the snapshot CAS {CAS_RETRIES + 1} times in a row — "
+        "writers are committing faster than it completes; retry when the "
+        "table quiesces (each lost rewrite left an age-guarded orphan dir)"
+    )
 
 
 def compact(
@@ -35,7 +62,6 @@ def compact(
     tombstone_watermark: int | None = None,
     min_files: int = 2,
     buckets: list[int] | None = None,
-    max_retries: int = 5,
     sort_cols: list[str] | None = None,
     target_file_rows: int | None = None,
     migrate_legacy: bool = False,
@@ -59,15 +85,9 @@ def compact(
     driver data path.
 
     Concurrency: losing the snapshot CAS to a concurrent writer RETRIES
-    from the new tip (bounded by ``max_retries``) — compaction's input is
-    recomputed from the snapshot it reads, so no work is ever
-    stale-committed; the orphaned rewrite files of the lost attempt are
-    removed later by age-guarded ``expire_snapshots``.  (Raising on the
-    FIRST loss — as an earlier version did — would abort a live
-    ``replay_stream(compact_every=N)`` whenever an epoch commit raced a
-    mid-stream compaction; retrying forever would livelock, with an
-    orphaned rewrite per attempt, against a stream that commits faster
-    than one rewrite completes — hence the cap.)
+    from the new tip, at most ``CAS_RETRIES`` times; the orphaned rewrite
+    files of a lost attempt are removed later by age-guarded
+    ``expire_snapshots``.
 
     ``sort_cols`` (typically the table's key columns) CLUSTERS each
     rewritten bucket: rows are sorted within the bucket and split into
@@ -84,18 +104,10 @@ def compact(
     per-file row cap) — which MERGE commits already carry but compaction
     previously stripped, leaving exactly the LARGEST files unprunable.
     """
-    for _ in range(max_retries + 1):
-        res = _compact_once(
-            table, tombstone_watermark, min_files, buckets, sort_cols,
-            target_file_rows, migrate_legacy, zorder,
-        )
-        if res is not None:
-            return res
-    raise RuntimeError(
-        f"compaction lost the snapshot CAS {max_retries + 1} times in a row — "
-        "writers are committing faster than the rewrite completes; retry when "
-        "the table quiesces (each lost attempt left an age-guarded orphan dir)"
-    )
+    return _retry_cas("compaction", lambda: _compact_once(
+        table, tombstone_watermark, min_files, buckets, sort_cols,
+        target_file_rows, migrate_legacy, zorder,
+    ))
 
 
 _Z_BITS = 8  # rank resolution per z-column: 256 quantile bins
@@ -165,16 +177,15 @@ def _compact_once(
     zorder: bool = False,
 ) -> dict | None:
     snap = table.current_snapshot()
-    legacy = [l for l in legacy_layouts(snap) if any(l["buckets"].values())]
-    files_before = sum(len(v) for v in snap["buckets"].values()) + sum(
-        len(v) for l in legacy for v in l["buckets"].values()
-    )
+    cur, *legacy = layouts(snap)
+    legacy = [lay for lay in legacy if any(lay.buckets.values())]
+    files_before = file_count(snap)
     if buckets is not None:
         cand = sorted(int(b) for b in buckets)
     elif tombstone_watermark is not None:
-        cand = sorted(int(b) for b, fl in snap["buckets"].items() if fl)
+        cand = sorted(int(b) for b, fl in cur.buckets.items() if fl)
     else:
-        cand = sorted(int(b) for b, fl in snap["buckets"].items() if len(fl) >= min_files)
+        cand = sorted(int(b) for b, fl in cur.buckets.items() if len(fl) >= min_files)
 
     # which RETIRED-layout buckets must be read (and thereby migrated to
     # the current spec)?
@@ -190,8 +201,8 @@ def _compact_once(
     leg_sel: dict[int, list[int]] = {}
     if legacy and migrate_legacy:
         leg_sel = {
-            int(l["spec_id"]): sorted(int(b) for b, fl in l["buckets"].items() if fl)
-            for l in legacy
+            lay.spec_id: sorted(int(b) for b, fl in lay.buckets.items() if fl)
+            for lay in legacy
         }
     elif legacy and cand:
         deltas = delta_files(snap)
@@ -267,67 +278,38 @@ def _compact_once(
     if target_file_rows:
         writer = writer.option("maxRecordsPerFile", int(target_file_rows))
     writer.parquet(str(out_dir))
-    # untouched buckets keep their existing file lists; rewritten ones get
-    # the new single file (or [] when a purge emptied the bucket).  Rows
-    # MIGRATED out of a retired layout may scatter into buckets outside
-    # ``cand`` — those append (their keys had no current-spec row).
-    # untouched buckets keep their (manifest-marked) lists by reference —
-    # never mutated, only replaced below — so the commit re-serializes
-    # only the rewritten buckets' manifests
-    new_buckets: dict[str, list] = {
-        b: fl for b, fl in snap["buckets"].items() if int(b) not in set(cand)
-    }
-    for b in cand:
-        new_buckets[str(b)] = []
-    written = written_files(table.path, out_dir_rel, snap["current_schema_version"])
-    for b, fl in written.items():
-        new_buckets[str(b)] = fl if b in set(cand) else new_buckets.get(str(b), []) + fl
-    # decide-scan metadata for the rewritten base files, under the schema
-    # of the snapshot we compacted (not the possibly moved tip)
+    # rewritten buckets get the new file(s) (or [] when a purge emptied the
+    # bucket) and the migrated retired buckets empty out; rows MIGRATED
+    # out of a retired layout may scatter into buckets outside ``cand``
+    # and append there.  Decide-scan metadata for the new base files is
+    # built under the schema of the snapshot we compacted (not the
+    # possibly moved tip).
     from rocket_etl_spark.schema.registry import TableSchema
 
+    written = written_files(table.path, out_dir_rel, snap["current_schema_version"])
     schema = TableSchema.from_json(snap["schemas"][str(snap["current_schema_version"])])
     attach_file_metadata(table.path, written, schema, snap["key_cols"])
-
-    # retired layouts: drop the buckets this pass migrated; a layout with
-    # nothing left disappears (fully-migrated tables lose the section)
-    new_legacy = []
-    for layout in legacy:
-        migrated = set(leg_sel.get(int(layout["spec_id"]), []))
-        kept = {
-            bb: fl
-            for bb, fl in layout["buckets"].items()
-            if int(bb) not in migrated and fl
-        }
-        if kept:
-            new_legacy.append({**layout, "buckets": kept})
-
-    new_snap = dict(snap)
-    new_snap["snapshot_id"] = snap["snapshot_id"] + 1
-    new_snap["parent_id"] = snap["snapshot_id"]
-    new_snap["epoch_id"] = None
-    new_snap["buckets"] = new_buckets
-    if new_legacy:
-        new_snap["legacy"] = new_legacy
-    else:
-        new_snap.pop("legacy", None)
-    # a compaction rewrites, it doesn't change: no changelog contribution
-    new_snap["added_files"] = {}
-    new_snap["stats"] = {"compacted": True, "tombstones_dropped": int(dropped)}
+    new_snap = child_snapshot(
+        snap,
+        epoch_id=None,
+        **update_buckets(snap, written, rewritten=cand, legacy_rewritten=leg_sel),
+        # a compaction rewrites, it doesn't change: no changelog contribution
+        added_files={},
+        stats={"compacted": True, "tombstones_dropped": int(dropped)},
+    )
     if not table._try_write_snapshot(new_snap):
         return None  # CAS lost — caller retries from the new tip
     return {
         "snapshot_id": new_snap["snapshot_id"],
         "files_before": files_before,
-        "files_after": sum(len(v) for v in new_buckets.values())
-        + sum(len(v) for l in new_legacy for v in l["buckets"].values()),
+        "files_after": file_count(new_snap),
         "tombstones_dropped": int(dropped),
         "buckets_rewritten": len(cand),
         "legacy_buckets_migrated": sum(len(v) for v in leg_sel.values()),
     }
 
 
-def rollback(table: LakeTable, snapshot_id: int, max_retries: int = 5) -> dict:
+def rollback(table: LakeTable, snapshot_id: int) -> dict:
     """Restore ``snapshot_id``'s state as a NEW tip snapshot (Iceberg
     ``rollback_to_snapshot``): pure metadata — the target's file list is
     re-linked, no data moves, O(1) regardless of table size.  Pairs with
@@ -352,10 +334,9 @@ def rollback(table: LakeTable, snapshot_id: int, max_retries: int = 5) -> dict:
       rule Iceberg enforces).
 
     History is preserved (the rolled-back-from tip stays retained until
-    expiry — roll forward by rolling back to it)."""
-    import json as _json
-
-    for _ in range(max_retries + 1):
+    expiry — roll forward by rolling back to it).  A lost snapshot CAS
+    retries from the new tip, at most ``CAS_RETRIES`` times."""
+    def attempt() -> dict | None:
         tip = table.current_snapshot()
         if tip["snapshot_id"] == snapshot_id:
             return {"rolled_back": False, "reason": "target is already the tip"}
@@ -375,28 +356,25 @@ def rollback(table: LakeTable, snapshot_id: int, max_retries: int = 5) -> dict:
                 f"snapshot {snapshot_id} is not retained (expired?) — "
                 f"cannot roll back to it"
             )
-        new_snap = {
-            **_json.loads(_json.dumps(target)),  # deep copy
-            "snapshot_id": tip["snapshot_id"] + 1,
-            "parent_id": tip["snapshot_id"],
-            "epoch_id": None,
-            "app_id": None,
-            "added_files": {},
-            "stats": {
-                "rollback_of": snapshot_id,
-                "rolled_back_from": tip["snapshot_id"],
-            },
+        new_snap = child_snapshot(
+            target,
+            snapshot_id=tip["snapshot_id"] + 1,
+            parent_id=tip["snapshot_id"],
+            epoch_id=None,
+            app_id=None,
+            added_files={},
+            stats={"rollback_of": snapshot_id, "rolled_back_from": tip["snapshot_id"]},
+        )
+        if not table._try_write_snapshot(new_snap):
+            return None
+        return {
+            "rolled_back": True,
+            "snapshot_id": new_snap["snapshot_id"],
+            "restored": snapshot_id,
+            "undone_snapshots": tip["snapshot_id"] - snapshot_id,
         }
-        if table._try_write_snapshot(new_snap):
-            return {
-                "rolled_back": True,
-                "snapshot_id": new_snap["snapshot_id"],
-                "restored": snapshot_id,
-                "undone_snapshots": tip["snapshot_id"] - snapshot_id,
-            }
-    raise RuntimeError(
-        f"rollback lost the snapshot CAS {max_retries + 1} times in a row"
-    )
+
+    return _retry_cas("rollback", attempt)
 
 
 def table_stats(table: LakeTable) -> dict:
@@ -407,50 +385,39 @@ def table_stats(table: LakeTable) -> dict:
     would rewrite."""
     import pyarrow.parquet as pq
 
+    def rows(fl: list[dict]) -> int:
+        return sum(pq.read_metadata(str(table.path / fe["path"])).num_rows for fe in fl)
+
     snap = table.current_snapshot()
-    files = 0
-    rows = 0
-    max_files = 0
-    fragmented = 0
-    for fl in snap["buckets"].values():
-        files += len(fl)
-        max_files = max(max_files, len(fl))
-        if len(fl) >= 2:
-            fragmented += 1
-        for fe in fl:
-            rows += pq.read_metadata(str(table.path / fe["path"])).num_rows
+    cur, *legacy = layouts(snap)
+    sizes = [len(fl) for fl in cur.buckets.values()]
+    legacy_lists = [fl for lay in legacy for fl in lay.buckets.values()]
+    legacy_files = sum(len(fl) for fl in legacy_lists)
+    legacy_rows = sum(rows(fl) for fl in legacy_lists)
     depths = [len(fl) for fl in delta_files(snap).values()]
-    legacy_files = legacy_rows = 0
-    for layout in legacy_layouts(snap):
-        for fl in layout["buckets"].values():
-            legacy_files += len(fl)
-            for fe in fl:
-                legacy_rows += pq.read_metadata(str(table.path / fe["path"])).num_rows
-    files += legacy_files
-    rows += legacy_rows
     return {
         "snapshot_id": snap["snapshot_id"],
-        "num_buckets": int(snap["num_buckets"]),
+        "num_buckets": cur.num_buckets,
         "schema_version": snap["current_schema_version"],
-        "populated_buckets": sum(1 for fl in snap["buckets"].values() if fl),
-        "total_files": files,
-        "total_rows": rows,
-        "max_files_per_bucket": max_files,
-        "fragmented_buckets": fragmented,
+        "populated_buckets": sum(1 for n in sizes if n),
+        "total_files": file_count(snap),
+        "total_rows": sum(rows(fl) for fl in cur.buckets.values()) + legacy_rows,
+        "max_files_per_bucket": max(sizes, default=0),
+        "fragmented_buckets": sum(1 for n in sizes if n >= 2),
         # merge-on-read debt: delta files awaiting a compaction fold;
         # max_delta_depth bounds the per-key read amplification
         "delta_files": sum(depths),
         "max_delta_depth": max(depths, default=0),
         # bucket-spec-evolution debt: files still under retired layouts,
         # shrinking as MERGEs migrate matched files / compact() bulk-moves
-        "spec_id": int(snap.get("spec_id", 0)),
-        "legacy_layouts": len(legacy_layouts(snap)),
+        "spec_id": cur.spec_id,
+        "legacy_layouts": len(legacy),
         "legacy_files": legacy_files,
         "legacy_rows": legacy_rows,
     }
 
 
-def rebucket(table: LakeTable, new_num_buckets: int, max_retries: int = 5) -> dict:
+def rebucket(table: LakeTable, new_num_buckets: int) -> dict:
     """Rewrite the table into ``new_num_buckets`` hash buckets (snapshot-
     committed full rewrite — Iceberg's REPLACE PARTITION FIELD + rewrite).
 
@@ -461,17 +428,10 @@ def rebucket(table: LakeTable, new_num_buckets: int, max_retries: int = 5) -> di
     one shuffle, partition-parallel, no driver data path; readers keep
     resolving old snapshots (their num_buckets rides each snapshot).
 
-    Losing the snapshot CAS retries from the new tip, bounded (same
-    rationale and livelock cap as ``compact`` — the input is recomputed,
-    the lost attempt's files are age-guarded orphans)."""
-    for _ in range(max_retries + 1):
-        res = _rebucket_once(table, new_num_buckets)
-        if res is not None:
-            return res
-    raise RuntimeError(
-        f"rebucket lost the snapshot CAS {max_retries + 1} times in a row — "
-        "retry when the table quiesces"
-    )
+    Losing the snapshot CAS retries from the new tip, at most
+    ``CAS_RETRIES`` times (the input is recomputed, the lost attempt's
+    files are age-guarded orphans)."""
+    return _retry_cas("rebucket", lambda: _rebucket_once(table, new_num_buckets))
 
 
 def _rebucket_once(table: LakeTable, new_num_buckets: int) -> dict | None:
@@ -492,24 +452,19 @@ def _rebucket_once(table: LakeTable, new_num_buckets: int) -> dict | None:
         .write.partitionBy("_bucket")
         .parquet(str(out_dir))
     )
-    new_buckets = {
-        str(b): fl
-        for b, fl in written_files(
-            table.path, out_dir_rel, snap["current_schema_version"]
-        ).items()
-    }
-    new_snap = dict(snap)
-    new_snap["snapshot_id"] = snap["snapshot_id"] + 1
-    new_snap["parent_id"] = snap["snapshot_id"]
-    new_snap["epoch_id"] = None
-    new_snap["num_buckets"] = new_num_buckets
-    new_snap["buckets"] = new_buckets
-    # a full rewrite starts a fresh spec and absorbs every retired layout
-    # (the read above included them)
-    new_snap["spec_id"] = int(snap.get("spec_id", 0)) + 1
-    new_snap.pop("legacy", None)
-    new_snap["added_files"] = {}  # a rewrite, not a logical change
-    new_snap["stats"] = {"rebucketed_from": int(snap["num_buckets"])}
+    written = written_files(table.path, out_dir_rel, snap["current_schema_version"])
+    new_snap = child_snapshot(
+        snap,
+        epoch_id=None,
+        num_buckets=new_num_buckets,
+        # a full rewrite starts a fresh spec and absorbs every retired
+        # layout (the read above included them)
+        spec_id=int(snap.get("spec_id", 0)) + 1,
+        buckets={str(b): fl for b, fl in written.items()},
+        legacy=None,
+        added_files={},  # a rewrite, not a logical change
+        stats={"rebucketed_from": int(snap["num_buckets"])},
+    )
     if not table._try_write_snapshot(new_snap):
         return None  # CAS lost — caller retries from the new tip
     return {
@@ -544,10 +499,12 @@ def evolve_buckets(table: LakeTable, new_num_buckets: int) -> dict:
     Refuses while merge-on-read delta files exist (``compact()`` first):
     a delta's key may shadow a base row, and retiring the layout would
     put base and delta under different specs with no fold boundary —
-    the same mode-transition rule the COW MERGE enforces.
+    the same mode-transition rule the COW MERGE enforces.  A lost
+    snapshot CAS retries from the new tip, at most ``CAS_RETRIES`` times.
     """
-    snap = table.current_snapshot()
-    while True:
+
+    def attempt() -> dict | None:
+        snap = table.current_snapshot()
         if int(snap["num_buckets"]) == int(new_num_buckets):
             return {"snapshot_id": snap["snapshot_id"], "evolved": False}
         if delta_files(snap):
@@ -556,39 +513,24 @@ def evolve_buckets(table: LakeTable, new_num_buckets: int) -> dict:
                 "compact() the table first so every key has exactly one "
                 "live row under the retiring layout"
             )
-        old_spec_id = int(snap.get("spec_id", 0))
-        legacy = [
-            layout
-            for layout in (snap.get("legacy") or [])
-            if any(layout["buckets"].values())
-        ]
-        if any(snap["buckets"].values()):
-            legacy = [
-                {
-                    "spec_id": old_spec_id,
-                    "num_buckets": int(snap["num_buckets"]),
-                    "buckets": snap["buckets"],
-                }
-            ] + legacy
-        new_snap = dict(snap)
-        new_snap["snapshot_id"] = snap["snapshot_id"] + 1
-        new_snap["parent_id"] = snap["snapshot_id"]
-        new_snap["epoch_id"] = None
-        new_snap["num_buckets"] = int(new_num_buckets)
-        new_snap["spec_id"] = old_spec_id + 1
-        new_snap["buckets"] = {}
-        new_snap["legacy"] = legacy
-        new_snap["added_files"] = {}  # a spec change, not a logical change
-        new_snap["stats"] = {"evolved_from": int(snap["num_buckets"])}
-        if table._try_write_snapshot(new_snap):
-            return {
-                "snapshot_id": new_snap["snapshot_id"],
-                "evolved": True,
-                "num_buckets": int(new_num_buckets),
-                "spec_id": new_snap["spec_id"],
-                "legacy_layouts": len(legacy),
-            }
-        snap = table.current_snapshot()  # CAS lost — retry from the tip
+        new_snap = child_snapshot(
+            snap,
+            epoch_id=None,
+            **evolved_layouts(snap, new_num_buckets),
+            added_files={},  # a spec change, not a logical change
+            stats={"evolved_from": int(snap["num_buckets"])},
+        )
+        if not table._try_write_snapshot(new_snap):
+            return None
+        return {
+            "snapshot_id": new_snap["snapshot_id"],
+            "evolved": True,
+            "num_buckets": int(new_num_buckets),
+            "spec_id": new_snap["spec_id"],
+            "legacy_layouts": len(legacy_layouts(new_snap)),
+        }
+
+    return _retry_cas("bucket-spec evolution", attempt)
 
 
 def expire_snapshots(
@@ -648,35 +590,6 @@ def expire_snapshots(
         keep = pinned + keep
         drop = [p for p in drop if _sid(p) not in tagged_ids]
 
-    def _refs(paths):
-        """(data file paths, manifest names) referenced by snapshots."""
-        out: set[str] = set()
-        mans: set[str] = set()
-
-        def bucket_files(bm):
-            for v in bm.values():
-                if isinstance(v, str):  # manifest reference
-                    mans.add(v)
-                    yield from table._manifest_entries(v)
-                else:
-                    yield from v
-
-        for p in paths:
-            with open(p) as f:
-                s = json.load(f)  # raw: refs recorded before resolving
-            out.update(fe["path"] for fe in bucket_files(s["buckets"]))
-            for layout in s.get("legacy") or []:
-                # retired-bucket-layout files are just as live
-                out.update(fe["path"] for fe in bucket_files(layout["buckets"]))
-            # changelog attribution: a published-branch snapshot's
-            # added_files may reference files a mid-branch compaction
-            # already superseded in its buckets — ``changes()`` still
-            # reads them, so they stay protected while the snapshot is
-            # retained (on ordinary snapshots added ⊆ buckets: no-op)
-            for files in (s.get("added_files") or {}).values():
-                out.update(fe["path"] for fe in files)
-        return out, mans
-
     # live staged commits (write-audit-publish, lake/wap.py) and live
     # BRANCHES (lake/branch.py — multi-commit staging) reference
     # freshly-written data files that no published snapshot knows yet —
@@ -685,11 +598,11 @@ def expire_snapshots(
         list(table.snap_dir.glob("staged-*.json"))
         + list(table.snap_dir.glob("branch-*.json"))
     )
-    live_refs, live_mans = _refs(keep)
-    staged_refs, staged_mans = _refs(staged)
+    live_refs, live_mans = table._referenced(keep)
+    staged_refs, staged_mans = table._referenced(staged)
     referenced = live_refs | staged_refs
     live_mans |= staged_mans
-    expired_refs, expired_mans = _refs(drop)
+    expired_refs, expired_mans = table._referenced(drop)
 
     now = _time.time()
     files_removed = 0

@@ -39,7 +39,11 @@ Execution shape (scale rationale inline):
    partition-discovering Spark scan above it (DataFrame.observe is
    unusable here: observed metrics never resolve inside a streaming
    foreachBatch);
-5. CAS-commit a snapshot = parent's untouched buckets + new files.
+5. commit, one tail for both modes: the planner's bucket-map update
+   (``update_buckets``: untouched buckets keep their manifests, a COW
+   commit drops the files it rewrote) over the child of the tip
+   (``table.child_snapshot``), published by ``_cas_commit``'s CAS loop,
+   then one ``CommitResult`` built from per-bucket counts.
 
 The decide scan reads the touched buckets of every bucket layout, minus
 the files whose key bloom or zone map proves they hold no winner key
@@ -52,17 +56,22 @@ The MERGE is order-insensitive across and within batches: the LWW guard
 ``s.seq > t.seq`` means late/duplicate delivery converges to the same
 final state — idempotency does not depend on the watermark.
 
-Concurrency (CAS-loss) protocol: losing the snapshot CAS means another
-writer published first.  The loser REBASES onto the latest snapshot —
-carrying forward the winner's buckets and fences — iff its own touched
-buckets and the schema are untouched by the winner; a touched-bucket
-overlap means the merge was computed against stale rows, so it is
-recomputed from the latest snapshot (the orphaned first-attempt files
-are left for age-guarded ``expire_snapshots``).  A concurrent schema
-evolution raises ``CommitConflict`` — the caller re-aligns and retries
-(``replay_batch`` does this automatically).  Each snapshot records its
-own ``added_files`` explicitly, so changelog reads attribute files to
-the snapshot that actually published them regardless of retries.
+Concurrency (CAS-loss) protocol (``_cas_commit``): losing the snapshot
+CAS means another writer published first.  If the winner committed this
+same ``(app_id, epoch_id)``, the merge is skipped.  Otherwise the loser
+REBASES onto the latest snapshot — carrying forward the winner's
+buckets and fences — unless the winner changed something the commit
+depends on: a schema evolution raises ``CommitConflict`` (the caller
+re-aligns and retries; ``replay_batch`` does this automatically), and a
+bucket-spec change — for a COW merge also a retired-layout migration or
+a commit to one of its touched buckets, whose rows it read — means the
+merge was computed against a stale state, so it is recomputed from the
+latest snapshot (the orphaned first-attempt files are left for
+age-guarded ``expire_snapshots``).  A MOR delta append read no table
+rows and rebases over any concurrent data commit.  Each snapshot
+records its own ``added_files`` explicitly, so changelog reads
+attribute files to the snapshot that actually published them
+regardless of retries.
 """
 
 from __future__ import annotations
@@ -79,12 +88,14 @@ from rocket_etl_spark.lake.planner import (
     attach_file_metadata,
     bucket_of,
     delta_files,
+    layouts_changed,
     legacy_probe_cols,
     legacy_touched,
     select_files,
+    update_buckets,
     written_files,
 )
-from rocket_etl_spark.lake.table import LakeTable, fence_add
+from rocket_etl_spark.lake.table import LakeTable, child_snapshot, fence_add
 from rocket_etl_spark.operators.lww import lww_dedupe
 from rocket_etl_spark.schema.registry import TableSchema
 
@@ -259,6 +270,28 @@ def _rel_paths(table_path, fnames) -> set[str] | None:
     return out
 
 
+def _pick_winners(
+    batch: DataFrame, win: DataFrame, keys, order_col: str, dedupe_guard: bool
+) -> DataFrame:
+    """The batch rows that carry their key's winning order: ``batch``
+    joined map-side to broadcast ``win`` (``_w_<key>`` columns, the
+    winning ``_w_ord`` and whatever flags ride along) on keys and order,
+    null-safe, so losing rows' payloads never shuffle.  ``dedupe_guard``
+    adds a guard agg over winner rows only (~one row per key reaches it)
+    that collapses duplicate deliveries of the winning (key, ord) pair;
+    the planning pass drops it when it PROVED the batch (key, order)-
+    duplicate-free (exact count-distinct) — then the pick is already one
+    row per key, and the winner payload's only remaining exchange is its
+    final bucket placement."""
+    cond = F.col(order_col).eqNullSafe(F.col("_w_ord"))
+    for k in keys:
+        cond = cond & F.col(k).eqNullSafe(F.col(f"_w_{k}"))
+    picked = batch.join(F.broadcast(win), cond, "inner").drop(
+        *[f"_w_{k}" for k in keys], "_w_ord"
+    )
+    return lww_dedupe(picked, keys=keys, order_col=order_col) if dedupe_guard else picked
+
+
 def _merge_broadcast(
     batch: DataFrame,
     current: DataFrame,
@@ -384,23 +417,7 @@ def _merge_broadcast(
         action.alias("_action"),
     )
 
-    cond_s = F.col(order_col).eqNullSafe(F.col("_w_ord"))
-    for k in keys:
-        cond_s = cond_s & F.col(k).eqNullSafe(F.col(f"_w_{k}"))
-
-    picked = batch.join(F.broadcast(win), cond_s, "inner").drop(
-        *[f"_w_{k}" for k in keys], "_w_ord"
-    )
-    if dedupe_guard:
-        # duplicate deliveries of the winning (key, ord) pair: guard agg
-        # over winner rows only (~one row per key reaches it).  Skipped
-        # when the planning pass PROVED the batch (key, order)-duplicate-
-        # free (exact count-distinct) — then ``picked`` is already one row
-        # per key, and the winner payload's only remaining exchange is its
-        # final bucket placement.
-        changed = lww_dedupe(picked, keys=keys, order_col=order_col)
-    else:
-        changed = picked
+    changed = _pick_winners(batch, win, keys, order_col, dedupe_guard)
     for c, expr in derived_cols.items():
         changed = changed.withColumn(c, expr)
     changed = changed.select(
@@ -454,35 +471,20 @@ def _merge_broadcast(
     )
 
 
-def _merge_mor_commit(
+def _write_mor_delta(
     table: LakeTable,
-    batch: DataFrame,
     snap: dict,
-    epoch_id: int | None,
-    app_id: str,
-    derived_cols: dict,
+    batch: DataFrame,
+    winners: DataFrame | None,
     schema: TableSchema,
-    keys,
-    order_col: str,
-    nb: int,
-    winners_slim: DataFrame,
-    caches: list,
-    plan_rows,
-    touched: list,
-    rows_in: int,
-    seq_lo,
-    seq_hi,
-    distinct_keys: int,
-    dup_deliveries: bool,
-    est_broadcast_bytes: int,
-    commit_tag: str,
-    mor_compact_threshold: int | None,
-    _mark,
-    _timing: bool,
-    _ph: dict,
-) -> CommitResult:
+    derived_cols: dict,
+    dedupe_guard: bool,
+    n_touched: int,
+    out_dir_rel: str,
+) -> dict[int, list[dict]]:
     """Merge-on-read write: append the epoch's LWW winners as per-bucket
-    DELTA files — the table is never read, so per-epoch cost is O(batch).
+    DELTA files under ``out_dir_rel`` — the table is never read, so
+    per-epoch cost is O(batch).  Returns the written ``{bucket: entries}``.
 
     Reads reconcile base+delta per key (``LakeTable.read`` picks max
     ``(order_col, -_seq)``; ``_seq`` is this commit's snapshot id, baked
@@ -492,183 +494,57 @@ def _merge_mor_commit(
     floor disappear entirely, deferred to compaction where they amortize
     across many epochs.
 
-    Winner payloads take the slim path when the key set fits a broadcast
-    (losing rows' payloads never shuffle — map-side semi-join against
-    the already-computed winner set), else one max_by agg shuffle.
-    Delete events become tombstone winners (``_deleted=true``) exactly
-    as in COW; insert-vs-update is unknowable without reading the table,
-    so delta rows carry ``_action='upsert'|'delete'`` and the changelog
-    reports upserts as such.
+    Winner payloads take the slim path when the planning pass passed the
+    broadcast gate (``winners`` given: ``_pick_winners``), else one
+    max_by agg shuffle.  Delete events become tombstone winners
+    (``_deleted=true``) exactly as in COW; insert-vs-update is
+    unknowable without reading the table, so delta rows carry
+    ``_action='upsert'|'delete'`` and the changelog reports upserts as
+    such.
 
-    Commit: CAS with ALWAYS-REBASE — a MOR commit appends file entries
-    to bucket lists and reads no table state, so it commutes with any
-    concurrent data commit (another MOR epoch, a compaction).  The one
-    non-commuting case, a concurrent schema evolution, raises
-    ``CommitConflict`` for the caller to re-align (same as COW).  A CAS
+    The commit always rebases on a CAS loss: it appends file entries to
+    bucket lists and read no table state, so it commutes with any
+    concurrent data commit (another MOR epoch, a compaction).  A CAS
     rebase can leave the baked ``_seq`` one less than the final snapshot
     id; ordering stays correct for any single-writer stream (seqs remain
     strictly increasing per key) — only two CONCURRENT writers racing
     the same key at the same LWW order tie non-deterministically, a race
     that is unordered to begin with.
     """
-    ndl_by_bucket = {r["_bucket"]: int(r["ndl"] or 0) for r in plan_rows}
-    dk_by_bucket = {r["_bucket"]: int(r["dk"]) for r in plan_rows}
-    plan_by_bucket = {r["_bucket"]: (int(r["n"]), r["lo"], r["hi"]) for r in plan_rows}
-    deletes_total = sum(ndl_by_bucket.values())
-
-    out_files: dict[int, list[dict]] = {}
-    if touched:
-        use_broadcast = (
-            0 < distinct_keys <= SLIM_DEDUPE_MAX_KEYS
-            and est_broadcast_bytes <= SLIM_DEDUPE_MAX_BYTES
+    keys, order_col = snap["key_cols"], snap["order_col"]
+    if winners is not None:
+        win = winners.select(
+            *[F.col(k).alias(f"_w_{k}") for k in keys],
+            F.col("_s_ord").alias("_w_ord"),
+            F.col("_s_del").alias("_w_del"),
         )
-        if use_broadcast:
-            # map-side winner pick: losing rows' payloads never shuffle
-            win = winners_slim.select(
-                *[F.col(k).alias(f"_w_{k}") for k in keys],
-                F.col("_s_ord").alias("_w_ord"),
-                F.col("_s_del").alias("_w_del"),
-            )
-            cond = F.col(order_col).eqNullSafe(F.col("_w_ord"))
-            for k in keys:
-                cond = cond & F.col(k).eqNullSafe(F.col(f"_w_{k}"))
-            picked = batch.join(F.broadcast(win), cond, "inner").drop(
-                *[f"_w_{k}" for k in keys], "_w_ord"
-            )
-            if dup_deliveries:
-                # duplicate deliveries of the winning (key, ord) pair —
-                # collapse before writing; skipped when planning PROVED
-                # the batch (key, order)-duplicate-free
-                picked = lww_dedupe(picked, keys=keys, order_col=order_col)
-            winners_rows = picked.withColumn(
-                "_deleted", F.coalesce(F.col("_w_del"), F.lit(False))
-            ).drop("_w_del", "op")
-        else:
-            deduped = lww_dedupe(batch, keys=keys, order_col=order_col)
-            winners_rows = deduped.withColumn(
-                "_deleted", F.col("op") == "delete"
-            ).drop("op")
-        for c, expr in derived_cols.items():
-            winners_rows = winners_rows.withColumn(c, expr)
-        vals = [c for c in schema.names() if c not in keys]
-        delta = (
-            winners_rows.select(
-                *keys,
-                *[F.col(c) for c in vals],
-                "_deleted",
-            )
-            .withColumn(
-                "_action",
-                F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),
-            )
-            .withColumn("_seq", F.lit(snap["snapshot_id"] + 1).cast("long"))
-            .withColumn("_bucket", bucket_of(keys, nb))
+        rows = (
+            _pick_winners(batch, win, keys, order_col, dedupe_guard)
+            .withColumn("_deleted", F.coalesce(F.col("_w_del"), F.lit(False)))
+            .drop("_w_del", "op")
         )
-        out_dir_rel = f"data/commit-{commit_tag}"
-        (
-            delta.repartition(max(len(touched), 1), "_bucket")
-            .write.partitionBy("_bucket")
-            .parquet(str(table.path / out_dir_rel))
+    else:
+        rows = lww_dedupe(batch, keys=keys, order_col=order_col).withColumn(
+            "_deleted", F.col("op") == "delete"
+        ).drop("op")
+    for c, expr in derived_cols.items():
+        rows = rows.withColumn(c, expr)
+    vals = [c for c in schema.names() if c not in keys]
+    delta = (
+        rows.select(*keys, *[F.col(c) for c in vals], "_deleted")
+        .withColumn(
+            "_action",
+            F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("upsert")),
         )
-        out_files = written_files(table.path, out_dir_rel, schema.version, delta=True)
-    _mark("write")
-    for c in caches:
-        c.unpersist()
-
-    bucket_stats = [
-        {
-            "bucket": int(b),
-            "rows_in": plan_by_bucket[b][0],
-            # MOR reports REQUESTED upserts/deletes (winner counts by op):
-            # whether a delete hit a live key is unknowable without the
-            # decide scan this mode exists to skip
-            "rows_upserted": dk_by_bucket[b] - ndl_by_bucket[b],
-            "rows_deleted": ndl_by_bucket[b],
-            "event_seq_min": plan_by_bucket[b][1],
-            "event_seq_max": plan_by_bucket[b][2],
-        }
-        for b in sorted(touched)
-    ]
-
-    base = snap
-    while True:
-        # untouched buckets keep their manifest-marked lists by reference
-        # (never mutated — touched ones are REPLACED via + below), so the
-        # snapshot write re-serializes only the touched buckets
-        new_buckets = dict(base["buckets"])
-        for b in touched:
-            new_buckets[str(b)] = new_buckets.get(str(b), []) + out_files.get(b, [])
-        schemas = dict(base["schemas"])
-        schemas[str(schema.version)] = schema.to_json()
-        fences = table.fences(base)
-        if epoch_id is not None:
-            fences = fence_add(fences, app_id, epoch_id)
-        new_snap = {
-            "snapshot_id": base["snapshot_id"] + 1,
-            "parent_id": base["snapshot_id"],
-            "epoch_id": epoch_id,
-            "app_id": app_id,
-            "key_cols": list(keys),
-            "order_col": order_col,
-            "num_buckets": nb,
-            "spec_id": int(base.get("spec_id", 0)),
-            **({"legacy": base["legacy"]} if base.get("legacy") else {}),
-            "current_schema_version": schema.version,
-            "schemas": schemas,
-            "buckets": new_buckets,
-            "added_files": {str(b): fl for b, fl in out_files.items()},
-            "fences": fences,
-            "stats": {"rows_in": rows_in, "mor": True},
-        }
-        if table._try_write_snapshot(new_snap):
-            if _timing:
-                _mark("commit")
-                print(
-                    "[merge-timing] epoch=%s %s total=%.3fs (mor)"
-                    % (
-                        epoch_id,
-                        " ".join(f"{k}={v:.3f}s" for k, v in _ph.items()),
-                        sum(_ph.values()),
-                    )
-                )
-            if mor_compact_threshold is not None and touched:
-                # log-structured maintenance: fold any bucket whose delta
-                # depth reached the bound, keeping read amplification O(1)
-                deltas = delta_files(new_snap)
-                deep = [
-                    b for b in touched if len(deltas.get(b, ())) >= mor_compact_threshold
-                ]
-                if deep:
-                    from rocket_etl_spark.lake.maintenance import compact
-
-                    compact(table, buckets=deep)
-            return CommitResult(
-                snapshot_id=new_snap["snapshot_id"],
-                epoch_id=epoch_id,
-                skipped=False,
-                rows_in=rows_in,
-                rows_upserted=distinct_keys - deletes_total,
-                rows_deleted=deletes_total,
-                event_seq_min=seq_lo,
-                event_seq_max=seq_hi,
-                touched_buckets=len(touched),
-                bucket_stats=bucket_stats,
-                decide_files_scanned=0,
-                decide_files_total=0,
-            )
-        latest = table.current_snapshot()
-        if epoch_id is not None and table.is_epoch_committed(epoch_id, app_id, latest):
-            return CommitResult(latest["snapshot_id"], epoch_id, skipped=True)
-        if latest["current_schema_version"] != snap["current_schema_version"]:
-            raise CommitConflict(
-                f"schema evolved concurrently (v{snap['current_schema_version']} -> "
-                f"v{latest['current_schema_version']}); re-align the batch and retry"
-            )
-        if int(latest["num_buckets"]) != nb:
-            # concurrent bucket-spec evolution: our delta files are laid
-            # out under the retired spec — recompute under the new one
-            return None
-        base = latest  # append-only: always safe to rebase
+        .withColumn("_seq", F.lit(snap["snapshot_id"] + 1).cast("long"))
+        .withColumn("_bucket", bucket_of(keys, int(snap["num_buckets"])))
+    )
+    (
+        delta.repartition(max(n_touched, 1), "_bucket")
+        .write.partitionBy("_bucket")
+        .parquet(str(table.path / out_dir_rel))
+    )
+    return written_files(table.path, out_dir_rel, schema.version, delta=True)
 
 
 def merge_batch(
@@ -766,6 +642,8 @@ def _merge_once(
 ) -> CommitResult | None:
     """One merge attempt against basis snapshot ``snap``.  Returns the
     CommitResult, or None when a CAS loss forces a full recompute."""
+    if mode not in ("cow", "mor"):
+        raise ValueError(f"unknown merge mode {mode!r} (use 'cow' or 'mor')")
     spark = table.spark
     derived_cols = derived_cols or {}
     schema = new_schema or TableSchema.from_json(
@@ -854,297 +732,289 @@ def _merge_once(
     key_bytes = int(sum(r["kb"] or 0 for r in plan_rows))
     avg_key_bytes = key_bytes / rows_in if rows_in else 0.0
     est_broadcast_bytes = int(distinct_keys * (avg_key_bytes + _BCAST_ROW_OVERHEAD))
+    # the broadcast gate: the slim winner forms fit a broadcast
+    use_broadcast = (
+        0 < distinct_keys <= SLIM_DEDUPE_MAX_KEYS
+        and est_broadcast_bytes <= SLIM_DEDUPE_MAX_BYTES
+    )
     _mark("plan")
 
-    if mode == "mor":
-        return _merge_mor_commit(
-            table, batch, snap, epoch_id, app_id, derived_cols, schema,
-            keys, order_col, nb, winners_slim, caches, plan_rows, touched,
-            rows_in, seq_lo, seq_hi, distinct_keys, dup_deliveries,
-            est_broadcast_bytes, commit_tag, mor_compact_threshold,
-            _mark, _timing, _ph,
-        )
-    if mode != "cow":
-        for c in caches:
-            c.unpersist()
-        raise ValueError(f"unknown merge mode {mode!r} (use 'cow' or 'mor')")
-
+    out_dir_rel = f"data/commit-{commit_tag}"
     out_files: dict[int, list[dict]] = {}
-    stat_map: dict[str, int] = {}
-    bucket_actions: dict[int, dict[str, int]] = {}
-    # broadcast path: old file entries NOT containing any winning key are
-    # re-linked into the new snapshot instead of being read + rewritten
-    retained: dict[str, list[dict]] = {}
-    matched_rel: set | None = None
-    # bucket-spec evolution: winner keys may still live under a RETIRED
-    # layout — probe each legacy spec with the keys' buckets under THAT
-    # spec (one tiny collect over the cached winners_slim: ≤ the specs'
-    # bucket-count product rows)
-    leg_cols = legacy_probe_cols(snap)
-    leg_touched = (
-        legacy_touched(snap, winners_slim.select(*leg_cols).distinct().collect())
-        if touched and leg_cols
-        else {}
-    )
-    if touched:
-        from rocket_etl_spark.schema.registry import project_to
-
-        cur_schema = TableSchema.from_json(
-            snap["schemas"][str(snap["current_schema_version"])]
+    decide = None
+    if mode == "mor":
+        if touched:
+            out_files = _write_mor_delta(
+                table, snap, batch, winners_slim if use_broadcast else None,
+                schema, derived_cols, dup_deliveries, len(touched), out_dir_rel,
+            )
+        _mark("write")
+        update: dict = {}
+        # MOR reports REQUESTED upserts/deletes (winner counts by op):
+        # whether a delete hit a live key is unknowable without the
+        # decide scan this mode exists to skip
+        counts = {r["_bucket"]: (int(r["dk"]) - int(r["ndl"] or 0), int(r["ndl"] or 0))
+                  for r in plan_rows}
+        stats = {"rows_in": rows_in, "mor": True}
+    else:
+        bucket_actions: dict[int, dict[str, int]] = {}
+        # broadcast path: old file entries NOT containing any winning key are
+        # re-linked into the new snapshot instead of being read + rewritten
+        matched_rel: set | None = None
+        # bucket-spec evolution: winner keys may still live under a RETIRED
+        # layout — probe each legacy spec with the keys' buckets under THAT
+        # spec (one tiny collect over the cached winners_slim: ≤ the specs'
+        # bucket-count product rows)
+        leg_cols = legacy_probe_cols(snap)
+        leg_touched = (
+            legacy_touched(snap, winners_slim.select(*leg_cols).distinct().collect())
+            if touched and leg_cols
+            else {}
         )
+        if touched:
+            from rocket_etl_spark.schema.registry import project_to
 
-        def _project(df: DataFrame) -> DataFrame:
-            if new_schema is None:
-                return df
-            return project_to(df, cur_schema, schema, passthrough=("_deleted",))
+            cur_schema = TableSchema.from_json(
+                snap["schemas"][str(snap["current_schema_version"])]
+            )
 
-        use_broadcast = (
-            0 < distinct_keys <= SLIM_DEDUPE_MAX_KEYS
-            and est_broadcast_bytes <= SLIM_DEDUPE_MAX_BYTES
-        )
+            def _project(df: DataFrame) -> DataFrame:
+                if new_schema is None:
+                    return df
+                return project_to(df, cur_schema, schema, passthrough=("_deleted",))
 
-        # bloom + zone-map pruning of the DECIDE scan (lake/planner.py).
-        # Broadcast path only: its keep side re-links unscanned files;
-        # the SMJ path rewrites whole buckets and must see every row.
-        decide = select_files(
-            snap, touched, leg_touched,
-            key_rows=(lambda: winners_slim.select(*keys).collect()) if use_broadcast else None,
-            n_keys=distinct_keys,
-        )
-        # tombstones included: a newer delete must outrank a stale upsert
-        current = _project(table.read_plan(decide, snap, include_tombstones=True))
+            # bloom + zone-map pruning of the DECIDE scan (lake/planner.py).
+            # Broadcast path only: its keep side re-links unscanned files;
+            # the SMJ path rewrites whole buckets and must see every row.
+            decide = select_files(
+                snap, touched, leg_touched,
+                key_rows=(lambda: winners_slim.select(*keys).collect()) if use_broadcast else None,
+                n_keys=distinct_keys,
+            )
+            # tombstones included: a newer delete must outrank a stale upsert
+            current = _project(table.read_plan(decide, snap, include_tombstones=True))
 
-        vals = [c for c in schema.names() if c not in keys]
-        # _action is written into the data files (tiny, dictionary-encoded)
-        # and read back by a pruned single-column scan for the MERGE stats —
-        # explicit-schema reads make it invisible to table queries, exactly
-        # like the _deleted tombstone flag.
-        if use_broadcast:
-            def read_matched(fnames):
-                rel = _rel_paths(table.path, fnames)
-                # current-spec keeps: bucket placement unchanged — stream
-                # scan→parquet with no exchange (tight=False).  (An r6
-                # experiment replaced this with a union of per-bucket
-                # scans to get bucket-contiguous tasks and tighter output
-                # files; the 64-way union regressed the incremental merge
-                # 5x — per-child planning and stage overhead dwarf the
-                # file-count savings — so the single scan stands.)
-                srcs = [(
-                    _project(
-                        table.read(
-                            buckets=touched, include_tombstones=True,
-                            file_subset=rel, legacy_buckets={},
-                        )
-                    ),
-                    False,
-                )]
-                if leg_touched:
-                    # legacy-layout keeps MIGRATE: placement changes, so
-                    # route through a bucket-hash exchange (tight=True) —
-                    # one output file per target bucket instead of one
-                    # per (scan task, target bucket)
-                    srcs.append((
+            vals = [c for c in schema.names() if c not in keys]
+            # _action is written into the data files (tiny, dictionary-encoded)
+            # and read back by a pruned single-column scan for the MERGE stats —
+            # explicit-schema reads make it invisible to table queries, exactly
+            # like the _deleted tombstone flag.
+            if use_broadcast:
+                def read_matched(fnames):
+                    rel = _rel_paths(table.path, fnames)
+                    # current-spec keeps: bucket placement unchanged — stream
+                    # scan→parquet with no exchange (tight=False).  (An r6
+                    # experiment replaced this with a union of per-bucket
+                    # scans to get bucket-contiguous tasks and tighter output
+                    # files; the 64-way union regressed the incremental merge
+                    # 5x — per-child planning and stage overhead dwarf the
+                    # file-count savings — so the single scan stands.)
+                    srcs = [(
                         _project(
                             table.read(
-                                buckets=[], include_tombstones=True,
-                                file_subset=rel, legacy_buckets=leg_touched,
+                                buckets=touched, include_tombstones=True,
+                                file_subset=rel, legacy_buckets={},
                             )
                         ),
-                        True,
-                    ))
-                return rel, srcs
+                        False,
+                    )]
+                    if leg_touched:
+                        # legacy-layout keeps MIGRATE: placement changes, so
+                        # route through a bucket-hash exchange (tight=True) —
+                        # one output file per target bucket instead of one
+                        # per (scan task, target bucket)
+                        srcs.append((
+                            _project(
+                                table.read(
+                                    buckets=[], include_tombstones=True,
+                                    file_subset=rel, legacy_buckets=leg_touched,
+                                )
+                            ),
+                            True,
+                        ))
+                    return rel, srcs
 
-            # fused dedupe+MERGE: no payload ever shuffles except the
-            # changed rows' final bucket placement
-            outputs, matched_rel = _merge_broadcast(
-                batch, current, keys, order_col, vals, nb, derived_cols,
-                dedupe_guard=dup_deliveries, read_matched=read_matched,
-                cache_registry=caches,
-                winners=winners_slim.select(*keys, "_s_ord", "_s_del"),
-            )
-            if matched_rel is not None:
-                for b in touched:
-                    retained[str(b)] = [
-                        fe
-                        for fe in snap["buckets"].get(str(b), [])
-                        if fe["path"] not in matched_rel
-                    ]
-        else:
-            # key set exceeds the broadcast bound → slim forms unavailable;
-            # plain one-shuffle max_by dedupe feeding the full-outer SMJ
-            # (map-side combine keeps hot keys skew-safe), derived columns
-            # computed on winners only
-            deduped = lww_dedupe(batch, keys=keys, order_col=order_col)
-            for c, expr in derived_cols.items():
-                deduped = deduped.withColumn(c, expr)
-            outputs = [(_merge_smj(deduped, current, keys, order_col, vals, nb), True)]
+                # fused dedupe+MERGE: no payload ever shuffles except the
+                # changed rows' final bucket placement
+                outputs, matched_rel = _merge_broadcast(
+                    batch, current, keys, order_col, vals, nb, derived_cols,
+                    dedupe_guard=dup_deliveries, read_matched=read_matched,
+                    cache_registry=caches,
+                    winners=winners_slim.select(*keys, "_s_ord", "_s_del"),
+                )
+            else:
+                # key set exceeds the broadcast bound → slim forms unavailable;
+                # plain one-shuffle max_by dedupe feeding the full-outer SMJ
+                # (map-side combine keeps hot keys skew-safe), derived columns
+                # computed on winners only
+                deduped = lww_dedupe(batch, keys=keys, order_col=order_col)
+                for c, expr in derived_cols.items():
+                    deduped = deduped.withColumn(c, expr)
+                outputs = [(_merge_smj(deduped, current, keys, order_col, vals, nb), True)]
 
-        _mark("decide")  # broadcast: incl. the matched-file collect
-        out_dir_rel = f"data/commit-{commit_tag}"
-        out_dir = table.path / out_dir_rel
-        # ONE write job for every output side: union preserves each
-        # side's partitioning (the changed side keeps its one-partition-
-        # per-touched-bucket shuffle, the keep side keeps its exchange-
-        # free scan partitions), so this merely removes the per-side job
-        # scheduling round-trips and lets the keep scan backfill cores
-        # while the changed side's exchange drains (guide §2.6).
-        sides = [
-            # tight sides (changed rows, legacy migrations): placement
-            # changes, so route through a bucket-hash exchange; the keep
-            # side is written straight out of its (bucket-contiguous)
-            # scan partitions — repartitioning it would put the payload
-            # back on the wire
-            part.repartition(max(len(touched), 1), "_bucket") if tight else part
-            for part, tight in outputs
-        ]
-        combined = sides[0]
-        for p in sides[1:]:
-            combined = combined.unionByName(p)
-        combined.write.partitionBy("_bucket").parquet(str(out_dir))
-        out_files = written_files(table.path, out_dir_rel, schema.version)
-        attach_file_metadata(table.path, out_files, schema, keys, rows_in=rows_in)
-        _mark("write")
+            _mark("decide")  # broadcast: incl. the matched-file collect
+            out_dir = table.path / out_dir_rel
+            # ONE write job for every output side: union preserves each
+            # side's partitioning (the changed side keeps its one-partition-
+            # per-touched-bucket shuffle, the keep side keeps its exchange-
+            # free scan partitions), so this merely removes the per-side job
+            # scheduling round-trips and lets the keep scan backfill cores
+            # while the changed side's exchange drains (guide §2.6).
+            sides = [
+                # tight sides (changed rows, legacy migrations): placement
+                # changes, so route through a bucket-hash exchange; the keep
+                # side is written straight out of its (bucket-contiguous)
+                # scan partitions — repartitioning it would put the payload
+                # back on the wire
+                part.repartition(max(len(touched), 1), "_bucket") if tight else part
+                for part, tight in outputs
+            ]
+            combined = sides[0]
+            for p in sides[1:]:
+                combined = combined.unionByName(p)
+            combined.write.partitionBy("_bucket").parquet(str(out_dir))
+            out_files = written_files(table.path, out_dir_rel, schema.version)
+            attach_file_metadata(table.path, out_files, schema, keys, rows_in=rows_in)
+            _mark("write")
 
-        if out_files:
-            bucket_actions = _action_counts(spark, out_dir, out_files)
-            for counts in bucket_actions.values():
-                for a, n in counts.items():
-                    stat_map[a] = stat_map.get(a, 0) + n
-        _mark("stats")
+            if out_files:
+                bucket_actions = _action_counts(spark, out_dir, out_files)
+            _mark("stats")
+
+        # the touched buckets' matched files (all of them on the SMJ and
+        # degraded-broadcast paths) were rewritten, legacy ones into
+        # current-spec buckets (gradual migration); unmatched files re-link
+        update = {
+            "rewritten": touched, "legacy_rewritten": leg_touched, "matched": matched_rel,
+        }
+        counts = {}
+        for b in touched:
+            a = bucket_actions.get(b, {})
+            counts[b] = (a.get("insert", 0) + a.get("update", 0), a.get("delete", 0))
+        stats = {"rows_in": rows_in}
 
     for c in caches:  # plan+writes done — release the cached slim decision
         c.unpersist()
 
-    bucket_stats = [
-        {
-            "bucket": int(b),
-            "rows_in": plan_by_bucket[b][0],
-            "rows_upserted": bucket_actions.get(b, {}).get("insert", 0)
-            + bucket_actions.get(b, {}).get("update", 0),
-            "rows_deleted": bucket_actions.get(b, {}).get("delete", 0),
-            "event_seq_min": plan_by_bucket[b][1],
-            "event_seq_max": plan_by_bucket[b][2],
-        }
-        for b in sorted(touched)
-    ]
-
-    # 5. assemble + CAS-commit the snapshot; on CAS loss, REBASE onto the
-    # winner's snapshot (carry ITS buckets/fences forward) when our touched
-    # buckets and the schema are unaffected, else recompute/raise.
-    base = snap  # snapshot whose buckets/fences the new snapshot extends
-    while True:
-        new_buckets = dict(base["buckets"])
-        for b in touched:
-            # freshly written files + (broadcast path) re-linked unmatched
-            # files; the SMJ path rewrites whole buckets, retained is empty
-            new_buckets[str(b)] = out_files.get(b, []) + retained.get(str(b), [])
-        for b, fl in out_files.items():
-            if b not in set(touched):
-                # keep-rows MIGRATED out of a rewritten legacy-layout file
-                # scatter to their current-spec buckets — appended: the
-                # one-live-row-per-key-per-spec invariant guarantees these
-                # keys have no existing row in this bucket
-                new_buckets[str(b)] = list(base["buckets"].get(str(b), [])) + fl
-        # legacy layouts: a touched legacy bucket's matched files were
-        # fully rewritten into current-spec buckets (gradual migration);
-        # unmatched files re-link in place.  The SMJ / degraded-broadcast
-        # paths rewrite every file of every touched bucket, legacy
-        # included, so those buckets empty out entirely.
-        new_legacy = []
-        for layout in (base.get("legacy") or []):
-            tb = set(leg_touched.get(int(layout["spec_id"]), []))
-            kept_map = {}
-            for bb, fl in layout["buckets"].items():
-                if int(bb) in tb:
-                    fl = (
-                        [fe for fe in fl if fe["path"] not in matched_rel]
-                        if matched_rel is not None
-                        else []
-                    )
-                if fl:
-                    kept_map[bb] = fl
-            if kept_map:
-                new_legacy.append({**layout, "buckets": kept_map})
-        schemas = dict(base["schemas"])
-        schemas[str(schema.version)] = schema.to_json()
-        fences = table.fences(base)
-        if epoch_id is not None:
-            fences = fence_add(fences, app_id, epoch_id)
-        new_snap = {
-            "snapshot_id": base["snapshot_id"] + 1,
-            "parent_id": base["snapshot_id"],
-            "epoch_id": epoch_id,
-            "app_id": app_id,
-            "key_cols": keys,
-            "order_col": order_col,
-            "num_buckets": nb,
-            "spec_id": int(base.get("spec_id", 0)),
-            **({"legacy": new_legacy} if new_legacy else {}),
+    # 5. CAS-commit the snapshot (``_cas_commit``): the bucket maps come
+    # from the planner, over whichever snapshot the commit lands on
+    def fields(base: dict) -> dict:
+        return {
+            **update_buckets(base, out_files, **update),
             "current_schema_version": schema.version,
-            "schemas": schemas,
-            "buckets": new_buckets,
+            "schemas": {**base["schemas"], str(schema.version): schema.to_json()},
             # this commit's own files, explicit — the changelog source
             "added_files": {str(b): fl for b, fl in out_files.items()},
-            # bounded per-app fence: hwm + out-of-order window, never history
-            "fences": fences,
-            "stats": {"rows_in": rows_in},
+            "stats": stats,
         }
-        if table._try_write_snapshot(new_snap):
-            if _timing:
-                _mark("commit")
-                print(
-                    "[merge-timing] epoch=%s %s total=%.3fs"
-                    % (
-                        epoch_id,
-                        " ".join(f"{k}={v:.3f}s" for k, v in _ph.items()),
-                        sum(_ph.values()),
-                    )
-                )
-            return CommitResult(
-                snapshot_id=new_snap["snapshot_id"],
-                epoch_id=epoch_id,
-                skipped=False,
-                rows_in=rows_in,
-                rows_upserted=stat_map.get("insert", 0) + stat_map.get("update", 0),
-                rows_deleted=stat_map.get("delete", 0),
-                event_seq_min=seq_lo,
-                event_seq_max=seq_hi,
-                touched_buckets=len(touched),
-                bucket_stats=bucket_stats,
-                decide_files_scanned=decide.scanned if touched else 0,
-                decide_files_total=decide.total if touched else 0,
+
+    def stale(latest: dict) -> bool:
+        # a COW commit was derived from a read of its buckets and of the
+        # retired layouts: a concurrent legacy-file migration or a commit
+        # to one of its buckets means rebasing would lose the winner's
+        # rows — recompute (the first attempt's files become orphans,
+        # removed later by age-guarded expire_snapshots)
+        return layouts_changed(snap, latest, set(touched) | set(out_files))
+
+    new_snap = _cas_commit(
+        table, snap, epoch_id, app_id, fields, recompute=None if mode == "mor" else stale
+    )
+    if not isinstance(new_snap, dict):
+        return new_snap  # fenced by the winner, or recompute
+    if _timing:
+        _mark("commit")
+        print(
+            "[merge-timing] epoch=%s %s total=%.3fs%s"
+            % (
+                epoch_id,
+                " ".join(f"{k}={v:.3f}s" for k, v in _ph.items()),
+                sum(_ph.values()),
+                " (mor)" if mode == "mor" else "",
             )
-        # lost the CAS — someone else published base+1
-        latest = table.current_snapshot()
+        )
+    if mode == "mor" and mor_compact_threshold is not None and touched:
+        # log-structured maintenance: fold any bucket whose delta
+        # depth reached the bound, keeping read amplification O(1)
+        deltas = delta_files(new_snap)
+        deep = [b for b in touched if len(deltas.get(b, ())) >= mor_compact_threshold]
+        if deep:
+            from rocket_etl_spark.lake.maintenance import compact
+
+            compact(table, buckets=deep)
+    return CommitResult(
+        snapshot_id=new_snap["snapshot_id"],
+        epoch_id=epoch_id,
+        skipped=False,
+        rows_in=rows_in,
+        rows_upserted=sum(u for u, _ in counts.values()),
+        rows_deleted=sum(d for _, d in counts.values()),
+        event_seq_min=seq_lo,
+        event_seq_max=seq_hi,
+        touched_buckets=len(touched),
+        bucket_stats=[
+            {
+                "bucket": int(b),
+                "rows_in": plan_by_bucket[b][0],
+                "rows_upserted": counts[b][0],
+                "rows_deleted": counts[b][1],
+                "event_seq_min": plan_by_bucket[b][1],
+                "event_seq_max": plan_by_bucket[b][2],
+            }
+            for b in sorted(touched)
+        ],
+        decide_files_scanned=decide.scanned if decide else 0,
+        decide_files_total=decide.total if decide else 0,
+    )
+
+
+def _cas_commit(
+    table: LakeTable,
+    snap: dict,
+    epoch_id: int | None,
+    app_id: str,
+    fields,
+    recompute=None,
+    schema_bound: bool = True,
+) -> dict | CommitResult | None:
+    """CAS-commit a data commit computed against ``snap``: the child of
+    the tip carrying ``fields(tip)``, this commit's epoch in its app's
+    fence.  Returns the published snapshot — or, when the CAS keeps
+    losing, what the winner's snapshot decides:
+
+    * it fenced this ``(app_id, epoch_id)`` → a skipped ``CommitResult``;
+    * it evolved the schema (and ``schema_bound``: the commit carries a
+      schema of its own) → ``CommitConflict``; the caller re-aligns;
+    * it changed the bucket spec, or ``recompute(tip)`` holds → None:
+      the commit was routed or read against a retired state — recompute;
+    * otherwise rebase: the next attempt builds on the winner's snapshot
+      (its buckets and fences carry forward)."""
+    base = snap
+    while True:
+        fences = table.fences(base)
+        if epoch_id is not None:
+            # bounded per-app fence: hwm + out-of-order window, never history
+            fences = fence_add(fences, app_id, epoch_id)
+        new_snap = child_snapshot(
+            base, epoch_id=epoch_id, app_id=app_id, fences=fences, **fields(base)
+        )
+        if table._try_write_snapshot(new_snap):
+            return new_snap
+        latest = table.current_snapshot()  # lost: another writer published first
         if epoch_id is not None and table.is_epoch_committed(epoch_id, app_id, latest):
             return CommitResult(latest["snapshot_id"], epoch_id, skipped=True)
-        if latest["current_schema_version"] != snap["current_schema_version"]:
-            # a concurrent schema evolution: our batch alignment (and any
-            # evolution we carry) was computed against a stale schema —
-            # rebasing field ids blindly could corrupt; caller re-aligns.
+        if schema_bound and latest["current_schema_version"] != snap["current_schema_version"]:
+            # our batch alignment (and any evolution we carry) was computed
+            # against a stale schema — rebasing field ids blindly could
+            # corrupt; the caller re-aligns
             raise CommitConflict(
                 f"schema evolved concurrently (v{snap['current_schema_version']} -> "
                 f"v{latest['current_schema_version']}); re-align the batch and retry"
             )
-        if (
-            int(latest["num_buckets"]) != nb
-            or latest.get("legacy") != snap.get("legacy")
+        if int(latest["num_buckets"]) != int(snap["num_buckets"]) or (
+            recompute is not None and recompute(latest)
         ):
-            # a concurrent bucket-spec evolution / legacy-file migration:
-            # our output routing and legacy bookkeeping were computed
-            # against a retired layout state — recompute from the tip
             return None
-        stale = [
-            b for b in set(touched) | set(out_files)
-            if latest["buckets"].get(str(b)) != snap["buckets"].get(str(b))
-        ]
-        if stale:
-            # our merged rows were derived from a stale read of these
-            # buckets — rebasing would lose the winner's rows; recompute
-            # against the latest snapshot (first-attempt files become
-            # orphans, removed later by age-guarded expire_snapshots).
-            return None
-        base = latest  # safe rebase: disjoint buckets, same schema
+        base = latest
 
 
 def append_batch(
@@ -1161,8 +1031,10 @@ def append_batch(
     one live row per key.
 
     No read-modify-write of rows means a CAS loss always rebases (append
-    our file entries onto whatever the winner published); only the
-    exactly-once fence is re-checked."""
+    our file entries onto whatever the winner published), over a
+    concurrent schema change too — the files record the schema they were
+    written under; only the exactly-once fence and the bucket spec are
+    re-checked."""
     t0 = time.monotonic()
     snap = table.current_snapshot()
     if epoch_id is not None and table.is_epoch_committed(epoch_id, app_id, snap):
@@ -1170,7 +1042,6 @@ def append_batch(
 
     schema = TableSchema.from_json(snap["schemas"][str(snap["current_schema_version"])])
     keys = snap["key_cols"]
-    order_col = snap["order_col"]
     nb = int(snap["num_buckets"])
     if set(batch.columns) - {"op"} != set(schema.names()):
         raise ValueError(
@@ -1189,71 +1060,50 @@ def append_batch(
         .write.partitionBy("_bucket")
         .parquet(str(out_dir))
     )
-    out_files = {
-        str(b): fl for b, fl in written_files(table.path, out_dir_rel, schema.version).items()
-    }
+    out_files = written_files(table.path, out_dir_rel, schema.version)
     # row counts come straight from the parquet footers — metadata-only
     # driver reads (Iceberg gets these from its manifests), no Spark job
     import pyarrow.parquet as pq
 
-    append_bucket_rows: dict[str, int] = {}
-    for b, fl in out_files.items():
-        append_bucket_rows[b] = sum(
-            pq.read_metadata(str(table.path / fe["path"])).num_rows for fe in fl
-        )
-    rows_in = sum(append_bucket_rows.values())
+    bucket_rows = {
+        b: sum(pq.read_metadata(str(table.path / fe["path"])).num_rows for fe in fl)
+        for b, fl in out_files.items()
+    }
+    rows_in = sum(bucket_rows.values())
 
-    base = snap
-    while True:
-        # untouched buckets keep their manifest-marked lists by reference
-        new_buckets = dict(base["buckets"])
-        for b, fl in out_files.items():
-            new_buckets[b] = new_buckets.get(b, []) + fl
-        fences = table.fences(base)
-        if epoch_id is not None:
-            fences = fence_add(fences, app_id, epoch_id)
-        new_snap = {
-            **{k: base[k] for k in (
-                "key_cols", "order_col", "num_buckets", "current_schema_version", "schemas"
-            )},
-            "spec_id": int(base.get("spec_id", 0)),
-            **({"legacy": base["legacy"]} if base.get("legacy") else {}),
-            "snapshot_id": base["snapshot_id"] + 1,
-            "parent_id": base["snapshot_id"],
-            "epoch_id": epoch_id,
-            "app_id": app_id,
-            "buckets": new_buckets,
-            "added_files": out_files,
-            "fences": fences,
+    new_snap = _cas_commit(
+        table, snap, epoch_id, app_id,
+        lambda base: {
+            **update_buckets(base, out_files),
+            "added_files": {str(b): fl for b, fl in out_files.items()},
             "stats": {"rows_in": rows_in, "appended": True},
-        }
-        if table._try_write_snapshot(new_snap):
-            return CommitResult(
-                snapshot_id=new_snap["snapshot_id"],
-                epoch_id=epoch_id,
-                skipped=False,
-                rows_in=rows_in,
-                rows_upserted=rows_in,
-                touched_buckets=len(out_files),
-                wall_ms=int((time.monotonic() - t0) * 1000),
-                bucket_stats=[
-                    {
-                        "bucket": int(b),
-                        "rows_in": n,
-                        "rows_upserted": n,
-                        "rows_deleted": 0,
-                        "event_seq_min": None,
-                        "event_seq_max": None,
-                    }
-                    for b, n in sorted(append_bucket_rows.items(), key=lambda kv: int(kv[0]))
-                ],
-            )
-        latest = table.current_snapshot()
-        if epoch_id is not None and table.is_epoch_committed(epoch_id, app_id, latest):
-            return CommitResult(latest["snapshot_id"], epoch_id, skipped=True)
-        if int(latest["num_buckets"]) != nb:
-            # concurrent bucket-spec evolution: our files are laid out
-            # under the retired spec — rewrite under the new one (the
-            # first attempt's files become age-guarded orphans)
-            return append_batch(table, batch, epoch_id=epoch_id, app_id=app_id)
-        base = latest
+        },
+        schema_bound=False,
+    )
+    if new_snap is None:
+        # concurrent bucket-spec evolution: our files are laid out under
+        # the retired spec — rewrite under the new one (the first
+        # attempt's files become age-guarded orphans)
+        return append_batch(table, batch, epoch_id=epoch_id, app_id=app_id)
+    if not isinstance(new_snap, dict):
+        return new_snap
+    return CommitResult(
+        snapshot_id=new_snap["snapshot_id"],
+        epoch_id=epoch_id,
+        skipped=False,
+        rows_in=rows_in,
+        rows_upserted=rows_in,
+        touched_buckets=len(out_files),
+        wall_ms=int((time.monotonic() - t0) * 1000),
+        bucket_stats=[
+            {
+                "bucket": int(b),
+                "rows_in": n,
+                "rows_upserted": n,
+                "rows_deleted": 0,
+                "event_seq_min": None,
+                "event_seq_max": None,
+            }
+            for b, n in sorted(bucket_rows.items())
+        ],
+    )

@@ -23,16 +23,14 @@ rows.
 from __future__ import annotations
 
 import json
-import os
 import re
 import time
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from rocket_etl_spark.lake.planner import describe_file
-from rocket_etl_spark.lake.table import LakeTable
+from rocket_etl_spark.lake.planner import describe_file, file_count, layouts
+from rocket_etl_spark.lake.table import LakeTable, _cas_write
 
 _SNAPSHOTS_SCHEMA = T.StructType(
     [
@@ -102,25 +100,17 @@ def _operation(snap: dict) -> str:
         return "delta-append"
     if stats.get("appended"):
         return "append"
-    if "rows_total" in stats and not snap.get("buckets"):
+    if "rows_total" in stats:
         return "create"
     return "merge"
 
 
-def _committed_at(table: LakeTable, snap: dict):
+def _committed_at(snap: dict):
     """Commit time: the durable ``committed_at_ms`` the CAS stamps
-    (table.py), falling back to the snapshot file's mtime for snapshots
-    written before that field existed."""
+    (table.py)."""
     from datetime import datetime, timezone
 
-    ms = snap.get("committed_at_ms")
-    if ms is not None:
-        return datetime.fromtimestamp(ms / 1000.0, tz=timezone.utc)
-    p = table.snap_dir / f"snapshot-{snap['snapshot_id']:08d}.json"
-    try:
-        return datetime.fromtimestamp(p.stat().st_mtime, tz=timezone.utc)
-    except OSError:
-        return None
+    return datetime.fromtimestamp(snap["committed_at_ms"] / 1000.0, tz=timezone.utc)
 
 
 def as_of(table: LakeTable, ts) -> int:
@@ -139,8 +129,7 @@ def as_of(table: LakeTable, ts) -> int:
         ts = ts.timestamp()
     snap = table.current_snapshot()
     while snap is not None:
-        at = _committed_at(table, snap)
-        if at is not None and at.timestamp() <= ts:
+        if _committed_at(snap).timestamp() <= ts:
             return snap["snapshot_id"]
         parent = snap.get("parent_id")
         if parent is None:
@@ -160,8 +149,8 @@ def snapshots(table: LakeTable) -> DataFrame:
 
     ``operation`` distinguishes merge / append / delta-append (MOR) /
     overwrite (wipe) / replace (compaction, rebucket); ``committed_at``
-    is the snapshot file's mtime (the chain carries no clock of its own
-    — commit identity is the CAS'd id, not wall time)."""
+    is the time the snapshot CAS stamped (commit identity is still the
+    CAS'd id, not wall time)."""
     rows = []
     tip = table.current_snapshot()
     tip_id = tip["snapshot_id"] if tip else None
@@ -175,14 +164,9 @@ def snapshots(table: LakeTable) -> DataFrame:
                 snap.get("epoch_id"),
                 snap.get("app_id"),
                 _operation(snap),
-                _committed_at(table, snap),
+                _committed_at(snap),
                 snap.get("current_schema_version"),
-                sum(len(fl) for fl in snap["buckets"].values())
-                + sum(
-                    len(fl)
-                    for l in (snap.get("legacy") or [])
-                    for fl in l["buckets"].values()
-                ),
+                file_count(snap),
                 sum(len(fl) for fl in (snap.get("added_files") or {}).values()),
                 stats.get("rows_in"),
                 snap["snapshot_id"] == tip_id,
@@ -208,13 +192,7 @@ def files(table: LakeTable, snapshot_id: int | None = None) -> DataFrame:
         else table.current_snapshot()
     )
     rows = []
-    layouts = [
-        (int(snap.get("spec_id", 0)), int(snap["num_buckets"]), snap["buckets"])
-    ] + [
-        (int(l["spec_id"]), int(l["num_buckets"]), l["buckets"])
-        for l in (snap.get("legacy") or [])
-    ]
-    for spec_id, spec_nb, bmap in layouts:
+    for spec_id, spec_nb, bmap in layouts(snap):
         for b, fl in bmap.items():
             for fe in fl:
                 full = table.path / fe["path"]
@@ -276,17 +254,8 @@ def create_tag(table: LakeTable, name: str, snapshot_id: int | None = None) -> d
     }
     d = _refs_dir(table)
     d.mkdir(parents=True, exist_ok=True)
-    tmp = d / f".tmp-{uuid.uuid4().hex}.json"
-    with open(tmp, "w") as f:
-        json.dump(ref, f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, d / f"{name}.json")
-    except FileExistsError:
+    if not _cas_write(d / f"{name}.json", ref):
         raise ValueError(f"tag {name!r} already exists (tags are immutable)")
-    finally:
-        tmp.unlink(missing_ok=True)
     return ref
 
 
@@ -341,7 +310,7 @@ def history(table: LakeTable) -> DataFrame:
                 snap["snapshot_id"],
                 snap.get("parent_id"),
                 snap.get("epoch_id"),
-                _committed_at(table, snap),
+                _committed_at(snap),
                 first,
             )
         )

@@ -29,6 +29,10 @@ only module that knows them:
 * **Written files** — the entries for the files a ``partitionBy("_bucket")``
   write left (``written_files``), and their zone maps and blooms
   (``attach_file_metadata``).
+* **Commits** — the bucket maps a commit publishes: which files a
+  rewrite drops, where new files go, which retired buckets a migration
+  empties (``update_buckets``, ``evolved_layouts``); ``layouts`` and
+  ``file_count`` walk them for the counts.
 
 ``select_files`` is the planner every read goes through:
 ``LakeTable.read``, the MERGE decide scan, ``lake.lookup``'s point
@@ -45,6 +49,7 @@ from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from pathlib import Path
+from typing import NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column
@@ -70,6 +75,109 @@ def legacy_layouts(snap: dict) -> list[dict]:
     legacy files into current-spec buckets (gradual migration), and
     ``compact(migrate_legacy=True)`` finishes the job in bulk."""
     return snap.get("legacy") or []
+
+
+class Layout(NamedTuple):
+    """One bucket layout of a snapshot: its spec id, bucket count and
+    ``{bucket: file entries}`` map."""
+
+    spec_id: int
+    num_buckets: int
+    buckets: dict[str, list[dict]]
+
+
+def layouts(snap: dict) -> list[Layout]:
+    """The snapshot's current layout, then each retired one."""
+    return [Layout(int(snap.get("spec_id", 0)), int(snap["num_buckets"]), snap["buckets"])] + [
+        Layout(int(lay["spec_id"]), int(lay["num_buckets"]), lay["buckets"])
+        for lay in legacy_layouts(snap)
+    ]
+
+
+def file_count(snap: dict) -> int:
+    """Live data files of the snapshot, retired layouts included."""
+    return sum(len(fl) for lay in layouts(snap) for fl in lay.buckets.values())
+
+
+def update_buckets(
+    snap: dict,
+    added: dict[int, list[dict]],
+    rewritten: Sequence[int] = (),
+    legacy_rewritten: dict[int, Sequence[int]] | None = None,
+    matched: set[str] | None = None,
+) -> dict:
+    """The ``buckets`` and ``legacy`` fields of a commit over ``snap``.
+
+    * ``rewritten`` current-layout buckets, and the retired-layout
+      buckets ``legacy_rewritten`` names (``{spec_id: [bucket ids]}``),
+      lose the files the commit read and rewrote: the ``matched`` paths,
+      or every file when ``matched`` is None.
+    * ``added`` (``{bucket: entries}``) files lead a rewritten bucket's
+      list and follow the existing files of any other bucket.  Rows that
+      migrate out of a retired layout may land in a bucket the commit
+      did not rewrite; they append, because a key lives under one layout
+      only, so the bucket holds no row of theirs.
+    * Every other bucket list is kept by reference — never mutated — so
+      the snapshot write re-uses its manifest.  Buckets keep their place
+      in the map and new ones follow in the order given: readers list
+      files in the map's order, and the Spark scans over them are not
+      indifferent to it.
+    * With ``legacy_rewritten`` None the retired layouts carry over as
+      they are; otherwise empty retired buckets and layouts are dropped.
+    """
+
+    def survivors(fl: list[dict]) -> list[dict]:
+        return [] if matched is None else [fe for fe in fl if fe["path"] not in matched]
+
+    rw = list(dict.fromkeys(int(b) for b in rewritten))
+    buckets = dict(snap["buckets"])
+    for b in rw:
+        buckets[str(b)] = added.get(b, []) + survivors(buckets.get(str(b), []))
+    for b, fl in added.items():
+        if b not in rw:
+            buckets[str(b)] = list(buckets.get(str(b), [])) + fl
+    legacy = legacy_layouts(snap)
+    if legacy_rewritten is not None:
+        legacy = []
+        for lay in legacy_layouts(snap):
+            hit = {int(b) for b in legacy_rewritten.get(int(lay["spec_id"]), ())}
+            kept = {}
+            for b, fl in lay["buckets"].items():
+                fl = survivors(fl) if int(b) in hit else fl
+                if fl:
+                    kept[b] = fl
+            if kept:
+                legacy.append({**lay, "buckets": kept})
+    return {"buckets": buckets, "legacy": legacy}
+
+
+def layouts_changed(old: dict, new: dict, buckets) -> bool:
+    """Whether ``new`` differs from ``old`` in its retired layouts or in
+    the file list of any of the current-layout ``buckets``: a commit
+    that read them from ``old`` cannot rebase onto ``new``."""
+    return legacy_layouts(new) != legacy_layouts(old) or any(
+        new["buckets"].get(str(b)) != old["buckets"].get(str(b)) for b in buckets
+    )
+
+
+def evolved_layouts(snap: dict, num_buckets: int) -> dict:
+    """The layout fields of a bucket-spec evolution over ``snap``: a new,
+    empty current layout of ``num_buckets`` buckets under the next spec
+    id; the old current layout, if it holds files, becomes the newest
+    retired one, ahead of the retired layouts that still hold files."""
+    retired = _live_legacy(snap)
+    if any(snap["buckets"].values()):
+        retired = [{
+            "spec_id": int(snap.get("spec_id", 0)),
+            "num_buckets": int(snap["num_buckets"]),
+            "buckets": snap["buckets"],
+        }] + retired
+    return {
+        "num_buckets": int(num_buckets),
+        "spec_id": int(snap.get("spec_id", 0)) + 1,
+        "buckets": {},
+        "legacy": retired,
+    }
 
 
 def _live_legacy(snap: dict) -> list[dict]:

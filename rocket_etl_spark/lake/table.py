@@ -104,12 +104,44 @@ class _ManifestList(list):
         self.man = man
 
 
-def _fence_from_set(app_id: str, epochs: set) -> dict:
-    """Exact {hwm, above} encoding of an arbitrary committed-epoch set."""
-    hwm = -1
-    while hwm + 1 in epochs:
-        hwm += 1
-    return {app_id: {"hwm": hwm, "above": sorted(e for e in epochs if e > hwm)}}
+def _cas_write(path: Path, obj) -> bool:
+    """Atomically publish ``obj`` (JSON-serialized unless already a
+    string) at ``path`` iff nothing is there yet: the temp file is fully
+    written and fsynced before ``os.link`` puts it in place, so a
+    published file is always complete, and the link fails with EEXIST
+    when another writer won the name — then the result is False.  Every
+    snapshot, manifest, branch ref and tag is published this way."""
+    payload = obj if isinstance(obj, str) else json.dumps(obj)
+    tmp = path.parent / f".tmp-{uuid.uuid4().hex}.json"
+    with open(tmp, "w") as f:
+        f.write(payload)
+        f.flush()
+        os.fsync(f.fileno())
+    try:
+        os.link(tmp, path)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        tmp.unlink(missing_ok=True)
+
+
+def child_snapshot(base: dict, **fields) -> dict:
+    """The snapshot that follows ``base``: the next ``snapshot_id`` with
+    ``base`` as its parent, every other field carried from ``base``
+    except those a commit passes in ``fields`` (which may also set the
+    id and parent, as a rollback does).  An empty ``legacy`` is dropped,
+    so a table whose retired layouts are all migrated loses the
+    section."""
+    snap = {
+        **base,
+        "snapshot_id": base["snapshot_id"] + 1,
+        "parent_id": base["snapshot_id"],
+        **fields,
+    }
+    if not snap.get("legacy"):
+        snap.pop("legacy", None)
+    return snap
 
 
 def fence_add(fences: dict, app_id: str, epoch_id: int) -> dict:
@@ -238,8 +270,10 @@ class LakeTable:
             "num_buckets": num_buckets,
             "current_schema_version": schema.version,
             "schemas": {str(schema.version): schema.to_json()},
+            "spec_id": 0,
             "buckets": {},
-            "committed_epochs": [],
+            "added_files": {},
+            "fences": {},
             "stats": {"rows_total": 0},
         }
         if not t._try_write_snapshot(snap):
@@ -329,17 +363,7 @@ class LakeTable:
         final = self.man_dir / name
         if not final.exists():
             self.man_dir.mkdir(parents=True, exist_ok=True)
-            tmp = self.man_dir / f".tmp-{uuid.uuid4().hex}.json"
-            with open(tmp, "w") as f:
-                f.write(payload)
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, final)
-            except FileExistsError:
-                pass  # same content already published — converged
-            finally:
-                tmp.unlink(missing_ok=True)
+            _cas_write(final, payload)  # lost: same content published — converged
         key = (str(self.man_dir), name)
         if key not in _MANIFEST_CACHE:
             _man_cache_put(key, json.loads(payload))
@@ -383,22 +407,9 @@ class LakeTable:
         ``hwm`` = contiguous high-watermark (every epoch ≤ hwm is
         committed); ``above`` = committed epochs beyond it.  Exact, and
         bounded by the out-of-order commit window instead of history
-        (10^5 streaming epochs → one integer).  Legacy snapshots carrying
-        a cumulative ``committed_epochs`` list are converted on read."""
+        (10^5 streaming epochs → one integer)."""
         snap = snap if snap is not None else self.current_snapshot()
-        if snap is None:
-            return {}
-        if "fences" in snap:
-            return snap["fences"]
-        if "committed_epochs" in snap:  # legacy cumulative-list snapshots
-            return _fence_from_set("default", set(snap["committed_epochs"]))
-        out = set()
-        for p in self._snapshot_files():
-            with open(p) as f:
-                e = json.load(f).get("epoch_id")
-            if e is not None:
-                out.add(e)
-        return _fence_from_set("default", out)
+        return {} if snap is None else snap["fences"]
 
     def is_epoch_committed(
         self, epoch_id: int, app_id: str = "default", snap: dict | None = None
@@ -419,11 +430,9 @@ class LakeTable:
         return out
 
     def _try_write_snapshot(self, snap: dict) -> bool:
-        """Atomic CAS: publish ``snapshot-<id>.json`` iff absent.
-
-        The temp file is fully written + fsynced before the link, so a
-        published snapshot is always complete; ``os.link`` is atomic and
-        fails with EEXIST when another attempt already won this id.
+        """Atomic CAS: publish ``snap`` as snapshot ``snapshot_id`` iff
+        that id is still free (``_cas_write``) — the one commit point of
+        every writer.  False means another writer won the id.
 
         Stamps ``committed_at_ms`` at CAS time (always overwritten — a
         dict cloned from a parent snapshot must not inherit its parent's
@@ -440,19 +449,38 @@ class LakeTable:
         """
         snap = {**snap, "committed_at_ms": int(time.time() * 1000)}
         snap = self._externalize_snapshot(snap)
-        final = self.snap_dir / f"snapshot-{snap['snapshot_id']:08d}.json"
-        tmp = self.snap_dir / f".tmp-{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, final)
-            return True
-        except FileExistsError:
-            return False
-        finally:
-            tmp.unlink(missing_ok=True)
+        return _cas_write(self._commit_path(snap["snapshot_id"]), snap)
+
+    def _commit_path(self, snapshot_id: int) -> Path:
+        """Where ``_try_write_snapshot`` publishes ``snapshot_id``."""
+        return self.snap_dir / f"snapshot-{snapshot_id:08d}.json"
+
+    def _referenced(self, paths) -> tuple[set[str], set[str]]:
+        """(data file paths, manifest names) the snapshot JSON files at
+        ``paths`` reference — expiry's liveness set.  Files of retired
+        layouts count, and so do ``added_files``: a published branch's
+        snapshot may list files a mid-branch compaction already
+        superseded in its buckets, and ``changes()`` still reads them."""
+        out: set[str] = set()
+        mans: set[str] = set()
+
+        def bucket_files(bm):
+            for v in bm.values():
+                if isinstance(v, str):  # manifest reference
+                    mans.add(v)
+                    yield from self._manifest_entries(v)
+                else:
+                    yield from v
+
+        for p in paths:
+            with open(p) as f:
+                s = json.load(f)  # raw: refs recorded before resolving
+            out.update(fe["path"] for fe in bucket_files(s["buckets"]))
+            for layout in s.get("legacy") or []:
+                out.update(fe["path"] for fe in bucket_files(layout["buckets"]))
+            for files in (s.get("added_files") or {}).values():
+                out.update(fe["path"] for fe in files)
+        return out, mans
 
     # --------------------------------------------------------------- schema
     def current_schema(self) -> TableSchema:
@@ -593,18 +621,9 @@ class LakeTable:
         )
         by_sv: dict[int, list[str]] = {}
         for sid in range(from_snapshot + 1, to_snapshot + 1):
-            snap = self.snapshot(sid)
-            if "added_files" in snap:
-                for files in snap["added_files"].values():
-                    for fe in files:
-                        by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
-                continue
-            # legacy snapshots: fall back to the commit-path-prefix heuristic
-            prefix = f"data/commit-{sid:08d}-"
-            for files in snap["buckets"].values():
+            for files in self.snapshot(sid)["added_files"].values():
                 for fe in files:
-                    if fe["path"].startswith(prefix):
-                        by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
+                    by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
         parts: list[DataFrame] = []
         for sv, paths in sorted(by_sv.items()):
             fschema = TableSchema.from_json(cur["schemas"][str(sv)])

@@ -51,7 +51,6 @@ visibility for the audited epoch.
 from __future__ import annotations
 
 import json
-import os
 import uuid
 from dataclasses import dataclass
 from pathlib import Path
@@ -61,7 +60,7 @@ from pyspark.sql import DataFrame
 
 from rocket_etl_spark.lake.merge import CommitResult, merge_batch
 from rocket_etl_spark.lake.planner import delta_files
-from rocket_etl_spark.lake.table import LakeTable
+from rocket_etl_spark.lake.table import LakeTable, _cas_write
 
 
 class PublishConflict(RuntimeError):
@@ -100,18 +99,13 @@ class _StagingTable(LakeTable):
         self._tag = tag
 
     def _try_write_snapshot(self, snap: dict) -> bool:
-        snap = {**snap, "staged": True, "staged_tag": self._tag}
-        final = self.snap_dir / f"staged-{self._tag}.json"
-        tmp = self.snap_dir / f".tmp-{uuid.uuid4().hex}.json"
-        with open(tmp, "w") as f:
-            json.dump(snap, f)
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, final)  # tag is fresh per stage — always wins
-            return True
-        finally:
-            tmp.unlink(missing_ok=True)
+        # the tag is fresh per stage, so the marker write always wins; a
+        # marker already there raises rather than reporting a lost CAS,
+        # which the merge would retry forever against the same name
+        marker = self.snap_dir / f"staged-{self._tag}.json"
+        if not _cas_write(marker, {**snap, "staged": True, "staged_tag": self._tag}):
+            raise FileExistsError(f"staged commit {marker.name} already exists")
+        return True
 
 
 def stage_merge(

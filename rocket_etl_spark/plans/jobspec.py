@@ -29,7 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from rocket_etl_spark.lake.merge import CommitResult, append_batch, merge_batch
-from rocket_etl_spark.lake.table import LakeTable
+from rocket_etl_spark.lake.table import LakeTable, child_snapshot
 from rocket_etl_spark.schema.registry import TableSchema
 from rocket_etl_spark.sources.readers import read_source
 
@@ -213,15 +213,12 @@ def load(df: DataFrame, spec: JobSpec) -> CommitResult | None:
 
 
 def _wipe_snapshot(table: LakeTable) -> bool:
-    snap = dict(table.current_snapshot())
-    snap["snapshot_id"] += 1
-    snap["parent_id"] = snap["snapshot_id"] - 1
-    snap["epoch_id"] = None
-    snap["buckets"] = {}
-    snap.pop("legacy", None)  # a wipe empties retired layouts too
-    snap["added_files"] = {}
-    snap["stats"] = {"wiped": True}
-    return table._try_write_snapshot(snap)
+    """Commit an empty table state — retired layouts included — as the
+    tip's child; False when another writer won the snapshot id."""
+    return table._try_write_snapshot(child_snapshot(
+        table.current_snapshot(),
+        epoch_id=None, buckets={}, legacy=None, added_files={}, stats={"wiped": True},
+    ))
 
 
 def run_job(spark: SparkSession, spec: JobSpec, notifier=None) -> CommitResult | None:

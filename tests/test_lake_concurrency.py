@@ -5,7 +5,10 @@ Covers the round-2 correctness rework:
 * bounded per-app epoch fences (hwm + out-of-order window, never history)
 * app-scoped fencing (Delta txnAppId/txnVersion pattern)
 * CAS-loss rebase (disjoint buckets: no lost update) and recompute
-  (overlapping buckets: merged against latest, still LWW-correct)
+  (overlapping buckets: merged against latest, still LWW-correct), for
+  copy-on-write and merge-on-read merges and appends; a loser whose own
+  epoch the interloper committed is skipped
+* the maintenance writers' bounded CAS retry
 * explicit per-snapshot ``added_files`` changelog attribution under retry
 * tombstone purge guarded by a redelivery low-watermark (no resurrection)
 * expire_snapshots orphan age-guard (in-flight pre-CAS files survive)
@@ -18,13 +21,24 @@ import json
 
 import pandas as pd
 import pyspark.sql.functions as F
+import pytest
 
 from rocket_etl_spark.generate import change_events
-from rocket_etl_spark.lake.maintenance import compact, expire_snapshots
+from rocket_etl_spark.lake.maintenance import (
+    compact,
+    evolve_buckets,
+    expire_snapshots,
+    rollback,
+)
 from rocket_etl_spark.lake.merge import append_batch, merge_batch
 from rocket_etl_spark.lake.table import bucket_of, fence_add
+from rocket_etl_spark.operators.lww import lww_dedupe
 from rocket_etl_spark.oracle import replay_oracle
-from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
+from rocket_etl_spark.streaming.replay import (
+    create_repo_files_table,
+    prepare_events,
+    replay_batch,
+)
 
 
 # ------------------------------------------------------------------ fences
@@ -63,6 +77,11 @@ def test_snapshot_fence_stays_o1_over_many_epochs(spark, tmp_path):
     # epoch (only the hwm integer's digit count may differ)
     assert max(sizes) - min(sizes) <= 4
     assert table.current_snapshot()["fences"]["default"] == {"hwm": 11, "above": []}
+    # every snapshot of the chain, the empty one ``create`` writes too,
+    # carries the fields the fence, changelog and time-travel reads use
+    for p in table._snapshot_files():
+        raw = json.load(open(p))
+        assert {"fences", "added_files", "committed_at_ms"} <= set(raw), p.name
     # replays of any old epoch are skipped without a chain scan
     assert replay_batch(table, ev.limit(10), epoch_id=3).skipped
     assert table.committed_epochs() == set(range(12))
@@ -112,22 +131,38 @@ def _with_cas_interloper(table, interloper):
     return state
 
 
-def test_cas_loss_disjoint_buckets_rebases_without_lost_update(spark, tmp_path):
+def _commit(table, events, epoch_id, app_id, mode):
+    """Commit ``events`` as one epoch: a merge in ``mode``, or, for
+    ``"append"``, a true append of their per-key LWW winners (the
+    events carry no deletes there, so the table still equals the
+    oracle)."""
+    if mode == "append":
+        rows = lww_dedupe(prepare_events(events), order_col="last_event_seq").drop("op")
+        return append_batch(table, rows, epoch_id=epoch_id, app_id=app_id)
+    return replay_batch(table, events, epoch_id=epoch_id, app_id=app_id, mode=mode)
+
+
+def _assert_oracle(table, events):
+    eng = table.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+    ora = replay_oracle([events.toPandas()])
+    pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+
+
+def _disjoint_buckets_rebase(spark, tmp_path, mode):
     table = create_repo_files_table(spark, tmp_path / "t", num_buckets=2)
-    ev = change_events(spark, 600, seed=31, delete_frac=0.1).cache()
+    delete_frac = 0.0 if mode == "append" else 0.1
+    ev = change_events(spark, 600, seed=31, delete_frac=delete_frac).cache()
     mine, theirs = _split_by_bucket(spark, ev, ["repo", "path"], 2)
 
     state = _with_cas_interloper(
-        table, lambda: replay_batch(table, theirs, epoch_id=0, app_id="theirs")
+        table, lambda: _commit(table, theirs, 0, "theirs", mode)
     )
-    res = replay_batch(table, mine, epoch_id=0, app_id="mine")
+    res = _commit(table, mine, 0, "mine", mode)
     table._try_write_snapshot = type(table)._try_write_snapshot.__get__(table)
     assert state["fired"] and not res.skipped
 
     # no lost update: BOTH writers' rows present, equal to sequential oracle
-    eng = table.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    ora = replay_oracle([ev.toPandas()])
-    pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+    _assert_oracle(table, ev)
 
     # changelog attribution: each snapshot's changes come from its own
     # added_files — the rebased commit reports ONLY its own rows
@@ -142,24 +177,83 @@ def test_cas_loss_disjoint_buckets_rebases_without_lost_update(spark, tmp_path):
     ev.unpersist()
 
 
-def test_cas_loss_overlapping_buckets_recomputes(spark, tmp_path):
-    """Interloper touches the SAME buckets: rebase would drop its rows, so
-    the loser must recompute against the latest snapshot."""
+def test_cas_loss_disjoint_buckets_rebases_without_lost_update(spark, tmp_path):
+    _disjoint_buckets_rebase(spark, tmp_path, "cow")
+
+
+def test_cas_loss_disjoint_buckets_rebases_without_lost_update_mor(spark, tmp_path):
+    _disjoint_buckets_rebase(spark, tmp_path, "mor")
+
+
+def test_cas_loss_disjoint_buckets_rebases_without_lost_update_append(spark, tmp_path):
+    _disjoint_buckets_rebase(spark, tmp_path, "append")
+
+
+def _overlapping_buckets(spark, tmp_path, mode):
+    """Interloper touches the SAME buckets: a copy-on-write rebase would
+    drop its rows, so the loser must recompute against the latest
+    snapshot; a merge-on-read delta read no rows and rebases."""
     table = create_repo_files_table(spark, tmp_path / "t", num_buckets=1)
     ev = change_events(spark, 500, seed=37, delete_frac=0.1).cache()
     first, second = ev.filter(ev.event_seq % 2 == 0), ev.filter(ev.event_seq % 2 == 1)
 
     state = _with_cas_interloper(
-        table, lambda: replay_batch(table, second, epoch_id=0, app_id="theirs")
+        table, lambda: _commit(table, second, 0, "theirs", mode)
     )
-    res = replay_batch(table, first, epoch_id=0, app_id="mine")
+    res = _commit(table, first, 0, "mine", mode)
     table._try_write_snapshot = type(table)._try_write_snapshot.__get__(table)
     assert state["fired"] and not res.skipped
-
-    eng = table.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-    ora = replay_oracle([ev.toPandas()])
-    pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)
+    _assert_oracle(table, ev)
     ev.unpersist()
+
+
+def test_cas_loss_overlapping_buckets_recomputes(spark, tmp_path):
+    _overlapping_buckets(spark, tmp_path, "cow")
+
+
+def test_cas_loss_overlapping_buckets_recomputes_mor(spark, tmp_path):
+    _overlapping_buckets(spark, tmp_path, "mor")
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor", "append"])
+def test_cas_loss_to_own_epoch_is_skipped(spark, tmp_path, mode):
+    """The interloper commits the loser's own ``(app_id, epoch_id)`` (a
+    redelivered epoch racing itself): the loser must come back skipped,
+    not rebase a second copy of the epoch on top."""
+    table = create_repo_files_table(spark, tmp_path / "t", num_buckets=2)
+    ev = change_events(spark, 300, seed=61, delete_frac=0.0 if mode == "append" else 0.1)
+    ev = ev.cache()
+    state = _with_cas_interloper(table, lambda: _commit(table, ev, 0, "default", mode))
+    res = _commit(table, ev, 0, "default", mode)
+    table._try_write_snapshot = type(table)._try_write_snapshot.__get__(table)
+    assert state["fired"] and res.skipped
+    assert res.snapshot_id == table.current_snapshot()["snapshot_id"] == 1
+    _assert_oracle(table, ev)
+    ev.unpersist()
+
+
+def test_maintenance_cas_retries_are_bounded(spark, tmp_path):
+    """A maintenance writer that keeps losing the snapshot CAS gives up
+    with ``RuntimeError`` after a bounded number of attempts instead of
+    livelocking against a writer that always commits first."""
+    table = create_repo_files_table(spark, tmp_path / "t", num_buckets=2)
+    assert evolve_buckets(table, 4)["evolved"]
+    attempts = []
+
+    def always_lose(snap):
+        attempts.append(snap["snapshot_id"])
+        assert len(attempts) < 50, "the CAS retry loop never gives up"
+        return False
+
+    table._try_write_snapshot = always_lose
+    with pytest.raises(RuntimeError, match="lost the snapshot CAS"):
+        evolve_buckets(table, 8)
+    n = len(attempts)
+    with pytest.raises(RuntimeError, match="lost the snapshot CAS"):
+        rollback(table, 0)
+    assert len(attempts) - n == n  # one cap for every maintenance writer
+    table._try_write_snapshot = type(table)._try_write_snapshot.__get__(table)
+    assert table.current_snapshot()["snapshot_id"] == 1
 
 
 # ------------------------------------------------- tombstone purge safety

@@ -1,8 +1,9 @@
 """Merge-on-read mode: COW/MOR final-state equivalence, tie semantics,
 compaction folds, mode transition, fencing, evolution, changelog.
 
-The contract under test (lake/merge.py ``_merge_mor_commit``,
-lake/table.py ``_mor_reconcile``): a MOR replay — epochs appended as
+The contract under test (lake/merge.py ``_write_mor_delta`` and the
+commit tail it shares with copy-on-write, lake/table.py
+``_mor_reconcile``): a MOR replay — epochs appended as
 delta files, reconciled at read — produces BYTE-IDENTICAL final state to
 the same epochs replayed copy-on-write, under deletes, duplicate
 deliveries, out-of-order arrival, and schema evolution."""

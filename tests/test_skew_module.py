@@ -1,12 +1,10 @@
-"""Hot-key detection + salting helpers, and the Iceberg MERGE SQL shape."""
+"""Hot-key detection + salting helpers."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
 from rocket_etl_spark.generate import change_events
-from rocket_etl_spark.lake.iceberg_backend import epoch_fence_sql, merge_sql
 from rocket_etl_spark.operators.skew import detect_hot_keys, with_salt
 
 
@@ -33,137 +31,3 @@ def test_with_salt_spreads_only_hot_keys(spark):
         "repo", "_salt").count().toPandas()
     assert pdf.sort_values(["repo", "_salt"]).reset_index(drop=True).equals(
         pdf2.sort_values(["repo", "_salt"]).reset_index(drop=True))
-
-
-def test_iceberg_epoch_fence_sql_is_bounded():
-    """The fence must never collect the epochs table: a max() aggregate
-    (manifest stats) + an equality point probe with LIMIT 1."""
-    hwm_sql, point_sql = epoch_fence_sql("lake.db.t", 12345)
-    assert hwm_sql == "SELECT max(epoch_id) AS hwm FROM lake.db.t_epochs"
-    assert "WHERE epoch_id = 12345" in point_sql
-    assert "LIMIT 1" in point_sql
-    # replay the O(1) decision logic against both probes' possible answers:
-    # epoch above the hwm needs no second query at all
-    assert "SELECT epoch_id FROM" not in hwm_sql + point_sql  # no full scan shape
-
-
-def test_iceberg_fence_short_circuits_above_hwm():
-    """The fence decision itself: an epoch above max(epoch_id) needs NO
-    point query (one statement, zero rows moved); at-or-below runs the
-    LIMIT-1 point probe.  Exercised through a stub session so the logic
-    is tested even though the Iceberg jar is absent."""
-    from rocket_etl_spark.lake.iceberg_backend import IcebergBackend
-
-    class _Row(dict):
-        def __getitem__(self, k):
-            return dict.__getitem__(self, k)
-
-    class _Res:
-        def __init__(self, row):
-            self._row = row
-
-        def first(self):
-            return self._row
-
-    class _StubSpark:
-        def __init__(self, hwm, committed):
-            self.hwm, self.committed, self.log = hwm, committed, []
-
-        def sql(self, q):
-            self.log.append(q)
-            if "max(epoch_id)" in q:
-                return _Res(_Row({"hwm": self.hwm}))
-            epoch = int(q.split("epoch_id = ")[1].split(" ")[0])
-            return _Res(_Row({"hit": 1}) if epoch in self.committed else None)
-
-    be = IcebergBackend.__new__(IcebergBackend)  # skip the catalog probe
-    be.spark = _StubSpark(hwm=10, committed={3, 10})
-    be.table = "lake.db.t"
-    assert not be.is_epoch_committed(11)
-    assert len(be.spark.log) == 1          # short-circuit: no point probe
-    assert be.is_epoch_committed(3)
-    assert not be.is_epoch_committed(4)
-    # empty epochs table: max() is NULL -> nothing committed
-    be.spark = _StubSpark(hwm=None, committed=set())
-    assert not be.is_epoch_committed(0)
-
-
-def test_iceberg_create_sql_persists_merge_metadata():
-    from rocket_etl_spark.lake.iceberg_backend import create_table_sql
-
-    sql = create_table_sql("lake.db.t", "repo STRING, path STRING",
-                           ["repo", "path"], "last_event_seq", num_buckets=32)
-    assert "PARTITIONED BY (bucket(32, repo))" in sql
-    assert "'rocket_etl.key_cols'='repo,path'" in sql
-    assert "'rocket_etl.order_col'='last_event_seq'" in sql
-
-
-def test_iceberg_attach_to_existing_table_reads_tblproperties():
-    """The production case: IcebergBackend(...) built against a table an
-    EARLIER job created must merge without a prior create() in-process —
-    key/order come from the persisted TBLPROPERTIES (round-3 gap: this
-    died with AttributeError)."""
-    from rocket_etl_spark.lake.iceberg_backend import IcebergBackend
-
-    class _Row(dict):
-        __getitem__ = dict.__getitem__
-
-    class _Res:
-        def __init__(self, rows):
-            self._rows = rows
-
-        def first(self):
-            return self._rows[0] if self._rows else None
-
-        def collect(self):
-            return self._rows
-
-    class _StubSpark:
-        def __init__(self):
-            self.log = []
-
-        def sql(self, q):
-            self.log.append(q)
-            if q.startswith("SHOW TBLPROPERTIES"):
-                return _Res([
-                    _Row({"key": "rocket_etl.key_cols", "value": "repo,path"}),
-                    _Row({"key": "rocket_etl.order_col", "value": "last_event_seq"}),
-                    _Row({"key": "format-version", "value": "2"}),
-                ])
-            return _Res([])
-
-    class _StubBatch:
-        columns = ["repo", "path", "lang", "last_event_seq", "op"]
-
-        def createOrReplaceTempView(self, name):
-            pass
-
-    be = IcebergBackend.__new__(IcebergBackend)  # skip the catalog probe
-    be.spark, be.table = _StubSpark(), "lake.db.t"
-    be._keys = be._order = None
-    be.merge(_StubBatch(), epoch_id=None)
-    merged = [q for q in be.spark.log if q.startswith("MERGE INTO")]
-    assert len(merged) == 1
-    assert "t.repo = s.repo AND t.path = s.path" in merged[0]
-    assert "s.last_event_seq > t.last_event_seq" in merged[0]
-
-    # missing properties (foreign table) -> actionable error, not AttributeError
-    class _BareSpark(_StubSpark):
-        def sql(self, q):
-            self.log.append(q)
-            return _Res([_Row({"key": "format-version", "value": "2"})])
-
-    be2 = IcebergBackend.__new__(IcebergBackend)
-    be2.spark, be2.table = _BareSpark(), "lake.db.t"
-    be2._keys = be2._order = None
-    with pytest.raises(ValueError, match="key_cols"):
-        be2.merge(_StubBatch(), epoch_id=None)
-
-
-def test_iceberg_merge_sql_arms():
-    sql = merge_sql("lake.db.t", "src", ["repo", "path"], "last_event_seq",
-                    ["lang", "content", "last_event_seq"])
-    assert "WHEN MATCHED AND s.op = 'delete' AND s.last_event_seq > t.last_event_seq THEN DELETE" in sql
-    assert "WHEN MATCHED AND s.op <> 'delete' AND s.last_event_seq > t.last_event_seq THEN UPDATE" in sql
-    assert "WHEN NOT MATCHED AND s.op <> 'delete' THEN INSERT" in sql
-    assert "t.repo = s.repo AND t.path = s.path" in sql
