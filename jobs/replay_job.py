@@ -74,10 +74,9 @@ def main() -> None:
 
 
     if args.branch and args.audit_rules:
-        # stage_merge rebases on the MAIN tip, so an audited micro-batch
-        # onto a non-empty branch would merge against a base missing the
-        # branch's prior epochs and publish would always conflict —
-        # audit a branch with audit_branch + publish_branch instead
+        # each audited micro-batch is staged as a one-commit branch, and
+        # branches do not nest — audit a branch with audit_branch +
+        # publish_branch instead
         ap.error("--audit-rules does not compose with --branch: replay "
                  "onto the branch un-audited, then audit_branch + "
                  "--publish-branch gate the whole chain")

@@ -1,22 +1,23 @@
 """Writable branch refs: multi-commit staging with atomic publish.
 
-Iceberg's branch refs generalize write–audit–publish (lake/wap.py) from
-one staged commit to a NAMED CHAIN of them: create a branch at the
-current tip, replay any number of epochs into it through the full merge
-machinery (LWW, fencing, broadcast/SMJ/MOR, blooms, spec evolution —
-``branch_table`` returns a ``LakeTable`` view, so every engine surface
-works unmodified), audit the branch state at any point, then publish the
-branch head onto the main chain with ONE atomic CAS — or drop the
-branch and its data files without main ever having seen a byte.
+Iceberg's branch refs: a NAMED CHAIN of staged commits.  Create a
+branch at the current tip, replay any number of epochs into it through
+the full merge machinery (LWW, fencing, broadcast/SMJ/MOR, blooms, spec
+evolution — ``branch_table`` returns a ``LakeTable`` view, so every
+engine surface works unmodified), audit the branch state at any point,
+then publish the branch head onto the main chain with ONE atomic CAS —
+or drop the branch and its data files without main ever having seen a
+byte.
 
 The CDC-operational story this buys at 10^10-event scale: a multi-epoch
 BACKFILL (or a risky reprocess) runs against production data files
 without production visibility, gets validated end-state-wise, and goes
-live all-or-nothing.  Single-epoch WAP cannot express this — the
-backfill's intermediate epochs must build on each other before anyone
-can judge the final state.
+live all-or-nothing.  Write–audit–publish (lake/wap.py) is the
+one-commit case: each stage is a branch ``wap-<tag>`` holding one merge,
+audited, published and dropped through this module, as Iceberg runs WAP
+on ``spark.wap.branch``.
 
-Mechanics (same namespace trick as WAP, chained):
+Mechanics:
 
 * branch ref:   ``snapshots/branchref-<name>.json`` (CAS'd marker with
   the fork snapshot id);
@@ -159,9 +160,10 @@ def audit_branch(
 ) -> dict:
     """Audit the branch's CURRENT state against declarative rules
     (``plans.validate``) — the gate to run before ``publish_branch``,
-    same contract as ``wap.audit_staged``: returns
+    and ``wap.audit_staged``'s gate before ``publish_staged``: returns
     ``{"ok", "violations", "by_rule"}``, ``ok`` iff violating rows <=
-    ``max_violations``.  One job over the branch head's file list."""
+    ``max_violations``.  Rules annotate in a single codegen'd projection
+    over the branch head's file list; the count aggregates per rule."""
     import pyspark.sql.functions as F
 
     from rocket_etl_spark.plans.validate import VIOLATIONS_COL, annotate
@@ -196,10 +198,10 @@ def publish_branch(table: LakeTable, name: str) -> dict:
     Requires the main tip to still be the branch's fork point — any
     intervening main commit raises ``BranchConflict`` (the branch head's
     re-linked file list and fence arithmetic are only valid against its
-    fork, exactly the WAP publish rule).  The published snapshot is the
-    branch HEAD renumbered onto main, carrying the union of the branch
-    commits' ``added_files`` so the changelog reports the branch's full
-    row-level history at the publish point."""
+    fork).  The published snapshot is the branch HEAD renumbered onto
+    main, carrying the union of the branch commits' ``added_files`` so
+    the changelog reports the branch's full row-level history at the
+    publish point."""
     bt = branch_table(table, name)
     chain = _chain_files(table, name)
     if not chain:
@@ -243,14 +245,14 @@ def publish_branch(table: LakeTable, name: str) -> dict:
 def drop_branch(table: LakeTable, name: str) -> dict:
     """Discard the branch: its chain, its ref, and the data files its
     own commits wrote (``added_files`` is exact — files re-linked from
-    published snapshots are never touched, the same bookkeeping WAP's
-    abort trusts).
+    published snapshots are never touched — the same bookkeeping
+    ``changes()`` trusts for changelog attribution).
 
     Crash-window guard: if a ``publish_branch`` CAS succeeded but the
     process died before unlinking the branch markers, the branch's
     content IS a published snapshot and its files are live — a later
-    drop must only clean the markers, never the files (the same rule
-    ``wap.abort_staged`` enforces)."""
+    drop must only clean the markers, never the files.  This is the one
+    such guard: ``wap.abort_staged`` is this drop."""
     chain = _chain_files(table, name)
     ref_p = _ref_path(table, name)
     if not (ref_p.exists() or chain):

@@ -291,7 +291,6 @@ def _compact_once(
     attach_file_metadata(table.path, written, schema, snap["key_cols"])
     new_snap = child_snapshot(
         snap,
-        epoch_id=None,
         **update_buckets(snap, written, rewritten=cand, legacy_rewritten=leg_sel),
         # a compaction rewrites, it doesn't change: no changelog contribution
         added_files={},
@@ -360,8 +359,6 @@ def rollback(table: LakeTable, snapshot_id: int) -> dict:
             target,
             snapshot_id=tip["snapshot_id"] + 1,
             parent_id=tip["snapshot_id"],
-            epoch_id=None,
-            app_id=None,
             added_files={},
             stats={"rollback_of": snapshot_id, "rolled_back_from": tip["snapshot_id"]},
         )
@@ -455,7 +452,6 @@ def _rebucket_once(table: LakeTable, new_num_buckets: int) -> dict | None:
     written = written_files(table.path, out_dir_rel, snap["current_schema_version"])
     new_snap = child_snapshot(
         snap,
-        epoch_id=None,
         num_buckets=new_num_buckets,
         # a full rewrite starts a fresh spec and absorbs every retired
         # layout (the read above included them)
@@ -515,7 +511,6 @@ def evolve_buckets(table: LakeTable, new_num_buckets: int) -> dict:
             )
         new_snap = child_snapshot(
             snap,
-            epoch_id=None,
             **evolved_layouts(snap, new_num_buckets),
             added_files={},  # a spec change, not a logical change
             stats={"evolved_from": int(snap["num_buckets"])},
@@ -551,7 +546,11 @@ def expire_snapshots(
     TAGGED snapshots (``lake.metadata.create_tag`` — named refs like
     "last-known-good") never expire regardless of age: their snapshot
     JSON and, transitively, the files they reference survive until the
-    tag is dropped — Iceberg's ref-retention rule.
+    tag is dropped — Iceberg's ref-retention rule.  A live branch
+    (lake/branch.py, which also holds every staged write–audit–publish
+    commit, lake/wap.py) pins its fork snapshot the same way, and the
+    files and manifests its chain references survive until it is
+    published or dropped.
 
     ``dry_run=True`` deletes nothing and reports what WOULD go
     (snapshots_removed / files_removed / a bounded ``sample`` of doomed
@@ -590,18 +589,15 @@ def expire_snapshots(
         keep = pinned + keep
         drop = [p for p in drop if _sid(p) not in tagged_ids]
 
-    # live staged commits (write-audit-publish, lake/wap.py) and live
-    # BRANCHES (lake/branch.py — multi-commit staging) reference
+    # live BRANCHES (lake/branch.py — WAP stages included) reference
     # freshly-written data files that no published snapshot knows yet —
     # protect them until published or dropped
-    staged = (
-        list(table.snap_dir.glob("staged-*.json"))
-        + list(table.snap_dir.glob("branch-*.json"))
-    )
     live_refs, live_mans = table._referenced(keep)
-    staged_refs, staged_mans = table._referenced(staged)
-    referenced = live_refs | staged_refs
-    live_mans |= staged_mans
+    branch_refs, branch_mans = table._referenced(
+        list(table.snap_dir.glob("branch-*.json"))
+    )
+    referenced = live_refs | branch_refs
+    live_mans |= branch_mans
     expired_refs, expired_mans = table._referenced(drop)
 
     now = _time.time()

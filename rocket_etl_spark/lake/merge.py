@@ -76,10 +76,9 @@ regardless of retries.
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -144,6 +143,10 @@ class CommitResult:
     # files actually scanned / files in the touched buckets
     decide_files_scanned: int | None = None
     decide_files_total: int | None = None
+    # wall seconds per MERGE phase of the attempt that committed:
+    # plan/decide/write/stats/commit (COW), plan/write/commit (MOR);
+    # empty for a skipped merge
+    phase_s: dict[str, float] = field(default_factory=dict)
 
 
 def _action_counts(
@@ -661,13 +664,14 @@ def _merge_once(
 
     commit_tag = f"{snap['snapshot_id'] + 1:08d}-{uuid.uuid4().hex[:8]}"
 
-    # SPARK_GRAFT_TIMING=1: print a per-phase wall breakdown of this merge
-    # (plan / decide+write / stats / commit) — the observability hook for
-    # chasing per-epoch fixed costs (streaming mode pays them per micro-
-    # batch).  Negligible overhead when unset (a few monotonic() calls).
-    _timing = bool(os.environ.get("SPARK_GRAFT_TIMING"))
+    # per-phase wall breakdown of this merge (``CommitResult.phase_s``):
+    # where an epoch's fixed cost goes (streaming pays it per micro-batch)
     _tm = time.monotonic()
-    _ph: dict[str, float] = {}
+    _ph = dict.fromkeys(
+        ("plan", "write", "commit") if mode == "mor"
+        else ("plan", "decide", "write", "stats", "commit"),
+        0.0,
+    )
 
     def _mark(phase: str) -> None:
         nonlocal _tm
@@ -921,17 +925,7 @@ def _merge_once(
     )
     if not isinstance(new_snap, dict):
         return new_snap  # fenced by the winner, or recompute
-    if _timing:
-        _mark("commit")
-        print(
-            "[merge-timing] epoch=%s %s total=%.3fs%s"
-            % (
-                epoch_id,
-                " ".join(f"{k}={v:.3f}s" for k, v in _ph.items()),
-                sum(_ph.values()),
-                " (mor)" if mode == "mor" else "",
-            )
-        )
+    _mark("commit")
     if mode == "mor" and mor_compact_threshold is not None and touched:
         # log-structured maintenance: fold any bucket whose delta
         # depth reached the bound, keeping read amplification O(1)
@@ -964,6 +958,7 @@ def _merge_once(
         ],
         decide_files_scanned=decide.scanned if decide else 0,
         decide_files_total=decide.total if decide else 0,
+        phase_s=_ph,
     )
 
 

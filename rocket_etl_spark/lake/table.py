@@ -130,13 +130,17 @@ def child_snapshot(base: dict, **fields) -> dict:
     """The snapshot that follows ``base``: the next ``snapshot_id`` with
     ``base`` as its parent, every other field carried from ``base``
     except those a commit passes in ``fields`` (which may also set the
-    id and parent, as a rollback does).  An empty ``legacy`` is dropped,
-    so a table whose retired layouts are all migrated loses the
-    section."""
+    id and parent, as a rollback does).  ``epoch_id`` and ``app_id``
+    name the commit that wrote a snapshot, so they are never carried:
+    they are null unless ``fields`` sets them, as a data commit does.
+    An empty ``legacy`` is dropped, so a table whose retired layouts are
+    all migrated loses the section."""
     snap = {
         **base,
         "snapshot_id": base["snapshot_id"] + 1,
         "parent_id": base["snapshot_id"],
+        "epoch_id": None,
+        "app_id": None,
         **fields,
     }
     if not snap.get("legacy"):
@@ -544,7 +548,7 @@ class LakeTable:
         """
         if snap is None:
             # explicit ``snap`` = read an out-of-chain snapshot dict (a
-            # staged write-audit-publish commit — lake/wap.py's audit read)
+            # branch head — lake/branch.py's read_branch, the WAP audit read)
             snap = (
                 self.snapshot(snapshot_id)
                 if snapshot_id is not None

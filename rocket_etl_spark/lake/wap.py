@@ -1,34 +1,32 @@
 """Write–audit–publish: staged MERGE commits gated by validation.
 
-Iceberg's WAP pattern (``write.wap.enabled`` + cherry-pick) re-expressed
-over the local snapshot chain: a staged merge runs the FULL merge
-machinery — LWW dedupe, broadcast/SMJ/MOR strategy selection, bloom and
-zone-map build, exactly-once fence bookkeeping — but its commit lands in
-a ``staged-<tag>.json`` side namespace that readers never see
-(``current_snapshot`` matches only ``snapshot-*.json``).  The staged
-state is then *audited* — read back in full and checked against
-declarative validation rules (``plans.validate``) — and either
-*published* (an atomic CAS links the staged content into the chain as
-the next snapshot) or *aborted* (the marker and the commit's own data
-files are deleted; re-linked parent files are untouched by
-construction).
+Iceberg's WAP pattern, run the way Iceberg runs it on branches
+(``spark.wap.branch``): a stage is a one-commit branch named
+``wap-<tag>`` (lake/branch.py).  ``stage_merge`` forks the branch at the
+main tip and runs the FULL merge machinery into it — LWW dedupe,
+broadcast/SMJ/MOR strategy selection, bloom and zone-map build,
+exactly-once fence bookkeeping — so the commit lands in the branch chain
+that main-chain readers never see.  The staged state is then *audited*
+— read back in full and checked against declarative validation rules
+(``plans.validate``) — and either *published* (the branch head
+fast-forwards onto main with one atomic CAS) or *aborted* (the branch
+and its own data files are dropped; re-linked parent files are
+untouched by construction).  Every step is the branch operation of the
+same name: ``read_branch``, ``audit_branch``, ``publish_branch``,
+``drop_branch``; this module only maps the single-commit API onto it.
 
-Why this shape and not a flag on the chain tip: the chain is an
-immutable CAS'd sequence, so an in-chain "staged" tip would force every
-reader AND every concurrent writer to walk back over it, and an abort
-would have to publish a revert snapshot whose changelog entries then
-need special-casing.  Keeping staged commits out of the namespace makes
-visibility, ``changes()``, and time travel correct with zero changes to
-their logic — exactly why Iceberg stages WAP snapshots outside the main
-branch pointer.
+Because the stage is a branch, a copy-on-write stage onto merge-on-read
+deltas works too: ``merge_batch``'s pre-merge delta fold commits into
+the branch, ahead of the staged merge, and goes live with it at publish.
+A stage onto a branch table is refused: branches do not nest.
 
-Concurrency contract (documented, Iceberg-equivalent): publish is an
-atomic CAS on the next snapshot id.  If ANY commit (direct merge,
+Concurrency contract (documented, Iceberg-equivalent): publish requires
+the main tip to still be the stage's fork.  If ANY commit (direct merge,
 compaction, another publish) lands between stage and publish, the
 staged snapshot's basis is stale and ``publish_staged`` raises
-``PublishConflict`` — the caller re-stages from the live tip (the batch
-is theirs to replay; the exactly-once fence makes re-staging an
-already-published epoch a no-op at the next merge).  Nothing is ever
+``PublishConflict`` — the caller aborts and re-stages from the live tip
+(the batch is theirs to replay; the exactly-once fence makes re-staging
+an already-published epoch a no-op at the next merge).  Nothing is ever
 silently dropped or double-applied: visibility changes only through the
 CAS.
 
@@ -50,20 +48,30 @@ visibility for the audited epoch.
 
 from __future__ import annotations
 
-import json
 import uuid
 from dataclasses import dataclass
-from pathlib import Path
 
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from rocket_etl_spark.lake.branch import (
+    BranchConflict,
+    BranchError,
+    _BranchTable,
+    audit_branch,
+    branch_table,
+    create_branch,
+    drop_branch,
+    list_branches,
+    publish_branch,
+    read_branch,
+)
 from rocket_etl_spark.lake.merge import CommitResult, merge_batch
-from rocket_etl_spark.lake.planner import delta_files
-from rocket_etl_spark.lake.table import LakeTable, _cas_write
+from rocket_etl_spark.lake.table import LakeTable
+
+_PREFIX = "wap-"
 
 
-class PublishConflict(RuntimeError):
+class PublishConflict(BranchConflict):
     """The chain advanced between stage and publish; re-stage from tip."""
 
 
@@ -79,33 +87,9 @@ class StagedCommit:
     result: CommitResult
 
     @property
-    def marker(self) -> Path:
-        return Path(self.table_path) / "snapshots" / f"staged-{self.tag}.json"
-
-    def snapshot(self) -> dict:
-        with open(self.marker) as f:
-            return json.load(f)
-
-
-class _StagingTable(LakeTable):
-    """A LakeTable whose commit CAS is redirected into the staged
-    namespace.  Everything else — snapshot reads, data dir, bucket
-    layout — is the real table, so ``merge_batch`` runs unmodified and
-    its data files land in the real ``data/`` tree (unreferenced by any
-    published snapshot until publish; abort deletes them)."""
-
-    def __init__(self, base: LakeTable, tag: str):
-        super().__init__(base.spark, base.path)
-        self._tag = tag
-
-    def _try_write_snapshot(self, snap: dict) -> bool:
-        # the tag is fresh per stage, so the marker write always wins; a
-        # marker already there raises rather than reporting a lost CAS,
-        # which the merge would retry forever against the same name
-        marker = self.snap_dir / f"staged-{self._tag}.json"
-        if not _cas_write(marker, {**snap, "staged": True, "staged_tag": self._tag}):
-            raise FileExistsError(f"staged commit {marker.name} already exists")
-        return True
+    def branch(self) -> str:
+        """The one-commit branch holding the stage."""
+        return _PREFIX + self.tag
 
 
 def stage_merge(
@@ -119,54 +103,40 @@ def stage_merge(
 ) -> StagedCommit:
     """Run a full MERGE whose commit is staged (invisible to readers).
 
-    Same contract as ``merge_batch`` except: ``mor_compact_threshold``
-    is unavailable (auto-compaction publishes real snapshots — it
-    belongs after publish), and a COW stage onto merge-on-read
-    delta-bearing buckets raises (the pre-merge delta fold is likewise
-    a real commit; run ``compact()`` first)."""
-    from rocket_etl_spark.lake.branch import _BranchTable
-
+    Same contract as ``merge_batch`` except that ``mor_compact_threshold``
+    is unavailable (auto-compaction belongs after publish).  The stage
+    is the one-commit branch ``wap-<tag>``; a merge that raises or that
+    the epoch fence skips leaves no branch behind."""
     if isinstance(table, _BranchTable):
-        # _StagingTable rebuilds from base.path and would base the staged
-        # MERGE on the MAIN tip, not the branch head — the first audited
-        # batch onto a non-empty branch would then merge against a base
-        # missing the branch's prior epochs and publish_staged would
-        # always conflict.  Refuse loudly instead of corrupting
-        # (advisor finding, r5); audit a branch with audit_branch +
-        # publish_branch, which exist for exactly this composition.
         raise StageError(
-            "stage_merge does not compose with a branch table: the staged "
-            "merge would base on the main tip, not the branch head — use "
-            "replay into the branch + audit_branch/publish_branch instead"
-        )
-    snap = table.current_snapshot()
-    if mode == "cow" and delta_files(snap):
-        raise StageError(
-            "cannot stage a copy-on-write merge onto merge-on-read deltas: "
-            "the delta fold would publish a visible commit before the audit "
-            "— compact() the table first, or stage with mode='mor'"
+            "stage_merge does not compose with a branch table: branches do "
+            "not nest — replay into the branch, then audit_branch + "
+            "publish_branch gate the whole chain"
         )
     tag = uuid.uuid4().hex[:12]
-    st = _StagingTable(table, tag)
+    name = _PREFIX + tag
+    fork = create_branch(table, name)
     try:
         res = merge_batch(
-            st, batch, epoch_id=epoch_id, app_id=app_id, new_schema=new_schema,
-            derived_cols=derived_cols, mode=mode,
+            branch_table(table, name), batch, epoch_id=epoch_id, app_id=app_id,
+            new_schema=new_schema, derived_cols=derived_cols, mode=mode,
         )
     except Exception:
-        # a failed stage must not strand its marker (data files it wrote
-        # pre-failure are unreferenced orphans — age-guarded GC's job)
-        (table.snap_dir / f"staged-{tag}.json").unlink(missing_ok=True)
+        # a failed stage must not strand its branch (data files it wrote
+        # before failing are unreferenced orphans — age-guarded GC's job)
+        drop_branch(table, name)
         raise
+    if res.skipped:
+        drop_branch(table, name)  # fence no-op: nothing was staged
     return StagedCommit(tag=tag, table_path=str(table.path),
-                        parent_id=snap["snapshot_id"], result=res)
+                        parent_id=fork["fork_id"], result=res)
 
 
 def read_staged(table: LakeTable, staged: StagedCommit) -> DataFrame:
     """The table state AS IF the staged commit were published — the
-    audit surface.  Same column-pruning/pushdown behavior as a normal
-    read (it IS a normal read, over the staged snapshot's file list)."""
-    return table.read(snap=staged.snapshot())
+    audit surface (``read_branch``: a normal pruned read over the staged
+    snapshot's file list)."""
+    return read_branch(table, staged.branch)
 
 
 def audit_staged(
@@ -176,88 +146,53 @@ def audit_staged(
     max_violations: int = 0,
 ) -> dict:
     """Audit the staged state against declarative rules
-    (``plans.validate``).  Returns ``{"ok", "violations", "by_rule"}``;
-    ``ok`` iff total violating rows <= ``max_violations``.  One job:
-    rules annotate in a single codegen'd projection, the count
-    aggregates per rule name."""
-    from rocket_etl_spark.plans.validate import VIOLATIONS_COL, annotate
-
+    (``plans.validate``) with ``audit_branch``.  Returns
+    ``{"ok", "violations", "by_rule"}``; ``ok`` iff total violating rows
+    <= ``max_violations``."""
     if staged.result.skipped:
         # fence no-op: nothing was staged, there is no state to audit
         return {"ok": True, "violations": 0, "by_rule": {}}
-    ann = annotate(read_staged(table, staged), rules)
-    rows = (
-        ann.select(F.explode(VIOLATIONS_COL).alias("rule"))
-        .groupBy("rule")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )  # bounded: one row per RULE, not per violation
-    by_rule = {r["rule"]: int(r["n"]) for r in rows}
-    bad = (
-        ann.filter(F.size(VIOLATIONS_COL) > 0).limit(max_violations + 1).count()
-        if by_rule
-        else 0
-    )
-    return {"ok": bad <= max_violations, "violations": bad, "by_rule": by_rule}
+    return audit_branch(table, staged.branch, rules, max_violations)
 
 
 def publish_staged(table: LakeTable, staged: StagedCommit) -> dict:
-    """Atomically make the staged commit visible as the next snapshot.
+    """Atomically make the staged commit visible as the next snapshot
+    (``publish_branch``).
 
-    CAS semantics: succeeds iff no commit of any kind landed after the
-    stage's basis; otherwise raises ``PublishConflict`` (re-stage from
-    the live tip — the staged snapshot's re-linked file list and fence
+    Succeeds iff no commit of any kind landed after the stage's fork;
+    otherwise raises ``PublishConflict`` (abort, then re-stage from the
+    live tip — the staged snapshot's re-linked file list and fence
     arithmetic are only valid against its own parent)."""
     if staged.result.skipped:
         return {"published": False, "reason": "epoch already committed"}
-    snap = staged.snapshot()
-    pub = {k: v for k, v in snap.items() if k not in ("staged", "staged_tag")}
-    tip = table.current_snapshot()
-    if tip["snapshot_id"] != pub["parent_id"] or not table._try_write_snapshot(pub):
+    try:
+        out = publish_branch(table, staged.branch)
+    except BranchConflict as e:
         raise PublishConflict(
-            f"table advanced past snapshot {pub['parent_id']} while epoch "
-            f"{snap.get('epoch_id')} was staged; re-stage from the new tip"
-        )
-    staged.marker.unlink(missing_ok=True)
-    return {"published": True, "snapshot_id": pub["snapshot_id"]}
+            f"table advanced past snapshot {staged.parent_id} while epoch "
+            f"{staged.result.epoch_id} was staged; re-stage from the new tip"
+        ) from e
+    return {"published": True, "snapshot_id": out["snapshot_id"]}
 
 
 def abort_staged(table: LakeTable, staged: StagedCommit) -> dict:
-    """Discard the staged commit: delete its marker and the data files
-    the commit itself wrote.  Files the stage RE-LINKED from the parent
-    snapshot are shared with published history and are never touched
-    (``added_files`` is exact — the same bookkeeping ``changes()``
-    trusts for changelog attribution)."""
-    if staged.result.skipped or not staged.marker.exists():
+    """Discard the staged commit (``drop_branch``): the branch markers
+    and the data files the stage itself wrote.  Files the stage
+    RE-LINKED from the parent snapshot are shared with published history
+    and are never touched; a stage whose publish already landed keeps
+    its files (``drop_branch``'s crash-window guard)."""
+    if staged.result.skipped:
         return {"aborted": False, "files_removed": 0}
-    snap = staged.snapshot()
-    # crash-window guard: if the publish CAS succeeded but the process
-    # died before unlinking the marker, the staged content IS the
-    # published snapshot and its added files are live — a later abort
-    # must only clean the marker, never the files.  The added-file paths
-    # embed a per-stage uuid, so equality identifies this stage exactly.
-    pub_path = staged.marker.parent / f"snapshot-{snap['snapshot_id']:08d}.json"
-    if pub_path.exists():
-        with open(pub_path) as f:
-            pub = json.load(f)
-        if pub.get("added_files") == snap.get("added_files"):
-            staged.marker.unlink(missing_ok=True)
-            return {"aborted": False, "files_removed": 0,
-                    "reason": "stage was already published"}
-    removed = 0
-    for files in snap.get("added_files", {}).values():
-        for fe in files:
-            p = Path(staged.table_path) / fe["path"]
-            if p.exists():
-                p.unlink()
-                removed += 1
-    staged.marker.unlink(missing_ok=True)
-    return {"aborted": True, "files_removed": removed}
+    try:
+        out = drop_branch(table, staged.branch)
+    except BranchError:  # already published or aborted
+        return {"aborted": False, "files_removed": 0}
+    if not out["dropped"]:
+        return {"aborted": False, "files_removed": 0,
+                "reason": "stage was already published"}
+    return {"aborted": True, "files_removed": out["files_removed"]}
 
 
 def list_staged(table: LakeTable) -> list[str]:
     """Tags of live staged commits (audit windows in flight)."""
-    return sorted(
-        p.name[len("staged-"):-len(".json")]
-        for p in table.snap_dir.glob("staged-*.json")
-    )
+    return [n[len(_PREFIX):] for n in list_branches(table) if n.startswith(_PREFIX)]

@@ -7,16 +7,13 @@ be an explicit reduction.  LWW order is ``event_seq`` (the WAL position)
 — NEVER the ``commit`` string, which is an opaque hash with no total
 order (SURVEY.md §1.3).
 
-Four implementations, one contract (keep exactly the row with the max
+Three implementations, one contract (keep exactly the row with the max
 ``order_col`` per key):
 
 * ``lww_dedupe`` — ``groupBy(keys).agg(max_by(struct(*), order))``.
   The default: hash aggregation gets map-side partial combine for free,
   so a hot key collapses to one partial row per map task *before* the
   shuffle — inherently skew-resistant, one shuffle.
-* ``lww_dedupe_slim`` — slim winner-set agg + broadcast semi-join: the
-  payload bytes of losing rows never shuffle at all.  The replay MERGE
-  auto-selects it when the batch's key cardinality fits a broadcast.
 * ``lww_dedupe_window`` — ``row_number() over (partition by keys order by
   order desc) = 1``.  Same result; no partial aggregation, so a hot key
   funnels all its rows to one reducer.  Kept because it is the classic
@@ -26,6 +23,10 @@ Four implementations, one contract (keep exactly the row with the max
   north rule's "explicit salted repartitioning of hot repos"
   (BASELINE.json:6): phase 1 reduces each hot key across ``salt_buckets``
   parallel reducers, phase 2 merges the ≤ salt_buckets survivors.
+
+The replay MERGE picks its winners itself (``lake/merge.py::
+_pick_winners``: a slim winner set joined back to the batch) and falls
+back to ``lww_dedupe`` above its broadcast gate.
 """
 
 from __future__ import annotations
@@ -51,39 +52,6 @@ def lww_dedupe(
         F.max_by(F.struct(*[F.col(c) for c in others]), F.col(order_col)).alias("_w")
     )
     return packed.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])
-
-
-def lww_dedupe_slim(
-    df: DataFrame,
-    keys: Sequence[str] = ("repo", "path"),
-    order_col: str = "event_seq",
-) -> DataFrame:
-    """Broadcast winner-set LWW: loser rows' wide columns never shuffle.
-
-    Phase 1 finds the winning ``(keys, max(order))`` pairs with a shuffle
-    of ONLY the key and order columns — a few dozen bytes per row no
-    matter how wide the payload.  Phase 2 broadcast-left-semi-joins the
-    winner set back onto the batch, filtering to winner rows map-side, and
-    a final ``lww_dedupe`` collapses (rare) duplicate deliveries of the
-    same ``(keys, order)`` pair — its input is already ~one row per key.
-
-    Compared to the plain agg form this removes the payload bytes of
-    every losing row from the shuffle and keeps KB-wide structs out of
-    aggregation hash maps entirely; for a hot-key batch (high dedupe
-    ratio) the wide shuffle all but vanishes.  Only applicable while the
-    winner set fits a broadcast (millions of keys ≈ tens of MB);
-    ``merge_batch`` auto-selects this form from its planning-pass key
-    cardinality estimate.  Null-safe equality keeps null-key rows exactly
-    as the agg form treats them (null is a group, not a dropped row).
-    """
-    winners = df.groupBy(*keys).agg(F.max(order_col).alias("_w_ord"))
-    for k in keys:
-        winners = winners.withColumnRenamed(k, f"_w_{k}")
-    cond = F.col(order_col).eqNullSafe(F.col("_w_ord"))
-    for k in keys:
-        cond = cond & F.col(k).eqNullSafe(F.col(f"_w_{k}"))
-    filtered = df.join(F.broadcast(winners), cond, "left_semi")
-    return lww_dedupe(filtered, keys=keys, order_col=order_col)
 
 
 def lww_dedupe_window(

@@ -217,7 +217,7 @@ def _wipe_snapshot(table: LakeTable) -> bool:
     tip's child; False when another writer won the snapshot id."""
     return table._try_write_snapshot(child_snapshot(
         table.current_snapshot(),
-        epoch_id=None, buckets={}, legacy=None, added_files={}, stats={"wiped": True},
+        buckets={}, legacy=None, added_files={}, stats={"wiped": True},
     ))
 
 

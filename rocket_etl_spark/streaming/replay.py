@@ -436,8 +436,8 @@ def replay_stream(
     already fenced) rather than silently leaving the MV stale.
 
     ``audit_rules`` turns every micro-batch into a write–audit–publish
-    commit (lake/wap.py): the MERGE runs into an invisible staged
-    snapshot, the rules audit the WOULD-BE table state, and only a clean
+    commit (lake/wap.py): the MERGE runs into an invisible one-commit
+    branch, the rules audit the WOULD-BE table state, and only a clean
     batch publishes.  A failing batch is aborted — and because the
     Structured Streaming checkpoint will mark the batch consumed
     regardless, its raw events are appended to ``quarantine_dir``
@@ -457,10 +457,10 @@ def replay_stream(
             "— give the rejects somewhere to land"
         )
     if audit_rules and mor_compact_threshold is not None:
-        # staged commits don't auto-compact (compaction publishes real
-        # snapshots — it belongs after publish); accepting the parameter
-        # and ignoring it would let an audited MOR stream accumulate
-        # unbounded delta depth silently (advisor finding, r5)
+        # stage_merge takes no auto-compaction parameter (each stage is a
+        # one-commit branch; folding belongs after publish), so accepting
+        # mor_compact_threshold here and ignoring it would let an audited
+        # MOR stream accumulate unbounded delta depth silently
         raise ValueError(
             "audit_rules and mor_compact_threshold do not compose: staged "
             "commits cannot auto-compact — schedule compact() via "

@@ -44,14 +44,16 @@ def test_operation_classification(spark, tmp_path):
     t = _table(spark, tmp_path, n_epochs=2, mor_epoch=True)
     append_batch(t, prepare_events(change_events(spark, 100, seed=30)), epoch_id=2)
     compact(t)
-    ops = {
-        r["snapshot_id"]: r["operation"]
-        for r in snapshots(t).collect()
-    }
+    rows = {r["snapshot_id"]: r for r in snapshots(t).collect()}
+    ops = {sid: r["operation"] for sid, r in rows.items()}
     assert ops[0] == "create" and ops[1] == "merge"
     assert ops[2] == "delta-append"
     assert ops[3] == "append"
     assert ops[4] == "replace"
+    # app_id names the commit's writer: a compaction has none, it does
+    # not inherit the last data commit's
+    assert rows[3]["app_id"] == "default"
+    assert rows[4]["app_id"] is None and rows[4]["epoch_id"] is None
 
 
 def test_files_table_matches_footers_and_stats(spark, tmp_path):

@@ -53,6 +53,22 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_path):
     _assert_equal(_final_state(table), replay_oracle(pdfs))
 
 
+def test_commit_result_reports_phase_seconds(spark, tmp_path):
+    table = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
+    for ep, mode, phases in [
+        (0, "cow", {"plan", "decide", "write", "stats", "commit"}),
+        (1, "mor", {"plan", "write", "commit"}),
+    ]:
+        res = replay_batch(
+            table, change_events(spark, 1_000, seed=50 + ep), epoch_id=ep, mode=mode
+        )
+        assert set(res.phase_s) == phases
+        assert min(res.phase_s.values()) >= 0
+        # the phases lie inside the merge's wall time (wall_ms truncates)
+        assert sum(res.phase_s.values()) <= (res.wall_ms + 1) / 1000
+    assert replay_batch(table, change_events(spark, 10, seed=52), epoch_id=1).phase_s == {}
+
+
 def test_deletes_remove_rows(spark, tmp_path):
     events = change_events(spark, 5_000, seed=3, delete_frac=0.3)
     table = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)

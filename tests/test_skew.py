@@ -8,7 +8,6 @@ from rocket_etl_spark.generate import change_events
 from rocket_etl_spark.operators.lww import (
     lww_dedupe,
     lww_dedupe_salted,
-    lww_dedupe_slim,
     lww_dedupe_window,
 )
 
@@ -22,35 +21,13 @@ def test_skewed_input_all_variants_agree(spark):
     a = lww_dedupe(ev)
     b = lww_dedupe_window(ev)
     c = lww_dedupe_salted(ev, salt_buckets=8)
-    d = lww_dedupe_slim(ev)
     pa = a.orderBy("repo", "path").toPandas()
     pb = b.orderBy("repo", "path").toPandas()[pa.columns]
     pc = c.orderBy("repo", "path").toPandas()[pa.columns]
-    pd_ = d.orderBy("repo", "path").toPandas()[pa.columns]
     import pandas as pd
 
     pd.testing.assert_frame_equal(pa, pb)
     pd.testing.assert_frame_equal(pa, pc)
-    pd.testing.assert_frame_equal(pa, pd_)
-
-
-def test_slim_dedupe_duplicates_and_null_keys(spark):
-    """The slim form must match the agg form even on the cases where a
-    naive winner-set join diverges: duplicate (key, order) deliveries
-    (exactly one survivor) and null keys (a group, not a dropped row)."""
-    import pandas as pd
-
-    rows = [
-        ("r1", "a", 3, "v3"), ("r1", "a", 1, "v1"), ("r1", "a", 3, "v3"),  # dup winner
-        ("r2", "b", 5, "x5"), ("r2", "b", 4, "x4"),
-        (None, "c", 7, "n7"), (None, "c", 6, "n6"),                        # null key
-        ("r3", None, 9, "m9"), ("r3", None, 8, "m8"),
-    ]
-    df = spark.createDataFrame(rows, "repo string, path string, event_seq long, content string")
-    a = lww_dedupe(df).orderBy("repo", "path").toPandas()
-    s = lww_dedupe_slim(df).orderBy("repo", "path").toPandas()[a.columns]
-    pd.testing.assert_frame_equal(a, s)
-    assert len(s) == 4
 
 
 def test_salted_phase1_bounds_partition_size(spark):

@@ -165,22 +165,38 @@ def test_staged_epoch_fence_exactly_once(spark, tmp_path):
     pd.testing.assert_frame_equal(_state(t), state)
 
 
-def test_stage_mor_mode_and_cow_on_deltas_raises(spark, tmp_path):
+def test_cow_stage_over_mor_deltas_stays_invisible_until_publish(spark, tmp_path):
+    from rocket_etl_spark.lake.branch import branch_table, create_branch
+    from rocket_etl_spark.lake.planner import delta_files
+
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
     replay_batch(t, _events(spark, 1_000), epoch_id=0)
     replay_batch(t, _events(spark, 300, seed=9), epoch_id=1, mode="mor")
-    # COW stage onto live deltas would need a visible pre-fold: refused
-    with pytest.raises(StageError):
-        stage_replay(t, _events(spark, 300, seed=10), epoch_id=2)
-    # MOR stage works and publishes to the COW-equivalent state
-    st = stage_replay(t, _events(spark, 300, seed=10), epoch_id=2, mode="mor")
+    tip = t.current_snapshot()
+    before = _state(t)
+    # the COW stage folds the deltas inside its branch: main sees nothing
+    st = stage_replay(t, _events(spark, 300, seed=10), epoch_id=2)
+    assert t.current_snapshot()["snapshot_id"] == tip["snapshot_id"]
+    assert delta_files(t.current_snapshot()) == delta_files(tip)
+    pd.testing.assert_frame_equal(_state(t), before)
+    assert not t.is_epoch_committed(2)
+    out = publish_staged(t, st)
+    assert out == {"published": True, "snapshot_id": tip["snapshot_id"] + 1}
+    assert not delta_files(t.current_snapshot())
+    # a MOR stage publishes too
+    st = stage_replay(t, _events(spark, 300, seed=11), epoch_id=3, mode="mor")
     assert publish_staged(t, st)["published"]
 
     direct = create_repo_files_table(spark, tmp_path / "d", num_buckets=4)
-    replay_batch(direct, _events(spark, 1_000), epoch_id=0)
-    replay_batch(direct, _events(spark, 300, seed=9), epoch_id=1)
-    replay_batch(direct, _events(spark, 300, seed=10), epoch_id=2)
+    for ep, seed, n in [(0, 7, 1_000), (1, 9, 300), (2, 10, 300), (3, 11, 300)]:
+        replay_batch(direct, _events(spark, n, seed=seed), epoch_id=ep)
     pd.testing.assert_frame_equal(_state(t), _state(direct))
+
+    # branches do not nest: a stage onto a branch table is refused
+    create_branch(t, "bf")
+    with pytest.raises(StageError):
+        stage_replay(branch_table(t, "bf"), _events(spark, 300, seed=12), epoch_id=4)
+    assert list_staged(t) == []
 
 
 def test_failed_stage_strands_no_marker(spark, tmp_path):
@@ -195,23 +211,26 @@ def test_failed_stage_strands_no_marker(spark, tmp_path):
                     derived_cols={"bad": "no_such_function(repo)"})
     # the failed stage left no audit-window marker behind
     assert list_staged(t) == []
+    assert not list(t.snap_dir.glob("branchref-wap-*"))
     # and the epoch is still stageable
     st = stage_replay(t, _events(spark, 500, seed=9), epoch_id=1)
     assert publish_staged(t, st)["published"]
 
 
 def test_abort_after_publish_crash_window_keeps_live_files(spark, tmp_path):
-    import json
-
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
     replay_batch(t, _events(spark, 1_000), epoch_id=0)
     st = stage_replay(t, _events(spark, 500, seed=9), epoch_id=1)
-    snap = st.snapshot()
+    # the stage's branch markers: its ref and its one chain commit
+    markers = {
+        p: p.read_bytes() for p in t.snap_dir.glob(f"branch*-{st.branch}*.json")
+    }
+    assert len(markers) == 2
     assert publish_staged(t, st)["published"]
-    # simulate the crash ordering: publish CAS landed, marker unlink did
+    # simulate the crash ordering: publish CAS landed, marker unlinks did
     # not — a recovery process later calls abort on the stale handle
-    with open(st.marker, "w") as f:
-        json.dump(snap, f)
+    for p, data in markers.items():
+        p.write_bytes(data)
     state = _state(t)
     res = abort_staged(t, st)
     assert res["aborted"] is False and res["files_removed"] == 0

@@ -19,7 +19,7 @@ import __spark_entry__ as entry_mod  # noqa: E402
 from rocket_etl_spark.generate import change_events  # noqa: E402
 from rocket_etl_spark.session import build_session  # noqa: E402
 from rocket_etl_spark.streaming.replay import prepare_events  # noqa: E402
-from rocket_etl_spark.operators.lww import lww_dedupe, lww_dedupe_slim  # noqa: E402
+from rocket_etl_spark.operators.lww import lww_dedupe  # noqa: E402
 
 SF = "/root/testdata/sf0.01"
 AUDIT = [
@@ -82,20 +82,6 @@ def main() -> None:
         problems.append("replay core: expected partial_max_by before the exchange")
     if p.count(") Exchange") != 1:  # detail-section headers = one per operator
         problems.append("replay core: expected exactly one shuffle for LWW dedupe")
-
-    # the slim dedupe the MERGE auto-selects for broadcastable winner sets:
-    # the wide payload must ride a broadcast LEFT-SEMI hash join (map-side
-    # filter — no payload shuffle before the final winners-only agg)
-    slim = lww_dedupe_slim(
-        prepare_events(ev), keys=["repo", "path"], order_col="last_event_seq"
-    )
-    p = plan_of(slim)
-    out += ["## replay core (slim winner-set LWW dedupe)", "```", p.strip(), "```", ""]
-    for f in FLAGS:
-        if f in p:
-            problems.append(f"slim dedupe: {f}")
-    if "BroadcastHashJoin" not in p or "LeftSemi" not in p:
-        problems.append("slim dedupe: expected broadcast left-semi winner filter")
 
     # the broadcast MERGE (lake/merge.py::_merge_broadcast): the keep side
     # must carry the table's payload with ZERO exchanges (map-side anti
