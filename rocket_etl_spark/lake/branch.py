@@ -151,8 +151,7 @@ def list_branches(table: LakeTable) -> dict[str, dict]:
 def read_branch(table: LakeTable, name: str, **kw) -> DataFrame:
     """The branch's current state (audit surface) — a normal pruned read
     over the branch head's file list."""
-    bt = branch_table(table, name)
-    return bt.read(snap=bt.current_snapshot(), **kw)
+    return branch_table(table, name).read(**kw)
 
 
 def audit_branch(
@@ -243,10 +242,12 @@ def publish_branch(table: LakeTable, name: str) -> dict:
 
 
 def drop_branch(table: LakeTable, name: str) -> dict:
-    """Discard the branch: its chain, its ref, and the data files its
-    own commits wrote (``added_files`` is exact — files re-linked from
-    published snapshots are never touched — the same bookkeeping
-    ``changes()`` trusts for changelog attribution).
+    """Discard the branch: its chain, its ref, and every data file its
+    chain snapshots reference that no main-chain snapshot and no other
+    live branch references — the files its commits wrote, including a
+    mid-branch compaction's output, which records no ``added_files``
+    (a compaction rewrites, it doesn't change).  Files the branch
+    re-linked from main are never touched.
 
     Crash-window guard: if a ``publish_branch`` CAS succeeded but the
     process died before unlinking the branch markers, the branch's
@@ -270,16 +271,16 @@ def drop_branch(table: LakeTable, name: str) -> dict:
                 ref_p.unlink(missing_ok=True)
                 return {"dropped": False, "files_removed": 0,
                         "reason": "branch was already published"}
+    mine, _ = table._referenced(chain)
+    others = [p for p in table.snap_dir.glob("branch-*.json") if p not in chain]
+    live, _ = table._referenced(table._snapshot_files() + others)
     removed = 0
+    for rel in sorted(mine - live):
+        fp = table.path / rel
+        if fp.exists():
+            fp.unlink()
+            removed += 1
     for p in chain:
-        with open(p) as f:
-            s = json.load(f)
-        for fl in (s.get("added_files") or {}).values():
-            for fe in fl:
-                fp = table.path / fe["path"]
-                if fp.exists():
-                    fp.unlink()
-                    removed += 1
         p.unlink(missing_ok=True)
     ref_p.unlink(missing_ok=True)
     return {"dropped": True, "files_removed": removed}

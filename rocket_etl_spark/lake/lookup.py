@@ -64,7 +64,6 @@ import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -317,15 +316,21 @@ def filtered_read(
     residual: bool = True,
 ) -> DataFrame | tuple[DataFrame, dict]:
     """``table.read().filter(predicate)`` with automatic zone-map file
-    pruning — the declarative-read surface the ``range_scan`` machinery
-    deserves: real users write a SQL ``filter``, not a pruning API.
+    pruning — the table's one predicate read: users write a SQL
+    ``filter``, not a pruning API.
 
     The predicate's prunable conjuncts (``col <op> literal``, BETWEEN —
     see ``_parse_prunable_conjuncts``) skip every file whose per-column
-    min/max provably excludes them; the FULL predicate then re-applies
-    as a residual on the surviving files, so the answer is always
-    identical to the unpruned read (pruning has no false negatives by
-    construction; a parse miss just reads more files).
+    min/max provably excludes them.  Every commit records footer min/max
+    for every zone-map-supported column (string / int family / date /
+    boolean / binary; long strings truncated safely), so a ``lang`` or
+    ``last_event_seq`` predicate prunes as well as a key range.  Buckets
+    are hash-distributed, so every bucket takes part and the pruning is
+    per file; a file with no zone map for a column is always read.  The
+    FULL predicate then re-applies as a residual on the surviving files,
+    so the answer is always identical to the unpruned read (pruning has
+    no false negatives by construction; a parse miss just reads more
+    files).
 
     ``skip_cols``: columns that may NOT contribute bounds (a caller whose
     downstream transform renames/derives over them — jobspec.extract).
@@ -353,80 +358,3 @@ def filtered_read(
         "pruned_on": sorted(bounds),
     }
 
-
-def range_scan(
-    table: LakeTable,
-    col: str,
-    lo=None,
-    hi=None,
-    snapshot_id: int | None = None,
-    return_stats: bool = False,
-    also: dict | None = None,
-) -> DataFrame | tuple[DataFrame, dict]:
-    """Rows with ``lo <= col <= hi`` (either bound optional), reading only
-    the files whose zone map can overlap the range.
-
-    Buckets are hash-distributed, so every bucket participates — the
-    pruning is at FILE granularity via the per-file key MIN/MAX (``kr``)
-    zone maps.  On a freshly-trickled table each small file spans few
-    keys, so selective ranges skip most files; after a CLUSTERED
-    compaction (``compact(sort_cols=[...], target_file_rows=...)``) each
-    bucket is disjoint sorted slices and a range touches ~1 slice per
-    bucket — the layout this scan is designed to exploit, the same
-    composition as Iceberg's sort-order rewrite + manifest column
-    bounds.  A file with no zone map for ``col`` is always read (no
-    false negatives); the residual predicate re-applies exactly, so
-    pruning can never change the answer.
-
-    ``col`` may be ANY zone-map-supported column (string / int family /
-    date / boolean / binary) — since late r5 every commit records
-    footer min/max for all such columns, Iceberg column-bounds style,
-    with long string bounds truncated safely — so a lang or commit
-    predicate prunes files too, not just the merge keys.  The residual
-    filter also pushes into the parquet scan as a normal min/max
-    row-group filter — file pruning here saves the OPEN of excluded
-    files, which dominates on a high-file-count trickle layout.
-
-    ``also={col2: (lo2, hi2), ...}`` ANDs further range predicates: a
-    file is skipped when ANY predicate's zone map proves disjointness,
-    and every predicate re-applies as a residual filter.  With a
-    Z-ORDER layout (``compact(..., zorder=True)``) this is the payoff
-    query shape — each z-column's bounds are balanced-tight, so a
-    conjunctive box query multiplies the per-column skip rates.
-    """
-    snap = (
-        table.snapshot(snapshot_id) if snapshot_id is not None
-        else table.current_snapshot()
-    )
-    if lo is None and hi is None:
-        raise ValueError("range_scan needs at least one bound")
-    schema = TableSchema.from_json(
-        snap["schemas"][str(snap["current_schema_version"])]
-    )
-    preds = {col: (lo, hi), **(also or {})}
-    canon: dict[str, tuple] = {}
-    for c, (plo, phi) in preds.items():
-        if c not in range_safe_cols(schema):
-            raise ValueError(
-                f"range_scan needs a zone-map-supported column; {c!r} not in "
-                f"{range_safe_cols(schema)}"
-            )
-        dt = schema.field_by_name(c).dtype.lower().split("(")[0].strip()
-        canon[c] = (bound_canon(plo, dt), bound_canon(phi, dt))
-
-    plan = select_files(snap, bounds=canon)
-    df = table.read_plan(plan, snap)
-    pred = F.lit(True)
-    for c, (plo, phi) in preds.items():
-        if plo is not None:
-            pred = pred & (F.col(c) >= F.lit(plo))
-        if phi is not None:
-            pred = pred & (F.col(c) <= F.lit(phi))
-    out = df.filter(pred)
-    if not return_stats:
-        return out
-    return out, {
-        "files_scanned": plan.scanned,
-        "files_total": plan.total,
-        "pruned": plan.scanned < plan.total,
-    }

@@ -28,6 +28,7 @@ from rocket_etl_spark.lake.planner import (
     legacy_layouts,
     legacy_probe_cols,
     legacy_touched,
+    select_files,
     update_buckets,
     written_files,
 )
@@ -62,10 +63,7 @@ def compact(
     tombstone_watermark: int | None = None,
     min_files: int = 2,
     buckets: list[int] | None = None,
-    sort_cols: list[str] | None = None,
-    target_file_rows: int | None = None,
     migrate_legacy: bool = False,
-    zorder: bool = False,
 ) -> dict:
     """Rewrite fragmented buckets to one file each; drop droppable
     tombstones.
@@ -89,81 +87,14 @@ def compact(
     files of a lost attempt are removed later by age-guarded
     ``expire_snapshots``.
 
-    ``sort_cols`` (typically the table's key columns) CLUSTERS each
-    rewritten bucket: rows are sorted within the bucket and split into
-    files of ``target_file_rows`` each, so every output file covers a
-    disjoint key slice — Iceberg's sort-order rewrite.  Combined with
-    the zone maps this pass attaches to its output (below), a later
-    copy-on-write MERGE's decide scan prunes the big base files to just
-    the slices its winner keys can touch, instead of re-reading the
-    whole bucket every epoch.  Unsorted compaction (the default) keeps
-    one file per bucket.
-
-    Either way the output files get decide-scan metadata attached —
-    ``kr`` zone maps (footer stats, free) and key blooms (bounded by the
-    per-file row cap) — which MERGE commits already carry but compaction
-    previously stripped, leaving exactly the LARGEST files unprunable.
+    The output files get decide-scan metadata attached — ``kr`` zone
+    maps (footer stats, free) and key blooms (bounded by the per-file
+    row cap) — which MERGE commits already carry, so the LARGEST files
+    stay prunable too.
     """
     return _retry_cas("compaction", lambda: _compact_once(
-        table, tombstone_watermark, min_files, buckets, sort_cols,
-        target_file_rows, migrate_legacy, zorder,
+        table, tombstone_watermark, min_files, buckets, migrate_legacy,
     ))
-
-
-_Z_BITS = 8  # rank resolution per z-column: 256 quantile bins
-_Z_SAMPLE_FRACTION = 0.02
-_Z_SAMPLE_CAP = 50_000
-
-
-def _zvalue_expr(df, cols):
-    """Bit-interleaved Z-value over per-column approximate ranks.
-
-    Ranks come from sample-derived quantile boundaries (the same
-    sample-based range partitioning Delta's OPTIMIZE ZORDER and Spark's
-    own RangePartitioner use): per column, up to 2^_Z_BITS - 1 sorted
-    boundary literals; a row's rank = count of boundaries <= value — a
-    codegen'd O(bins) comparison fold, order-preserving for ANY
-    comparable dtype (strings included, which rules out width_bucket).
-    The bits of the k ranks interleave MSB-first into one integer whose
-    sort order traverses the space-filling Z-curve.  Sampling skew only
-    degrades clustering BALANCE, never correctness — the residual
-    predicate always re-applies.  Returns None when the sample is too
-    degenerate to build boundaries (empty/constant table)."""
-    k = len(cols)
-    sample = (
-        df.select(*cols)
-        .sample(False, _Z_SAMPLE_FRACTION, seed=7)
-        .limit(_Z_SAMPLE_CAP)
-        .collect()
-    )
-    if len(sample) < 4:
-        sample = df.select(*cols).limit(_Z_SAMPLE_CAP).collect()
-    ranks = []
-    n_bins = 1 << _Z_BITS
-    for i, c in enumerate(cols):
-        vals = sorted(r[i] for r in sample if r[i] is not None)
-        if not vals:
-            return None
-        bounds = []
-        for j in range(1, n_bins):
-            b = vals[min(len(vals) - 1, (j * len(vals)) // n_bins)]
-            if not bounds or b != bounds[-1]:
-                bounds.append(b)
-        if not bounds:
-            return None
-        rank = sum(
-            (F.when(F.col(c) >= F.lit(b), 1).otherwise(0) for b in bounds),
-            F.lit(0),
-        )
-        # stretch deduplicated boundaries back over the full bit range so
-        # every column contributes across all _Z_BITS interleave slots
-        ranks.append(((rank * (n_bins - 1)) / F.lit(len(bounds))).cast("int"))
-    z = F.lit(0)
-    for bit in range(_Z_BITS - 1, -1, -1):
-        for i, r in enumerate(ranks):
-            pos = bit * k + (k - 1 - i)
-            z = z + F.shiftleft(F.shiftright(r, bit).bitwiseAND(F.lit(1)), pos)
-    return z
 
 
 def _compact_once(
@@ -171,10 +102,7 @@ def _compact_once(
     tombstone_watermark: int | None,
     min_files: int,
     buckets: list[int] | None,
-    sort_cols: list[str] | None = None,
-    target_file_rows: int | None = None,
-    migrate_legacy: bool = False,
-    zorder: bool = False,
+    migrate_legacy: bool,
 ) -> dict | None:
     snap = table.current_snapshot()
     cur, *legacy = layouts(snap)
@@ -209,9 +137,9 @@ def _compact_once(
         delta_rel = {fe["path"] for b in cand for fe in deltas.get(b, [])}
         if delta_rel:
             dkeys = (
-                table.read(
-                    buckets=cand, include_tombstones=True,
-                    file_subset=delta_rel, legacy_buckets={},
+                table.read_plan(
+                    select_files(snap, cand, {}, paths=delta_rel), snap,
+                    include_tombstones=True,
                 )
                 .select(*snap["key_cols"])
                 .distinct()
@@ -230,7 +158,7 @@ def _compact_once(
             "legacy_buckets_migrated": 0,
         }
 
-    df = table.read(buckets=cand, include_tombstones=True, legacy_buckets=leg_sel)
+    df = table.read_plan(select_files(snap, cand, leg_sel), snap, include_tombstones=True)
     order_col = snap["order_col"]
     if tombstone_watermark is not None:
         keep = ~F.coalesce(F.col("_deleted"), F.lit(False)) | (
@@ -252,33 +180,8 @@ def _compact_once(
     shaped = df.withColumn("_bucket", table.bucket_expr()).repartition(
         max(len(cand) + sum(len(v) for v in leg_sel.values()), 1), "_bucket"
     )
-    if sort_cols and zorder and len(sort_cols) >= 2:
-        # Z-ORDER cluster (Delta OPTIMIZE ZORDER / Iceberg sort-order
-        # with interleave): lexicographic sort gives tight zone maps
-        # only on the LEADING column — each slice spans nearly the full
-        # domain of every later column, so range pruning on them is
-        # dead.  Interleaving the bits of per-column ranks makes every
-        # file cover a balanced hyper-rectangle: min/max stays tight on
-        # ALL the z-columns at once, at the cost of slightly looser
-        # leading-column ranges.
-        zcol = _zvalue_expr(df, sort_cols)
-        if zcol is not None:
-            shaped = (
-                shaped.withColumn("_z", zcol)
-                .sortWithinPartitions("_bucket", "_z")
-                .drop("_z")
-            )
-        else:  # degenerate sample (empty/constant table) — linear sort
-            shaped = shaped.sortWithinPartitions("_bucket", *sort_cols)
-    elif sort_cols:
-        # cluster the bucket: contiguous key slices per output file, so
-        # the attached zone maps carry tight disjoint ranges
-        shaped = shaped.sortWithinPartitions("_bucket", *sort_cols)
-    writer = shaped.write.partitionBy("_bucket")
-    if target_file_rows:
-        writer = writer.option("maxRecordsPerFile", int(target_file_rows))
-    writer.parquet(str(out_dir))
-    # rewritten buckets get the new file(s) (or [] when a purge emptied the
+    shaped.write.partitionBy("_bucket").parquet(str(out_dir))
+    # rewritten buckets get the new file (or [] when a purge emptied the
     # bucket) and the migrated retired buckets empty out; rows MIGRATED
     # out of a retired layout may scatter into buckets outside ``cand``
     # and append there.  Decide-scan metadata for the new base files is
@@ -437,7 +340,7 @@ def _rebucket_once(table: LakeTable, new_num_buckets: int) -> dict | None:
     snap = table.current_snapshot()
     if int(snap["num_buckets"]) == new_num_buckets:
         return {"snapshot_id": snap["snapshot_id"], "rebucketed": False}
-    df = table.read(include_tombstones=True)
+    df = table.read_plan(select_files(snap), snap, include_tombstones=True)
     keys = snap["key_cols"]
 
     commit_tag = f"rebucket-{snap['snapshot_id'] + 1:08d}-{uuid.uuid4().hex[:8]}"

@@ -255,7 +255,7 @@ def _rel_paths(table_path, fnames) -> set[str] | None:
     Returns ``None`` when any name cannot be resolved under the table
     root (non-local scheme, symlinked mount, foreign path) — the caller
     then degrades to the always-correct full-touched-bucket rewrite
-    (``file_subset=None`` + no file re-linking) instead of aborting the
+    (``paths=None`` + no file re-linking) instead of aborting the
     merge on a path-layout assumption."""
     from pathlib import Path
     from urllib.parse import unquote, urlparse
@@ -806,6 +806,12 @@ def _merge_once(
             if use_broadcast:
                 def read_matched(fnames):
                     rel = _rel_paths(table.path, fnames)
+
+                    # planned against ``snap``, the snapshot the decide read
+                    def keep_read(bkts, legacy):
+                        plan = select_files(snap, bkts, legacy, paths=rel)
+                        return _project(table.read_plan(plan, snap, include_tombstones=True))
+
                     # current-spec keeps: bucket placement unchanged — stream
                     # scan→parquet with no exchange (tight=False).  (An r6
                     # experiment replaced this with a union of per-bucket
@@ -813,29 +819,13 @@ def _merge_once(
                     # files; the 64-way union regressed the incremental merge
                     # 5x — per-child planning and stage overhead dwarf the
                     # file-count savings — so the single scan stands.)
-                    srcs = [(
-                        _project(
-                            table.read(
-                                buckets=touched, include_tombstones=True,
-                                file_subset=rel, legacy_buckets={},
-                            )
-                        ),
-                        False,
-                    )]
+                    srcs = [(keep_read(touched, {}), False)]
                     if leg_touched:
                         # legacy-layout keeps MIGRATE: placement changes, so
                         # route through a bucket-hash exchange (tight=True) —
                         # one output file per target bucket instead of one
                         # per (scan task, target bucket)
-                        srcs.append((
-                            _project(
-                                table.read(
-                                    buckets=[], include_tombstones=True,
-                                    file_subset=rel, legacy_buckets=leg_touched,
-                                )
-                            ),
-                            True,
-                        ))
+                        srcs.append((keep_read([], leg_touched), True))
                     return rel, srcs
 
                 # fused dedupe+MERGE: no payload ever shuffles except the

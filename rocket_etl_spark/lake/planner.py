@@ -35,8 +35,8 @@ only module that knows them:
   ``file_count`` walk them for the counts.
 
 ``select_files`` is the planner every read goes through:
-``LakeTable.read``, the MERGE decide scan, ``lake.lookup``'s point
-lookups, ``filtered_read`` and ``range_scan``.
+``LakeTable.read``, the MERGE decide and keep scans, compaction,
+``lake.lookup``'s point lookups and ``filtered_read``.
 """
 
 from __future__ import annotations
@@ -377,9 +377,9 @@ def range_safe_cols(schema) -> list[str]:
 
     Zone maps are footer-only, so bounds are recorded for ALL such
     columns, not just the merge keys — Iceberg records column bounds
-    for every column for the same reason: ``range_scan`` can then prune
-    files on any of them (e.g. a lang or commit predicate), while the
-    MERGE decide probe keeps consulting only the key columns."""
+    for every column for the same reason: ``filtered_read`` can then
+    prune files on any of them (e.g. a lang or commit predicate), while
+    the MERGE decide probe keeps consulting only the key columns."""
     return [f.name for f in schema.fields if _dtype(schema, f.name) in _BLOOM_SAFE_DTYPES]
 
 

@@ -461,7 +461,7 @@ class LakeTable:
 
     def _referenced(self, paths) -> tuple[set[str], set[str]]:
         """(data file paths, manifest names) the snapshot JSON files at
-        ``paths`` reference — expiry's liveness set.  Files of retired
+        ``paths`` reference — the liveness set of expiry and ``drop_branch``.  Files of retired
         layouts count, and so do ``added_files``: a published branch's
         snapshot may list files a mid-branch compaction already
         superseded in its buckets, and ``changes()`` still reads them."""
@@ -497,14 +497,10 @@ class LakeTable:
         buckets: Sequence[int] | None = None,
         snapshot_id: int | None = None,
         include_tombstones: bool = False,
-        file_subset: set[str] | None = None,
-        snap: dict | None = None,
-        legacy_buckets: dict[int, Sequence[int]] | None = None,
     ) -> DataFrame:
-        """Current table state, optionally restricted to some buckets
-        (file-level pruning — only those buckets' parquet files are read).
-        ``file_subset`` (relative paths) restricts further to specific
-        files within those buckets — the MERGE's matched-file pruning.
+        """Table state at ``snapshot_id`` (default: the tip), optionally
+        restricted to some buckets (file-level pruning — only those
+        buckets' parquet files are read).
 
         Files are read under their write-time schema and projected to the
         current schema by field id (null-backfill adds, re-alias renames,
@@ -530,32 +526,26 @@ class LakeTable:
         entirely — the plain union path — so the read-side cost is
         confined to delta-bearing buckets until compaction folds them.
 
-        **Legacy bucket layouts** (bucket-spec evolution): files still
-        laid out under a retired spec (``legacy_layouts``) are included
-        too.  ``legacy_buckets=None`` reads ALL legacy files (the safe
-        default — correct for full scans); a ``{spec_id: [bucket ids]}``
-        dict prunes each retired layout to the buckets the caller's keys
-        hash to under THAT spec (``planner.legacy_touched``; a spec_id
-        absent from the dict contributes nothing).  A legacy base row
-        can be shadowed by a merge-on-read delta that lives in a
-        CURRENT-spec bucket, so a selected delta pulls every selected
-        legacy file into the reconciliation.
+        **Legacy bucket layouts** (bucket-spec evolution): every file
+        still laid out under a retired spec (``legacy_layouts``) is read
+        too.  A legacy base row can be shadowed by a merge-on-read delta
+        that lives in a CURRENT-spec bucket, so a selected delta pulls
+        every legacy file into the reconciliation.
 
         Which files are read, and which of them reconcile, is
-        ``planner.select_files``' plan — the one every reader shares
-        (``read_plan`` reads a plan the caller made, pruned by key or
-        zone map; point lookups read theirs with pyarrow).
+        ``planner.select_files``' plan — the one every reader shares.  A
+        caller that holds a snapshot and needs a narrower plan (files by
+        path, retired buckets by key, zone-map bounds) plans it with
+        ``select_files`` against that snapshot and reads it with
+        ``read_plan``: the MERGE's decide and keep reads, compaction,
+        ``filtered_read``.  Point lookups read theirs with pyarrow.
         """
-        if snap is None:
-            # explicit ``snap`` = read an out-of-chain snapshot dict (a
-            # branch head — lake/branch.py's read_branch, the WAP audit read)
-            snap = (
-                self.snapshot(snapshot_id)
-                if snapshot_id is not None
-                else self.current_snapshot()
-            )
-        plan = select_files(snap, buckets, legacy_buckets, paths=file_subset)
-        return self.read_plan(plan, snap, include_tombstones)
+        snap = (
+            self.snapshot(snapshot_id)
+            if snapshot_id is not None
+            else self.current_snapshot()
+        )
+        return self.read_plan(select_files(snap, buckets), snap, include_tombstones)
 
     def read_plan(
         self, plan: FilePlan, snap: dict, include_tombstones: bool = False
@@ -563,31 +553,8 @@ class LakeTable:
         """``read`` of the files a ``planner.select_files`` plan over
         ``snap`` selected."""
         current = TableSchema.from_json(snap["schemas"][str(snap["current_schema_version"])])
-
-        def _load(entries: list[dict], with_seq: bool) -> DataFrame | None:
-            by_sv: dict[int, list[str]] = {}
-            for fe in entries:
-                by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
-            parts: list[DataFrame] = []
-            for sv, paths in sorted(by_sv.items()):
-                fschema = TableSchema.from_json(snap["schemas"][str(sv)])
-                phys = fschema.to_struct().add("_deleted", "boolean", True)
-                passthrough = ("_deleted",)
-                if with_seq:
-                    # absent from base/COW parquet → read as null → seq 0
-                    phys = phys.add("_seq", "long", True)
-                    passthrough = ("_deleted", "_seq")
-                df = self.spark.read.schema(phys).parquet(*paths)
-                parts.append(project_to(df, fschema, current, passthrough=passthrough))
-            if not parts:
-                return None
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
-        plain = _load(plan.plain, with_seq=False)
-        rec = _load(plan.rec, with_seq=True)
+        plain = self._read_files(snap["schemas"], current, plan.plain)
+        rec = self._read_files(snap["schemas"], current, plan.rec, {"_seq": "long"})
         if rec is not None:
             rec = _mor_reconcile(rec, snap["key_cols"], snap["order_col"])
         if plain is None and rec is None:
@@ -602,6 +569,34 @@ class LakeTable:
         if include_tombstones:
             return out
         return out.filter(~F.coalesce(F.col("_deleted"), F.lit(False))).drop("_deleted")
+
+    def _read_files(
+        self,
+        schemas: dict,
+        current: TableSchema,
+        entries: Sequence[dict],
+        extra: dict[str, str] | None = None,
+    ) -> DataFrame | None:
+        """The rows of the data files ``entries``, projected to
+        ``current`` plus ``_deleted`` and the ``extra`` columns
+        (``{name: type}``, null where a file lacks one — a base file's
+        ``_seq``), or None when there is no file.  The files of one
+        schema version (a key of ``schemas``) are one explicit-schema
+        parquet read; the versions union by name."""
+        extra = extra or {}
+        by_sv: dict[int, list[str]] = {}
+        for fe in entries:
+            by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
+        out: DataFrame | None = None
+        for sv, paths in sorted(by_sv.items()):
+            fschema = TableSchema.from_json(schemas[str(sv)])
+            phys = fschema.to_struct().add("_deleted", "boolean", True)
+            for name, typ in extra.items():
+                phys = phys.add(name, typ, True)
+            df = self.spark.read.schema(phys).parquet(*paths)
+            part = project_to(df, fschema, current, passthrough=("_deleted", *extra))
+            out = part if out is None else out.unionByName(part)
+        return out
 
     # ------------------------------------------------------- changelog read
     def changes(self, from_snapshot: int, to_snapshot: int | None = None) -> DataFrame:
@@ -623,34 +618,24 @@ class LakeTable:
         current_schema = TableSchema.from_json(
             cur["schemas"][str(cur["current_schema_version"])]
         )
-        by_sv: dict[int, list[str]] = {}
-        for sid in range(from_snapshot + 1, to_snapshot + 1):
-            for files in self.snapshot(sid)["added_files"].values():
-                for fe in files:
-                    by_sv.setdefault(fe["sv"], []).append(str(self.path / fe["path"]))
-        parts: list[DataFrame] = []
-        for sv, paths in sorted(by_sv.items()):
-            fschema = TableSchema.from_json(cur["schemas"][str(sv)])
-            phys = fschema.to_struct().add("_deleted", "boolean", True).add(
-                "_action", "string", True
-            )
-            df = self.spark.read.schema(phys).parquet(*paths)
-            parts.append(
-                project_to(df, fschema, current_schema, passthrough=("_action",))
-            )
-        if not parts:
+        added = [
+            fe
+            for sid in range(from_snapshot + 1, to_snapshot + 1)
+            for files in self.snapshot(sid)["added_files"].values()
+            for fe in files
+        ]
+        out = self._read_files(cur["schemas"], current_schema, added, {"_action": "string"})
+        if out is None:
             return local_frame(
                 self.spark, [],
                 current_schema.to_struct().add("change_type", "string", True),
             )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
         return (
             # 'upsert' = merge-on-read commits: a MOR delta is appended
             # without reading the table, so insert-vs-update is unknown
             # at write time — the changelog reports it honestly as upsert
             out.filter(F.col("_action").isin("insert", "update", "delete", "upsert"))
+            .drop("_deleted")
             .withColumnRenamed("_action", "change_type")
         )
 

@@ -16,6 +16,7 @@ into a no-op — exactly-once table effects over an at-least-once source.
 from __future__ import annotations
 
 import time
+from collections.abc import Callable
 from pathlib import Path
 
 import pyspark.sql.functions as F
@@ -185,22 +186,16 @@ def replay_batch(
     trickle-CDC write path; pair with ``mor_compact_threshold`` or a
     compaction schedule to bound read amplification.
 
-    A ``CommitConflict`` (another writer evolved the schema between our
-    alignment and our commit) is absorbed by re-aligning against the
-    now-current schema and retrying — the merge itself already rebases
-    or recomputes over concurrent data commits."""
-    prepared = prepare_events(events, use_pandas_udfs=use_pandas_udfs, defer_hash=True)
-    derived = sha256_derived(use_pandas_udfs)
-    while True:
-        aligned, new_schema = align_batch(table, prepared, renames, skip_cols=set(derived))
-        try:
-            return merge_batch(
-                table, aligned, epoch_id=epoch_id, new_schema=new_schema,
-                app_id=app_id, derived_cols=derived, mode=mode,
-                mor_compact_threshold=mor_compact_threshold,
-            )
-        except CommitConflict:
-            continue
+    A ``CommitConflict`` (a concurrent schema change) re-aligns and
+    retries (``_align_and_commit``)."""
+    return _align_and_commit(
+        table, events, renames, use_pandas_udfs,
+        lambda aligned, new_schema, derived: merge_batch(
+            table, aligned, epoch_id=epoch_id, new_schema=new_schema,
+            app_id=app_id, derived_cols=derived, mode=mode,
+            mor_compact_threshold=mor_compact_threshold,
+        ),
+    )
 
 
 def stage_replay(
@@ -219,15 +214,34 @@ def stage_replay(
     ``StagedCommit``."""
     from rocket_etl_spark.lake.wap import stage_merge
 
+    return _align_and_commit(
+        table, events, renames, use_pandas_udfs,
+        lambda aligned, new_schema, derived: stage_merge(
+            table, aligned, epoch_id=epoch_id, new_schema=new_schema,
+            app_id=app_id, derived_cols=derived, mode=mode,
+        ),
+    )
+
+
+def _align_and_commit(
+    table: LakeTable,
+    events: DataFrame,
+    renames: dict[str, str] | None,
+    use_pandas_udfs: bool,
+    commit: Callable[[DataFrame, TableSchema | None, dict], object],
+):
+    """transform → align → ``commit(aligned, new_schema, derived_cols)``.
+
+    A ``CommitConflict`` (another writer evolved the schema between our
+    alignment and our commit) is absorbed by re-aligning against the
+    now-current schema and retrying — the merge itself already rebases
+    or recomputes over concurrent data commits."""
     prepared = prepare_events(events, use_pandas_udfs=use_pandas_udfs, defer_hash=True)
     derived = sha256_derived(use_pandas_udfs)
     while True:
         aligned, new_schema = align_batch(table, prepared, renames, skip_cols=set(derived))
         try:
-            return stage_merge(
-                table, aligned, epoch_id=epoch_id, new_schema=new_schema,
-                app_id=app_id, derived_cols=derived, mode=mode,
-            )
+            return commit(aligned, new_schema, derived)
         except CommitConflict:
             continue
 

@@ -18,7 +18,7 @@ from rocket_etl_spark.lake.branch import (
     publish_branch,
     read_branch,
 )
-from rocket_etl_spark.lake.maintenance import expire_snapshots
+from rocket_etl_spark.lake.maintenance import compact, expire_snapshots
 from rocket_etl_spark.oracle import replay_oracle
 from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
 
@@ -105,6 +105,26 @@ def test_drop_branch_removes_its_files_only(spark, tmp_path):
     pd.testing.assert_frame_equal(before, _state(t.read()))  # main intact
     with pytest.raises(BranchError):
         branch_table(t, "scrap")
+
+
+def test_drop_branch_removes_midbranch_compaction_output(spark, tmp_path):
+    """A compaction inside the branch records no ``added_files``; the drop
+    still deletes its output, and nothing main references."""
+    events = change_events(spark, 3_000, seed=47)
+    batches = _slices(events, 3, 1_000)
+    t = create_repo_files_table(spark, tmp_path / "t", num_buckets=8)
+    replay_batch(t, batches[0], epoch_id=0)
+    before = _state(t.read())
+    all_files = {str(p.relative_to(t.path)) for p in t.data_dir.rglob("*.parquet")}
+    create_branch(t, "scrap")
+    bt = branch_table(t, "scrap")
+    replay_batch(bt, batches[1], epoch_id=1)
+    replay_batch(bt, batches[2], epoch_id=2)
+    assert compact(bt)["buckets_rewritten"] > 0
+    drop_branch(t, "scrap")
+    after = {str(p.relative_to(t.path)) for p in t.data_dir.rglob("*.parquet")}
+    assert after == all_files  # every file the branch wrote is gone
+    pd.testing.assert_frame_equal(before, _state(t.read()))
 
 
 def test_fences_survive_publish(spark, tmp_path):

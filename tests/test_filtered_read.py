@@ -1,6 +1,6 @@
 """Zone-map pruning for declarative filtered reads (lake/lookup.py
 ``filtered_read`` + jobspec lake sources) — round-5 verdict item #4:
-users write ``filter``, not ``range_scan``; a simple range/equality
+users write ``filter``, not a pruning API; a simple range/equality
 predicate on a zone-mapped column must prune files automatically, with
 the residual predicate keeping the answer identical.
 """
@@ -9,21 +9,19 @@ import pyspark.sql.functions as F
 
 from rocket_etl_spark.generate import change_events
 from rocket_etl_spark.lake.lookup import _parse_prunable_conjuncts, filtered_read
-from rocket_etl_spark.lake.maintenance import compact
 from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
 
 
-def _clustered_table(spark, tmp_path):
+def _key_sliced_table(spark, tmp_path):
     table = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
     ev = change_events(spark, 6000, seed=31, delete_frac=0.05)
-    replay_batch(table, ev, epoch_id=0)
-    # clustered compaction: each file covers a disjoint (repo, path) slice,
-    # the layout zone-map range pruning exists to exploit (explicit
-    # buckets: the selective default skips 1-file buckets)
-    compact(
-        table, buckets=[0, 1, 2, 3], sort_cols=["repo", "path"],
-        target_file_rows=400,
-    )
+    # one epoch per disjoint repo slice (org0-2, org3-5, org6-9): no key
+    # recurs across epochs, so each epoch adds its own files and every
+    # file covers one slice — the layout zone-map range pruning exploits
+    for i, digits in enumerate(["012", "345", "6789"]):
+        replay_batch(
+            table, ev.filter(F.substring("repo", 4, 1).isin(*digits)), epoch_id=i
+        )
     return table
 
 
@@ -52,7 +50,7 @@ def test_parser_is_conservative():
 
 
 def test_filtered_read_prunes_and_matches(spark, tmp_path):
-    table = _clustered_table(spark, tmp_path)
+    table = _key_sliced_table(spark, tmp_path)
     lo = table.read().select(F.min("repo")).first()[0]
     pred = f"repo <= '{lo}'"
     pruned, stats = filtered_read(table, pred, return_stats=True)
@@ -69,7 +67,7 @@ def test_jobspec_lake_source_prunes(spark, tmp_path):
         DestSpec, JobSpec, SourceSpec, TransformSpec, extract, run_job,
     )
 
-    table = _clustered_table(spark, tmp_path)
+    table = _key_sliced_table(spark, tmp_path)
     lo = table.read().select(F.min("repo")).first()[0]
     spec = JobSpec(
         name="lake-read",
@@ -122,15 +120,13 @@ def test_value_bounds_never_hide_the_mor_winner(spark, tmp_path):
     zone maps (the order column included) must not drop the winner's
     base file from a delta-bearing bucket; key-column bounds still prune
     there."""
-    from rocket_etl_spark.lake.lookup import range_scan
-
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=1)
     replay_batch(t, _event(spark, "r", "a.py", 10, "python"), epoch_id=0)
     replay_batch(t, _event(spark, "z", "b.py", 11, "python"), epoch_id=1)
     replay_batch(t, _event(spark, "r", "a.py", 5, "go"), epoch_id=2, mode="mor")
     assert t.read().filter("lang = 'go'").count() == 0
     assert filtered_read(t, "lang = 'go'").count() == 0
-    assert range_scan(t, "lang", "go", "go").count() == 0
+    assert filtered_read(t, "lang >= 'go' AND lang <= 'go'").count() == 0
     assert filtered_read(t, "last_event_seq <= 5").count() == 0
     got, stats = filtered_read(t, "repo = 'z'", return_stats=True)
     assert [(r.repo, r.path) for r in got.collect()] == [("z", "b.py")]
@@ -143,7 +139,6 @@ def test_legacy_winner_survives_a_late_mor_delta(spark, tmp_path):
     of the same key as a delta under the current one.  The delta must
     reconcile against the legacy file, and value bounds must not drop
     the legacy file while a delta exists."""
-    from rocket_etl_spark.lake.lookup import range_scan
     from rocket_etl_spark.lake.maintenance import evolve_buckets
 
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=1)
@@ -152,14 +147,13 @@ def test_legacy_winner_survives_a_late_mor_delta(spark, tmp_path):
     replay_batch(t, _event(spark, "r", "a.py", 5, "go"), epoch_id=1, mode="mor")
     assert [(r.lang, r.last_event_seq) for r in t.read().collect()] == [("python", 10)]
     assert filtered_read(t, "lang = 'go'").count() == 0
-    assert range_scan(t, "lang", "go", "go").count() == 0
+    assert filtered_read(t, "lang >= 'go' AND lang <= 'go'").count() == 0
     assert filtered_read(t, "lang = 'python'").count() == 1
 
 
 def test_date_literals_bound_like_spark_reads_them(spark, tmp_path):
     """``'2024-1-5'`` is the date 2024-01-05 to Spark; compared as a raw
     string it sorts after ``'2024-01-07'`` and would prune that file."""
-    from rocket_etl_spark.lake.lookup import range_scan
     from rocket_etl_spark.lake.merge import merge_batch
     from rocket_etl_spark.lake.table import LakeTable
     from rocket_etl_spark.schema.registry import TableSchema
@@ -179,5 +173,5 @@ def test_date_literals_bound_like_spark_reads_them(spark, tmp_path):
         epoch_id=0,
     )
     assert filtered_read(t, "d >= '2024-1-5'").count() == 1
-    assert range_scan(t, "d", lo="2024-1-5").count() == 1
+    assert filtered_read(t, "d BETWEEN '2024-1-5' AND '2024-1-7'").count() == 1
     assert filtered_read(t, "d >= '2024-1-8'", return_stats=True)[1]["files_scanned"] == 0

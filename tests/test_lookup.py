@@ -105,44 +105,42 @@ def test_lookup_bounds_and_shape_errors(spark, tmp_path):
         lookup(t, [("only-one-part",)])
 
 
-def test_range_scan_equals_filter_and_prunes_after_clustering(spark, tmp_path):
-    """range_scan returns exactly read().filter(lo <= col <= hi); after a
-    CLUSTERED compaction (sorted disjoint slices + zone maps) a selective
-    range provably skips files."""
-    from rocket_etl_spark.lake.lookup import range_scan
-    from rocket_etl_spark.lake.maintenance import compact
+def test_key_range_filtered_read_equals_filter_and_prunes(spark, tmp_path):
+    """A key-range filtered_read returns exactly read().filter(lo <= col
+    <= hi), and on epochs that each carry a disjoint repo slice (so each
+    file's zone map covers one slice) a selective range skips files."""
+    from pyspark.errors import AnalysisException
+
+    from rocket_etl_spark.lake.lookup import filtered_read
 
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
-    for i in range(6):
+    for i, digits in enumerate(["01", "23", "45", "67", "8", "9"]):
         ev = change_events(spark, 300, seed=40 + i).withColumn(
             "path", F.concat(F.lit(f"e{i}/"), F.col("path"))
         )
-        replay_batch(t, ev, epoch_id=i)
+        replay_batch(t, ev.filter(F.substring("repo", 4, 1).isin(*digits)), epoch_id=i)
 
     lo, hi = "org2", "org5"  # covers org2/... through org4/...
     want = t.read().filter((F.col("repo") >= lo) & (F.col("repo") <= hi))
-    got = range_scan(t, "repo", lo, hi)
+    got, stats = filtered_read(
+        t, f"repo >= '{lo}' AND repo <= '{hi}'", return_stats=True
+    )
     assert _rows(got) == _rows(want)
     assert got.count() > 0
+    assert stats["pruned_on"] == ["repo"]
+    assert stats["files_scanned"] < stats["files_total"], stats
 
-    compact(t, sort_cols=["repo", "path"], target_file_rows=150, min_files=1)
-    got2, stats = range_scan(t, "repo", lo, hi, return_stats=True)
-    assert _rows(got2) == _rows(want)  # same snapshot content post-compact
-    assert stats["pruned"] and stats["files_scanned"] < stats["files_total"]
-
-    # open-ended bounds + misuse errors
-    assert _rows(range_scan(t, "repo", lo=None, hi="org1")) == _rows(
+    # open-ended bounds
+    assert _rows(filtered_read(t, "repo <= 'org1'")) == _rows(
         t.read().filter(F.col("repo") <= "org1")
     )
-    # since late r5 non-key supported columns scan too (column bounds);
-    # only an unknown/unsupported column is rejected
-    assert _rows(range_scan(t, "content", "a", "zzzz")) == _rows(
+    # non-key supported columns prune too (column bounds); an unknown
+    # column fails in the residual filter
+    assert _rows(filtered_read(t, "content >= 'a' AND content <= 'zzzz'")) == _rows(
         t.read().filter((F.col("content") >= "a") & (F.col("content") <= "zzzz"))
     )
-    with pytest.raises(Exception, match="zone-map-supported|not found|no field"):
-        range_scan(t, "no_such_col", "a", "b")
-    with pytest.raises(ValueError, match="bound"):
-        range_scan(t, "repo")
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        filtered_read(t, "no_such_col >= 'a' AND no_such_col <= 'b'")
 
 
 def _jobs_run(spark, fn):

@@ -9,7 +9,7 @@ import pandas as pd
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from rocket_etl_spark.lake.lookup import filtered_read, lookup, range_scan
+from rocket_etl_spark.lake.lookup import filtered_read, lookup
 from rocket_etl_spark.oracle import replay_oracle
 from rocket_etl_spark.streaming.replay import EVENTS_DDL, create_repo_files_table, replay_batch
 
@@ -39,26 +39,23 @@ def _sql_lit(v):
 def _assert_filters_match(table, ora, probes):
     """Zone-map-pruned reads equal the oracle filtered the same way: each
     ``(col, lo, hi)`` probe (either bound may be None) goes through
-    ``filtered_read`` as a SQL predicate and through ``range_scan``."""
+    ``filtered_read`` as a SQL predicate, once as ``col = v`` when the
+    bounds are equal and once as a ``>=``/``<=`` range."""
     for col, lo, hi in probes:
-        conj = []
+        rng = [f"{col} >= {_sql_lit(lo)}"] * (lo is not None)
+        rng += [f"{col} <= {_sql_lit(hi)}"] * (hi is not None)
+        preds = [" AND ".join(rng)]
         if lo is not None and lo == hi:
-            conj.append(f"{col} = {_sql_lit(lo)}")
-        else:
-            conj += [f"{col} >= {_sql_lit(lo)}"] * (lo is not None)
-            conj += [f"{col} <= {_sql_lit(hi)}"] * (hi is not None)
+            preds.append(f"{col} = {_sql_lit(lo)}")
         keep = pd.Series(True, index=ora.index)
         if lo is not None:
             keep &= ora[col] >= lo
         if hi is not None:
             keep &= ora[col] <= hi
         want = ora[keep].reset_index(drop=True)
-        for reader, df in [
-            ("filtered_read", filtered_read(table, " AND ".join(conj))),
-            ("range_scan", range_scan(table, col, lo, hi)),
-        ]:
-            got = df.toPandas()
-            assert len(got) == len(want), (reader, col, lo, hi, got, want)
+        for pred in preds:
+            got = filtered_read(table, pred).toPandas()
+            assert len(got) == len(want), (pred, got, want)
             if len(want):
                 got = got.sort_values(["repo", "path"]).reset_index(drop=True)
                 pd.testing.assert_frame_equal(got[ora.columns], want, check_dtype=False)

@@ -21,7 +21,7 @@ import pandas as pd
 import pytest
 
 from rocket_etl_spark.generate import change_events
-from rocket_etl_spark.lake.lookup import lookup, range_scan
+from rocket_etl_spark.lake.lookup import filtered_read, lookup
 from rocket_etl_spark.lake.maintenance import (
     compact,
     evolve_buckets,
@@ -133,7 +133,7 @@ def test_exactly_once_fence_survives_evolution(spark, tmp_path):
     )
 
 
-def test_lookup_and_range_scan_probe_legacy_layouts(spark, tmp_path):
+def test_lookup_and_filtered_read_probe_legacy_layouts(spark, tmp_path):
     events = change_events(spark, 3_000, seed=13, delete_frac=0.0)
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
     replay_batch(t, events, epoch_id=0)
@@ -149,7 +149,7 @@ def test_lookup_and_range_scan_probe_legacy_layouts(spark, tmp_path):
     assert stats["files_scanned"] <= stats["files_total"]
 
     lo, hi = full["repo"].min(), full["repo"].min()
-    rs = range_scan(t, "repo", lo, hi)
+    rs = filtered_read(t, f"repo >= '{lo}' AND repo <= '{hi}'")
     expect = full[(full["repo"] >= lo) & (full["repo"] <= hi)]
     assert rs.count() == len(expect)
 

@@ -37,6 +37,14 @@ def _events(spark, n, seed=7, **kw):
     return change_events(spark, n, seed=seed, **kw)
 
 
+def _unreferenced(table) -> set[str]:
+    """Data files that no main-chain snapshot and no branch references."""
+    refs, _ = table._referenced(
+        table._snapshot_files() + list(table.snap_dir.glob("branch-*.json"))
+    )
+    return {str(p.relative_to(table.path)) for p in table.data_dir.rglob("*.parquet")} - refs
+
+
 def test_stage_invisible_then_publish_equals_direct_merge(spark, tmp_path):
     ev0 = _events(spark, 3_000)
     ev1 = _events(spark, 1_000, seed=8)
@@ -197,6 +205,21 @@ def test_cow_stage_over_mor_deltas_stays_invisible_until_publish(spark, tmp_path
     with pytest.raises(StageError):
         stage_replay(branch_table(t, "bf"), _events(spark, 300, seed=12), epoch_id=4)
     assert list_staged(t) == []
+
+
+def test_abort_cow_stage_over_mor_deltas_removes_the_fold(spark, tmp_path):
+    """The pre-merge delta fold of a COW stage commits a compaction into
+    the stage's branch; that compaction records no ``added_files``, and
+    an abort must still delete its output."""
+    t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
+    replay_batch(t, _events(spark, 1_000), epoch_id=0)
+    replay_batch(t, _events(spark, 300, seed=9), epoch_id=1, mode="mor")
+    before, state = _unreferenced(t), _state(t)
+    st = stage_replay(t, _events(spark, 300, seed=10), epoch_id=2)
+    res = abort_staged(t, st)
+    assert res["aborted"] and res["files_removed"] > 0
+    assert _unreferenced(t) == before
+    pd.testing.assert_frame_equal(_state(t), state)
 
 
 def test_failed_stage_strands_no_marker(spark, tmp_path):

@@ -145,17 +145,24 @@ def test_range_hit_semantics():
 def test_zone_maps_cover_non_key_columns_with_truncated_bounds(spark, tmp_path):
     """Since late r5 every supported column gets footer min/max (Iceberg
     column bounds), with long string bounds truncated safely — so
-    range_scan prunes on NON-KEY columns too, and a KB-sized content
+    filtered_read prunes on NON-KEY columns too, and a KB-sized content
     column never bloats the snapshot JSON."""
+    from pyspark.errors import AnalysisException
+
+    from rocket_etl_spark.functions.lang import normalize_lang_expr
     from rocket_etl_spark.generate import change_events
-    from rocket_etl_spark.lake.lookup import range_scan
-    from rocket_etl_spark.lake.maintenance import compact
+    from rocket_etl_spark.lake.lookup import filtered_read
     from rocket_etl_spark.lake.planner import _RANGE_TRUNC
     from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
 
     events = change_events(spark, 6_000, seed=21, delete_frac=0.0)
     t = create_repo_files_table(spark, tmp_path / "t", num_buckets=2)
-    replay_batch(t, events, epoch_id=0)
+    # one epoch per disjoint NON-KEY slice (lang below, at and above
+    # 'go'; lang is a function of the key, so no key spans two epochs):
+    # every file covers one slice -> pruning
+    lang = normalize_lang_expr("lang")
+    for i, cond in enumerate([lang < "go", lang == "go", lang > "go"]):
+        replay_batch(t, events.filter(cond), epoch_id=i)
     snap = t.current_snapshot()
     for fl in snap["buckets"].values():
         for fe in fl:
@@ -166,18 +173,17 @@ def test_zone_maps_cover_non_key_columns_with_truncated_bounds(spark, tmp_path):
                     # truncation cap (+1 for the incremented last char)
                     assert len(mn) <= _RANGE_TRUNC and len(mx) <= _RANGE_TRUNC + 1
 
-    # cluster by the NON-KEY column -> disjoint lang slices -> pruning
-    compact(t, min_files=1, sort_cols=["lang"], target_file_rows=400)
-    df, st = range_scan(t, "lang", "go", "go", return_stats=True)
+    df, st = filtered_read(t, "lang >= 'go' AND lang <= 'go'", return_stats=True)
     assert st["files_scanned"] < st["files_total"], st
     expect = t.read().filter("lang = 'go'").count()
     assert df.count() == expect
 
     # truncated CONTENT bounds stay correct for range predicates
     some = t.read().select("content").first()[0]
-    df2 = range_scan(t, "content", some, some)
+    assert "'" not in some and "\\" not in some  # a plain SQL literal
+    df2 = filtered_read(t, f"content >= '{some}' AND content <= '{some}'")
     assert df2.count() == t.read().filter(F.col("content") == some).count()
 
-    # a non-supported dtype is rejected with the helpful error
-    with pytest.raises(ValueError, match="zone-map-supported"):
-        range_scan(t, "nope", 1, 2)
+    # an unknown column prunes nothing and fails in the residual filter
+    with pytest.raises(AnalysisException, match="nope"):
+        filtered_read(t, "nope >= 1 AND nope <= 2")
