@@ -4,9 +4,12 @@
         --events <dir-or-uri> --table <table-path> --checkpoint <ckpt-path> \
         [--create --buckets 64] [--max-files-per-trigger 16] [--follow]
 
-Drains everything currently available (availableNow) unless --follow is
-given, in which case the query runs until terminated; either way the job
-is resumable from its checkpoint and every epoch is exactly-once fenced.
+Drains everything currently available (availableNow) and exits, unless
+--follow is given: then the query keeps tailing the directory and the job
+runs until the query is stopped or the job is killed.  Either way every
+micro-batch takes the one epoch path a batch replay takes
+(``replay_stream`` → ``replay_batch``), the job is resumable from its
+checkpoint and every epoch is exactly-once fenced.
 """
 
 from __future__ import annotations

@@ -177,7 +177,9 @@ def _compact_once(
     commit_tag = f"compact-{snap['snapshot_id'] + 1:08d}-{uuid.uuid4().hex[:8]}"
     out_dir_rel = f"data/{commit_tag}"
     out_dir = table.path / out_dir_rel
-    shaped = df.withColumn("_bucket", table.bucket_expr()).repartition(
+    shaped = df.withColumn(
+        "_bucket", bucket_of(snap["key_cols"], int(snap["num_buckets"]))
+    ).repartition(
         max(len(cand) + sum(len(v) for v in leg_sel.values()), 1), "_bucket"
     )
     shaped.write.partitionBy("_bucket").parquet(str(out_dir))

@@ -46,10 +46,10 @@ from pathlib import Path
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DateType, StructType, TimestampNTZType, TimestampType
 
-from rocket_etl_spark.lake.planner import (  # noqa: F401  legacy_layouts: importable from here
+from rocket_etl_spark.lake.planner import (  # noqa: F401  bucket_of, legacy_layouts: importable from here
     FilePlan,
     bucket_of,
     legacy_layouts,
@@ -334,7 +334,9 @@ class LakeTable:
     def _resolve_snapshot(self, snap: dict) -> dict:
         """Replace manifest references (string values in bucket maps) with
         their resolved file-entry lists.  Inline lists (pre-manifest
-        snapshots, staged/branch snapshots) pass through untouched."""
+        snapshots, and the empty lists ``_externalize_snapshot`` keeps
+        inline) pass through untouched; branch snapshots are externalized
+        like main-chain ones and resolve the same way."""
         def rb(bm: dict) -> dict:
             return {
                 b: (self._manifest_entries(v) if isinstance(v, str) else v)
@@ -605,13 +607,13 @@ class LakeTable:
         (Delta CDF / Iceberg changelog equivalent).
 
         Free by construction: every MERGE stamps each written row with its
-        ``_action`` (insert/update/delete/keep/stale/tombstone), and each
-        snapshot records the files its commit added in ``added_files``
-        (explicit, so a CAS-retried commit is attributed to the snapshot
-        that actually published it — never inferred from path prefixes).
-        Only net changes are returned (keep/stale rows and tombstone-noops
-        are filtered); compaction snapshots contribute nothing (they
-        rewrite, they don't change).
+        ``_action`` (insert/update/delete/keep/tombstone; upsert/delete in
+        a merge-on-read delta), and each snapshot records the files its
+        commit added in ``added_files`` (explicit, so a CAS-retried commit
+        is attributed to the snapshot that actually published it — never
+        inferred from path prefixes).  Only net changes are returned (keep
+        rows and tombstone-noops are filtered); compaction snapshots
+        contribute nothing (they rewrite, they don't change).
         """
         cur = self.current_snapshot()
         to_snapshot = cur["snapshot_id"] if to_snapshot is None else to_snapshot
@@ -643,11 +645,3 @@ class LakeTable:
     def key_cols(self) -> list[str]:
         return list(self.current_snapshot()["key_cols"])
 
-    def order_col(self) -> str:
-        return self.current_snapshot()["order_col"]
-
-    def num_buckets(self) -> int:
-        return int(self.current_snapshot()["num_buckets"])
-
-    def bucket_expr(self) -> Column:
-        return bucket_of(self.key_cols(), self.num_buckets())

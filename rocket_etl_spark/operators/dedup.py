@@ -1,6 +1,7 @@
 """Deduplication operators for training-data pipelines.
 
-The cascade, cheapest-first — the standard shape for 100 TB corpora:
+The stages of a dedupe cascade, cheapest-first — the standard shape for
+100 TB corpora:
 
 * exact        — hash groupBy; one shuffle, map-side combine.
 * ngram-jaccard— EXACT set similarity via prefix-filtered similarity
@@ -12,10 +13,9 @@ The cascade, cheapest-first — the standard shape for 100 TB corpora:
 * embedding    — cosine near-dups over a vector column (banded
                  hyperplane LSH by default; exact block mode for
                  oracle checks).
-* components   — pairs → transitively-closed clusters → one
-                 representative (``neardup_components``/``dedupe_corpus``),
-                 the step that turns similarity output into a dedupe
-                 DECISION.
+* components   — pairs → transitively-closed clusters labelled by
+                 their min id (``neardup_components``), the step that
+                 turns similarity output into a dedupe DECISION.
 
 Set/sketch math is JVM higher-order functions (transform/aggregate/
 zip_with) where those stay linear, and vectorized numpy pandas UDFs
@@ -44,30 +44,7 @@ def exact_dedup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", order_col: str | None = None) -> DataFrame:
-    """Keep one representative row per distinct text (min ``order_col``)."""
-    order_col = order_col or df.columns[0]
-    packed = df.groupBy(F.sha2(F.col(text_col), 256).alias("_h")).agg(
-        F.min_by(F.struct(*[F.col(c) for c in df.columns]), F.col(order_col)).alias("_w")
-    )
-    return packed.select(*[F.col(f"_w.{c}").alias(c) for c in df.columns])
-
-
 # ------------------------------------------------------------- n-grams
-def ngram_shingles(text_col: str | Column, n: int = 3) -> Column:
-    """Distinct token n-gram shingles of a text column (JVM higher-order).
-
-    NOTE: as a single inline expression, the token split would be
-    re-evaluated for every shingle position (Catalyst inlines the lambda
-    operand).  Prefer ``shingle_frame`` for DataFrame pipelines — it
-    materializes the token array behind a projection boundary first."""
-    toks = tokens(text_col)
-    idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(0)))
-    return F.array_distinct(
-        F.transform(idx, lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]))
-    )
-
-
 def shingle_frame(
     df: DataFrame, text_col: str, id_col: str, n: int, extra_cols: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -211,18 +188,6 @@ def md5_60bit(c: Column) -> Column:
     sketch queries DuckDB-oracle-checkable.  ~5x slower than xxhash64, so
     it is the ORACLE hash; xxhash64 stays the production default."""
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint")
-
-
-def minhash_signature(text_col: str | Column, num_hashes: int = 32, n: int = 3) -> Column:
-    """MinHash sketch: for seed j, min over shingles of xxhash64(shingle, j).
-
-    Pure JVM: transform over a literal seed array, array_min inside."""
-    sh = ngram_shingles(text_col, n)
-    seeds = F.array(*[F.lit(j) for j in range(num_hashes)])
-    return F.transform(
-        seeds,
-        lambda j: F.array_min(F.transform(sh, lambda s: F.xxhash64(s, j))),
-    )
 
 
 def minhash_lsh_pairs(
@@ -518,7 +483,7 @@ def simhash_pairs(
     )
 
 
-# ------------------------------------------- components / corpus dedupe
+# ------------------------------------------------------- components
 def neardup_components(
     df: DataFrame,
     pairs: DataFrame,
@@ -586,61 +551,15 @@ def neardup_components(
             converged = True
             break
     if not converged:
-        # silently returning a partial closure would make dedupe_corpus
-        # keep multiple "representatives" of one cluster — fail loudly;
-        # real near-dup clusters are short-diameter, so hitting this means
-        # a pathological chain (raise max_iter deliberately if intended)
+        # silently returning a partial closure would keep multiple
+        # "representatives" of one cluster — fail loudly; real near-dup
+        # clusters are short-diameter, so hitting this means a
+        # pathological chain (raise max_iter deliberately if intended)
         raise RuntimeError(
             f"neardup_components did not converge within max_iter={max_iter} "
             "rounds (cluster diameter exceeds the bound)"
         )
     return labels.select(F.col("id").alias(id_col), F.col("comp").alias("component_id"))
-
-
-def dedupe_corpus(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-) -> DataFrame:
-    """The corpus with one representative (min id) kept per near-dup
-    cluster — the terminal op of the dedupe cascade: pairs (from any of
-    exact/ngram/minhash/simhash/embedding) → components → keep-list →
-    semi-join filter.  The keep decision never moves document payloads:
-    only (id, component_id) rows shuffle."""
-    comps = neardup_components(df, pairs, id_col, id_a, id_b)
-    keep = comps.filter(F.col(id_col) == F.col("component_id")).select(id_col)
-    return df.join(keep, on=id_col, how="left_semi")
-
-
-def dedupe_cascade(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.85,
-    num_hashes: int = 32,
-    bands: int = 8,
-    n: int = 3,
-) -> DataFrame:
-    """One-call corpus dedupe — the full cascade as a user would run it:
-
-    1. exact: collapse byte-identical texts (cheapest, removes the bulk);
-    2. near-dup candidates: banded MinHash LSH over the survivors,
-       exact-Jaccard verified at ``threshold``;
-    3. decision: connected components over the verified pairs, keep the
-       min-id representative per cluster.
-
-    Returns the deduplicated corpus with the input's columns.  Each stage
-    only ever shuffles what it needs: hashes for (1), sketches for (2),
-    (id, label) rows for (3) — document payloads move only in stage 1's
-    representative pick and the final semi-join."""
-    survivors = exact_dedup(df, text_col=text_col, order_col=id_col)
-    pairs = minhash_lsh_pairs(
-        survivors, text_col=text_col, id_col=id_col,
-        num_hashes=num_hashes, bands=bands, n=n, threshold=threshold,
-    )
-    return dedupe_corpus(survivors, pairs, id_col=id_col)
 
 
 # ----------------------------------------------------- embedding cosine

@@ -28,6 +28,7 @@ from pathlib import Path
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from rocket_etl_spark.lake.maintenance import _retry_cas
 from rocket_etl_spark.lake.merge import CommitResult, append_batch, merge_batch
 from rocket_etl_spark.lake.table import LakeTable, child_snapshot
 from rocket_etl_spark.schema.registry import TableSchema
@@ -206,19 +207,25 @@ def load(df: DataFrame, spec: JobSpec) -> CommitResult | None:
         # snapshot commit, so history/time-travel is preserved)
         spark = df.sparkSession
         table = LakeTable.load(spark, d.path)
-        wiped = _wipe_snapshot(table)
+        _wipe_snapshot(table)
         batch = df if "op" in df.columns else df.withColumn("op", F.lit("upsert"))
-        return merge_batch(table, batch) if wiped else None
+        return merge_batch(table, batch)
     raise ValueError(f"unknown dest mode {d.mode!r}")
 
 
-def _wipe_snapshot(table: LakeTable) -> bool:
+def _wipe_snapshot(table: LakeTable) -> dict:
     """Commit an empty table state — retired layouts included — as the
-    tip's child; False when another writer won the snapshot id."""
-    return table._try_write_snapshot(child_snapshot(
-        table.current_snapshot(),
-        buckets={}, legacy=None, added_files={}, stats={"wiped": True},
-    ))
+    tip's child.  A lost snapshot CAS retries from the new tip, within
+    the bound every maintenance writer uses (``maintenance._retry_cas``),
+    so the wipe either lands or raises."""
+    def attempt() -> dict | None:
+        snap = child_snapshot(
+            table.current_snapshot(),
+            buckets={}, legacy=None, added_files={}, stats={"wiped": True},
+        )
+        return snap if table._try_write_snapshot(snap) else None
+
+    return _retry_cas("overwrite wipe", attempt)
 
 
 def run_job(spark: SparkSession, spec: JobSpec, notifier=None) -> CommitResult | None:

@@ -7,7 +7,8 @@ The pipeline the north star describes (BASELINE.json:6):
 
 ``replay_stream`` tails a directory of event batches with a file source
 (the sandbox stand-in for a Kafka/binlog source — no Kafka jar offline,
-SURVEY.md §0), processes each micro-batch in ``foreachBatch``, and is
+SURVEY.md §0), replays each micro-batch with ``replay_batch`` in
+``foreachBatch`` (the one epoch path batch and stream share), and is
 resumable from its checkpoint: after a crash, Spark replays the last
 uncommitted epoch, and the lake's epoch fence turns the duplicate MERGE
 into a no-op — exactly-once table effects over an at-least-once source.
@@ -406,8 +407,17 @@ def replay_stream(
 ) -> list[CommitResult]:
     """Tail ``events_dir`` and MERGE each micro-batch (exactly-once).
 
+    One epoch path: each micro-batch is a ``replay_batch`` (or, audited,
+    a ``stage_replay``) under the stream's ``app_id`` with the Structured
+    Streaming batch id as its epoch, so prepare → align → MERGE and the
+    re-align on a ``CommitConflict`` run exactly as in a batch replay.
+
     ``available_now=True`` drains everything currently in the directory
-    and stops — the replay/benchmark mode.  With a watermark string
+    and stops — the replay/benchmark mode.  ``available_now=False`` runs
+    the default trigger and returns only once the query is stopped
+    (``StreamingQuery.stop()``, e.g. from ``spark.streams.active``) or
+    fails; both modes return the epochs they ran and notify the stream's
+    success or failure the same way.  With a watermark string
     (e.g. ``'10 minutes'``), at-least-once source duplicates are dropped
     via ``dropDuplicatesWithinWatermark`` on (repo, path, commit) before
     the MERGE (T4 in SURVEY.md §2.9); correctness never depends on it —
@@ -500,56 +510,47 @@ def replay_stream(
         stream = stream.withWatermark("event_ts", source_dedupe_watermark)
         stream = stream.dropDuplicatesWithinWatermark(["repo", "path", "commit"])
 
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        t0 = time.monotonic()
-        prepared = prepare_events(batch_df, defer_hash=True)
-        derived = sha256_derived()
-        aligned, new_schema = align_batch(table, prepared, renames, skip_cols=set(derived))
-        if audit_rules:
-            # write–audit–publish per micro-batch: merge into an invisible
-            # staged snapshot, audit the would-be state, publish only if
-            # clean.  A rejected batch aborts (no trace, epoch unfenced)
-            # and its RAW events land in the quarantine sink — the
-            # checkpoint will mark the batch consumed either way, so the
-            # quarantine is the only durable copy of a poisoned epoch.
-            from rocket_etl_spark.lake.wap import (
-                abort_staged,
-                audit_staged,
-                publish_staged,
-                stage_merge,
-            )
+    committed = 0  # non-skipped epochs: the compaction and MV refresh clock
 
-            st = stage_merge(
-                table, aligned, epoch_id=epoch_id, app_id=app_id,
-                new_schema=new_schema, derived_cols=derived, mode=mode,
-            )
-            res = st.result
-            if not res.skipped:
-                audit = audit_staged(table, st, audit_rules)
-                if audit["ok"]:
-                    publish_staged(table, st)
-                else:
-                    abort_staged(table, st)
-                    (
-                        batch_df
-                        .withColumn("_epoch_id", F.lit(epoch_id).cast("long"))
-                        .withColumn("_quarantined_ts", F.current_timestamp())
-                        .write.mode("append").parquet(str(quarantine_dir))
-                    )
-                    safe_notify(notifier, {
-                        "kind": "epoch", "app_id": app_id, "epoch_id": epoch_id,
-                        "status": "audit_rejected",
-                        "violations": audit["violations"],
-                        "by_rule": audit["by_rule"],
-                    })
-                    res = CommitResult(
-                        snapshot_id=table.current_snapshot()["snapshot_id"],
-                        epoch_id=epoch_id, skipped=True,
-                    )
+    def audited_epoch(batch_df: DataFrame, epoch_id: int) -> CommitResult:
+        # write–audit–publish: stage the batch replay, audit the would-be
+        # state, publish only if clean.  A rejected batch aborts (no trace,
+        # epoch unfenced) and its RAW events land in the quarantine sink —
+        # the checkpoint marks the batch consumed either way, so the
+        # quarantine is the only durable copy of a poisoned epoch.
+        from rocket_etl_spark.lake.wap import abort_staged, audit_staged, publish_staged
+
+        st = stage_replay(table, batch_df, epoch_id, renames, app_id=app_id, mode=mode)
+        audit = audit_staged(table, st, audit_rules)  # a fenced stage passes
+        if audit["ok"]:
+            publish_staged(table, st)  # ... and publishes nothing
+            return st.result
+        abort_staged(table, st)
+        (
+            batch_df
+            .withColumn("_epoch_id", F.lit(epoch_id).cast("long"))
+            .withColumn("_quarantined_ts", F.current_timestamp())
+            .write.mode("append").parquet(str(quarantine_dir))
+        )
+        safe_notify(notifier, {
+            "kind": "epoch", "app_id": app_id, "epoch_id": epoch_id,
+            "status": "audit_rejected",
+            "violations": audit["violations"],
+            "by_rule": audit["by_rule"],
+        })
+        return CommitResult(
+            snapshot_id=table.current_snapshot()["snapshot_id"],
+            epoch_id=epoch_id, skipped=True,
+        )
+
+    def process(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal committed
+        t0 = time.monotonic()
+        if audit_rules:
+            res = audited_epoch(batch_df, epoch_id)
         else:
-            res = merge_batch(
-                table, aligned, epoch_id=epoch_id, new_schema=new_schema,
-                app_id=app_id, derived_cols=derived, mode=mode,
+            res = replay_batch(
+                table, batch_df, epoch_id, renames, app_id=app_id, mode=mode,
                 mor_compact_threshold=mor_compact_threshold,
             )
         res.wall_ms = int((time.monotonic() - t0) * 1000)
@@ -561,11 +562,10 @@ def replay_stream(
             "rows_upserted": res.rows_upserted, "rows_deleted": res.rows_deleted,
             "snapshot_id": res.snapshot_id, "wall_ms": res.wall_ms,
         })
-        if (
-            compact_every
-            and not res.skipped
-            and len([r for r in results if not r.skipped]) % compact_every == 0
-        ):
+        if res.skipped:
+            return
+        committed += 1
+        if compact_every and committed % compact_every == 0:
             from rocket_etl_spark.lake.maintenance import compact
 
             # purge watermark = redelivery low-watermark, NOT this epoch's
@@ -578,11 +578,7 @@ def replay_stream(
                 else None
             )
             compact(table, tombstone_watermark=wm)
-        if (
-            refresh_mvs
-            and not res.skipped
-            and len([r for r in results if not r.skipped]) % max(refresh_every, 1) == 0
-        ):
+        if refresh_mvs and committed % max(refresh_every, 1) == 0:
             for mv in refresh_mvs:
                 mv.refresh(table)
 
@@ -590,23 +586,21 @@ def replay_stream(
         "checkpointLocation", str(checkpoint_dir)
     )
     if available_now:
-        q = writer.trigger(availableNow=True).start()
-        try:
-            q.awaitTermination()
-        except Exception:
-            safe_notify(notifier, {
-                "kind": "stream", "app_id": app_id, "status": "failure",
-                "epochs": len(results),
-            })
-            raise
+        writer = writer.trigger(availableNow=True)
+    q = writer.start()
+    try:
+        q.awaitTermination()
+    except Exception:
         safe_notify(notifier, {
-            "kind": "stream", "app_id": app_id, "status": "success",
+            "kind": "stream", "app_id": app_id, "status": "failure",
             "epochs": len(results),
-            "rows_in": sum(r.rows_in for r in results),
-            "rows_upserted": sum(r.rows_upserted for r in results),
-            "rows_deleted": sum(r.rows_deleted for r in results),
         })
-    else:
-        q = writer.start()
-        return results  # caller manages the query lifecycle
+        raise
+    safe_notify(notifier, {
+        "kind": "stream", "app_id": app_id, "status": "success",
+        "epochs": len(results),
+        "rows_in": sum(r.rows_in for r in results),
+        "rows_upserted": sum(r.rows_upserted for r in results),
+        "rows_deleted": sum(r.rows_deleted for r in results),
+    })
     return results

@@ -1,4 +1,4 @@
-"""Dedup cascade + similarity search tests.
+"""Dedup operators + similarity search tests.
 
 The sketch ops (minhash/simhash/LSH) have no SQL oracle; their gate is
 exact recomputation: candidates must be verified near-dups and known
@@ -10,7 +10,6 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 
 from rocket_etl_spark.operators.dedup import (
-    exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_pairs,
@@ -32,12 +31,6 @@ def _docs(spark):
         (5, "der schnelle braune fuchs springt über den faulen hund", "de"),
     ]
     return spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
-
-
-def test_exact_dedup_keeps_one_per_text(spark):
-    out = exact_dedup(_docs(spark), order_col="doc_id").toPandas()
-    assert len(out) == 4  # 1&2 collapse
-    assert 1 in set(out.doc_id) and 2 not in set(out.doc_id)
 
 
 def test_minhash_lsh_finds_known_neardups(spark):
@@ -111,24 +104,6 @@ def test_ivf_precomputed_quantizer_reused_across_queries(spark):
     assert 1 < n_lists <= 16  # clustered testdata spreads over real lists
 
 
-def test_dedupe_cascade_end_to_end(spark):
-    """exact dupes AND transitive near-dups collapse; unrelated docs
-    survive; output carries the input columns."""
-    from rocket_etl_spark.operators.dedup import dedupe_cascade
-
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    rows = [
-        (1, base, "en"),
-        (2, base, "en"),                                   # exact dup of 1
-        (3, base.replace("today", "tomorrow"), "en"),      # near dup of 1
-        (4, "completely different text about spark engines and parquet files", "en"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
-    kept = dedupe_cascade(df, threshold=0.5, n=2).toPandas()
-    assert sorted(kept.columns) == ["doc_id", "lang", "text"]
-    assert sorted(kept.doc_id) == [1, 4]
-
-
 def test_simhash_pigeonhole_recall_guarantee(spark):
     """EXACT recall bound: with 6 segments and 2-segment table keys, any
     pair within hamming 6-2=4 MUST be a candidate (k flipped bits touch
@@ -159,8 +134,8 @@ def test_simhash_pigeonhole_recall_guarantee(spark):
 
 def test_components_close_transitively_and_corpus_keeps_min(spark):
     """A~B and B~C (no A~C pair) must collapse to ONE cluster; singletons
-    keep their own id; dedupe_corpus keeps exactly the min id per cluster."""
-    from rocket_etl_spark.operators.dedup import dedupe_corpus, neardup_components
+    keep their own id; each cluster is labelled by its min id."""
+    from rocket_etl_spark.operators.dedup import neardup_components
 
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in (1, 2, 3, 4, 5, 9)], "doc_id bigint, text string"
@@ -171,8 +146,6 @@ def test_components_close_transitively_and_corpus_keeps_min(spark):
     comp = neardup_components(docs, pairs).toPandas()
     got = dict(zip(comp.doc_id, comp.component_id))
     assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 9: 9}
-    kept = sorted(r.doc_id for r in dedupe_corpus(docs, pairs).collect())
-    assert kept == [1, 4, 9]
 
 
 def test_components_string_ids_close_transitively(spark):
@@ -181,7 +154,7 @@ def test_components_string_ids_close_transitively(spark):
     double → NULL every round → false convergence after ONE round, i.e. a
     silently partial transitive closure.  A 3-hop chain needs >1 round,
     so it pins the changed-row-count fixpoint detection."""
-    from rocket_etl_spark.operators.dedup import dedupe_corpus, neardup_components
+    from rocket_etl_spark.operators.dedup import neardup_components
 
     docs = spark.createDataFrame(
         [(f"doc-{i:02d}", f"text {i}") for i in (1, 2, 3, 4, 7)],
@@ -198,8 +171,6 @@ def test_components_string_ids_close_transitively(spark):
         "doc-01": "doc-01", "doc-02": "doc-01", "doc-03": "doc-01",
         "doc-04": "doc-01", "doc-07": "doc-07",
     }
-    kept = sorted(r.doc_id for r in dedupe_corpus(docs, pairs).collect())
-    assert kept == ["doc-01", "doc-07"]
 
 
 def test_components_match_union_find_on_random_graphs(spark):
@@ -294,12 +265,6 @@ def test_zero_norm_vector_never_crashes_or_pairs(spark):
     topk = cosine_topk(df, query_id=1, k=5).collect()
     assert {r.vec_id: r.cos_sim for r in topk}[3] is None
 
-
-def test_exact_dedup_at_scale_shape(spark):
-    """dedup plan: one shuffle (hash agg), no cross join, no collect."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = exact_dedup(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 # ---------------------------------------------- round-2 scale-shape tests
 def test_prefix_filter_candidates_bounded_on_skewed_corpus(spark):

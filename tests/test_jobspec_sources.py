@@ -79,6 +79,54 @@ def test_overwrite_job_wipes_then_loads(spark, tmp_path):
     assert sorted(out.k) == [9]
 
 
+def test_overwrite_wipe_retries_a_lost_cas(spark, tmp_path, monkeypatch):
+    """An upsert commit wins the snapshot id the wipe was about to take:
+    the wipe retries from the new tip, so the overwrite still lands —
+    the interloper's rows go with the wipe — and the success
+    notification reports the overwrite's own commit."""
+    from rocket_etl_spark.lake.merge import merge_batch
+
+    path = tmp_path / "t"
+    spark.createDataFrame([(1, 10), (2, 20)], "k bigint, v bigint").write.parquet(
+        str(tmp_path / "src1")
+    )
+    run_job(spark, JobSpec(
+        name="j",
+        source=SourceSpec(format="parquet", path=str(tmp_path / "src1")),
+        dest=DestSpec(mode="upsert", path=str(path), key_cols=("k",), order_col="v"),
+    ))
+    spark.createDataFrame([(9, 90)], "k bigint, v bigint").write.parquet(str(tmp_path / "src2"))
+
+    orig = LakeTable._try_write_snapshot
+    state = {"fired": False}
+
+    def hooked(self, snap):
+        if not state["fired"]:
+            state["fired"] = True  # the wipe's first CAS: commit ahead of it
+            merge_batch(
+                LakeTable.load(spark, path),
+                spark.createDataFrame([(5, 50, "upsert")], "k bigint, v bigint, op string"),
+            )
+        return orig(self, snap)
+
+    monkeypatch.setattr(LakeTable, "_try_write_snapshot", hooked)
+    events = []
+    res = run_job(spark, JobSpec(
+        name="j",
+        source=SourceSpec(format="parquet", path=str(tmp_path / "src2")),
+        dest=DestSpec(mode="overwrite", path=str(path)),
+    ), notifier=events.append)
+    monkeypatch.undo()
+
+    assert state["fired"] and res is not None and res.rows_upserted == 1
+    table = LakeTable.load(spark, path)
+    assert sorted(table.read().toPandas().k) == [9]
+    assert table.current_snapshot()["snapshot_id"] == res.snapshot_id
+    assert table.snapshot(res.snapshot_id - 1)["stats"] == {"wiped": True}
+    assert events[-1]["status"] == "success"
+    assert events[-1]["snapshot_id"] == res.snapshot_id
+
+
 def test_source_errors_and_checksum(spark, tmp_path):
     with pytest.raises(ValueError, match="declared schema"):
         read_source(spark, SourceSpec(format="csv", path="/nope"))
@@ -162,7 +210,7 @@ def test_rebucket_preserves_state_and_keeps_merging(spark, tmp_path):
 
     before = table.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
     stats = rebucket(table, 16)
-    assert stats["rebucketed"] and table.num_buckets() == 16
+    assert stats["rebucketed"] and table.current_snapshot()["num_buckets"] == 16
     after = table.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(before, after)
 

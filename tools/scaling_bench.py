@@ -2,7 +2,7 @@
 
 The north rule requires throughput scaling efficiency >= 0.8 from N to 4N
 executors (BASELINE.json:14).  No multi-node cluster exists in this
-sandbox, so the sanctioned proxy (BASELINE.md) is the identical job at
+sandbox, so the sanctioned proxy (BENCH/BASELINE.md) is the identical job at
 ``local[8]`` vs ``local[32]`` over the same staged parquet input, each in
 a fresh JVM.  Efficiency = rate(4N) / (4 * rate(N)).
 
