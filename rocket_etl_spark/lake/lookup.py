@@ -247,9 +247,6 @@ _LIT = r"(?:'(?:[^']*)'|-?\d+(?:\.\d+)?)"
 _CONJUNCT_RE = re.compile(
     rf"^\s*({_IDENT})\s*(>=|<=|==|=|>|<)\s*({_LIT})\s*$"
 )
-_BETWEEN_RE = re.compile(
-    rf"^\s*({_IDENT})\s+BETWEEN\s+({_LIT})\s+AND\s+({_LIT})\s*$", re.IGNORECASE
-)
 
 
 def _parse_prunable_conjuncts(predicate: str, schema) -> dict[str, tuple]:

@@ -15,12 +15,13 @@ Execution shape (scale rationale inline):
 
 1. plan: the LWW winner aggregation over (keys, order, op) IS the
    planning pass — it yields the per-key winning order/op (the broadcast
-   MERGE's decision input, cached slim for the commit's duration) and
-   every planning stat in one column-pruned scan of the batch;
+   MERGE's decision input) and every planning stat in one column-pruned
+   scan of the batch.  A small epoch (``DRIVER_PLAN_MAX_ROWS``) is
+   planned in pyarrow over one Arrow collect and its winners return as
+   a local relation; a larger one aggregates on Spark, winners cached;
 2. the touched-bucket set, input stats (rows_in, seq min/max), EXACT
    key cardinality, key bytes, and duplicate-delivery detection reduce
-   from the winner relation in a second (tiny, one-row-per-key input)
-   aggregation — ≤ num_buckets rows reach the driver;
+   from the winner relation per bucket — ≤ num_buckets rows;
 3. one pipeline, two physical strategies chosen from the planning pass's
    key-cardinality estimate: the **broadcast MERGE** (``_merge_broadcast``,
    when the batch key set fits a broadcast) fuses LWW dedupe and MERGE
@@ -76,6 +77,7 @@ regardless of retries.
 
 from __future__ import annotations
 
+import logging
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -115,6 +117,13 @@ SLIM_DEDUPE_MAX_BYTES = 256 * 1024 * 1024
 # JVM hash-relation per-row overhead: UnsafeRow header + ord/action/del
 # fields + map entry — ~64 bytes is deliberately conservative
 _BCAST_ROW_OVERHEAD = 64
+
+# gate for the driver-side plan: an epoch of at most this many events is
+# planned from one Arrow collect of its slim columns (a few tens of bytes
+# per event on the driver); a larger one runs the Spark aggregation
+DRIVER_PLAN_MAX_ROWS = 200_000
+
+log = logging.getLogger(__name__)
 
 class CommitConflict(Exception):
     """A concurrent commit changed the table in a way this merge cannot
@@ -474,6 +483,123 @@ def _merge_broadcast(
     )
 
 
+def _plan_on_spark(
+    batch: DataFrame, keys, order_col: str, nb: int, key_bytes_col
+) -> tuple[DataFrame, list]:
+    """The plan as a two-level Spark aggregation, for epochs above the
+    driver plan's gate: ONE column-pruned pass over (keys, order, op)
+    yields the persisted per-key winner relation (the caller unpersists
+    it), then a second agg over that one-row-per-key relation reduces
+    it per bucket — ≤ num_buckets rows reach the driver."""
+    winners = batch.groupBy(*keys).agg(
+        F.max(order_col).alias("_s_ord"),
+        F.max_by(F.col("op") == "delete", F.col(order_col)).alias("_s_del"),
+        F.count(F.lit(1)).alias("_cnt"),
+        F.min(order_col).alias("_lo"),
+        # EXACT distinct orders per key: Σ equals the distinct (key, order)
+        # pair count — when that equals the row count the batch provably
+        # has no duplicate deliveries and the post-pick dedupe guard is
+        # skipped.  Exact on purpose: an approximation could skip wrongly.
+        F.count_distinct(F.col(order_col)).alias("_nords"),
+        # key BYTES (same pass): sizes the broadcast hash relation — the
+        # key-count gate alone misjudges wide string keys
+        F.sum(key_bytes_col).alias("_kb"),
+    ).persist()
+    plan_rows = (
+        winners.groupBy(bucket_of(keys, nb).alias("_bucket"))
+        .agg(
+            F.sum("_cnt").alias("n"),
+            F.min("_lo").alias("lo"),
+            F.max("_s_ord").alias("hi"),
+            # EXACT per-bucket key cardinality (one row per key reaches
+            # this agg — no HLL needed)
+            F.count(F.lit(1)).alias("dk"),
+            F.sum("_kb").alias("kb"),
+            F.sum("_nords").alias("ndp"),
+            # delete-winner count per bucket: the merge-on-read path's
+            # whole stats story (it never reads _action back from files)
+            F.sum(F.when(F.col("_s_del"), 1).otherwise(0)).alias("ndl"),
+        )
+        .collect()
+    )
+    return winners, plan_rows
+
+
+def _plan_on_driver(
+    batch: DataFrame, keys, order_col: str, nb: int, key_bytes_col
+) -> tuple[DataFrame, list[dict]] | None:
+    """The plan of an epoch of at most ``DRIVER_PLAN_MAX_ROWS`` events,
+    in pyarrow over ONE Arrow collect of its slim columns: keys, order,
+    ``op == 'delete'``, key bytes and the writer's own bucket id.
+    Returns the winners as a local relation (``keys, _s_ord, _s_del``)
+    and the per-bucket plan rows, with the values ``_plan_on_spark``
+    computes — or None when the collect came back over the gate.
+
+    ``max_by`` leaves a tie on the winning order (duplicate deliveries
+    differing in op) to row arrival; here a stable sort by order, then
+    by the delete flag, makes the delete win it deterministically."""
+    slim = batch.select(
+        *keys,
+        F.col(order_col).alias("_ord"),
+        (F.col("op") == "delete").alias("_del"),
+        key_bytes_col.alias("_kb"),
+        bucket_of(keys, nb).alias("_bucket"),
+    )
+    got = slim.limit(DRIVER_PLAN_MAX_ROWS + 1).toArrow()
+    if got.num_rows > DRIVER_PLAN_MAX_ROWS:
+        log.debug(
+            "epoch over DRIVER_PLAN_MAX_ROWS=%d events: planning on Spark",
+            DRIVER_PLAN_MAX_ROWS,
+        )
+        return None
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import BooleanType, StructField, StructType
+
+    # each key's last row is then its max order's (null orders first,
+    # as max/max_by skip them), the delete among tied ops
+    got = got.take(pc.sort_indices(
+        got, [("_ord", "ascending"), ("_del", "ascending")], null_placement="at_start"
+    ))
+    per_key = got.group_by(keys, use_threads=False).aggregate([
+        ("_ord", "max"),
+        ("_del", "last", pc.ScalarAggregateOptions(skip_nulls=False)),
+        ([], "count_all"),
+        ("_ord", "min"),
+        ("_ord", "count_distinct"),
+        ("_kb", "sum"),
+        ("_bucket", "min"),
+    ])
+    s_ord = per_key["_ord_max"]
+    s_del = pc.if_else(pc.is_valid(s_ord), per_key["_del_last"], pa.scalar(None, pa.bool_()))
+    per_key = pa.table({
+        **{k: per_key[k] for k in keys},
+        "_s_ord": s_ord,
+        "_s_del": s_del,
+        "_cnt": per_key["count_all"],
+        "_lo": per_key["_ord_min"],
+        "_nords": per_key["_ord_count_distinct"],
+        "_kb": per_key["_kb_sum"],
+        "_ndl": pc.cast(pc.fill_null(s_del, False), pa.int64()),
+        "_bucket": per_key["_bucket_min"],
+    })
+    per_bucket = per_key.group_by("_bucket").aggregate([
+        ("_cnt", "sum"), ("_lo", "min"), ("_s_ord", "max"), ([], "count_all"),
+        ("_kb", "sum"), ("_nords", "sum"), ("_ndl", "sum"),
+    ])
+    names = {"_cnt_sum": "n", "_lo_min": "lo", "_s_ord_max": "hi", "count_all": "dk",
+             "_kb_sum": "kb", "_nords_sum": "ndp", "_ndl_sum": "ndl"}
+    plan_rows = [{names.get(c, c): v for c, v in r.items()} for r in per_bucket.to_pylist()]
+    struct = StructType(
+        [slim.schema[k] for k in keys]
+        + [StructField("_s_ord", slim.schema["_ord"].dataType), StructField("_s_del", BooleanType())]
+    )
+    winners = batch.sparkSession.createDataFrame(
+        per_key.select([*keys, "_s_ord", "_s_del"]), struct
+    )
+    return winners, plan_rows
+
+
 def _write_mor_delta(
     table: LakeTable,
     snap: dict,
@@ -497,9 +623,12 @@ def _write_mor_delta(
     floor disappear entirely, deferred to compaction where they amortize
     across many epochs.
 
-    Winner payloads take the slim path when the planning pass passed the
-    broadcast gate (``winners`` given: ``_pick_winners``), else one
-    max_by agg shuffle.  Delete events become tombstone winners
+    ``winners`` is the plan's per-key winner relation (``keys, _s_ord,
+    _s_del``; a local relation when the epoch was planned on the driver,
+    else the persisted Spark aggregation), given when the epoch passed
+    the broadcast gate: winner payloads are then picked map-side
+    against it (``_pick_winners``).  Without it, one max_by agg shuffle
+    picks them.  Delete events become tombstone winners
     (``_deleted=true``) exactly as in COW; insert-vs-update is
     unknowable without reading the table, so delta rows carry
     ``_action='upsert'|'delete'`` and the changelog reports upserts as
@@ -679,54 +808,31 @@ def _merge_once(
         _ph[phase] = _ph.get(phase, 0.0) + (now - _tm)
         _tm = now
 
-    # 1+2. planning IS the LWW winner aggregation: ONE column-pruned pass
-    # over (keys, order, op) computes, per key, the winning order + op
-    # (the broadcast MERGE's decision input, cached and reused) AND the
-    # planning stats — row counts, seq ranges, key bytes, duplicate-
-    # delivery detection — which then reduce per bucket in a second agg
-    # over the (already tiny) one-row-per-key relation.  Bucket id is
-    # key-deterministic, so dedupe cannot change the touched set; ≤
-    # num_buckets rows reach the driver, and the batch's key columns are
-    # scanned exactly once for the whole plan+decide phase.
-    # (Deliberately no DataFrame.observe anywhere: observed metrics never
-    # resolve inside a streaming foreachBatch — Observation.get blocks.)
+    # 1+2. plan: per key, the winning order + op (``_s_ord``/``_s_del``,
+    # the decision input of the broadcast MERGE and of the MOR pick), and
+    # per touched bucket the planning stats — row counts, seq ranges,
+    # exact key cardinality, key bytes, duplicate-delivery detection.
+    # Two paths, one answer.  An epoch of at most DRIVER_PLAN_MAX_ROWS
+    # events is planned on the driver: one Spark job collects its slim
+    # columns as Arrow, pyarrow aggregates them, and the winners go back
+    # as a local relation, so the plan's later consumers (legacy probe,
+    # bloom key rows, broadcast) fold at plan time and run no job.  A
+    # larger epoch (the gate's collect came back full) runs the two-level
+    # Spark aggregation, its winners persisted for the commit's duration.
+    # Bucket id is key-deterministic, so dedupe cannot change the
+    # touched set.  (Deliberately no DataFrame.observe anywhere: observed
+    # metrics never resolve inside a streaming foreachBatch.)
     key_bytes_col = sum(
         (F.coalesce(F.octet_length(F.col(k).cast("string")), F.lit(4)) for k in keys),
         F.lit(0),
     )
-    winners_slim = batch.groupBy(*keys).agg(
-        F.max(order_col).alias("_s_ord"),
-        F.max_by(F.col("op") == "delete", F.col(order_col)).alias("_s_del"),
-        F.count(F.lit(1)).alias("_cnt"),
-        F.min(order_col).alias("_lo"),
-        # EXACT distinct orders per key: Σ equals the distinct (key, order)
-        # pair count — when that equals the row count the batch provably
-        # has no duplicate deliveries and the post-pick dedupe guard is
-        # skipped.  Exact on purpose: an approximation could skip wrongly.
-        F.count_distinct(F.col(order_col)).alias("_nords"),
-        # key BYTES (same pass): sizes the broadcast hash relation — the
-        # key-count gate alone misjudges wide string keys
-        F.sum(key_bytes_col).alias("_kb"),
-    ).persist()
-    caches: list = [winners_slim]
-    plan_rows = (
-        winners_slim.groupBy(bucket_of(keys, nb).alias("_bucket"))
-        .agg(
-            F.sum("_cnt").alias("n"),
-            F.min("_lo").alias("lo"),
-            F.max("_s_ord").alias("hi"),
-            # EXACT per-bucket key cardinality (one row per key reaches
-            # this agg — no HLL needed)
-            F.count(F.lit(1)).alias("dk"),
-            F.sum("_kb").alias("kb"),
-            F.sum("_nords").alias("ndp"),
-            # delete-winner count per bucket: the merge-on-read path's
-            # whole stats story (it never reads _action back from files)
-            F.sum(F.when(F.col("_s_del"), 1).otherwise(0)).alias("ndl"),
-        )
-        .collect()
-    )
-    touched = [r["_bucket"] for r in plan_rows]
+    caches: list = []
+    planned = _plan_on_driver(batch, keys, order_col, nb, key_bytes_col)
+    if planned is None:
+        planned = _plan_on_spark(batch, keys, order_col, nb, key_bytes_col)
+        caches.append(planned[0])
+    winners_slim, plan_rows = planned
+    touched = sorted(r["_bucket"] for r in plan_rows)
     plan_by_bucket = {r["_bucket"]: (int(r["n"]), r["lo"], r["hi"]) for r in plan_rows}
     rows_in = int(sum(r["n"] for r in plan_rows))
     seq_lo = min((r["lo"] for r in plan_rows), default=None)
@@ -767,8 +873,8 @@ def _merge_once(
         matched_rel: set | None = None
         # bucket-spec evolution: winner keys may still live under a RETIRED
         # layout — probe each legacy spec with the keys' buckets under THAT
-        # spec (one tiny collect over the cached winners_slim: ≤ the specs'
-        # bucket-count product rows)
+        # spec (one tiny collect over winners_slim — no job when it is the
+        # driver plan's local relation: ≤ the specs' bucket-count product rows)
         leg_cols = legacy_probe_cols(snap)
         leg_touched = (
             legacy_touched(snap, winners_slim.select(*leg_cols).distinct().collect())

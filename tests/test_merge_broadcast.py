@@ -16,18 +16,31 @@ from rocket_etl_spark.oracle import replay_oracle
 from rocket_etl_spark.streaming.replay import create_repo_files_table, replay_batch
 
 
-def _run(spark, path, batches, max_keys):
-    old = M.SLIM_DEDUPE_MAX_KEYS
+# both plan paths: the driver plan (every epoch here is under its gate)
+# and, with DRIVER_PLAN_MAX_ROWS forced to 0, the Spark aggregation
+PLANS = (True, False)
+
+
+def _run(spark, path, batches, max_keys, driver_plan=True, mode="cow"):
+    old = M.SLIM_DEDUPE_MAX_KEYS, M.DRIVER_PLAN_MAX_ROWS
     M.SLIM_DEDUPE_MAX_KEYS = max_keys
+    if not driver_plan:
+        M.DRIVER_PLAN_MAX_ROWS = 0
     try:
         t = create_repo_files_table(spark, path, num_buckets=4)
-        results = [replay_batch(t, b, epoch_id=i) for i, b in enumerate(batches)]
+        results = [replay_batch(t, b, epoch_id=i, mode=mode) for i, b in enumerate(batches)]
         state = (
             t.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
         )
         return t, results, state
     finally:
-        M.SLIM_DEDUPE_MAX_KEYS = old
+        M.SLIM_DEDUPE_MAX_KEYS, M.DRIVER_PLAN_MAX_ROWS = old
+
+
+def _changelog(t):
+    ch = t.changes(0).toPandas()
+    cols = sorted(ch.columns)
+    return ch[cols].sort_values(cols).reset_index(drop=True)
 
 
 import pytest
@@ -41,33 +54,32 @@ def test_broadcast_and_smj_merge_agree(spark, tmp_path, seed):
         ev.filter((ev.event_seq % 3) == i).drop("delivery_order") for i in (1, 0, 2)
     ]
 
+    # the broadcast MERGE on the driver plan against the SMJ MERGE, and
+    # both against themselves on the Spark plan
     t_b, r_b, s_b = _run(spark, tmp_path / "bcast", batches, 2_000_000)
-    t_s, r_s, s_s = _run(spark, tmp_path / "smj", batches, 0)
+    for name, max_keys, driver_plan in (
+        ("smj", 0, True), ("bcast", 2_000_000, False), ("smj", 0, False)
+    ):
+        t_s, r_s, s_s = _run(
+            spark, tmp_path / f"{name}-{driver_plan}", batches, max_keys, driver_plan
+        )
+        # identical final state
+        pd.testing.assert_frame_equal(s_b, s_s, check_dtype=False)
 
-    # identical final state — and both equal the sequential oracle
-    pd.testing.assert_frame_equal(s_b, s_s, check_dtype=False)
+        # identical per-epoch MERGE stats
+        for a, b in zip(r_b, r_s):
+            assert (a.rows_in, a.rows_upserted, a.rows_deleted) == (
+                b.rows_in,
+                b.rows_upserted,
+                b.rows_deleted,
+            )
+            assert a.touched_buckets == b.touched_buckets
+
+        # identical changelog (CDC-out) across the whole replay
+        pd.testing.assert_frame_equal(_changelog(t_b), _changelog(t_s), check_dtype=False)
+    # ... and equal to the sequential oracle
     ora = replay_oracle([ev.toPandas()])
     pd.testing.assert_frame_equal(s_b[ora.columns], ora, check_dtype=False)
-
-    # identical per-epoch MERGE stats
-    for a, b in zip(r_b, r_s):
-        assert (a.rows_in, a.rows_upserted, a.rows_deleted) == (
-            b.rows_in,
-            b.rows_upserted,
-            b.rows_deleted,
-        )
-        assert a.touched_buckets == b.touched_buckets
-
-    # identical changelog (CDC-out) across the whole replay
-    cols = None
-    ch_b = t_b.changes(0).toPandas()
-    ch_s = t_s.changes(0).toPandas()
-    cols = sorted(ch_b.columns)
-    pd.testing.assert_frame_equal(
-        ch_b[cols].sort_values(cols).reset_index(drop=True),
-        ch_s[cols].sort_values(cols).reset_index(drop=True),
-        check_dtype=False,
-    )
 
 
 def test_small_epoch_relinks_unmatched_files(spark, tmp_path):
@@ -153,18 +165,24 @@ def test_broadcast_merge_tied_order_op_conflict_is_consistent(spark, tmp_path):
          (5, "delete", "r1", "a", "c5d", "py", "xd")], ddl
     ).withColumn("event_ts", (56789 + F.col("event_seq")).cast("timestamp"))
 
-    t_b, r_b, _ = _run(spark, tmp_path / "b", [base, conflict], 2_000_000)
-    ch = t_b.changes(r_b[0].snapshot_id).toPandas()
-    final = ch[ch.last_event_seq == 5]
-    assert len(final) == 1
-    stored = t_b.read(include_tombstones=True).toPandas()
-    stored = stored[stored.last_event_seq == 5]
-    assert len(stored) == 1
-    change_type = final.change_type.iloc[0]
-    deleted = bool(stored._deleted.iloc[0])
-    assert (change_type == "delete") == deleted
-    # and the live read agrees: a delete leaves no visible row
-    assert len(t_b.read().toPandas()) == (0 if deleted else 1)
+    for driver_plan in PLANS:
+        t_b, r_b, _ = _run(
+            spark, tmp_path / f"b-{driver_plan}", [base, conflict], 2_000_000, driver_plan
+        )
+        ch = t_b.changes(r_b[0].snapshot_id).toPandas()
+        final = ch[ch.last_event_seq == 5]
+        assert len(final) == 1
+        stored = t_b.read(include_tombstones=True).toPandas()
+        stored = stored[stored.last_event_seq == 5]
+        assert len(stored) == 1
+        change_type = final.change_type.iloc[0]
+        deleted = bool(stored._deleted.iloc[0])
+        assert (change_type == "delete") == deleted
+        # and the live read agrees: a delete leaves no visible row
+        assert len(t_b.read().toPandas()) == (0 if deleted else 1)
+        if driver_plan:
+            # the driver plan breaks the tie deterministically: delete wins
+            assert deleted
 
 
 def test_broadcast_merge_null_keys_match_smj(spark, tmp_path):
@@ -184,12 +202,13 @@ def test_broadcast_merge_null_keys_match_smj(spark, tmp_path):
         "commit string, lang string, content string",
     ).withColumn("event_ts", (56789 + __import__("pyspark.sql.functions", fromlist=["col"]).col("event_seq")).cast("timestamp"))
 
-    t_b, _, s_b = _run(spark, tmp_path / "b", [df], 2_000_000)
-    t_s, _, s_s = _run(spark, tmp_path / "s", [df], 0)
-    pd.testing.assert_frame_equal(s_b, s_s, check_dtype=False)
-    # the null-key rows survived, newest wins; the r1/a delete applied
-    assert len(s_b) == 3
-    assert set(s_b["last_event_seq"]) == {2, 3, 5}
+    for driver_plan in PLANS:
+        t_b, _, s_b = _run(spark, tmp_path / f"b-{driver_plan}", [df], 2_000_000, driver_plan)
+        t_s, _, s_s = _run(spark, tmp_path / f"s-{driver_plan}", [df], 0, driver_plan)
+        pd.testing.assert_frame_equal(s_b, s_s, check_dtype=False)
+        # the null-key rows survived, newest wins; the r1/a delete applied
+        assert len(s_b) == 3
+        assert set(s_b["last_event_seq"]) == {2, 3, 5}
 
 
 def test_rel_paths_degrades_to_none_on_foreign_names():
@@ -205,3 +224,84 @@ def test_rel_paths_degrades_to_none_on_foreign_names():
     assert _rel_paths(root, ["/tmp/tbl/data/b0/f1.parquet", "/elsewhere/f2.parquet"]) is None
     # non-local scheme: urlparse strips the scheme but the path is foreign
     assert _rel_paths(root, ["s3://bucket/tbl/data/b0/f1.parquet"]) is None
+
+
+def _tricky_epochs(spark):
+    """Three epochs delivered out of event order, each carrying exact
+    duplicate deliveries (same key and order, also re-delivered in a
+    later epoch), plus hand rows above every generated order: a delete
+    tying an upsert on a key's winning order (superseded by an epoch
+    delivered earlier), the same tie below a winning order, and null
+    key parts.  The hand rows sit in one partition, delete after upsert,
+    so the Spark plan's ``max_by`` resolves the winning-order tie the
+    way the driver plan does: delete wins."""
+    import pyspark.sql.functions as F
+
+    ev = change_events(spark, 3_000, seed=29, delete_frac=0.15).drop("delivery_order")
+    mx = 10_000
+    ddl = (
+        "event_seq long, op string, repo string, path string, "
+        "commit string, lang string, content string"
+    )
+
+    def hand(rows):
+        return (
+            spark.createDataFrame(
+                [(mx + s, op, r, p, f"c{s}", "py", f"x{s}") for s, op, r, p in rows], ddl
+            )
+            .coalesce(1)
+            .withColumn("event_ts", (56789 + F.col("event_seq")).cast("timestamp"))
+        )
+
+    gen = [ev.filter((ev.event_seq % 3) == i) for i in (2, 0, 1)]
+    hands = [
+        hand([(5, "upsert", "rt", "tie.py"), (1, "upsert", None, "n.py"),
+              (2, "upsert", "rn", None), (3, "upsert", None, None)]),
+        hand([(4, "upsert", "rt", "tie.py"), (4, "delete", "rt", "tie.py"),
+              (6, "upsert", "rs", "sub.py"), (6, "delete", "rs", "sub.py"),
+              (7, "upsert", "rs", "sub.py"), (8, "delete", None, "n.py"),
+              (9, "upsert", "rn", None), (9, "upsert", "rn", None)]),
+        hand([(10, "upsert", None, None), (10, "upsert", None, None)]),
+    ]
+    batches = [g.unionByName(h) for g, h in zip(gen, hands)]
+    # exact duplicates within an epoch, and a stale re-delivery of the
+    # first epoch's events in the last
+    batches[1] = batches[1].unionByName(gen[1].filter(ev.event_seq % 7 == 0))
+    batches[2] = batches[2].unionByName(gen[0].filter(ev.event_seq % 11 == 0))
+    return batches
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_driver_plan_matches_spark_plan(spark, tmp_path, mode):
+    """The driver plan (one Arrow collect, pyarrow aggregation) and the
+    Spark plan aggregation give the same commit record, state and
+    changelog over out-of-order epochs with duplicate deliveries, an
+    op tie on the winning order and null key parts — and both equal the
+    sequential oracle."""
+    batches = _tricky_epochs(spark)
+    got = {
+        driver_plan: _run(
+            spark, tmp_path / str(driver_plan), batches, 2_000_000, driver_plan, mode
+        )
+        for driver_plan in PLANS
+    }
+    (t_d, r_d, s_d), (t_s, r_s, s_s) = got[True], got[False]
+
+    def record(r):
+        return (r.rows_in, r.rows_upserted, r.rows_deleted, r.event_seq_min,
+                r.event_seq_max, r.touched_buckets, r.bucket_stats)
+
+    assert [record(r) for r in r_d] == [record(r) for r in r_s]
+    pd.testing.assert_frame_equal(s_d, s_s, check_dtype=False)
+    pd.testing.assert_frame_equal(_changelog(t_d), _changelog(t_s), check_dtype=False)
+    ora = replay_oracle([b.toPandas() for b in batches])
+    pd.testing.assert_frame_equal(s_d[ora.columns], ora, check_dtype=False)
+
+    for t in (t_d, t_s):
+        # a stored row and the change that wrote it agree on deletion
+        stored = t.read(include_tombstones=True).toPandas()
+        ch = t.changes(0).toPandas()
+        keyed = stored.merge(ch, on=["repo", "path", "last_event_seq"])
+        assert len(keyed) > 0
+        assert ((keyed.change_type == "delete") == keyed._deleted.astype(bool)).all()
+
