@@ -18,7 +18,8 @@ Execution shape (scale rationale inline):
    MERGE's decision input) and every planning stat in one column-pruned
    scan of the batch.  A small epoch (``DRIVER_PLAN_MAX_ROWS``) is
    planned in pyarrow over one Arrow collect and its winners return as
-   a local relation; a larger one aggregates on Spark, winners cached;
+   a local relation; a larger one (by a row bound read without a job)
+   aggregates on Spark, winners cached;
 2. the touched-bucket set, input stats (rows_in, seq min/max), EXACT
    key cardinality, key bytes, and duplicate-delivery detection reduce
    from the winner relation per bucket — ≤ num_buckets rows;
@@ -374,7 +375,7 @@ def _merge_broadcast(
     if winners is None:
         winners = batch.groupBy(*keys).agg(
             F.max(order_col).alias("_s_ord"),
-            F.max_by(F.col("op") == "delete", F.col(order_col)).alias("_s_del"),
+            _winner_is_delete(order_col).alias("_s_del"),
         )
     t_slim = current.select(
         *keys,
@@ -483,6 +484,43 @@ def _merge_broadcast(
     )
 
 
+def _winner_is_delete(order_col: str):
+    """``max_by(op == 'delete', order)`` with the one tie rule of every
+    plan path: null orders are skipped, as ``max`` skips them, and a
+    delete tying an upsert on the winning order (duplicate deliveries
+    differing in op) wins, whatever order the rows arrive in."""
+    is_del = F.col("op") == "delete"
+    order = F.col(order_col)
+    return F.max_by(is_del, F.when(order.isNotNull(), F.struct(order, is_del)))
+
+
+def _row_bound(batch: DataFrame) -> int | None:
+    """A bound on the batch's row count that runs no Spark job: the
+    optimizer's ``maxRows`` (``spark.range``, a local relation, a
+    limit), else the row counts in the parquet footers of the files the
+    batch reads, or None when neither is known.  Footers overcount a filtered read and
+    can undercount a join; the driver plan's capped collect stays the
+    hard gate, so a wrong bound costs time, never a wrong plan."""
+    rows = batch._jdf.queryExecution().optimizedPlan().maxRows()
+    if rows.isDefined():
+        return int(rows.get())
+    files = batch.inputFiles()
+    if not files:
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = 0
+    try:
+        for f in files:
+            n += pq.read_metadata(f).num_rows
+            if n > DRIVER_PLAN_MAX_ROWS:
+                break
+    except (OSError, pa.ArrowException):
+        return None
+    return n
+
+
 def _plan_on_spark(
     batch: DataFrame, keys, order_col: str, nb: int, key_bytes_col
 ) -> tuple[DataFrame, list]:
@@ -493,7 +531,7 @@ def _plan_on_spark(
     it per bucket — ≤ num_buckets rows reach the driver."""
     winners = batch.groupBy(*keys).agg(
         F.max(order_col).alias("_s_ord"),
-        F.max_by(F.col("op") == "delete", F.col(order_col)).alias("_s_del"),
+        _winner_is_delete(order_col).alias("_s_del"),
         F.count(F.lit(1)).alias("_cnt"),
         F.min(order_col).alias("_lo"),
         # EXACT distinct orders per key: Σ equals the distinct (key, order)
@@ -533,11 +571,17 @@ def _plan_on_driver(
     ``op == 'delete'``, key bytes and the writer's own bucket id.
     Returns the winners as a local relation (``keys, _s_ord, _s_del``)
     and the per-bucket plan rows, with the values ``_plan_on_spark``
-    computes — or None when the collect came back over the gate.
-
-    ``max_by`` leaves a tie on the winning order (duplicate deliveries
-    differing in op) to row arrival; here a stable sort by order, then
-    by the delete flag, makes the delete win it deterministically."""
+    computes — or None when the epoch is over the gate: by its no-job
+    row bound (``_row_bound``), else by the capped collect itself.  A
+    stable sort by order, then by the delete flag, gives the tie rule of
+    ``_winner_is_delete``."""
+    bound = _row_bound(batch)
+    if bound is not None and bound > DRIVER_PLAN_MAX_ROWS:
+        log.debug(
+            "epoch over DRIVER_PLAN_MAX_ROWS=%d events by its row bound: planning on Spark",
+            DRIVER_PLAN_MAX_ROWS,
+        )
+        return None
     slim = batch.select(
         *keys,
         F.col(order_col).alias("_ord"),
@@ -817,8 +861,11 @@ def _merge_once(
     # columns as Arrow, pyarrow aggregates them, and the winners go back
     # as a local relation, so the plan's later consumers (legacy probe,
     # bloom key rows, broadcast) fold at plan time and run no job.  A
-    # larger epoch (the gate's collect came back full) runs the two-level
-    # Spark aggregation, its winners persisted for the commit's duration.
+    # larger epoch runs the two-level Spark aggregation, its winners
+    # persisted for the commit's duration.  The gate reads a row bound
+    # that runs no job first (``_row_bound``: maxRows, parquet footers),
+    # so a large epoch never pays the collect; only a batch of unknown
+    # size learns it from the capped collect coming back full.
     # Bucket id is key-deterministic, so dedupe cannot change the
     # touched set.  (Deliberately no DataFrame.observe anywhere: observed
     # metrics never resolve inside a streaming foreachBatch.)

@@ -8,6 +8,8 @@ replays, with the sequential oracle as ground truth.
 
 from __future__ import annotations
 
+import itertools
+
 import pandas as pd
 
 import rocket_etl_spark.lake.merge as M
@@ -160,14 +162,16 @@ def test_broadcast_merge_tied_order_op_conflict_is_consistent(spark, tmp_path):
     ).withColumn("event_ts", (56789 + F.col("event_seq")).cast("timestamp"))
     # same key, same seq=5, conflicting ops — ambiguous by contract,
     # but the outcome must be internally consistent
-    conflict = spark.createDataFrame(
-        [(5, "upsert", "r1", "a", "c5u", "py", "xu"),
-         (5, "delete", "r1", "a", "c5d", "py", "xd")], ddl
-    ).withColumn("event_ts", (56789 + F.col("event_seq")).cast("timestamp"))
+    tied = [(5, "upsert", "r1", "a", "c5u", "py", "xu"),
+            (5, "delete", "r1", "a", "c5d", "py", "xd")]
 
-    for driver_plan in PLANS:
+    for driver_plan, rows in itertools.product(PLANS, (tied, tied[::-1])):
+        conflict = spark.createDataFrame(rows, ddl).withColumn(
+            "event_ts", (56789 + F.col("event_seq")).cast("timestamp")
+        )
         t_b, r_b, _ = _run(
-            spark, tmp_path / f"b-{driver_plan}", [base, conflict], 2_000_000, driver_plan
+            spark, tmp_path / f"b-{driver_plan}-{rows[0][1]}", [base, conflict], 2_000_000,
+            driver_plan,
         )
         ch = t_b.changes(r_b[0].snapshot_id).toPandas()
         final = ch[ch.last_event_seq == 5]
@@ -180,9 +184,9 @@ def test_broadcast_merge_tied_order_op_conflict_is_consistent(spark, tmp_path):
         assert (change_type == "delete") == deleted
         # and the live read agrees: a delete leaves no visible row
         assert len(t_b.read().toPandas()) == (0 if deleted else 1)
-        if driver_plan:
-            # the driver plan breaks the tie deterministically: delete wins
-            assert deleted
+        # both plan paths break the tie the same way, whatever the row
+        # order: the delete wins
+        assert deleted
 
 
 def test_broadcast_merge_null_keys_match_smj(spark, tmp_path):
@@ -232,9 +236,7 @@ def _tricky_epochs(spark):
     later epoch), plus hand rows above every generated order: a delete
     tying an upsert on a key's winning order (superseded by an epoch
     delivered earlier), the same tie below a winning order, and null
-    key parts.  The hand rows sit in one partition, delete after upsert,
-    so the Spark plan's ``max_by`` resolves the winning-order tie the
-    way the driver plan does: delete wins."""
+    key parts."""
     import pyspark.sql.functions as F
 
     ev = change_events(spark, 3_000, seed=29, delete_frac=0.15).drop("delivery_order")
@@ -249,7 +251,6 @@ def _tricky_epochs(spark):
             spark.createDataFrame(
                 [(mx + s, op, r, p, f"c{s}", "py", f"x{s}") for s, op, r, p in rows], ddl
             )
-            .coalesce(1)
             .withColumn("event_ts", (56789 + F.col("event_seq")).cast("timestamp"))
         )
 
@@ -305,3 +306,29 @@ def test_driver_plan_matches_spark_plan(spark, tmp_path, mode):
         assert len(keyed) > 0
         assert ((keyed.change_type == "delete") == keyed._deleted.astype(bool)).all()
 
+
+
+def test_gate_reads_row_bound_without_a_job(spark, tmp_path, monkeypatch):
+    """The driver plan's gate first reads a row bound that runs no Spark
+    job — ``maxRows`` for generated data, parquet footers for a file read,
+    None when neither is known — so an epoch over the gate goes to the
+    Spark plan without paying the driver plan's collect."""
+    import pyspark.sql.functions as F
+
+    ev = change_events(spark, 500, seed=3).drop("delivery_order")
+    ev.write.parquet(str(tmp_path / "ev"))
+    files = spark.read.parquet(str(tmp_path / "ev"))
+    rdd_backed = spark.createDataFrame([(1,)], "a int")
+    sc = spark.sparkContext
+    sc.setJobGroup("row-bound", "the gate's row bound")
+    try:
+        assert M._row_bound(ev) == 500
+        assert M._row_bound(files) == 500
+        assert M._row_bound(files.filter("op = 'delete'")) == 500  # footers overcount
+        assert M._row_bound(rdd_backed) is None
+        monkeypatch.setattr(M, "DRIVER_PLAN_MAX_ROWS", 499)
+        assert M._plan_on_driver(files, ["repo", "path"], "event_seq", 4, F.lit(0)) is None
+        assert list(sc.statusTracker().getJobIdsForGroup("row-bound")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

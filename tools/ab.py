@@ -4,7 +4,8 @@ Usage (from the repository root)::
 
     python3 tools/ab.py PARENT_DIR CHANGE_DIR --workload trickle_mor --pairs 10
 
-Runs ``--pairs`` triplets of untraced ``perfbench/run.py`` runs: the
+Runs ``--pairs`` triplets of untraced ``perfbench/run.py`` runs, each
+at perfbench's own run length: the
 parent, the change, and the parent again (the A/A arm).  Each triplet
 uses a fresh seed, shared by its three runs, and the arms' order
 rotates from one triplet to the next, so no arm always runs first or
@@ -31,19 +32,20 @@ from pathlib import Path
 
 BENCHMARK = Path(__file__).resolve().parent.parent / "BENCHMARK.json"
 ARMS = ("parent", "change", "aa")
+RUN_TIMEOUT_S = 900  # one perfbench run: setup, the timed section, the final check
 
 
-def run_once(tree: Path, workload: str, seed: int, seconds: int, timeout: int) -> dict:
+def run_once(tree: Path, workload: str, seed: int) -> dict:
     """One untraced perfbench run in ``tree``: its result object, or
     ``{"error": ...}`` when the run failed or printed no result."""
     try:
         out = subprocess.run(
             [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-             "--seconds", str(seconds), "--trace", "0"],
-            cwd=tree, capture_output=True, text=True, timeout=timeout,
+             "--trace", "0"],
+            cwd=tree, capture_output=True, text=True, timeout=RUN_TIMEOUT_S,
         )
     except subprocess.TimeoutExpired:
-        return {"error": f"timed out after {timeout} s"}
+        return {"error": f"timed out after {RUN_TIMEOUT_S} s"}
     lines = out.stdout.strip().splitlines()
     try:
         return json.loads(lines[-1])
@@ -58,6 +60,11 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
+def value(run: dict, name: str):
+    """One metric of one run's result, or None when the run has none."""
+    return run.get("metrics", {}).get(name, {}).get("value")
+
+
 def table(runs: list[dict], metrics: list[dict]) -> list[str]:
     """The report: one row per metric over the triplets where all three
     arms produced a value."""
@@ -70,9 +77,9 @@ def table(runs: list[dict], metrics: list[dict]) -> list[str]:
     for m in metrics:
         name, lower = m["name"], m["better"] == "lower"
         vals = [
-            {a: r[a]["metrics"][name]["value"] for a in ARMS}
+            {a: value(r[a], name) for a in ARMS}
             for r in runs
-            if all(r[a].get("metrics", {}).get(name, {}).get("value") is not None for a in ARMS)
+            if all(value(r[a], name) is not None for a in ARMS)
         ]
         if not vals:
             out.append(f"{name:<22}  no values")
@@ -117,9 +124,6 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10, help="number of triplets")
     ap.add_argument("--seed", type=int, default=1000, help="seed of the first triplet")
-    ap.add_argument("--seconds", type=int, default=20)
-    ap.add_argument("--timeout", type=int, default=900, help="seconds per run")
-    ap.add_argument("--out", type=Path, help="also write the raw results here (JSON)")
     args = ap.parse_args(argv)
 
     trees = {"parent": args.parent_dir, "change": args.change_dir, "aa": args.parent_dir}
@@ -130,15 +134,13 @@ def main(argv=None) -> int:
         order = ARMS[i % 3:] + ARMS[:i % 3]
         got = {}
         for a in order:
-            got[a] = run_once(trees[a].resolve(), args.workload, seed, args.seconds, args.timeout)
-            print(f"triplet {i} seed {seed} {a}: "
-                  f"{got[a].get('error') or got[a]['metrics']['commit_p50_s']['value']}",
+            got[a] = run_once(trees[a].resolve(), args.workload, seed)
+            print(f"triplet {i} seed {seed} {a}: commit_p50_s "
+                  f"{got[a].get('error') or value(got[a], 'commit_p50_s')}",
                   file=sys.stderr, flush=True)
         runs.append(got)
-        if args.out:
-            args.out.write_text(json.dumps({"args": vars(args), "runs": runs}, default=str))
     print(f"workload {args.workload}, {args.pairs} triplets, seeds "
-          f"{args.seed}-{args.seed + args.pairs - 1}, {args.seconds} s each")
+          f"{args.seed}-{args.seed + args.pairs - 1}")
     print("\n".join(table(runs, metrics)))
     return 0
 
