@@ -151,7 +151,7 @@ def lookup(
             keys, snap["order_col"],
         )])
     live = found.filter(pc.invert(pc.fill_null(found["_deleted"], False)))
-    out = table.spark.createDataFrame(live.drop_columns(["_deleted"]), full)
+    out = table.spark.createDataFrame(live.drop_columns(["_deleted", "_file"]), full)
     return (out, stats) if return_stats else out
 
 
@@ -173,31 +173,40 @@ def _read_probed(
     entries: list[dict],
     probe: pa.Table,
     with_seq: bool,
+    columns: Sequence[str] | None = None,
 ) -> pa.Table:
     """Every row of ``entries``' files whose key matches a ``probe`` row
     null-safely (``eqNullSafe``, as the MERGE matches keys), projected
-    to ``current`` (in its Arrow ``types``) plus ``_deleted`` and, with
-    ``with_seq``, ``_seq`` (null where the file has none, as in base
-    files).  The files of one schema version form one dataset, so
-    pyarrow reads them in parallel.  Each key column's ``isin`` is
-    pushed into the scan; for a composite key that is a superset of the
-    probe tuples, so the exact tuple match follows."""
+    to the ``columns`` of ``current`` (all of them when None; in its
+    Arrow ``types``) plus ``_deleted``, with ``with_seq`` ``_seq`` (null
+    where the file has none, as in base files), and ``_file``: the entry
+    path of the file the row came from.  The files of one schema
+    version form one dataset, so pyarrow reads them in parallel.  Each
+    key column's ``isin`` is pushed into the scan; for a composite key
+    that is a superset of the probe tuples, so the exact tuple match
+    follows."""
     keys = snap["key_cols"]
+    if columns is not None:
+        current = TableSchema(current.version, tuple(current.field_by_name(c) for c in columns))
+        types = pa.schema([types.field(c) for c in columns])
     extra = {"_deleted": pa.bool_(), **({"_seq": pa.int64()} if with_seq else {})}
 
-    def shape(got: pa.Table, fschema: TableSchema) -> pa.Table:
+    def shape(got: pa.Table, fschema: TableSchema, path: str) -> pa.Table:
         part = project_arrow(got, fschema, current, types)
         for c, typ in extra.items():
             part = part.append_column(
                 c, got[c].cast(typ) if c in got.column_names
                 else pa.nulls(got.num_rows, typ)
             )
-        return part
+        return part.append_column("_file", pa.repeat(pa.scalar(path), got.num_rows))
 
     by_sv: dict[str, list[str]] = {}
+    rel: dict[str, str] = {}
     for fe in entries:
-        by_sv.setdefault(str(fe["sv"]), []).append(str(table.path / fe["path"]))
-    parts = [shape(pa.table({}), TableSchema(version=0))]  # no file: no row
+        path = str(table.path / fe["path"])
+        by_sv.setdefault(str(fe["sv"]), []).append(path)
+        rel[path] = fe["path"]
+    parts = [shape(pa.table({}), TableSchema(version=0), "")]  # no file: no row
     for sv, paths in by_sv.items():
         fschema = TableSchema.from_json(snap["schemas"][sv])
         src = {f.id: f.name for f in fschema.fields}
@@ -213,19 +222,27 @@ def _read_probed(
             if dset.schema.field(name).type != want.type:
                 col = col.cast(want.type)
             cond = col.isin(want) if cond is None else cond & col.isin(want)
-        have = [c for c in extra if c in dset.schema.names]
-        got = dset.to_table(columns=fschema.names() + have, filter=cond)
-        parts.append(shape(got, fschema))
+        read = [src[f.id] for f in current.fields if f.id in src]
+        read += [c for c in extra if c in dset.schema.names]
+        scan = dset.scanner(columns=read, filter=cond)
+        parts += [
+            shape(pa.Table.from_batches([tb.record_batch]), fschema, rel[tb.fragment.path])
+            for tb in scan.scan_batches()
+        ]
     found = pa.concat_tables(parts)
-    return found.filter(_probe_hits(found, probe, keys))
+    return found.filter(pc.is_valid(_probe_codes(found, probe, keys)[0]))
 
 
-def _probe_hits(found: pa.Table, probe: pa.Table, keys: Sequence[str]) -> pa.ChunkedArray:
-    """Whether each ``found`` row's key tuple is a ``probe`` tuple, nulls
-    equal to nulls.  Each key column becomes its index among the probe's
-    distinct values (null where absent); the indices fold column by
-    column into one int64 code, renumbered against the probe's own codes
-    after each step so the code stays below the probe size."""
+def _probe_codes(
+    found: pa.Table, probe: pa.Table, keys: Sequence[str]
+) -> tuple[pa.ChunkedArray, pa.ChunkedArray]:
+    """One int64 code per key tuple of ``found`` and of ``probe``, equal
+    exactly where the tuples are equal, nulls equal to nulls; a
+    ``found`` tuple that is no ``probe`` tuple codes null.  Each key
+    column becomes its index among the probe's distinct values (null
+    where absent); the indices fold column by column into one code,
+    renumbered against the probe's own codes after each step so the
+    code stays below the probe size."""
     code_f = code_p = None
     for k in keys:
         vals = pc.unique(probe[k])
@@ -239,7 +256,7 @@ def _probe_hits(found: pa.Table, probe: pa.Table, keys: Sequence[str]) -> pa.Chu
         seen = pc.unique(code_p)
         code_f = pc.index_in(code_f, value_set=seen).cast(pa.int64())
         code_p = pc.index_in(code_p, value_set=seen).cast(pa.int64())
-    return pc.is_valid(code_f)
+    return code_f, code_p
 
 
 _IDENT = r"[A-Za-z_][A-Za-z_0-9]*"

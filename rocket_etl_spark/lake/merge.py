@@ -26,21 +26,32 @@ Execution shape (scale rationale inline):
 3. one pipeline, two physical strategies chosen from the planning pass's
    key-cardinality estimate: the **broadcast MERGE** (``_merge_broadcast``,
    when the batch key set fits a broadcast) fuses LWW dedupe and MERGE
-   into a slim winner aggregation + slim action join + two map-side
+   into the plan's slim winners + a slim action join + two map-side
    broadcast joins, so the ONLY payload bytes that ever shuffle are the
    changed rows' final bucket placement — current-table rows stream from
    their scan tasks straight back to parquet; the **SMJ MERGE**
    (``_merge_smj``, unbounded key sets) is the classic ``max_by`` dedupe
    (map-side partial combine → hot keys reduce before the shuffle)
    feeding a full-outer sort-merge join.  Either way the batch join side
-   is one row per key, so the join cannot skew;
-4. MERGE stats (insert/update/delete counts, per bucket) are written as
-   a physical ``_action`` column and read back by a pruned single-column
-   scan of the new files — driver-side pyarrow below a file-count
-   threshold (~1 bit/row of I/O; no Spark job per epoch), one
-   partition-discovering Spark scan above it (DataFrame.observe is
-   unusable here: observed metrics never resolve inside a streaming
-   foreachBatch);
+   is one row per key, so the join cannot skew, and one action rule
+   (``_action_rule``) labels every row.  The broadcast MERGE's decide —
+   the action join, ``win`` and the matched-file set — runs on the
+   driver (``_decide_on_driver``: one pyarrow read of the decide files'
+   key, order and tombstone columns, the action table in Arrow, ``win``
+   back as a local relation) when the epoch was planned on the driver
+   and the decide files' footers hold at most ``DRIVER_PLAN_MAX_ROWS``
+   rows; otherwise on Spark (``_decide_on_spark``: the join persisted,
+   the matched files collected).  After a driver decide Spark runs only
+   the plan collect and the one union write;
+4. MERGE stats (insert/update/delete counts, per bucket): every path
+   writes each row's action as a physical ``_action`` column (the
+   changelog's source); a driver decide counts them from its action
+   table, the Spark decide paths read them back by a pruned
+   single-column scan of the new files (``_action_counts``) —
+   driver-side pyarrow below a file-count threshold (~1 bit/row of
+   I/O; no Spark job per epoch), one partition-discovering Spark scan
+   above it (DataFrame.observe is unusable here: observed metrics never
+   resolve inside a streaming foreachBatch);
 5. commit, one tail for both modes: the planner's bucket-map update
    (``update_buckets``: untouched buckets keep their manifests, a COW
    commit drops the files it rewrote) over the child of the tip
@@ -85,6 +96,7 @@ from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+from pyspark.sql.types import BooleanType, StringType, StructField, StructType
 
 from rocket_etl_spark.lake.planner import (
     attach_file_metadata,
@@ -163,7 +175,8 @@ def _action_counts(
     spark, out_dir, out_files: dict[int, list[dict]], max_driver_files: int = 512
 ) -> dict[int, dict[str, int]]:
     """Per-bucket MERGE action counts ({bucket: {action: n}}) from the
-    commit's freshly written files.
+    commit's freshly written files — the stats of a Spark decide (a
+    driver decide counts its own action table instead).
 
     ``_action`` is a 5-value dictionary-encoded column, so counting it
     costs ~1 bit/row of I/O no matter how wide the rows are.  Below
@@ -239,13 +252,7 @@ def _merge_smj(
     s_del = F.col("_s._deleted")
     t_del = F.col("_t._deleted")
     s_wins = F.col("_s").isNotNull() & (F.col("_t").isNull() | (s_seq > t_seq))
-    action = (
-        F.when(~s_wins, F.lit("keep"))
-        .when(s_del & (F.col("_t").isNull() | t_del), F.lit("tombstone"))
-        .when(s_del, F.lit("delete"))
-        .when(F.col("_t").isNull() | t_del, F.lit("insert"))
-        .otherwise(F.lit("update"))
-    )
+    action = _action_rule(s_wins, s_del, F.col("_t").isNull(), t_del)
     return (
         joined.withColumn("_action", action)
         .withColumn("_w", F.when(s_wins, F.col("_s")).otherwise(F.col("_t")))
@@ -256,6 +263,36 @@ def _merge_smj(
             "_action",
         )
         .withColumn("_bucket", bucket_of(keys, nb))
+    )
+
+
+def _action_rule(s_wins, s_del, no_t, t_del):
+    """The MERGE action of a batch winner against the table's row of its
+    key, one rule for both physical strategies: ``keep`` where the batch
+    does not win, else by the winner's delete flag and whether the table
+    holds a live row (``no_t``: no row; ``t_del``: a tombstone).  A null
+    condition counts as false, as in any ``F.when``.  Every branch is a
+    literal, so the column is NOT NULL.  ``_action_rule_arrow`` is its
+    twin for the driver decide; a change here belongs there too."""
+    return (
+        F.when(~s_wins, F.lit("keep"))
+        .when(s_del & (no_t | t_del), F.lit("tombstone"))
+        .when(s_del, F.lit("delete"))
+        .when(no_t | t_del, F.lit("insert"))
+        .otherwise(F.lit("update"))
+    )
+
+
+def _action_rule_arrow(s_wins, s_del, no_t, t_del):
+    """``_action_rule`` over Arrow boolean arrays: Kleene logic, and
+    ``case_when`` reads a null condition as false, as ``F.when`` does."""
+    import pyarrow.compute as pc
+
+    absent = pc.or_kleene(no_t, t_del)
+    conds = [pc.invert(s_wins), pc.and_kleene(s_del, absent), s_del, absent]
+    return pc.case_when(
+        pc.make_struct(*conds, field_names=["keep", "tombstone", "delete", "insert"]),
+        "keep", "tombstone", "delete", "insert", "update",
     )
 
 
@@ -305,78 +342,17 @@ def _pick_winners(
     return lww_dedupe(picked, keys=keys, order_col=order_col) if dedupe_guard else picked
 
 
-def _merge_broadcast(
-    batch: DataFrame,
-    current: DataFrame,
-    keys,
-    order_col: str,
-    vals,
-    nb: int,
-    derived_cols: dict,
-    dedupe_guard: bool = True,
-    read_matched=None,
-    cache_registry: list | None = None,
-    winners: DataFrame | None = None,
-) -> tuple[list[tuple[DataFrame, bool]], set | None]:
-    """Broadcast MERGE — neither losing batch rows nor the table's wide
-    rows ever shuffle; LWW dedupe and MERGE fuse into one decision.
-
-    The full-outer SMJ MERGE moves every current row's payload through an
-    exchange + sort just to decide, per key, "batch wins or table wins".
-    When the batch key set fits a broadcast that decision needs only slim
-    columns:
-
-    1. winner agg: ``batch.groupBy(keys).agg(max(ord), max_by(is_delete,
-       ord))`` — one shuffle of key/order/op bytes only, payload untouched
-       (this IS the LWW dedupe decision, fused with the MERGE's);
-    2. action join: winners LEFT JOIN current (keys, ord, deleted) — a
-       sort-merge join of SLIM rows, the current side a column-pruned
-       scan (key + order + tombstone flag, no payload decode);
-    3. ``win`` = the batch keys that beat the table, with winning order
-       and MERGE action — bounded by the batch key set, broadcastable;
-    4. changed rows: batch ⋈ broadcast(win) on (keys, ord = winning ord)
-       map-side picks exactly the winner rows in ONE wide pass over the
-       batch (a thin max_by guard collapses duplicate deliveries of the
-       winning (key, ord) pair — skipped entirely when the planning pass
-       proved the batch duplicate-free), then one bucket-partitioned
-       shuffle of ONLY changed rows for tight files;
-    5. keep rows: current LEFT ANTI broadcast(win) — a map-side filter:
-       each scan task streams its bucket's survivors straight back to
-       parquet, payload untouched by any exchange.  With ``read_matched``
-       (the default from ``merge_batch``), the keep side reads ONLY the
-       files that actually contain a winning key: the action join's
-       t-side carries ``input_file_name()``, the matched-file set is
-       collected (bounded by the touched buckets' file count), unmatched
-       files are RE-LINKED into the new snapshot untouched — Iceberg/
-       Delta COW at file granularity, which is what keeps per-epoch
-       rewrite cost proportional to the keys an epoch actually hits
-       instead of to every file of every touched bucket (the difference
-       between O(epoch) and O(table) for a small streaming epoch).
-
-    Same (row, _action, _deleted) output as lww_dedupe + ``_merge_smj`` —
-    equivalence pytest-checked on random multi-epoch replays.  Null-safe
-    equality throughout: a null key is a group, exactly as the full-outer
-    join treats it.  Derived columns are computed on winner rows only,
-    after step 4.  Returns ([(changed, True), (keep_side, tight), ...],
-    matched_rel) — one keep side per ``read_matched`` source frame
-    (current-spec keeps exchange-free; legacy-layout migrations
-    bucket-exchanged, see the comment at the return).
-
-    Tradeoff vs the SMJ path: keep-rows avoid the exchange at the cost of
-    file granularity — each scan task writes one file per bucket it
-    holds, so a bucket can gain a few files per epoch instead of exactly
-    one (scan tasks pack CONTIGUOUS bucket files, so the total stays
-    ~tasks + buckets, not tasks × buckets).  Compaction
-    (lake/maintenance.py, ``compact_every`` in replay_stream) re-tightens
-    them; at cluster scale the avoided table-payload exchange dominates —
-    this split is exactly why Iceberg/Delta MERGE rewrites only matched
-    files instead of shuffling the table.
-    """
-    if winners is None:
-        winners = batch.groupBy(*keys).agg(
-            F.max(order_col).alias("_s_ord"),
-            _winner_is_delete(order_col).alias("_s_del"),
-        )
+def _decide_on_spark(
+    current: DataFrame, winners: DataFrame, keys, order_col: str, caches: list
+) -> tuple[DataFrame, list[str]]:
+    """The broadcast MERGE's decide on Spark (steps 2-3 of
+    ``_merge_broadcast``): ``winners`` (``keys, _s_ord, _s_del``) LEFT
+    JOIN the decide read ``current``'s slim columns (keys, order,
+    tombstone flag, ``input_file_name()``).  Returns ``win`` (the keys
+    that beat the table: ``_w_<key>``, ``_w_ord``, ``_w_del`` and
+    ``_action``) and the names of the files holding a winning key.  The
+    joined relation is persisted into ``caches``: the file-name collect
+    materializes it, and the ``win`` broadcasts reuse it."""
     t_slim = current.select(
         *keys,
         F.col(order_col).alias("_t_ord"),
@@ -400,36 +376,164 @@ def _merge_broadcast(
     # table side streams through a map-side hash probe (never shuffled),
     # and the remaining outer join is winner-set vs ≤ winner-set sized.
     t_hit = t_slim.join(F.broadcast(winners.select(*keys)), cond, "left_semi")
-    act = winners.join(t_hit, cond, "left_outer")
-    if read_matched is not None and cache_registry is not None:
-        # the matched-file collect materializes act anyway; caching the
-        # SLIM relation (keys + ords + flags + file name) lets the win
-        # broadcasts reuse it instead of re-running the winner aggregation
-        # + table-key join — the whole decision computes exactly once
-        act = act.persist()
-        cache_registry.append(act)
+    act = winners.join(t_hit, cond, "left_outer").persist()
+    caches.append(act)
 
     no_t = F.col("_t_present").isNull()
     s_wins = no_t | (F.col("_s_ord") > F.col("_t_ord"))
-    action = (
-        F.when(F.col("_s_del") & (no_t | F.col("_t_del")), F.lit("tombstone"))
-        .when(F.col("_s_del"), F.lit("delete"))
-        .when(no_t | F.col("_t_del"), F.lit("insert"))
-        .otherwise(F.lit("update"))
-    )
     # _w_del rides along as the AUTHORITATIVE tombstone flag for changed
-    # rows: _action above is derived from the same max_by(_s_del) winner,
-    # so the two can never disagree.  (Re-deriving _deleted from the picked
-    # row's op — as an earlier version did — used lww_dedupe's independent
+    # rows: _action is derived from the same max_by(_s_del) winner, so the
+    # two can never disagree.  (Re-deriving _deleted from the picked row's
+    # op — as an earlier version did — used lww_dedupe's independent
     # tie-break, which could contradict _action when duplicate deliveries
     # share the winning (key, order) but differ in op.)
     win = act.filter(s_wins).select(
         *[F.col(k).alias(f"_w_{k}") for k in keys],
         F.col("_s_ord").alias("_w_ord"),
         F.col("_s_del").alias("_w_del"),
-        action.alias("_action"),
+        _action_rule(s_wins, F.col("_s_del"), no_t, F.col("_t_del")).alias("_action"),
     )
+    names = [
+        r["_t_fname"]
+        for r in act.filter(~no_t & s_wins).select("_t_fname").distinct().collect()
+    ]
+    return win, names
 
+
+def _decide_on_driver(
+    table: LakeTable,
+    snap: dict,
+    schema: TableSchema,
+    entries: list[dict],
+    winners: "pa.Table",
+    winners_struct: StructType,
+) -> tuple[DataFrame, set[str], dict[int, dict[str, int]]]:
+    """``_decide_on_spark``'s twin for an epoch planned on the driver
+    whose decide files are small: ONE pyarrow read of the key, order and
+    ``_deleted`` columns of ``entries`` (``lookup._read_probed``: the
+    null-safe probe match and the projection by schema version a point
+    lookup uses), then the same left join on the key, the same
+    ``s_wins`` and ``_action_rule_arrow``, in Arrow.  ``winners`` is the
+    driver plan's per-key table (``keys, _s_ord, _s_del, _bucket``).
+
+    Returns ``win`` as a local relation typed as the Spark decide types
+    it (``_action`` NOT NULL: the written files' bytes depend on it),
+    the relative paths of the files holding a winning key, and the
+    per-bucket action counts of the changed rows — one changed row per
+    ``win`` row, so these equal what ``_action_counts`` reads back from
+    the written files on the Spark path."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from rocket_etl_spark.lake.lookup import _probe_codes, _read_probed
+
+    keys, order_col = snap["key_cols"], snap["order_col"]
+    cols = list(dict.fromkeys([*keys, order_col]))  # the order may be a key
+    struct = schema.to_struct()
+    found = _read_probed(
+        table, snap, schema, to_arrow_schema(StructType([struct[c] for c in cols])),
+        entries, winners, with_seq=False, columns=cols,
+    )
+    code_t, code_w = _probe_codes(found, winners, keys)
+    t_side = pa.table({
+        "_c": code_t,
+        "_t_ord": found[order_col],
+        "_t_del": pc.fill_null(found["_deleted"], False),
+        "_t_file": found["_file"],
+    })
+    act = winners.append_column("_c", code_w).join(
+        t_side, "_c", join_type="left outer", use_threads=False
+    )
+    no_t = pc.is_null(act["_t_file"])
+    s_wins = pc.or_kleene(no_t, pc.greater(act["_s_ord"], act["_t_ord"]))
+    act = act.append_column(
+        "_action", _action_rule_arrow(s_wins, act["_s_del"], no_t, act["_t_del"])
+    ).filter(s_wins)
+
+    matched = set(pc.unique(act["_t_file"]).drop_null().to_pylist())
+    counts: dict[int, dict[str, int]] = {}
+    for r in act.group_by(["_bucket", "_action"]).aggregate([([], "count_all")]).to_pylist():
+        counts.setdefault(r["_bucket"], {})[r["_action"]] = r["count_all"]
+
+    w_struct = StructType(
+        [StructField(f"_w_{k}", winners_struct[k].dataType, winners_struct[k].nullable)
+         for k in keys]
+        + [StructField("_w_ord", winners_struct["_s_ord"].dataType),
+           StructField("_w_del", BooleanType()),
+           StructField("_action", StringType(), nullable=False)]
+    )
+    win = act.select([*keys, "_s_ord", "_s_del", "_action"]).rename_columns(w_struct.names)
+    return table.spark.createDataFrame(win, w_struct), matched, counts
+
+
+def _merge_broadcast(
+    batch: DataFrame,
+    win: DataFrame,
+    keep_srcs: list[tuple[DataFrame, bool]],
+    keys,
+    order_col: str,
+    vals,
+    nb: int,
+    derived_cols: dict,
+    dedupe_guard: bool = True,
+) -> list[tuple[DataFrame, bool]]:
+    """Broadcast MERGE — neither losing batch rows nor the table's wide
+    rows ever shuffle; LWW dedupe and MERGE fuse into one decision.
+
+    The full-outer SMJ MERGE moves every current row's payload through an
+    exchange + sort just to decide, per key, "batch wins or table wins".
+    When the batch key set fits a broadcast that decision needs only slim
+    columns:
+
+    1. winners: the plan's per-key winning order and delete flag
+       (``_winner_is_delete``) — this IS the LWW dedupe decision, fused
+       with the MERGE's;
+    2. action join: winners LEFT JOIN the table rows of their keys (key,
+       order, tombstone flag and source file only, no payload decode) —
+       on Spark (``_decide_on_spark``), or, for an epoch planned on the
+       driver whose decide files are small, in Arrow over one pyarrow
+       read (``_decide_on_driver``);
+    3. ``win`` = the batch keys that beat the table, with winning order
+       and MERGE action (``_action_rule``) — bounded by the batch key
+       set, broadcastable — and the matched files, those holding a
+       winning key (a Spark collect, or the Arrow read's source files);
+    4. changed rows: batch ⋈ broadcast(win) on (keys, ord = winning ord)
+       map-side picks exactly the winner rows in ONE wide pass over the
+       batch (a thin max_by guard collapses duplicate deliveries of the
+       winning (key, ord) pair — skipped entirely when the planning pass
+       proved the batch duplicate-free), then one bucket-partitioned
+       shuffle of ONLY changed rows for tight files;
+    5. keep rows: each of ``keep_srcs`` LEFT ANTI broadcast(win) — a
+       map-side filter: each scan task streams its bucket's survivors
+       straight back to parquet, payload untouched by any exchange.  The
+       keep side reads ONLY the matched files; unmatched files are
+       RE-LINKED into the new snapshot untouched — Iceberg/Delta COW at
+       file granularity, which is what keeps per-epoch rewrite cost
+       proportional to the keys an epoch actually hits instead of to
+       every file of every touched bucket (the difference between
+       O(epoch) and O(table) for a small streaming epoch).
+
+    This function builds steps 4-5 from ``win``.  Same (row, _action,
+    _deleted) output as lww_dedupe + ``_merge_smj`` — equivalence
+    pytest-checked on random multi-epoch replays.  Null-safe equality
+    throughout: a null key is a group, exactly as the full-outer join
+    treats it.  Derived columns are computed on winner rows only, after
+    step 4.  Returns [(changed, True), (keep_side, tight), ...] — one
+    keep side per ``keep_srcs`` frame (current-spec keeps exchange-free;
+    legacy-layout migrations bucket-exchanged, see the comment at the
+    return).
+
+    Tradeoff vs the SMJ path: keep-rows avoid the exchange at the cost of
+    file granularity — each scan task writes one file per bucket it
+    holds, so a bucket can gain a few files per epoch instead of exactly
+    one (scan tasks pack CONTIGUOUS bucket files, so the total stays
+    ~tasks + buckets, not tasks × buckets).  Compaction
+    (lake/maintenance.py, ``compact_every`` in replay_stream) re-tightens
+    them; at cluster scale the avoided table-payload exchange dominates —
+    this split is exactly why Iceberg/Delta MERGE rewrites only matched
+    files instead of shuffling the table.
+    """
     changed = _pick_winners(batch, win, keys, order_col, dedupe_guard)
     for c, expr in derived_cols.items():
         changed = changed.withColumn(c, expr)
@@ -439,20 +543,6 @@ def _merge_broadcast(
         F.col("_w_del").alias("_deleted"),
         "_action",
     ).withColumn("_bucket", bucket_of(keys, nb))
-
-    matched_rel = None
-    keeps_srcs = [(current, False)]
-    if read_matched is not None:
-        # files holding at least one WINNING key — every other file's rows
-        # are untouched by this merge and the file is re-linked, not read
-        names = [
-            r["_t_fname"]
-            for r in act.filter(F.col("_t_present").isNotNull() & s_wins)
-            .select("_t_fname")
-            .distinct()
-            .collect()
-        ]
-        matched_rel, keeps_srcs = read_matched(names)
 
     cond_k = None
     for k in keys:
@@ -478,10 +568,7 @@ def _merge_broadcast(
     # them straight off the scan would emit one file per (task, target
     # bucket) pair; current-spec keeps stream task→parquet exchange-free
     # as before (placement unchanged)
-    return (
-        [(changed, True)] + [(_keep(src), tight) for src, tight in keeps_srcs],
-        matched_rel,
-    )
+    return [(changed, True)] + [(_keep(src), tight) for src, tight in keep_srcs]
 
 
 def _winner_is_delete(order_col: str):
@@ -505,14 +592,19 @@ def _row_bound(batch: DataFrame) -> int | None:
     if rows.isDefined():
         return int(rows.get())
     files = batch.inputFiles()
-    if not files:
-        return None
+    return _footer_rows(files) if files else None
+
+
+def _footer_rows(paths) -> int | None:
+    """The row count in the parquet footers of ``paths``, read without a
+    Spark job and stopping once over ``DRIVER_PLAN_MAX_ROWS``; None when
+    a footer cannot be read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     n = 0
     try:
-        for f in files:
+        for f in paths:
             n += pq.read_metadata(f).num_rows
             if n > DRIVER_PLAN_MAX_ROWS:
                 break
@@ -565,13 +657,14 @@ def _plan_on_spark(
 
 def _plan_on_driver(
     batch: DataFrame, keys, order_col: str, nb: int, key_bytes_col
-) -> tuple[DataFrame, list[dict]] | None:
+) -> tuple[DataFrame, list[dict], "pa.Table"] | None:
     """The plan of an epoch of at most ``DRIVER_PLAN_MAX_ROWS`` events,
     in pyarrow over ONE Arrow collect of its slim columns: keys, order,
     ``op == 'delete'``, key bytes and the writer's own bucket id.
     Returns the winners as a local relation (``keys, _s_ord, _s_del``)
     and the per-bucket plan rows, with the values ``_plan_on_spark``
-    computes — or None when the epoch is over the gate: by its no-job
+    computes, plus the winners' Arrow table with their bucket ids (the
+    driver decide's input) — or None when the epoch is over the gate: by its no-job
     row bound (``_row_bound``), else by the capped collect itself.  A
     stable sort by order, then by the delete flag, gives the tie rule of
     ``_winner_is_delete``."""
@@ -598,7 +691,6 @@ def _plan_on_driver(
         return None
     import pyarrow as pa
     import pyarrow.compute as pc
-    from pyspark.sql.types import BooleanType, StructField, StructType
 
     # each key's last row is then its max order's (null orders first,
     # as max/max_by skip them), the delete among tied ops
@@ -638,10 +730,12 @@ def _plan_on_driver(
         [slim.schema[k] for k in keys]
         + [StructField("_s_ord", slim.schema["_ord"].dataType), StructField("_s_del", BooleanType())]
     )
-    winners = batch.sparkSession.createDataFrame(
-        per_key.select([*keys, "_s_ord", "_s_del"]), struct
+    winners = per_key.select([*keys, "_s_ord", "_s_del", "_bucket"])
+    return (
+        batch.sparkSession.createDataFrame(winners.drop_columns(["_bucket"]), struct),
+        plan_rows,
+        winners,
     )
-    return winners, plan_rows
 
 
 def _write_mor_delta(
@@ -876,9 +970,11 @@ def _merge_once(
     caches: list = []
     planned = _plan_on_driver(batch, keys, order_col, nb, key_bytes_col)
     if planned is None:
-        planned = _plan_on_spark(batch, keys, order_col, nb, key_bytes_col)
-        caches.append(planned[0])
-    winners_slim, plan_rows = planned
+        winners_slim, plan_rows = _plan_on_spark(batch, keys, order_col, nb, key_bytes_col)
+        caches.append(winners_slim)
+        winners_arrow = None
+    else:
+        winners_slim, plan_rows, winners_arrow = planned
     touched = sorted(r["_bucket"] for r in plan_rows)
     plan_by_bucket = {r["_bucket"]: (int(r["n"]), r["lo"], r["hi"]) for r in plan_rows}
     rows_in = int(sum(r["n"] for r in plan_rows))
@@ -914,7 +1010,9 @@ def _merge_once(
                   for r in plan_rows}
         stats = {"rows_in": rows_in, "mor": True}
     else:
-        bucket_actions: dict[int, dict[str, int]] = {}
+        # per-bucket action counts: from the driver decide, else read back
+        # from the written files (``_action_counts``)
+        bucket_actions: dict[int, dict[str, int]] | None = None
         # broadcast path: old file entries NOT containing any winning key are
         # re-linked into the new snapshot instead of being read + rewritten
         matched_rel: set | None = None
@@ -948,18 +1046,19 @@ def _merge_once(
                 key_rows=(lambda: winners_slim.select(*keys).collect()) if use_broadcast else None,
                 n_keys=distinct_keys,
             )
-            # tombstones included: a newer delete must outrank a stale upsert
-            current = _project(table.read_plan(decide, snap, include_tombstones=True))
-
             vals = [c for c in schema.names() if c not in keys]
-            # _action is written into the data files (tiny, dictionary-encoded)
-            # and read back by a pruned single-column scan for the MERGE stats —
-            # explicit-schema reads make it invisible to table queries, exactly
-            # like the _deleted tombstone flag.
-            if use_broadcast:
-                def read_matched(fnames):
-                    rel = _rel_paths(table.path, fnames)
 
+            def decide_read() -> DataFrame:
+                # tombstones included: a newer delete must outrank a stale upsert
+                return _project(table.read_plan(decide, snap, include_tombstones=True))
+
+            # _action is written into the data files (tiny, dictionary-encoded)
+            # and, on the Spark decide paths, read back by a pruned
+            # single-column scan for the MERGE stats — explicit-schema reads
+            # make it invisible to table queries, exactly like the _deleted
+            # tombstone flag.
+            if use_broadcast:
+                def keep_sources(rel):
                     # planned against ``snap``, the snapshot the decide read
                     def keep_read(bkts, legacy):
                         plan = select_files(snap, bkts, legacy, paths=rel)
@@ -979,15 +1078,32 @@ def _merge_once(
                         # one output file per target bucket instead of one
                         # per (scan task, target bucket)
                         srcs.append((keep_read([], leg_touched), True))
-                    return rel, srcs
+                    return srcs
 
+                # the decide on the driver: the epoch was planned there and
+                # its decide files' footers hold at most DRIVER_PLAN_MAX_ROWS
+                # rows (no Spark job reads them).  COW folds deltas before
+                # deciding, so ``decide.rec`` is empty; a reconcile set
+                # would take the Spark decide.
+                driver_decide = False
+                if winners_arrow is not None and not decide.rec:
+                    n = _footer_rows([str(table.path / fe["path"]) for fe in decide.plain])
+                    driver_decide = n is not None and n <= DRIVER_PLAN_MAX_ROWS
+                if driver_decide:
+                    win, matched_rel, bucket_actions = _decide_on_driver(
+                        table, snap, schema, decide.plain, winners_arrow, winners_slim.schema
+                    )
+                else:
+                    win, names = _decide_on_spark(
+                        decide_read(), winners_slim.select(*keys, "_s_ord", "_s_del"),
+                        keys, order_col, caches,
+                    )
+                    matched_rel = _rel_paths(table.path, names)
                 # fused dedupe+MERGE: no payload ever shuffles except the
                 # changed rows' final bucket placement
-                outputs, matched_rel = _merge_broadcast(
-                    batch, current, keys, order_col, vals, nb, derived_cols,
-                    dedupe_guard=dup_deliveries, read_matched=read_matched,
-                    cache_registry=caches,
-                    winners=winners_slim.select(*keys, "_s_ord", "_s_del"),
+                outputs = _merge_broadcast(
+                    batch, win, keep_sources(matched_rel), keys, order_col, vals, nb,
+                    derived_cols, dedupe_guard=dup_deliveries,
                 )
             else:
                 # key set exceeds the broadcast bound → slim forms unavailable;
@@ -997,9 +1113,9 @@ def _merge_once(
                 deduped = lww_dedupe(batch, keys=keys, order_col=order_col)
                 for c, expr in derived_cols.items():
                     deduped = deduped.withColumn(c, expr)
-                outputs = [(_merge_smj(deduped, current, keys, order_col, vals, nb), True)]
+                outputs = [(_merge_smj(deduped, decide_read(), keys, order_col, vals, nb), True)]
 
-            _mark("decide")  # broadcast: incl. the matched-file collect
+            _mark("decide")  # broadcast: incl. the matched files (collect or Arrow read)
             out_dir = table.path / out_dir_rel
             # ONE write job for every output side: union preserves each
             # side's partitioning (the changed side keeps its one-partition-
@@ -1024,7 +1140,7 @@ def _merge_once(
             attach_file_metadata(table.path, out_files, schema, keys, rows_in=rows_in)
             _mark("write")
 
-            if out_files:
+            if out_files and bucket_actions is None:
                 bucket_actions = _action_counts(spark, out_dir, out_files)
             _mark("stats")
 
@@ -1036,7 +1152,7 @@ def _merge_once(
         }
         counts = {}
         for b in touched:
-            a = bucket_actions.get(b, {})
+            a = (bucket_actions or {}).get(b, {})
             counts[b] = (a.get("insert", 0) + a.get("update", 0), a.get("delete", 0))
         stats = {"rows_in": rows_in}
 

@@ -1,7 +1,6 @@
 from rocket_etl_spark.operators.lww import (
     lww_dedupe,
     lww_dedupe_salted,
-    lww_dedupe_window,
 )
 
-__all__ = ["lww_dedupe", "lww_dedupe_salted", "lww_dedupe_window"]
+__all__ = ["lww_dedupe", "lww_dedupe_salted"]

@@ -7,18 +7,13 @@ be an explicit reduction.  LWW order is ``event_seq`` (the WAL position)
 — NEVER the ``commit`` string, which is an opaque hash with no total
 order (SURVEY.md §1.3).
 
-Three implementations, one contract (keep exactly the row with the max
+Two implementations, one contract (keep exactly the row with the max
 ``order_col`` per key):
 
 * ``lww_dedupe`` — ``groupBy(keys).agg(max_by(struct(*), order))``.
   The default: hash aggregation gets map-side partial combine for free,
   so a hot key collapses to one partial row per map task *before* the
   shuffle — inherently skew-resistant, one shuffle.
-* ``lww_dedupe_window`` — ``row_number() over (partition by keys order by
-  order desc) = 1``.  Same result; no partial aggregation, so a hot key
-  funnels all its rows to one reducer.  Kept because it is the classic
-  formulation (and the harness's `window_lww` query), but the engine's
-  replay path uses the agg form.
 * ``lww_dedupe_salted`` — explicit two-phase (key+salt, then key) for the
   north rule's "explicit salted repartitioning of hot repos"
   (BASELINE.json:6): phase 1 reduces each hot key across ``salt_buckets``
@@ -34,7 +29,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 
 
 def _others(df: DataFrame, keys: Sequence[str]) -> list[str]:
@@ -52,20 +47,6 @@ def lww_dedupe(
         F.max_by(F.struct(*[F.col(c) for c in others]), F.col(order_col)).alias("_w")
     )
     return packed.select(*keys, *[F.col(f"_w.{c}").alias(c) for c in others])
-
-
-def lww_dedupe_window(
-    df: DataFrame,
-    keys: Sequence[str] = ("repo", "path"),
-    order_col: str = "event_seq",
-) -> DataFrame:
-    """Window/row_number formulation (same contract as ``lww_dedupe``)."""
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def lww_dedupe_salted(

@@ -7,11 +7,10 @@ row; here every format maps to a distributed ``spark.read`` with a
 DECLARED schema (never inference — the reference declared marshmallow
 schemas per job, SURVEY.md §1.1).
 
-Network connectors (HTTP/SFTP — S2/S3) are driver-side fetch-to-dir
-steps (``sources/remote.py``): the full fetch → checksum → read pipeline
-runs against ``file://`` URLs in tests, with only the socket itself
-transport-gated (no network in this sandbox, SURVEY.md §0).  Excel (S5)
-needs driver pandas and is gated behind an import-try.
+Network connectors (the reference's HTTP/SFTP fetch, S2/S3) were
+removed: no job, harness query or bench row declares one; stage remote
+files locally and read them as csv/json/parquet.  Excel (S5) needs
+driver pandas and is gated behind an import-try.
 """
 
 from __future__ import annotations
@@ -61,23 +60,6 @@ def read_source(spark: SparkSession, src) -> DataFrame:
         from rocket_etl_spark.lake.table import LakeTable
 
         return LakeTable.load(spark, src.path).read()
-    if fmt in ("http", "sftp", "remote"):
-        # driver-side staging (reference HTTPConnector/SFTPConnector shape):
-        # fetch src.path (a URL) into a local dir, then read it under the
-        # format declared in options['inner_format'] with the same schema.
-        import dataclasses
-        import tempfile
-
-        from rocket_etl_spark.sources.remote import fetch_to_dir
-
-        opts = dict(src.options)
-        inner_format = opts.pop("inner_format", "parquet")
-        stage_dir = opts.pop("stage_dir", None) or tempfile.mkdtemp(prefix="rocket_fetch_")
-        fetched = fetch_to_dir(src.path, stage_dir)
-        staged = dataclasses.replace(
-            src, format=inner_format, path=fetched["path"], options=opts
-        )
-        return read_source(spark, staged)
     raise ValueError(f"unknown source format {src.format!r}")
 
 

@@ -130,12 +130,8 @@ def test_overwrite_wipe_retries_a_lost_cas(spark, tmp_path, monkeypatch):
 def test_source_errors_and_checksum(spark, tmp_path):
     with pytest.raises(ValueError, match="declared schema"):
         read_source(spark, SourceSpec(format="csv", path="/nope"))
-    # http is fully implemented down to the socket; in this offline
-    # sandbox only the transport itself fails (URLError), proving the
-    # fetch→read pipeline is real and the network is the sole gate
-    import urllib.error
-
-    with pytest.raises((urllib.error.URLError, OSError)):
+    # remote (http/sftp) sources were removed: an unknown format
+    with pytest.raises(ValueError, match="unknown source format"):
         read_source(spark, SourceSpec(format="http", path="http://x/y.parquet"))
     p = tmp_path / "f.txt"
     p.write_text("hello")
@@ -227,44 +223,6 @@ def test_rebucket_preserves_state_and_keeps_merging(spark, tmp_path):
         "snapshot_id": table.current_snapshot()["snapshot_id"],
         "rebucketed": False,
     }
-
-
-def test_http_source_via_file_transport(spark, tmp_path):
-    """Remote connector end-to-end against file:// — everything but the
-    socket: fetch-to-dir staging, checksum, declared-schema read, load."""
-    import json
-
-    from rocket_etl_spark.plans.jobspec import DestSpec, JobSpec, SourceSpec, run_job
-    from rocket_etl_spark.sources.remote import fetch_to_dir
-
-    src_csv = tmp_path / "remote" / "data.csv"
-    src_csv.parent.mkdir()
-    src_csv.write_text("id,name\n1,alpha\n2,beta\n")
-
-    # transport-level check: fetch + checksum
-    meta = fetch_to_dir(f"file://{src_csv}", tmp_path / "stage")
-    assert meta["bytes"] == src_csv.stat().st_size and len(meta["checksum"]) == 64
-
-    # jobspec-level: http-shaped source spec through the full pipeline
-    spec = JobSpec(
-        name="remote-csv",
-        source=SourceSpec(
-            format="http",
-            path=f"file://{src_csv}",
-            schema_ddl="id int, name string",
-            options={"inner_format": "csv", "stage_dir": str(tmp_path / "stage2")},
-        ),
-        dest=DestSpec(mode="file", path=str(tmp_path / "out"), file_format="parquet"),
-    )
-    run_job(spark, spec)
-    out = spark.read.parquet(str(tmp_path / "out")).toPandas().sort_values("id")
-    assert list(out.name) == ["alpha", "beta"]
-
-    # unsupported scheme fails cleanly
-    import pytest
-
-    with pytest.raises(ValueError, match="unsupported remote scheme"):
-        fetch_to_dir("gopher://x/y", tmp_path / "stage3")
 
 
 def test_kafka_source_is_cleanly_gated(spark):

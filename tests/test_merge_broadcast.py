@@ -332,3 +332,140 @@ def test_gate_reads_row_bound_without_a_job(spark, tmp_path, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def _decide_epochs(spark):
+    """``_tricky_epochs`` plus a delete of a key the table never held
+    (a tombstone), and from the third epoch on a column the table lacks:
+    the schema evolves, so the earlier files are read under an older
+    schema version."""
+    import pyspark.sql.functions as F
+
+    batches = _tricky_epochs(spark)
+    ghost = spark.createDataFrame(
+        [(10_011, "delete", "ghost", "absent.py", "c", "py", "x")],
+        "event_seq long, op string, repo string, path string, "
+        "commit string, lang string, content string",
+    ).withColumn("event_ts", (56789 + F.col("event_seq")).cast("timestamp"))
+    batches[1] = batches[1].unionByName(ghost)
+    batches[2] = batches[2].withColumn("tag", F.lit("t"))
+    return batches
+
+
+def _spy_decides(monkeypatch):
+    """Record which decide ran for each commit, and the matched files'
+    relative paths it returned."""
+    seen = []
+    on_driver, on_spark, rel_paths = M._decide_on_driver, M._decide_on_spark, M._rel_paths
+
+    def driver(*a, **kw):
+        out = on_driver(*a, **kw)
+        seen.append(("driver", out[1]))
+        return out
+
+    def spark_(*a, **kw):
+        seen.append(("spark", None))
+        return on_spark(*a, **kw)
+
+    def rel(*a, **kw):
+        out = rel_paths(*a, **kw)
+        seen[-1] = ("spark", out)
+        return out
+
+    monkeypatch.setattr(M, "_decide_on_driver", driver)
+    monkeypatch.setattr(M, "_decide_on_spark", spark_)
+    monkeypatch.setattr(M, "_rel_paths", rel)
+    return seen
+
+
+def test_driver_decide_matches_spark_decide(spark, tmp_path, monkeypatch):
+    """The driver decide (one pyarrow read of the decide files' key,
+    order and tombstone columns, the action table in Arrow) and the
+    Spark decide (the slim action join and the matched-file collect)
+    give the same state, changelog, commit record and matched files —
+    over null key parts, an op tie on the winning order, a tombstone
+    for an absent key, duplicate and stale re-deliveries, decide files
+    of an older schema version and of a retired bucket layout."""
+    import pyarrow.parquet as pq
+
+    from rocket_etl_spark.lake.maintenance import evolve_buckets
+
+    batches = _decide_epochs(spark)
+
+    def replay(name, driver_decide):
+        with monkeypatch.context() as m:
+            seen = _spy_decides(m)
+            if not driver_decide:  # every decide set over the gate
+                m.setattr(M, "_footer_rows", lambda paths: M.DRIVER_PLAN_MAX_ROWS + 1)
+            t = create_repo_files_table(spark, tmp_path / name, num_buckets=4)
+            results = [replay_batch(t, batches[0], epoch_id=0)]
+            evolve_buckets(t, 8)  # later decides also read the retired layout
+            results += [replay_batch(t, b, epoch_id=i) for i, b in enumerate(batches[1:], 1)]
+        assert [path for path, _ in seen] == ["driver" if driver_decide else "spark"] * 3
+        # a matched file, by what it holds: its (key, order) rows
+        def held(f):
+            rows = pq.read_table(t.path / f, columns=["repo", "path", "last_event_seq"])
+            return frozenset(tuple(r.values()) for r in rows.to_pylist())
+
+        matched = [{held(f) for f in files} for _, files in seen]
+        return t, results, matched
+
+    t_d, r_d, m_d = replay("driver", True)
+    t_s, r_s, m_s = replay("spark", False)
+
+    def record(r):
+        return (r.rows_in, r.rows_upserted, r.rows_deleted, r.event_seq_min,
+                r.event_seq_max, r.touched_buckets, r.bucket_stats,
+                r.decide_files_scanned, r.decide_files_total)
+
+    assert [record(r) for r in r_d] == [record(r) for r in r_s]
+    assert m_d == m_s
+    assert any(m_d)  # later epochs rewrite files that hold their keys
+
+    def state(t):
+        return t.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(state(t_d), state(t_s), check_dtype=False)
+    pd.testing.assert_frame_equal(_changelog(t_d), _changelog(t_s), check_dtype=False)
+    ora = replay_oracle([b.drop("tag").toPandas() for b in batches])
+    got = state(t_d)
+    pd.testing.assert_frame_equal(got[ora.columns], ora, check_dtype=False)
+    # the ghost delete left a tombstone, no live row
+    tomb = t_d.read(include_tombstones=True).toPandas()
+    assert tomb[(tomb.repo == "ghost")]._deleted.tolist() == [True]
+    assert "ghost" not in set(got.repo)
+
+
+def test_decide_over_the_gate_runs_on_spark_without_reading_the_files(
+    spark, tmp_path, monkeypatch
+):
+    """An epoch planned on the driver whose decide files hold more than
+    ``DRIVER_PLAN_MAX_ROWS`` rows (by their parquet footers, no Spark
+    job) takes the Spark decide, and pyarrow never reads those files."""
+    import importlib
+
+    import pyspark.sql.functions as F
+
+    # the module, not the package's ``lookup`` function of the same name
+    L = importlib.import_module("rocket_etl_spark.lake.lookup")
+    ev = change_events(spark, 2_000, seed=5, delete_frac=0.1).drop("delivery_order")
+    t = create_repo_files_table(spark, tmp_path / "t", num_buckets=4)
+    replay_batch(t, ev, epoch_id=0)
+    mx = ev.agg(F.max("event_seq")).first()[0]
+    epoch = ev.orderBy("event_seq").limit(20).withColumn("event_seq", F.col("event_seq") + mx)
+
+    seen = _spy_decides(monkeypatch)
+    monkeypatch.setattr(M, "DRIVER_PLAN_MAX_ROWS", 100)  # epoch 20 events, files > 100 rows
+
+    def no_read(*a, **kw):
+        raise AssertionError("the driver plan and the Spark decide are expected")
+
+    monkeypatch.setattr(L, "_read_probed", no_read)
+    monkeypatch.setattr(M, "_plan_on_spark", no_read)  # the epoch is planned on the driver
+    res = replay_batch(t, epoch, epoch_id=1)
+    assert [path for path, _ in seen] == ["spark"]
+    assert res.rows_in == 20 and res.decide_files_scanned > 0
+
+    eng = t.read().toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+    ora = replay_oracle([ev.toPandas(), epoch.toPandas()])
+    pd.testing.assert_frame_equal(eng[ora.columns], ora, check_dtype=False)

@@ -8,7 +8,6 @@ from rocket_etl_spark.generate import change_events
 from rocket_etl_spark.operators.lww import (
     lww_dedupe,
     lww_dedupe_salted,
-    lww_dedupe_window,
 )
 
 
@@ -19,14 +18,11 @@ def test_skewed_input_all_variants_agree(spark):
     assert top["count"] > 20_000 * 0.3  # genuinely hot
 
     a = lww_dedupe(ev)
-    b = lww_dedupe_window(ev)
     c = lww_dedupe_salted(ev, salt_buckets=8)
     pa = a.orderBy("repo", "path").toPandas()
-    pb = b.orderBy("repo", "path").toPandas()[pa.columns]
     pc = c.orderBy("repo", "path").toPandas()[pa.columns]
     import pandas as pd
 
-    pd.testing.assert_frame_equal(pa, pb)
     pd.testing.assert_frame_equal(pa, pc)
 
 

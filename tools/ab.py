@@ -19,11 +19,21 @@ median against the parent's).  A verdict is printed only where the
 change won at least 8 in 10 triplets (or lost as many) and its median
 gap to the parent is larger than the A/A arm's: on a host that swings
 between identical runs, a gap no larger than the A/A gap is host drift.
+
+With ``--trace`` it also runs one traced run per arm (``--trace 1``, at
+``--trace-seed``) and lists the per-layer counters of ``BENCHMARK.json``
+whose values repeated exactly between the parent and the A/A arm, with
+the change's value beside each, plus the files and bytes each commit
+wrote (from ``.perfbench/runs/``).  Only a counter that repeats between
+two runs of one tree is evidence of a plan change when the change moves
+it; the others are listed as not repeating.  ``--pairs 0`` runs only
+the traced arms.
 """
 
 from __future__ import annotations
 
 import argparse
+import itertools
 import json
 import statistics
 import subprocess
@@ -35,22 +45,29 @@ ARMS = ("parent", "change", "aa")
 RUN_TIMEOUT_S = 900  # one perfbench run: setup, the timed section, the final check
 
 
-def run_once(tree: Path, workload: str, seed: int) -> dict:
-    """One untraced perfbench run in ``tree``: its result object, or
-    ``{"error": ...}`` when the run failed or printed no result."""
+def run_once(tree: Path, workload: str, seed: int, trace: int = 0) -> dict:
+    """One perfbench run in ``tree``: its result object, or
+    ``{"error": ...}`` when the run failed or printed no result.  A
+    traced run's result also carries ``commits``: the (files, bytes)
+    each commit wrote, from the report the run saved."""
     try:
         out = subprocess.run(
             [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-             "--trace", "0"],
+             "--trace", str(trace)],
             cwd=tree, capture_output=True, text=True, timeout=RUN_TIMEOUT_S,
         )
     except subprocess.TimeoutExpired:
         return {"error": f"timed out after {RUN_TIMEOUT_S} s"}
     lines = out.stdout.strip().splitlines()
     try:
-        return json.loads(lines[-1])
+        result = json.loads(lines[-1])
     except (IndexError, json.JSONDecodeError):
         return {"error": f"exit {out.returncode}: {out.stderr.strip()[-300:]}"}
+    if trace:
+        saved = tree / ".perfbench" / "runs" / f"{workload}-seed{seed}-trace1.json"
+        report = json.loads(saved.read_text())
+        result["commits"] = [[c["files_written"], c["data_b_written"]] for c in report["commits"]]
+    return result
 
 
 def quartiles(xs: list[float]) -> tuple[float, float, float]:
@@ -117,6 +134,40 @@ def table(runs: list[dict], metrics: list[dict]) -> list[str]:
     return out
 
 
+def num(x) -> str:
+    """A counter's value: whole numbers exactly, others to 6 digits."""
+    if x is None:
+        return "-"
+    return str(int(x)) if float(x).is_integer() else f"{x:.6g}"
+
+
+def counters(traced: dict[str, dict], per_layer: list[dict]) -> list[str]:
+    """The traced report: each per-layer counter that repeated exactly
+    between the parent and the A/A arm, with the change's value, then
+    the names of those that did not repeat."""
+    bad = [a for a in ARMS if traced[a].get("error")]
+    if bad:
+        return [f"traced run failed: {a}: {traced[a]['error']}" for a in bad]
+    out = [f"{'counter (repeats parent = A/A)':<36}{'parent':>16}{'change':>16}  change"]
+    rows = [(m["name"], {a: value(traced[a], m["name"]) for a in ARMS}) for m in per_layer]
+    rows.append(("commits [files, bytes]", {a: traced[a].get("commits") for a in ARMS}))
+    other = []
+    for name, v in rows:
+        if v["parent"] is None or v["parent"] != v["aa"]:
+            other.append(name)
+            continue
+        if isinstance(v["parent"], list):  # one line per commit
+            for i, (p, c) in enumerate(itertools.zip_longest(v["parent"], v["change"])):
+                same = "same" if p == c else "MOVED"
+                out.append(f"{f'{name} #{i}':<36}{str(p):>16}{str(c):>16}  {same}")
+            continue
+        same = "same" if v["parent"] == v["change"] else "MOVED"
+        out.append(f"{name:<36}{num(v['parent']):>16}{num(v['change']):>16}  {same}")
+    out.append("not repeating between parent and A/A (no evidence either way): "
+               + (", ".join(other) or "none"))
+    return out
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("parent_dir", type=Path)
@@ -124,10 +175,13 @@ def main(argv=None) -> int:
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, default=10, help="number of triplets")
     ap.add_argument("--seed", type=int, default=1000, help="seed of the first triplet")
+    ap.add_argument("--trace", action="store_true", help="also one traced run per arm")
+    ap.add_argument("--trace-seed", type=int, default=1, help="seed of the traced runs")
     args = ap.parse_args(argv)
 
     trees = {"parent": args.parent_dir, "change": args.change_dir, "aa": args.parent_dir}
-    metrics = json.loads(BENCHMARK.read_text())["end_to_end"]
+    bench = json.loads(BENCHMARK.read_text())
+    metrics = bench["end_to_end"]
     runs = []
     for i in range(args.pairs):
         seed = args.seed + i
@@ -139,9 +193,17 @@ def main(argv=None) -> int:
                   f"{got[a].get('error') or value(got[a], 'commit_p50_s')}",
                   file=sys.stderr, flush=True)
         runs.append(got)
-    print(f"workload {args.workload}, {args.pairs} triplets, seeds "
-          f"{args.seed}-{args.seed + args.pairs - 1}")
-    print("\n".join(table(runs, metrics)))
+    if args.pairs:
+        print(f"workload {args.workload}, {args.pairs} triplets, seeds "
+              f"{args.seed}-{args.seed + args.pairs - 1}")
+        print("\n".join(table(runs, metrics)))
+    if args.trace:
+        traced = {}
+        for a in ARMS:
+            traced[a] = run_once(trees[a].resolve(), args.workload, args.trace_seed, trace=1)
+            print(f"traced {a}: {traced[a].get('error') or 'ok'}", file=sys.stderr, flush=True)
+        print(f"workload {args.workload}, traced, seed {args.trace_seed}")
+        print("\n".join(counters(traced, bench["per_layer"])))
     return 0
 
 
