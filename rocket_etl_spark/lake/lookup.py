@@ -151,7 +151,7 @@ def lookup(
             keys, snap["order_col"],
         )])
     live = found.filter(pc.invert(pc.fill_null(found["_deleted"], False)))
-    out = table.spark.createDataFrame(live.drop_columns(["_deleted", "_file"]), full)
+    out = table.spark.createDataFrame(live.drop_columns(["_deleted"]), full)
     return (out, stats) if return_stats else out
 
 
@@ -174,40 +174,43 @@ def _read_probed(
     probe: pa.Table,
     with_seq: bool,
     columns: Sequence[str] | None = None,
+    with_file: bool = False,
 ) -> pa.Table:
     """Every row of ``entries``' files whose key matches a ``probe`` row
     null-safely (``eqNullSafe``, as the MERGE matches keys), projected
     to the ``columns`` of ``current`` (all of them when None; in its
-    Arrow ``types``) plus ``_deleted``, with ``with_seq`` ``_seq`` (null
-    where the file has none, as in base files), and ``_file``: the entry
-    path of the file the row came from.  The files of one schema
-    version form one dataset, so pyarrow reads them in parallel.  Each
-    key column's ``isin`` is pushed into the scan; for a composite key
-    that is a superset of the probe tuples, so the exact tuple match
-    follows."""
+    Arrow ``types``) plus ``_deleted`` and, with ``with_seq``, ``_seq``
+    (null where the file has none, as in base files); with
+    ``with_file``, also ``_file``: the entry path of the file the row
+    came from.  The files of one schema version form one dataset, so
+    pyarrow reads them in parallel.  Each key column's ``isin`` is
+    pushed into the scan; for a composite key that is a superset of the
+    probe tuples, so the exact tuple match follows."""
     keys = snap["key_cols"]
     if columns is not None:
         current = TableSchema(current.version, tuple(current.field_by_name(c) for c in columns))
         types = pa.schema([types.field(c) for c in columns])
-    extra = {"_deleted": pa.bool_(), **({"_seq": pa.int64()} if with_seq else {})}
+    extra = {
+        "_deleted": pa.bool_(),
+        **({"_seq": pa.int64()} if with_seq else {}),
+        **({"_file": pa.string()} if with_file else {}),
+    }
 
-    def shape(got: pa.Table, fschema: TableSchema, path: str) -> pa.Table:
+    def shape(got: pa.Table, fschema: TableSchema) -> pa.Table:
         part = project_arrow(got, fschema, current, types)
         for c, typ in extra.items():
             part = part.append_column(
                 c, got[c].cast(typ) if c in got.column_names
                 else pa.nulls(got.num_rows, typ)
             )
-        return part.append_column("_file", pa.repeat(pa.scalar(path), got.num_rows))
+        return part
 
     by_sv: dict[str, list[str]] = {}
-    rel: dict[str, str] = {}
     for fe in entries:
-        path = str(table.path / fe["path"])
-        by_sv.setdefault(str(fe["sv"]), []).append(path)
-        rel[path] = fe["path"]
-    parts = [shape(pa.table({}), TableSchema(version=0), "")]  # no file: no row
-    for sv, paths in by_sv.items():
+        by_sv.setdefault(str(fe["sv"]), []).append(fe["path"])
+    parts = [shape(pa.table({}), TableSchema(version=0))]  # no file: no row
+    for sv, rels in by_sv.items():
+        paths = [str(table.path / r) for r in rels]
         fschema = TableSchema.from_json(snap["schemas"][sv])
         src = {f.id: f.name for f in fschema.fields}
         # files of one version differ only in the _deleted/_seq they carry
@@ -224,11 +227,11 @@ def _read_probed(
             cond = col.isin(want) if cond is None else cond & col.isin(want)
         read = [src[f.id] for f in current.fields if f.id in src]
         read += [c for c in extra if c in dset.schema.names]
-        scan = dset.scanner(columns=read, filter=cond)
-        parts += [
-            shape(pa.Table.from_batches([tb.record_batch]), fschema, rel[tb.fragment.path])
-            for tb in scan.scan_batches()
-        ]
+        got = dset.to_table(columns=read + ["__filename"] * with_file, filter=cond)
+        if with_file:  # the scan's file path → the entry's own
+            at = pc.index_in(got["__filename"], value_set=pa.array(paths))
+            got = got.append_column("_file", pc.take(pa.array(rels), at))
+        parts.append(shape(got, fschema))
     found = pa.concat_tables(parts)
     return found.filter(pc.is_valid(_probe_codes(found, probe, keys)[0]))
 

@@ -433,7 +433,7 @@ def _decide_on_driver(
     struct = schema.to_struct()
     found = _read_probed(
         table, snap, schema, to_arrow_schema(StructType([struct[c] for c in cols])),
-        entries, winners, with_seq=False, columns=cols,
+        entries, winners, with_seq=False, columns=cols, with_file=True,
     )
     code_t, code_w = _probe_codes(found, winners, keys)
     t_side = pa.table({

@@ -21,7 +21,7 @@ gap to the parent is larger than the A/A arm's: on a host that swings
 between identical runs, a gap no larger than the A/A gap is host drift.
 
 With ``--trace`` it also runs one traced run per arm (``--trace 1``, at
-``--trace-seed``) and lists the per-layer counters of ``BENCHMARK.json``
+seed ``TRACE_SEED``) and lists the per-layer counters of ``BENCHMARK.json``
 whose values repeated exactly between the parent and the A/A arm, with
 the change's value beside each, plus the files and bytes each commit
 wrote (from ``.perfbench/runs/``).  Only a counter that repeats between
@@ -43,6 +43,7 @@ from pathlib import Path
 BENCHMARK = Path(__file__).resolve().parent.parent / "BENCHMARK.json"
 ARMS = ("parent", "change", "aa")
 RUN_TIMEOUT_S = 900  # one perfbench run: setup, the timed section, the final check
+TRACE_SEED = 1  # the seed of the traced counters of record (`perfbench/run.py --trace 1 --seed 1`)
 
 
 def run_once(tree: Path, workload: str, seed: int, trace: int = 0) -> dict:
@@ -176,7 +177,6 @@ def main(argv=None) -> int:
     ap.add_argument("--pairs", type=int, default=10, help="number of triplets")
     ap.add_argument("--seed", type=int, default=1000, help="seed of the first triplet")
     ap.add_argument("--trace", action="store_true", help="also one traced run per arm")
-    ap.add_argument("--trace-seed", type=int, default=1, help="seed of the traced runs")
     args = ap.parse_args(argv)
 
     trees = {"parent": args.parent_dir, "change": args.change_dir, "aa": args.parent_dir}
@@ -200,9 +200,9 @@ def main(argv=None) -> int:
     if args.trace:
         traced = {}
         for a in ARMS:
-            traced[a] = run_once(trees[a].resolve(), args.workload, args.trace_seed, trace=1)
+            traced[a] = run_once(trees[a].resolve(), args.workload, TRACE_SEED, trace=1)
             print(f"traced {a}: {traced[a].get('error') or 'ok'}", file=sys.stderr, flush=True)
-        print(f"workload {args.workload}, traced, seed {args.trace_seed}")
+        print(f"workload {args.workload}, traced, seed {TRACE_SEED}")
         print("\n".join(counters(traced, bench["per_layer"])))
     return 0
 
